@@ -680,153 +680,6 @@ def _first_max_assign(V, Cm, block: int = CENT_BLOCK):
     return besti
 
 
-# Epsilon slack on the triangle-inequality group prune: distances are
-# O(1) on the unit sphere and their float rounding error is ~1e-15,
-# so 1e-7 is ~10^8 × safety against wrongly pruning a winner (equal-
-# cosine ties have distance gap exactly 0 and are NEVER prunable),
-# while costing nothing — no real candidate sits within 1e-7 of a
-# prune boundary without also being scanned.
-PRUNE_EPS = 1e-7
-
-
-def _build_centroid_groups(Cm, n_groups: int | None = None, iters: int = 5):
-    """Driver-side grouping of the centroid set for the exact-pruned
-    assignment (round-5 item: semantic_dedup's O(n·C) = O(n^1.5)
-    assignment term). Groups the C centroids into G ≈ √C clusters (a
-    tiny numpy Lloyd over the NORMALIZED centroids — deterministic:
-    strided init in cid order, argmin assignment) and records, per
-    group, a representative point and its covering radius
-    r_j = max d(rep_j, ĉ) over member centroids on the unit sphere.
-
-    The grouping affects ONLY performance, never results: the prune
-    in ``_pruned_first_max_assign`` is a triangle-inequality bound
-    that provably retains every centroid whose cosine could equal or
-    exceed the winner's (see its docstring), for ANY grouping.
-    Zero-norm centroids score 0.0 against everything (outside the
-    distance⇔cosine correspondence), so they bypass grouping via the
-    ``always``-scanned list."""
-    import numpy as np
-
-    C, dims = Cm.shape
-    norms = np.sqrt(np.einsum("ij,ij->i", Cm, Cm))
-    always = np.nonzero(norms == 0.0)[0].astype(np.int64)
-    nzi = np.nonzero(norms > 0.0)[0]
-    nC = len(nzi)
-    if nC == 0:
-        return {
-            "reps": np.zeros((0, dims)),
-            "radii": np.zeros(0),
-            "gidx": [],
-            "always": always,
-        }
-    P = Cm[nzi] / norms[nzi][:, None]
-    G = n_groups or max(1, int(np.sqrt(nC)))
-    sel = np.linspace(0, nC - 1, G).round().astype(int)
-    reps = P[sel].copy()
-
-    def _d2(reps_):
-        rn2 = np.einsum("ij,ij->i", reps_, reps_)
-        return np.maximum(0.0, 1.0 + rn2[None, :] - 2.0 * (P @ reps_.T))
-
-    for _ in range(iters):
-        a = np.argmin(_d2(reps), axis=1)
-        counts = np.bincount(a, minlength=G)
-        sums = np.zeros_like(reps)
-        np.add.at(sums, a, P)
-        nzg = counts > 0
-        reps[nzg] = sums[nzg] / counts[nzg][:, None]
-    d2 = _d2(reps)
-    a = np.argmin(d2, axis=1)
-    d = np.sqrt(d2[np.arange(nC), a])
-    gidx, radii, reps_out = [], [], []
-    for j in range(G):
-        m = a == j
-        if not m.any():
-            continue
-        gidx.append(np.sort(nzi[m]).astype(np.int64))
-        radii.append(float(d[m].max()))
-        reps_out.append(reps[j])
-    return {
-        "reps": np.array(reps_out),
-        "radii": np.array(radii),
-        "gidx": gidx,
-        "always": always,
-    }
-
-
-def _pruned_first_max_assign(V, Cm, groups):
-    """EXACT first-max assignment with triangle-inequality group
-    pruning — returns indices identical to ``_first_max_assign(V,
-    Cm)`` while evaluating the cosine for only the centroids that
-    could win (round-5: cuts semantic_dedup's n·C assignment term to
-    n·(√C + candidates)).
-
-    Correctness: max cosine ⇔ min Euclidean distance between the
-    normalized vector x̂ and normalized centroid ĉ (d² = 2 − 2cos on
-    the unit sphere). With B = min_j(d(x̂, rep_j) + r_j) an upper
-    bound on the winner's distance, any centroid c in group j with
-    d(x̂, rep_j) − r_j > B satisfies d(x̂, ĉ) ≥ d(x̂, rep_j) − r_j >
-    B ≥ d_winner — strictly farther, so neither a winner nor an
-    equal-cosine tie (ties have distance gap exactly 0). Groups are
-    pruned only on that condition plus PRUNE_EPS slack for the
-    distance arithmetic's own rounding. Every surviving candidate's
-    cosine is computed by the SAME dim-ordered ``_cos_block`` as the
-    full scan — bit-equal values — and the running update keeps
-    (greater cos) | (equal cos AND lower index), which equals the
-    full scan's first-max rule regardless of group visit order.
-    Zero-norm vectors (cos 0.0 everywhere, outside the
-    correspondence) fall back to the full block scan; zero-norm
-    centroids are always scanned."""
-    import numpy as np
-
-    n, dims = V.shape
-    besti = np.zeros(n, dtype=np.int64)
-    vnorm = np.zeros(n)
-    for j in range(dims):
-        vnorm = vnorm + V[:, j] * V[:, j]
-    vnorm = np.sqrt(vnorm)
-    zero = vnorm == 0.0
-    if zero.any():
-        besti[zero] = _first_max_assign(V[zero], Cm)
-    nz = np.nonzero(~zero)[0]
-    if len(nz) == 0:
-        return besti
-    Vn = V[nz]
-    vn = vnorm[nz]
-    reps, radii = groups["reps"], groups["radii"]
-    gidx, always = groups["gidx"], groups["always"]
-    m = len(Vn)
-    best = np.full(m, -np.inf)
-    bi = np.full(m, np.iinfo(np.int64).max, dtype=np.int64)
-
-    def scan(rows, cidx):
-        sims = _cos_block(Vn[rows], vn[rows], Cm[cidx])
-        loc = np.argmax(sims, axis=1)  # first max; cidx ascending
-        bv = sims[np.arange(len(rows)), loc]
-        gi = cidx[loc]
-        cur_b, cur_i = best[rows], bi[rows]
-        upd = (bv > cur_b) | ((bv == cur_b) & (gi < cur_i))
-        ridx = rows[upd]
-        best[ridx] = bv[upd]
-        bi[ridx] = gi[upd]
-
-    if len(always):
-        scan(np.arange(m), always)
-    if len(reps):
-        Xh = Vn / vn[:, None]
-        rn2 = np.einsum("ij,ij->i", reps, reps)
-        Dg = np.sqrt(
-            np.maximum(0.0, 1.0 + rn2[None, :] - 2.0 * (Xh @ reps.T))
-        )
-        B = np.min(Dg + radii[None, :], axis=1)
-        for j in range(len(reps)):
-            rows = np.nonzero(Dg[:, j] - radii[j] <= B + PRUNE_EPS)[0]
-            if len(rows):
-                scan(rows, gidx[j])
-    besti[nz] = bi
-    return besti
-
-
 def _two_level_structure(cids, Cm):
     """Driver-side build of the deterministic 2-level (coarse→fine)
     quantizer over a trained centroid set (round 5; the public
@@ -864,10 +717,10 @@ def _two_level_assign(V, Cm, reps, gidx):
     """Coarse→fine first-max assignment: pick the first-max-cosine
     coarse rep (O(√C) evals), then the first-max-cosine centroid
     WITHIN that rep's member group (O(C/√C) expected). Total
-    O(2·√C) cosine evals per vector instead of C — and unlike the
-    triangle-inequality prune, the win does not depend on the data
-    being clustered (measured: the exact prune recovers nothing on
-    the near-isotropic synthetic embeddings, where all pairwise
+    O(2·√C) cosine evals per vector instead of C — and unlike an
+    exact triangle-inequality prune, the win does not depend on the
+    data being clustered (measured: such a prune recovered nothing
+    on the near-isotropic synthetic embeddings, where all pairwise
     distances concentrate — BENCH/BASELINE.md round-5 note). The
     trade is semantic: assignment is the 2-level quantizer's, not
     the flat argmax — mirrored exactly by the DuckDB oracle, which
@@ -894,8 +747,6 @@ def assign_centroids(
     keep: list[str],
     probe: int | None = None,
     vec_col: str = "v",
-    cent_block: int = CENT_BLOCK,
-    prune: bool = False,
     two_level: bool = False,
 ) -> DataFrame:
     """Nearest-centroid assignment as a numpy block kernel: returns
@@ -916,11 +767,10 @@ def assign_centroids(
     ``array_sort(struct(-sim, cid))``. The centroid matrix is
     O(C·dims) — driver-collected and broadcast, never joined.
 
-    ``prune=True`` (corpus path only): route the per-batch argmax
-    through ``_pruned_first_max_assign`` — triangle-inequality group
-    pruning over a driver-built √C grouping, results provably
-    identical (see its docstring). Used by semantic_dedup, whose
-    C ≈ 4√n makes the full scan the pipeline's n^1.5 term."""
+    ``two_level=True`` (corpus path only): assign through the 2-level
+    coarse→fine quantizer (``_two_level_assign``). Used by
+    semantic_dedup, whose C ≈ 4√n makes the flat scan the pipeline's
+    n^1.5 term."""
     import numpy as np
     import pandas as pd
 
@@ -928,15 +778,12 @@ def assign_centroids(
 
     spark = df.sparkSession
     cids_, Cm_ = _collect_centroids(cents)
-    groups_ = (
-        _build_centroid_groups(Cm_) if (prune and not probe) else None
-    )
     tl_ = (
         _two_level_structure(cids_, Cm_)
         if (two_level and not probe)
         else None
     )
-    bc = spark.sparkContext.broadcast((cids_, Cm_, groups_, tl_))
+    bc = spark.sparkContext.broadcast((cids_, Cm_, tl_))
 
     in_df = df.select(*keep) if vec_col in keep else df.select(*keep, vec_col)
     fields = [in_df.schema[c] for c in keep]
@@ -946,7 +793,7 @@ def assign_centroids(
     out_schema = T.StructType(fields)
 
     def blocks(batches):
-        cids, Cm, groups, tl = bc.value
+        cids, Cm, tl = bc.value
         C, dims = Cm.shape
         for pdf in batches:
             if len(pdf) == 0:
@@ -973,10 +820,6 @@ def assign_centroids(
                 # evals per vector; the oracle mirrors the 2-level
                 # rule, which defines the assignment semantics
                 out["cid"] = cids[_two_level_assign(V, Cm, *tl)]
-            elif groups is not None:
-                # exact-pruned corpus path (round 5): identical ids,
-                # only winner-eligible centroids evaluated
-                out["cid"] = cids[_pruned_first_max_assign(V, Cm, groups)]
             else:
                 # corpus-side path: C grows as 4·√n, so a full
                 # (batch × C) sims matrix is O(batch·√n) doubles PER
@@ -985,7 +828,7 @@ def assign_centroids(
                 # centroid blocks with a running strictly-greater
                 # argmax — bit-identical to np.argmax over the full
                 # row, memory bounded by the block width.
-                out["cid"] = cids[_first_max_assign(V, Cm, cent_block)]
+                out["cid"] = cids[_first_max_assign(V, Cm)]
             yield out
 
     return in_df.mapInPandas(blocks, schema=out_schema)
@@ -1144,7 +987,8 @@ def kmeans_centroids(
     unrolled-SQL DuckDB Lloyd (``sql_ann_ivf_kmeans_topk``).
 
     Reference analog: none — the reference has no vector index; this
-    extends its similarity surface (services/text_analyzer.py) to the
+    extends its similarity surface
+    (src/services/validation/similarity_calculator.py) to the
     embedding column per the training-data-pipeline brief.
     """
     if n is None:
@@ -1620,50 +1464,6 @@ def ivfpq_codebooks(
     return books, sub
 
 
-def _encode_recon(res: DataFrame, cents: DataFrame, books, sub: int) -> DataFrame:
-    """One mapInPandas pass over the residual frame producing the
-    IVF-PQ reconstruction per vector: assign each residual slice to
-    its subspace codebook (first-max dim-ordered cosine — the house
-    assignment fold) and emit recon = coarse centroid + concatenated
-    residual sub-centroids. This is the index ENCODE step a fleet
-    runs once at build time: codebooks and the coarse matrix ride a
-    broadcast, the corpus never shuffles, and the stored code is
-    PQ_M small ids (+ the cid partition key) — the ~16-byte/vector
-    representation 10⁹-vector deployments RAM."""
-    import numpy as np
-    import pandas as pd
-
-    spark = res.sparkSession
-    bc = spark.sparkContext.broadcast((_collect_centroids(cents), books))
-
-    def blocks(batches):
-        (ccids, Ccm), bks = bc.value
-        dims = Ccm.shape[1]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Rv = np.array(list(pdf["r"]), dtype=np.float64)
-            nr = len(pdf)
-            Rhat = np.empty((nr, dims))
-            for m, (_cids, Cm) in enumerate(bks):
-                Rm = Rv[:, m * sub:(m + 1) * sub]
-                # shared memory-bounded blocked first-max (identical
-                # to argmax over the full sims row — see
-                # _first_max_assign)
-                code = _first_max_assign(Rm, Cm)
-                Rhat[:, m * sub:(m + 1) * sub] = Cm[code]
-            ci = np.searchsorted(ccids, pdf["cid"].to_numpy(dtype=np.int64))
-            recon = Ccm[ci] + Rhat
-            out = pdf[["vec_id", "cid", "v"]].copy()
-            out["recon"] = list(recon)
-            yield out
-
-    return res.mapInPandas(
-        blocks,
-        schema="vec_id long, cid long, v array<double>, recon array<double>",
-    )
-
-
 def ivfpq_topk(
     spark,
     sf_dir: str,
@@ -1677,18 +1477,22 @@ def ivfpq_topk(
     """IVF+PQ composition — the serving configuration a 10⁹-vector
     fleet actually runs (round-4 item: the pieces existed separately
     as the partition-pruned IVF index and the PQ codes): k-means
-    coarse quantizer → per-query partition-pruned probe of ``probe``
-    lists → ADC scoring against PQ-coded RESIDUAL reconstructions
-    inside the probed lists only → exact re-rank of the
-    ``shortlist``-deep ADC short-list.
+    coarse quantizer → per-query probe of ``probe`` lists → ADC
+    scoring against PQ-coded RESIDUAL reconstructions inside the
+    probed lists only → exact re-rank of the ``shortlist``-deep ADC
+    short-list.
+
+    This is ``write_ivfpq_index`` + ``probe_ivfpq_index`` without the
+    parquet round trip: the codes come straight from the encode pass
+    (``_encode_codes``) and are searched by the same ``_ivfpq_search``
+    the persisted index uses, so both give identical rows.
 
     Scale shape: codebooks are driver-trained on strided samples and
     broadcast; encode is ONE map-side kernel pass (the index build);
-    search touches ~probe/C of the corpus, scores it against the
-    compressed reconstruction (no raw-vector reads in the scan loop
-    of a disk-resident deployment), and only O(|Q|·shortlist) rows
-    reach the exact re-rank — so the full-precision vectors are
-    fetched for the short-list alone. The corpus never shuffles.
+    search scores ~probe/C of the corpus against the compressed
+    reconstruction, and only O(|Q|·shortlist) rows reach the exact
+    re-rank — so the full-precision vectors are fetched for the
+    short-list alone. The corpus never shuffles.
 
     Determinism/oracle parity: coarse + residual training share the
     fixed-point Lloyd chain; assignments are first-max dim-ordered
@@ -1706,76 +1510,28 @@ def ivfpq_topk(
     # again (~6 actions) — uncached, each replays the O(n·C) coarse
     # assignment over the whole corpus (the exact re-derivation the
     # DuckDB mirror materializes its `res` CTE to avoid, measured
-    # 230 s → <1 s there). Unpersisted below, once the ADC
-    # short-list is materialized — nothing leaks past the call.
+    # 230 s → <1 s there). The search collects its short-list before
+    # returning, so `res` is released here — nothing leaks past the
+    # call.
     res = _residual_frame(corpus, cents).persist()
-    books, sub = ivfpq_codebooks(res, n, dims, iters, train_every)
-    recon = _encode_recon(res, cents, books, sub)
-
-    qassigned = assign_centroids(
-        corpus.filter(F.col("vec_id") % query_every == 0),
-        cents,
-        keep=["vec_id", "v"],
-        probe=probe,
-    )
-    queries = qassigned.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.explode("pcids").alias("cid"),
-    )
-    cand = recon.join(F.broadcast(queries), "cid").filter(
-        F.col("vec_id") != F.col("q_id")
-    )
-    adc = pairwise_cosine(
-        cand.select(
-            "q_id", F.col("vec_id").alias("neighbor_id"), "qv", "v", "recon"
-        ),
-        "qv",
-        "recon",
-        keep=["q_id", "neighbor_id", "v"],
-    ).select(
-        "q_id", "neighbor_id", "v", F.round(F.col("cos"), 6).alias("adc")
-    )
-    wa = Window.partitionBy("q_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id").asc()
-    )
-    # MATERIALIZE the ADC short-list (round 5): O(|Q|·shortlist)
-    # rows, the working set a serving node holds anyway. This lets
-    # the persisted residual frame be UNPERSISTED here instead of
-    # leaking an evictable cache entry past the call (round-4
-    # advice) — the returned re-rank plan touches only this local
-    # short-list and the tiny query table, never `res` again.
-    short_rows = [
-        (int(r["q_id"]), int(r["neighbor_id"]), list(r["v"]))
-        for r in adc.withColumn("srank", F.row_number().over(wa))
-        .filter(F.col("srank") <= shortlist)
-        .select("q_id", "neighbor_id", "v")
-        .collect()
-    ]
-    res.unpersist()
-    short = spark.createDataFrame(
-        short_rows, "q_id long, neighbor_id long, v array<double>"
-    )
-    # Full-precision re-rank of the short-list only: O(|Q|·shortlist)
-    # rows — the query vectors rejoin via a broadcast of the tiny
-    # per-query table.
-    qvs = qassigned.select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
-    exact = pairwise_cosine(
-        short.join(F.broadcast(qvs), "q_id").select(
-            "q_id", "neighbor_id", "qv", "v"
-        ),
-        "qv",
-        "v",
-        keep=["q_id", "neighbor_id"],
-    ).select("q_id", "neighbor_id", F.round(F.col("cos"), 6).alias("cos"))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "neighbor_id", "cos")
-    )
+    try:
+        books, sub = ivfpq_codebooks(res, n, dims, iters, train_every)
+        qrows = corpus.filter(F.col("vec_id") % query_every == 0).select(
+            "vec_id", "v"
+        ).collect()
+        return _ivfpq_search(
+            spark,
+            _encode_codes(res, books, sub),
+            corpus,
+            qrows,
+            sorted(cents.collect(), key=lambda r: r["cid"]),
+            books,
+            k,
+            probe,
+            shortlist,
+        )
+    finally:
+        res.unpersist()
 
 
 def _encode_codes(res: DataFrame, books, sub: int) -> DataFrame:
@@ -1860,26 +1616,18 @@ def probe_ivfpq_index(
     probe: int = PROBE_LISTS,
     shortlist: int = IVFPQ_SHORTLIST,
 ) -> DataFrame:
-    """Search a ``write_ivfpq_index`` table: plan the probe set
-    driver-side (O(|Q|·C) on collected centroids, like
-    ``probe_ivf_index``), scan ONLY the probed ``cid=…`` partitions
-    of the CODES table (PartitionFilters — plan-asserted), ADC-score
-    the codes against the queries via one Arrow kernel (reconstruct =
-    coarse centroid + concatenated codebook rows, the identical
-    doubles the in-memory path scores), keep a ``shortlist``-deep ADC
-    short-list per query, and exact-re-rank it against the raw
-    vectors — fetched for the short-list alone. Results are
+    """Search a ``write_ivfpq_index`` table with ``_ivfpq_search``:
+    only the probed ``cid=…`` partitions of the CODES table are
+    scanned (PartitionFilters — plan-asserted), and the raw vectors
+    are fetched for the ADC short-list alone. Results are
     bit-identical to the in-memory ``ivfpq_topk`` (pytest)."""
     import numpy as np
-    import pandas as pd
 
     base = path.rstrip("/")
     cents = sorted(
         spark.read.parquet(f"{base}/centroids").collect(),
         key=lambda r: r["cid"],
     )
-    ccids = np.array([r["cid"] for r in cents], dtype=np.int64)
-    Ccm = np.array([list(r["cv"]) for r in cents], dtype=np.float64)
     brows = spark.read.parquet(f"{base}/codebooks").collect()
     n_m = 1 + max(r["m"] for r in brows)
     books = []
@@ -1893,14 +1641,55 @@ def probe_ivfpq_index(
                 np.array([list(r["cv"]) for r in rows], dtype=np.float64),
             )
         )
-    sub = books[0][1].shape[1]
-
     vec = spark.read.parquet(f"{base}/vectors")
     qrows = vec.filter(F.col("vec_id") % query_every == 0).select(
         "vec_id", "v"
     ).collect()
+    return _ivfpq_search(
+        spark,
+        spark.read.parquet(f"{base}/codes"),
+        vec,
+        qrows,
+        cents,
+        books,
+        k,
+        probe,
+        shortlist,
+    )
+
+
+def _ivfpq_search(
+    spark,
+    codes: DataFrame,
+    vec: DataFrame,
+    qrows,
+    cents,
+    books,
+    k: int,
+    probe: int,
+    shortlist: int,
+) -> DataFrame:
+    """The one IVF-PQ search: plan the probe set driver-side
+    (O(|Q|·C) on collected centroids, like ``probe_ivf_index``), keep
+    only the probed lists of ``codes`` (vec_id, cid, codes), ADC-score
+    them against the queries via one Arrow kernel (reconstruct =
+    coarse centroid + concatenated codebook rows), keep a
+    ``shortlist``-deep ADC short-list per query, and exact-re-rank it
+    against the raw vectors of ``vec`` — fetched for the short-list
+    alone.
+
+    ``qrows``: Row(vec_id, v) queries; ``cents``: cid-sorted
+    Row(cid, cv); ``books``: PQ_M (cids, matrix) residual codebooks.
+    The short-list is collected before this returns, so the returned
+    re-rank plan never reads ``codes`` again."""
+    import numpy as np
+    import pandas as pd
+
+    ccids = np.array([r["cid"] for r in cents], dtype=np.int64)
+    Ccm = np.array([list(r["cv"]) for r in cents], dtype=np.float64)
+    sub = books[0][1].shape[1]
     # driver-side probe plan: vectorized numpy planner, bit-equal to
-    # the in-memory assignment fold (see _plan_probes)
+    # the assignment fold (see _plan_probes)
     plan = _plan_probes(qrows, cents, probe)
     probe_cids = sorted({cid for _, cid in plan})
     q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
@@ -1912,9 +1701,7 @@ def probe_ivfpq_index(
         (q_ids, Qm, ccids, Ccm, books, qprobe)
     )
 
-    pruned = spark.read.parquet(f"{base}/codes").filter(
-        F.col("cid").isin(probe_cids)
-    )
+    pruned = codes.filter(F.col("cid").isin(probe_cids))
 
     def adc_blocks(batches):
         ids, Q, ccid_a, Ccm_b, bks, qp = bq.value
@@ -1949,7 +1736,7 @@ def probe_ivfpq_index(
             with np.errstate(invalid="ignore", divide="ignore"):
                 cos = np.where(denom == 0.0, 0.0, acc / denom)
             # emit only (query, vector) pairs whose vector sits in a
-            # list the query probed — the in-memory path's join-on-cid
+            # list the query probed — a join on cid, done in place
             out_q, out_v, out_c = [], [], []
             for r_i in range(nr):
                 for qid in qp.get(int(cid[r_i]), ()):  # probed queries

@@ -35,8 +35,9 @@ deliberately not transitive-closure (``clustering.dedup_clusters``
 owns connected components when cluster-level grouping is wanted).
 
 Reference analog: none — the reference's similarity surface
-(services/text_analyzer.py) compares one primary/secondary pair; this
-extends it corpus-wide per the training-data-pipeline brief.
+(src/services/validation/similarity_calculator.py) compares one
+primary/secondary pair; this extends it corpus-wide per the
+training-data-pipeline brief.
 """
 
 from __future__ import annotations
@@ -148,7 +149,6 @@ def semantic_dedup_df(
     cents: DataFrame,
     threshold: float = NEARDUP_THRESHOLD,
     cluster_cap: int = SEMDEDUP_CLUSTER_CAP,
-    assign_mode: str = "two_level",
 ) -> DataFrame:
     """(vec_id, v) × (cid, cv) → (vec_id, cid, is_dup).
 
@@ -166,31 +166,18 @@ def semantic_dedup_df(
     the dominant cost). MEMORY_AND_DISK default = the disk-backed
     staging a fleet would use.
 
-    ``assign_mode`` (round 5 — this pipeline's n^1.5 term at
-    C ≈ 4√n, measured 221.9 s at sf30 in round 4):
-
-    - ``"two_level"`` (default): the coarse→fine quantizer
-      (``ann._two_level_assign``) — O(2·√C) cosine evals per vector,
-      geometry-independent. The assignment SEMANTICS change from
-      flat argmax to the 2-level rule (the published
-      inverted-multi-index decomposition); the DuckDB oracle mirrors
-      the 2-level rule exactly, and SemDeDup's recipe needs A
-      k-means-style partition, not THE flat-nearest one — cluster
-      membership shifts for a sliver of boundary vectors, the dedup
-      rule within clusters is unchanged.
-    - ``"prune"``: exact flat argmax via the triangle-inequality
-      group prune — bit-identical to ``"flat"``, but measured to
-      recover NOTHING on near-isotropic synthetic embeddings
-      (distance concentration: sf30 went 221.9 s → 502.9 s, slower
-      than the flat scan it wraps). Wins only on genuinely
-      clustered corpora; kept for them.
-    - ``"flat"``: the full blocked scan (round-4 behavior)."""
+    Assignment uses the 2-level coarse→fine quantizer
+    (``ann._two_level_assign``, round 5 — the flat scan was this
+    pipeline's n^1.5 term at C ≈ 4√n, measured 221.9 s at sf30):
+    O(2·√C) cosine evals per vector, geometry-independent. The
+    assignment SEMANTICS are the 2-level rule (the published
+    inverted-multi-index decomposition), not the flat argmax; the
+    DuckDB oracle mirrors the 2-level rule exactly, and SemDeDup's
+    recipe needs A k-means-style partition, not THE flat-nearest one
+    — cluster membership shifts for a sliver of boundary vectors, the
+    dedup rule within clusters is unchanged."""
     assigned = assign_centroids(
-        corpus,
-        cents,
-        keep=["vec_id", "v"],
-        prune=(assign_mode == "prune"),
-        two_level=(assign_mode == "two_level"),
+        corpus, cents, keep=["vec_id", "v"], two_level=True
     ).persist()
 
     # Cap each cluster to its lowest ids before pairing — identical
@@ -235,7 +222,6 @@ def semantic_dedup(
     sf_dir: str,
     threshold: float = NEARDUP_THRESHOLD,
     cluster_cap: int = SEMDEDUP_CLUSTER_CAP,
-    assign_mode: str = "two_level",
 ) -> DataFrame:
     """SemDeDup over the embeddings table: k-means (the trained-
     centroid path, same 3 fixed-point Lloyd iterations as
@@ -255,4 +241,4 @@ def semantic_dedup(
         train_every=train_stride(n),
         n=n,
     )
-    return semantic_dedup_df(corpus, cents, threshold, cluster_cap, assign_mode)
+    return semantic_dedup_df(corpus, cents, threshold, cluster_cap)

@@ -177,40 +177,3 @@ def fill_media_text(sorted_spans: Column, ocr_map: Column) -> Column:
             s["offset"].alias("offset"),
         ),
     )
-
-
-def fake_ocr_text_jvm(provider: Column, media_ref: Column) -> Column:
-    """The deterministic stand-in as pure JVM built-ins (md5 + conv +
-    concat) — bit-identical to ``fake_ocr_text``. Used by the
-    ``ocr_impl='jvm'`` path: when the classifier is a hash stand-in
-    (tests, benchmarks of the non-inference stages), the Python
-    boundary can be elided entirely. A real model keeps the Arrow
-    path."""
-    # NULL provider (unroutable query, the error-row path): the Arrow
-    # twin f-strings it as "None" — coalesce so both paths stay
-    # bit-identical instead of concat null-propagating to NULL.
-    provider = F.coalesce(provider, F.lit("None"))
-    h = F.md5(F.concat(provider, F.lit(":"), media_ref))
-    num = lambda i: F.conv(F.substring(h, 1 + 4 * i, 4), 16, 10).cast(
-        "long"
-    ).cast("string")
-    return F.concat(
-        F.lit("Extracted by "), provider, F.lit(" ocr engine from "), media_ref,
-        F.lit(". The image region reports values "), num(0), F.lit(", "),
-        num(1), F.lit(", "), num(2), F.lit(" and "), num(3),
-        F.lit(". Confidence stays high for every block detected in this scan."),
-    )
-
-
-def ocr_media_map_jvm(media_spans: Column, provider: Column) -> Column:
-    """ocr_media_map with the JVM stand-in classifier (no Arrow
-    boundary). Identical output; same pre-filtered input contract."""
-    offsets = F.transform(media_spans, lambda s: s["offset"])
-    texts = F.when(
-        provider == "pdfplumber", F.transform(media_spans, lambda s: F.lit(""))
-    ).otherwise(
-        F.transform(
-            media_spans, lambda s: fake_ocr_text_jvm(provider, s["media_ref"])
-        )
-    )
-    return F.map_from_arrays(offsets, texts)

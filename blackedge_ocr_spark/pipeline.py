@@ -33,7 +33,6 @@ from blackedge_ocr_spark.operators.ocr import (
     filter_media,
     first_per_offset,
     ocr_media_map,
-    ocr_media_map_jvm,
 )
 from blackedge_ocr_spark.operators.routing import route_workflow
 
@@ -346,7 +345,6 @@ def extract_documents(
     similarity_method: str = "number_frequency",
     similarity_threshold: float = SIMILARITY_THRESHOLD,
     repartition: int | None = None,
-    ocr_impl: str = "arrow",
     mega_media_chunk: int | None = None,
     ocr_burn: int = 0,
 ) -> DataFrame:
@@ -354,11 +352,6 @@ def extract_documents(
     RESULT_SCHEMA rows. ``enable_validation`` may be a bool or the
     name of a boolean column (per-request flag, reference:
     src/api/models.py ExtractionRequest.enable_validation).
-
-    ``ocr_impl``: 'arrow' routes media refs through the Arrow-batched
-    inference UDF (the real-model architecture); 'jvm' uses the
-    bit-identical md5 stand-in as built-ins (no Python boundary —
-    for benchmarking the non-inference stages in isolation).
 
     ``mega_media_chunk``: when set, documents with more than this many
     TOTAL spans take the split path (``_extract_mega_chunked``,
@@ -408,13 +401,9 @@ def extract_documents(
     # array element, which turns the fill stage quadratic in span
     # count — a 2,500-span mega-document cost 15 s/row before, linear
     # after (BENCH/SKEW.md). The OCR map comes back as a UDF output
-    # attribute ('arrow') precisely so the optimizer CANNOT inline it
-    # into the fill lambda; the 'jvm' stand-in accepts the per-element
-    # map rebuild (bench-only path, documented).
-    if ocr_impl == "arrow":
-        media_map = lambda m, p: ocr_media_map(m, p, burn=ocr_burn)
-    else:
-        media_map = ocr_media_map_jvm
+    # attribute precisely so the optimizer CANNOT inline it into the
+    # fill lambda.
+    media_map = lambda m, p: ocr_media_map(m, p, burn=ocr_burn)
     df = df.withColumn("_media", filter_media(F.col("_sorted"))).withColumn(
         "_media", first_per_offset(F.col("_media"))
     )

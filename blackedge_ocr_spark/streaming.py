@@ -38,22 +38,27 @@ def _run_token(checkpoint_dir: str) -> str:
     batch_id alone would let a new run's dynamic overwrite REPLACE a
     previous run's committed ``batch_id=0`` partitions in a kept
     output/registry dir. Partitions are therefore
-    ``run=<md5(checkpoint)>/batch_id=N``: a same-checkpoint restart
+    ``run=r<md5(checkpoint)>/batch_id=N``: a same-checkpoint restart
     keeps the token (retried batches overwrite exactly their own
     partition — the crash-idempotence contract), while a fresh
     checkpoint gets a fresh namespace and old partitions survive as
     history. Re-using a CLEARED checkpoint path re-uses the token;
     start fresh runs with a fresh checkpoint dir (standard streaming
-    practice, and what every test/harness here does)."""
+    practice, and what every test/harness here does).
+
+    The ``r`` prefix keeps the token a string under Spark's partition
+    type inference: a bare hex digest such as ``96878067506f`` or
+    ``123e45678901`` parses as a number, and a ``run`` column read
+    back as double fails every string comparison on it."""
     import hashlib
     import os
 
-    return hashlib.md5(
+    return "r" + hashlib.md5(
         os.path.abspath(checkpoint_dir).encode("utf-8")
     ).hexdigest()[:12]
 
 
-_COMPACT_RUN = "compact"  # reserved run namespace (never an md5 hex-12)
+_COMPACT_RUN = "compact"  # reserved run namespace (never a run token)
 _COMPACT_MANIFEST = "_compaction.json"
 
 

@@ -80,11 +80,6 @@ def test_duplicate_media_offsets_first_wins(spark):
     # first-wins: both spans at offset 1 carry ref m-dup-a's transcript
     assert all("m-dup-a" in t for t in media_texts)
     assert out["pages"] == 4
-    # jvm variant behaves identically
-    out2 = extract_documents(df, query_col="query", ocr_impl="jvm").collect()[0]
-    assert [s["text"] for s in out2["out_spans"]] == [
-        s["text"] for s in out["out_spans"]
-    ]
 
 def test_mega_media_chunk_parity(spark):
     """The split-process-reassemble OCR path (mega_media_chunk) must be

@@ -77,31 +77,28 @@ def test_ivfpq_shortlist_subset_of_probed_ivf_candidates(spark):
 
 def test_blocked_assignment_matches_full_matrix(spark):
     """The centroid-block streaming argmax (memory-bounded corpus
-    path) must pick the IDENTICAL cid as one full (batch x C) matrix
-    — including first-max ties — for block widths that split C
+    path) must pick the IDENTICAL centroid as one full (batch x C)
+    matrix — including first-max ties — for block widths that split C
     unevenly."""
+    import numpy as np
+
     from blackedge_ocr_spark.analysis import ann
 
-    n = ann._corpus_count(spark, SF)
-    corpus = ann._load(spark, SF)
-    cents = corpus.filter((F.col("vec_id") % 17) == 0).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
+    rows = sorted(
+        ann._load(spark, SF).select("vec_id", "v").collect(),
+        key=lambda r: r["vec_id"],
     )
-    full = {
-        r["vec_id"]: r["cid"]
-        for r in ann.assign_centroids(
-            corpus, cents, keep=["vec_id"], cent_block=1 << 30
-        ).collect()
-    }
+    V = np.array([list(r["v"]) for r in rows], dtype=np.float64)
+    # centroids: every 17th corpus vector
+    Cm = np.array(
+        [list(r["v"]) for r in rows if r["vec_id"] % 17 == 0],
+        dtype=np.float64,
+    )
+    full = ann._first_max_assign(V, Cm, len(Cm))
     for blk in (1, 7, 64):
-        got = {
-            r["vec_id"]: r["cid"]
-            for r in ann.assign_centroids(
-                corpus, cents, keep=["vec_id"], cent_block=blk
-            ).collect()
-        }
-        assert got == full, blk
-    assert len(full) == n
+        got = ann._first_max_assign(V, Cm, blk)
+        assert (got == full).all(), blk
+    assert len(full) == ann._corpus_count(spark, SF)
 
 
 def test_bm25_external_query_table_matches_fixture(spark):

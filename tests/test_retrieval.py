@@ -7,6 +7,8 @@ from __future__ import annotations
 import math
 import re
 
+import pytest
+
 from blackedge_ocr_spark.analysis import retrieval, textstats
 
 
@@ -189,87 +191,134 @@ def test_cooccur_and_bm25_random_parity(spark):
         assert got_docs == topk, qid
 
 
-def test_bm25_indexed_matches_direct_and_prunes_shards(spark, tmp_path):
-    """bm25_topk_indexed over a write_postings_index table must equal
-    bm25_topk(docs, queries=...) row-for-row, and its postings scan
-    must be partition-pruned to the shards owning query terms
-    (round-5 sf100 item: the reusable on-disk index form)."""
+SF = "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="module")
+def bm25_src(spark, tmp_path_factory):
+    """(docs, fixture query table, postings-index path) at sf0.001; the
+    index is built in 4 loop groups so every index-source test also
+    covers the bounded-scratch build."""
+    d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    path = str(tmp_path_factory.mktemp("bm25") / "ix")
+    retrieval.write_postings_index(d, path, loop_groups=4)
+    return d, retrieval.query_set(d), path
+
+
+def _want_topk(d, q):
+    """The pure-Python mirror's (query_id, doc_id, rank, score) top-k."""
+    corpus = {r["doc_id"]: r["text"] for r in d.collect()}
+    queries = {}
+    for r in q.collect():
+        queries.setdefault(r["query_id"], []).append(r["term"])
+    scores = _py_bm25(corpus, queries, retrieval.BM25_K1, retrieval.BM25_B)
+    by_q = {}
+    for (qid, doc), sc in scores.items():
+        by_q.setdefault(qid, []).append((-sc, doc))
+    return sorted(
+        (qid, doc, rank, -neg)
+        for qid, lst in by_q.items()
+        for rank, (neg, doc) in enumerate(sorted(lst)[: retrieval.BM25_TOP_K], 1)
+    )
+
+
+@pytest.mark.parametrize(
+    "source,ranges", [("corpus", 1), ("corpus", 3), ("index", 1), ("index", 3)]
+)
+def test_bm25_entry_point_matches_mirror(spark, bm25_src, source, ranges):
+    """bm25_topk over either source (the corpus, or a write_postings_index
+    table) and any query-range count returns the same rows as the
+    pure-Python mirror — queries are independent in BM25, so splitting
+    them into ranges changes nothing."""
+    d, q, path = bm25_src
+    src = d if source == "corpus" else path
+    got = sorted(
+        map(tuple, retrieval.bm25_topk(src, queries=q, query_ranges=ranges).collect())
+    )
+    assert got == _want_topk(d, q) and len(got) > 0
+
+
+def test_postings_index_loop_build_equals_one_pass(spark, bm25_src, tmp_path):
+    """write_postings_index(loop_groups>1) writes exactly the postings
+    of the one-pass build."""
+    d, _q, path = bm25_src
+    one = str(tmp_path / "one")
+    retrieval.write_postings_index(d, one)
+    for table in ("postings", "doclens"):
+        a = sorted(map(tuple, spark.read.parquet(f"{one}/{table}").collect()))
+        b = sorted(map(tuple, spark.read.parquet(f"{path}/{table}").collect()))
+        assert a == b and len(a) > 0, table
+
+
+def test_bm25_index_scan_prunes_shards(spark, bm25_src):
+    """With a single-term query the per-range scorer's postings scan
+    touches exactly the one shard owning that term: the shard filter
+    appears as a PartitionFilter in the scan node (same proof shape as
+    the IVF index pruning test)."""
     import pyspark.sql.functions as F
 
-    sf = "/root/testdata/sf0.001"
-    d = spark.read.parquet(f"{sf}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    q = retrieval.query_set(d)
-    path = str(tmp_path / "bmix")
-    retrieval.write_postings_index(d, path)
+    from blackedge_ocr_spark import plans
 
-    direct = sorted(
-        map(tuple, retrieval.bm25_topk(d, queries=q).collect())
-    )
-    indexed = sorted(
-        map(tuple, retrieval.bm25_topk_indexed(spark, path, q).collect())
-    )
-    assert indexed == direct and len(direct) > 0
-
-    # pruning: with a single-term query the scan touches exactly the
-    # one shard owning that term — the shard filter must appear as a
-    # PartitionFilter in the postings scan node (same proof shape as
-    # the IVF index pruning test)
+    _d, q, path = bm25_src
     one = q.limit(1)
     term = one.collect()[0]["term"]
     owned = spark.createDataFrame([(term,)], "term string").select(
-        retrieval._term_shard(F.col("term"), retrieval.POSTINGS_SHARDS)
-        .alias("s")
+        retrieval._term_shard(F.col("term")).alias("s")
     ).collect()[0]["s"]
-    from blackedge_ocr_spark import plans
-
-    fp = plans.formatted_plan(retrieval.bm25_topk_indexed(spark, path, one))
+    top, held = retrieval._bm25_range(path, one, retrieval.BM25_TOP_K)
+    try:
+        fp = plans.formatted_plan(top)
+    finally:
+        held.unpersist()
     assert "PartitionFilters" in fp
     assert re.search(rf"shard#\d+ IN \({owned}\)", fp) or re.search(
         rf"shard#\d+ = {owned}", fp
     ), fp[:4000]
 
 
-def test_bm25_sharded_matches_direct(spark, tmp_path):
-    """bm25_topk_sharded (query-range loop, bounded scratch) must
-    union to EXACTLY bm25_topk's rows — queries are independent in
-    BM25, so sharding them changes nothing. Also pins the
-    loop-built index (loop_groups>1) against the one-pass build."""
-    sf = "/root/testdata/sf0.001"
-    d = spark.read.parquet(f"{sf}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    q = retrieval.query_set(d)
-    direct = sorted(map(tuple, retrieval.bm25_topk(d, queries=q).collect()))
-    sharded = sorted(
-        map(
-            tuple,
-            retrieval.bm25_topk_sharded(
-                d, q, str(tmp_path / "scratch"), shards=3
-            ).collect(),
-        )
-    )
-    assert sharded == direct and len(direct) > 0
+def _cache_entries(spark) -> int:
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    fld = cm.getClass().getDeclaredField("cachedData")
+    fld.setAccessible(True)
+    return int(fld.get(cm).size())
 
-    # loop-built index == one-pass index, and sharded-over-index ==
-    # direct too
-    p1, p2 = str(tmp_path / "ix1"), str(tmp_path / "ix2")
-    retrieval.write_postings_index(d, p1)
-    retrieval.write_postings_index(d, p2, loop_groups=4)
-    a = sorted(
-        map(tuple, spark.read.parquet(f"{p1}/postings").collect())
-    )
-    b = sorted(
-        map(tuple, spark.read.parquet(f"{p2}/postings").collect())
-    )
-    assert a == b
-    via_ix = sorted(
-        map(
-            tuple,
-            retrieval.bm25_topk_sharded(
-                d, q, str(tmp_path / "scr2"), shards=2, index_path=p2
-            ).collect(),
-        )
-    )
-    assert via_ix == direct
+
+def test_bm25_leaves_only_callers_cache(spark, bm25_src):
+    """bm25_topk releases everything it stages and leaves the caller's
+    cached frames alone, over both sources and any range count."""
+    d, q, path = bm25_src
+    spark.catalog.clearCache()  # start from frames earlier tests left
+    marker = spark.range(7).persist()
+    marker.count()
+    try:
+        for src in (d, path):
+            for ranges in (1, 3):
+                retrieval.bm25_topk(src, queries=q, query_ranges=ranges).collect()
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        assert _cache_entries(spark) == 1
+        assert cm.lookupCachedData(marker._jdf).isDefined()
+    finally:
+        marker.unpersist()
+
+
+def test_bm25_empty_query_ranges(spark, bm25_src):
+    """An empty query table, or more query ranges than queries, must not
+    break the range loop: empty ranges contribute 0 rows and the result
+    keeps the (query_id, doc_id, rank, score) schema."""
+    import pyspark.sql.functions as F
+
+    d, q, path = bm25_src
+    cols = ["query_id", "doc_id", "rank", "score"]
+    empty = spark.createDataFrame([], q.schema)
+    qid = q.first()["query_id"]
+    single = q.filter(F.col("query_id") == qid)
+    for src in (d, path):
+        for ranges in (1, 3):
+            out = retrieval.bm25_topk(src, queries=empty, query_ranges=ranges)
+            assert out.columns == cols and out.count() == 0
+        out = retrieval.bm25_topk(src, queries=single, query_ranges=5)
+        rows = out.collect()
+        assert out.columns == cols
+        assert sorted(map(tuple, rows)) == _want_topk(d, single) and rows
+    with pytest.raises(ValueError):
+        retrieval.bm25_topk(path)

@@ -75,43 +75,6 @@ def test_semantic_dedup_cluster_cap_limits_pairing(spark):
     assert uncapped.filter("is_dup").count() == e.count()
 
 
-def test_pruned_assign_identical_to_full_scan():
-    """_pruned_first_max_assign must return EXACTLY the indices of
-    _first_max_assign for random inputs including zero-norm vectors,
-    zero-norm centroids, duplicated centroids (equal-cosine ties) and
-    duplicated vectors — the round-5 exactness contract that lets
-    semantic_dedup keep its DuckDB hash while dropping the O(n·C)
-    scan."""
-    import numpy as np
-
-    from blackedge_ocr_spark.analysis import ann
-
-    rng = np.random.RandomState(7)
-    for trial in range(8):
-        C = rng.randint(5, 120)
-        dims = rng.choice([4, 16, 64])
-        n = rng.randint(1, 400)
-        Cm = rng.randn(C, dims)
-        V = rng.randn(n, dims)
-        # ties: duplicate some centroids and vectors verbatim
-        if C > 3:
-            Cm[2] = Cm[0]
-            Cm[C - 1] = Cm[1]
-        if trial % 2 == 0:
-            Cm[min(3, C - 1)] = 0.0  # zero-norm centroid
-        if n > 5:
-            V[4] = 0.0               # zero-norm vector
-            V[5] = V[0]
-        # replicated-cluster shape (the corpus the prune targets)
-        if trial % 3 == 0:
-            V[: n // 2] = Cm[rng.randint(0, C, size=n // 2)] + \
-                1e-3 * rng.randn(n // 2, dims)
-        groups = ann._build_centroid_groups(Cm)
-        got = ann._pruned_first_max_assign(V, Cm, groups)
-        want = ann._first_max_assign(V, Cm)
-        assert (got == want).all(), (trial, np.nonzero(got != want)[0][:5])
-
-
 def test_train_stride_sql_parity():
     """ann.train_stride's arithmetic == TRAIN_STRIDE_SQL's, for n
     spanning both sides of every floor/crossover — the cross-engine

@@ -324,3 +324,30 @@ def test_stream_registries_file_count_bounded(spark, tmp_path):
     # last compaction at batch 9 folds batches <9: leaves the
     # compacted gen + batch 9 (+ nothing else)
     assert comp_dirs <= 3 < plain_dirs, (comp_dirs, plain_dirs)
+
+
+def test_run_partition_reads_back_as_string(spark, tmp_path):
+    """A run token must stay a string when Spark infers partition
+    types on read: a hex digest that parses as a number (``96878067506f``
+    is a Java double) would type ``run`` as double, and the registry
+    view's ``run != 'compact'`` filter would fail on the cast."""
+    import hashlib
+    import re
+
+    import pyspark.sql.functions as F
+
+    from blackedge_ocr_spark import streaming
+
+    numeric = re.compile(r"\d+(e\d+)?[fd]?")
+    ckpt = next(
+        p
+        for p in (str(tmp_path / f"ckpt{i}") for i in range(100_000))
+        if numeric.fullmatch(hashlib.md5(p.encode()).hexdigest()[:12])
+    )
+    reg = str(tmp_path / "reg")
+    spark.range(3).withColumn("run", F.lit(streaming._run_token(ckpt))).withColumn(
+        "batch_id", F.lit(0)
+    ).write.partitionBy("run", "batch_id").parquet(reg)
+    t = spark.read.parquet(reg)
+    assert dict(t.dtypes)["run"] == "string"
+    assert streaming._blessed_view(t, None, set()).count() == 3
