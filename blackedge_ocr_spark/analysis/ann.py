@@ -1,25 +1,32 @@
 """Similarity search over the embeddings table.
 
-Two paths:
-- ``brute_force_topk`` — exact cosine top-k: broadcast the (small)
-  query set against the full corpus, rank per query. The broadcast
-  join means NO shuffle of the big side — each executor scans its
-  embedding partitions once; only the k winners per query shuffle for
-  the final rank. This is the correct baseline shape at any scale
-  where |queries| ≪ |corpus|.
-- ``lsh_bucketed_topk`` — approximate: N_PLANES deterministic integer
-  hyperplanes → sign-bit bucket; candidates come from the query's own
-  bucket plus all Hamming-1 probe buckets, so the scan cost drops from
-  O(n) to O(n · (N_PLANES+1) / 2^N_PLANES) per query. Hyperplane
-  weights are md5-derived integer literals baked into the plan (and
-  into the DuckDB oracle) — no per-row hashing.
+Search entry points, all returning (q_id, rank, neighbor_id, cos):
+- ``brute_force_topk`` — exact cosine top-k; ``sq8_topk`` and
+  ``pq_topk`` score int8 / product-quantized codes instead. All three
+  run ``_scan_topk``: the (small) query matrix rides a broadcast and
+  each corpus partition is scored in place, so the corpus never
+  shuffles; only each query's partition-local winners reach the rank.
+- ``prefix_topk`` — the exact scan at several prefix dimension cuts
+  in one pass (``dim_recall``'s kernel).
+- ``lsh_bucketed_topk`` — sign-hyperplane buckets + Hamming-1 probes;
+  hyperplane weights are md5-derived integer literals baked into the
+  plan (and into the DuckDB oracle) — no per-row hashing.
+- ``ivf_topk`` / ``ivf_kmeans_topk`` / ``probe_ivf_index`` — inverted
+  lists (sampled or k-means centroids, in memory or a cid-partitioned
+  index table), all searched by ``_ivf_search``.
+- ``ivfpq_topk`` / ``probe_ivfpq_index`` — IVF + residual PQ, both
+  searched by ``_ivfpq_search``.
 
-All arithmetic is double-precision with a fixed fold order, so Spark
-and DuckDB agree bit-for-bit before the final round(…, 6).
+Shared pieces: ``_cos_block`` is the one cosine-matrix kernel,
+``_local_cut`` the one partition-local top-k cut and ``_rank_topk``
+the one r6 rank tail. All arithmetic is double-precision with a fixed
+fold order, so Spark and DuckDB agree bit-for-bit before the final
+round(…, 6).
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 from pyspark.sql import Column, DataFrame, Window
@@ -124,15 +131,10 @@ def pairwise_cosine(df: DataFrame, a: str, b: str, keep: list[str]) -> DataFrame
     out_schema = T.StructType(fields)
 
     def _kernel(A, B):
-        n, dims = A.shape
-        acc = np.zeros(n)
-        na = np.zeros(n)
-        nb = np.zeros(n)
-        for j in range(dims):
+        acc = np.zeros(len(A))
+        for j in range(A.shape[1]):
             acc = acc + A[:, j] * B[:, j]
-            na = na + A[:, j] * A[:, j]
-            nb = nb + B[:, j] * B[:, j]
-        denom = np.sqrt(na) * np.sqrt(nb)
+        denom = _row_norms(A) * _row_norms(B)
         with np.errstate(invalid="ignore", divide="ignore"):
             return np.where(denom == 0.0, 0.0, acc / denom)
 
@@ -169,6 +171,90 @@ def pairwise_cosine(df: DataFrame, a: str, b: str, keep: list[str]) -> DataFrame
             yield out
 
     return df.select(*keep, a, b).mapInPandas(blocks, schema=out_schema)
+
+
+def _row_norms(M):
+    """Per-row L2 norm, dim-ordered: sqrt of Σ_j m_j·m_j folded one
+    IEEE mul+add per dimension step (the JVM/DuckDB left fold)."""
+    import numpy as np
+
+    acc = np.zeros(len(M))
+    for j in range(M.shape[1]):
+        acc = acc + M[:, j] * M[:, j]
+    return np.sqrt(acc)
+
+
+def _cos_block(V, vnorm, Cb):
+    """(rows × |Cb|) cosine block, dim-ordered — the ONE fold whose
+    per-element op sequence every matrix scorer's bit-parity rests on
+    (one IEEE mul+add per dimension step, sqrt/mul/divide the same
+    correctly-rounded ops, zero denominators → 0.0). ``vnorm`` is
+    ``_row_norms(V)``, passed in so a caller scoring many blocks
+    against the same rows folds it once. Slicing either axis —
+    contiguous centroid blocks OR an arbitrary gathered candidate
+    subset — touches no element's arithmetic, so block results equal
+    the corresponding entries of the full (rows × C) matrix exactly."""
+    import numpy as np
+
+    acc = np.zeros((len(V), len(Cb)))
+    # NOTE: allocating `acc = acc + outer(...)` measures ~2x FASTER
+    # than `outer(..., out=tmp); acc += tmp` — ufunc.outer into a
+    # preallocated out with strided column views takes a slow path
+    # (same-session A/B at sf10: 45s vs 70-105s, BENCH/logs). Keep
+    # the allocating form.
+    for j in range(V.shape[1]):
+        acc = acc + np.multiply.outer(V[:, j], Cb[:, j])
+    denom = np.multiply.outer(vnorm, _row_norms(Cb))
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return np.where(denom == 0.0, 0.0, acc / denom)
+
+
+def _local_cut(cos, q_ids, vid, k: int):
+    """Partition-local top-k cut of a non-empty (|Q| × batch) raw
+    score block → (qi, vi) index arrays: self pairs (q_id == vec_id)
+    are excluded, and every entry within 2e-6 of its query's k-th raw
+    score is kept — which provably covers any candidate that could
+    still win after the HALF_UP r6 rounding + id tie-break of
+    ``_rank_topk``."""
+    import numpy as np
+
+    self_mask = np.equal.outer(q_ids, vid)
+    cos_sel = np.where(self_mask, -np.inf, cos)
+    kth = np.sort(cos_sel, axis=1)[:, -min(k, len(vid))]
+    # ~self_mask is required, not redundant: in a batch with n <= k
+    # rows the k-th value IS the -inf self entry and -inf >= -inf - eps
+    # holds, leaking the self row.
+    return np.nonzero((cos_sel >= (kth[:, None] - 2e-6)) & ~self_mask)
+
+
+def _rank_topk(
+    scored: DataFrame, k: int, score: str = "cos", part=("q_id",)
+) -> DataFrame:
+    """The one rank tail: round ``score`` to 6 decimals (HALF_UP, the
+    oracle's round) and keep the first ``k`` rows per ``part`` in
+    (score desc, neighbor_id asc) order — a total order, so ties at
+    the k-th score break identically in DuckDB. Returns the input
+    columns with ``rank`` placed before ``neighbor_id``."""
+    w = Window.partitionBy(*part).orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc()
+    )
+    head = [c for c in scored.columns if c not in ("neighbor_id", score)]
+    return (
+        scored.withColumn(score, F.round(F.col(score), 6))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*head, "rank", "neighbor_id", score)
+    )
+
+
+def _rerank(cand: DataFrame, k: int) -> DataFrame:
+    """Exact r6 top-k of candidate pairs (q_id, vec_id|neighbor_id,
+    qv, v) — the re-rank stage of every bucketed path."""
+    if "vec_id" in cand.columns:
+        cand = cand.withColumnRenamed("vec_id", "neighbor_id")
+    return _rank_topk(
+        pairwise_cosine(cand, "qv", "v", keep=["q_id", "neighbor_id"]), k
+    )
 
 
 def sign_bucket(vec: Column, weights: list[list[int]]) -> Column:
@@ -212,6 +298,76 @@ def _load(spark, sf_dir: str) -> DataFrame:
     )
 
 
+def _query_rows(df: DataFrame, query_every: int) -> list:
+    """The contract query slice — every ``query_every``-th vec_id —
+    collected as driver Rows (vec_id, v)."""
+    return (
+        df.filter(F.col("vec_id") % query_every == 0)
+        .select("vec_id", "v")
+        .collect()
+    )
+
+
+def _query_matrix(qsrc: DataFrame, col: str, dtype):
+    """(q_ids int64[|Q|], Q dtype[|Q|, dims]) of a (vec_id, ``col``)
+    query frame. The collect is O(|Q|) — the brute-force contract's
+    |Q| ≪ corpus assumption."""
+    import numpy as np
+
+    rows = qsrc.select("vec_id", col).collect()
+    return (
+        np.array([r["vec_id"] for r in rows], dtype=np.int64),
+        np.array([list(r[col]) for r in rows], dtype=dtype),
+    )
+
+
+def _scan_topk(
+    corpus: DataFrame, col: str, q_ids, Q, k: int, score, payload=None
+) -> DataFrame:
+    """The one broadcast-queries × partitioned-corpus top-k scan
+    (``brute_force_topk``, ``sq8_topk``, ``pq_topk``).
+
+    Shape: the query matrix (|Q| ≪ corpus by the brute-force
+    contract; at scale where that fails, use the LSH/IVF paths) rides
+    a broadcast variable; ``mapInPandas`` scans each corpus partition
+    as Arrow batches, ``score(Q, V, payload)`` returns the whole
+    (queries × batch) raw cosine block, and ``_local_cut`` emits only
+    each query's partition-local top-k (+ rounding-tie slack). The
+    corpus never shuffles; the final ``_rank_topk`` window ranks
+    parts × |Q| × ~k rows instead of |Q| × corpus. A per-pair JVM
+    fold is ~400 interpreted lambda evaluations per (query, vector) —
+    two orders slower at sf1."""
+    import numpy as np
+    import pandas as pd
+
+    bq = corpus.sparkSession.sparkContext.broadcast((q_ids, Q, payload))
+
+    def blocks(batches):
+        ids, qm, pl = bq.value
+        if qm.size == 0:  # empty query set: a (0,) array cannot
+            return        # unpack into (nq, dims) — nothing to score
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
+            cos = score(qm, np.array(list(pdf[col]), dtype=qm.dtype), pl)
+            qi, vi = _local_cut(cos, ids, vid, k)
+            yield pd.DataFrame(
+                {"q_id": ids[qi], "neighbor_id": vid[vi], "cos": cos[qi, vi]}
+            )
+
+    return _rank_topk(
+        corpus.mapInPandas(
+            blocks, schema="q_id long, neighbor_id long, cos double"
+        ),
+        k,
+    )
+
+
+def _exact_cos(Q, V, _payload):
+    return _cos_block(Q, _row_norms(Q), V)
+
+
 def brute_force_topk(
     spark,
     sf_dir: str,
@@ -221,124 +377,38 @@ def brute_force_topk(
     queries: DataFrame | None = None,
 ) -> DataFrame:
     """Exact cosine top-k per query vector (self excluded) — block
-    matrix math, not per-pair expressions.
+    matrix math over ``_scan_topk``, not per-pair expressions.
 
-    Shape: the query matrix (|Q| ≪ corpus by the brute-force
-    contract; at scale where that fails, use the LSH/IVF paths) is
-    collected once and broadcast to executors; ``mapInPandas`` scans
-    each corpus partition as an Arrow batch, scores the whole
-    (queries × batch) block with numpy, and emits only each query's
-    partition-local top-k (+ rounding-tie slack). The corpus never
-    shuffles; the final exact window ranks parts × |Q| × ~k rows
-    instead of |Q| × corpus. The previous per-pair JVM fold was
-    ~400 interpreted lambda evaluations per (query, vector) — two
-    orders slower at sf1 and pure waste at any scale.
+    Bit-parity with the JVM fold and the DuckDB oracle: ``_cos_block``
+    accumulates over DIMENSIONS in order (acc += q_j * v_j, one IEEE
+    mul + add per step — numpy does not fuse), so every partial sum
+    matches the sequential fold exactly; sqrt/mul/divide are the same
+    correctly-rounded ops.
 
-    Bit-parity with the JVM fold and the DuckDB oracle: the block
-    accumulation loops over DIMENSIONS in order (acc += q_j * v_j,
-    one IEEE mul + add per step — numpy does not fuse), so every
-    partial sum matches the sequential fold exactly; sqrt/mul/divide
-    are the same correctly-rounded ops. Rounding to 6 decimals stays
-    Spark-side; the partition-local cut keeps every row within 2e-6
-    of the k-th raw score, which provably covers any candidate that
-    could still win after HALF_UP rounding + id tie-break.
+    ``queries``: an EXTERNAL (vec_id, v) table — the serving shape,
+    where |Q| is fixed and tiny regardless of corpus size. The default
+    derives the contract fixture from the corpus (a 1/query_every
+    slice), which at a 100 TB corpus would not fit on the driver.
+    ``dims``: truncated-dimension scan (the Matryoshka-style cost
+    knob, see dim_recall), sliced SPARK-side so the Arrow transfer
+    shrinks with the scan, not just the math.
     """
     import numpy as np
-    import pandas as pd
 
     corpus = _load(spark, sf_dir)
-    if dims is not None:
-        # truncated-dimension scan (the Matryoshka-style cost knob,
-        # see dim_recall): sliced SPARK-side so the Arrow transfer
-        # shrinks with the scan, not just the math
-        corpus = corpus.select(
-            "vec_id", F.slice("v", 1, dims).alias("v")
-        )
-    # queries: an EXTERNAL (vec_id, v) table — the serving shape,
-    # where |Q| is fixed and tiny regardless of corpus size. The
-    # default derives the contract fixture from the corpus (a
-    # 1/query_every slice), which at a 100 TB corpus would not fit
-    # on the driver — the collect below is O(|Q|) either way, but
-    # only the external table keeps |Q| corpus-independent.
     qsrc = (
         corpus.filter(F.col("vec_id") % query_every == 0)
         if queries is None
         else queries
     )
-    if queries is not None and dims is not None:
+    if dims is not None:
+        corpus = corpus.select("vec_id", F.slice("v", 1, dims).alias("v"))
         qsrc = qsrc.select("vec_id", F.slice("v", 1, dims).alias("v"))
-    qrows = qsrc.select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    ).collect()
-    q_ids = np.array([r["q_id"] for r in qrows], dtype=np.int64)
-    Q = np.array([r["qv"] for r in qrows], dtype=np.float64)
-    bq = spark.sparkContext.broadcast((q_ids, Q))
-
-    def score_blocks(batches):
-        ids, qm = bq.value
-        if qm.size == 0:  # empty query set: a (0,) array cannot
-            return        # unpack into (nq, dims) — nothing to score
-        nq, dims = qm.shape
-        # sequential-in-j accumulation == the JVM/DuckDB left fold
-        qnorm = np.zeros(nq)
-        for j in range(dims):
-            qnorm = qnorm + qm[:, j] * qm[:, j]
-        qnorm = np.sqrt(qnorm)
-        for pdf in batches:
-            if len(pdf) == 0 or nq == 0:
-                continue
-            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            V = np.array(list(pdf["v"]), dtype=np.float64)
-            n = len(vid)
-            acc = np.zeros((nq, n))
-            vnorm = np.zeros(n)
-            # NOTE: allocating `acc = acc + outer(...)` measures ~2x
-            # FASTER than `outer(..., out=tmp); acc += tmp` here —
-            # ufunc.outer into a preallocated out with strided column
-            # views takes a slow path (same-session A/B at sf10:
-            # 45s vs 70-105s, BENCH/logs). Keep the allocating form.
-            for j in range(dims):
-                acc = acc + np.multiply.outer(qm[:, j], V[:, j])
-                vnorm = vnorm + V[:, j] * V[:, j]
-            vnorm = np.sqrt(vnorm)
-            denom = np.multiply.outer(qnorm, vnorm)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                cos = np.where(denom == 0, 0.0, acc / denom)
-            self_mask = np.equal.outer(ids, vid)
-            cos_sel = np.where(self_mask, -np.inf, cos)
-            kth = (
-                np.sort(cos_sel, axis=1)[:, -min(k, n)]
-                if n > 0
-                else np.full(nq, -np.inf)
-            )
-            # ~self_mask is required, not redundant: in a batch with
-            # n <= k rows the k-th value IS the -inf self entry and
-            # -inf >= -inf - eps holds, leaking the self row.
-            keep = (cos_sel >= (kth[:, None] - 2e-6)) & ~self_mask
-            qi, vi = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "q_id": ids[qi],
-                    "neighbor_id": vid[vi],
-                    "cos": cos[qi, vi],
-                }
-            )
-
-    scored = corpus.mapInPandas(
-        score_blocks, schema="q_id long, neighbor_id long, cos double"
-    ).select("q_id", "neighbor_id", F.round(F.col("cos"), 6).alias("cos"))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "neighbor_id", "cos")
-    )
+    q_ids, Q = _query_matrix(qsrc, "v", np.float64)
+    return _scan_topk(corpus, "v", q_ids, Q, k, _exact_cos)
 
 
-SERVED_Q_N = 8          # external fixture query count (|Q|)
-SERVED_Q_BASE = 1_000_000  # q_ids disjoint from every corpus vec_id
+SERVED_Q_N = 8  # external fixture query count (|Q|)
 
 
 def served_query_set(spark, n: int = SERVED_Q_N, dims: int = 64) -> DataFrame:
@@ -355,13 +425,11 @@ def served_query_set(spark, n: int = SERVED_Q_N, dims: int = 64) -> DataFrame:
     arithmetic then one correctly-rounded double division, so the
     DuckDB oracle (``sql_ann_topk_served``) rebuilds bit-identical
     vectors from the same formula with no float literals to drift.
-    q_ids start at SERVED_Q_BASE, disjoint from corpus vec_ids, so
-    the self-exclusion rule never fires for served queries."""
+    q_ids are negative (-1 - i) and corpus vec_ids start at 0, so the
+    self-exclusion rule never fires for served queries at any corpus
+    size."""
     rows = [
-        (
-            SERVED_Q_BASE + i,
-            [((i * 37 + j * 11) % 19 - 9) / 9.0 for j in range(dims)],
-        )
+        (-1 - i, [((i * 37 + j * 11) % 19 - 9) / 9.0 for j in range(dims)])
         for i in range(n)
     ]
     return spark.createDataFrame(rows, "vec_id long, v array<double>")
@@ -394,19 +462,31 @@ def sq8_codes(vec: Column) -> Column:
     )
 
 
+def _code_cos(Q, V, _payload):
+    """Cosine of int64 code blocks: the dot and both squared norms are
+    exact integer sums (|codes| <= 127, dims = 64 → |dot| <= ~1e6), so
+    one matmul is order-free; the divide is one double op."""
+    import numpy as np
+
+    qn = np.sqrt((Q * Q).sum(axis=1).astype(np.float64))
+    vn = np.sqrt((V * V).sum(axis=1).astype(np.float64))
+    denom = qn[:, None] * vn[None, :]
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return np.where(denom == 0.0, 0.0, (Q @ V.T) / denom)
+
+
 def sq8_topk(
     spark,
     sf_dir: str,
     k: int = DEFAULT_K,
     query_every: int = QUERY_EVERY,
-    queries: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k over int8-quantized codes — the
-    memory-scale variant of ``brute_force_topk``: same broadcast-
-    queries × partitioned-corpus shape (the corpus never shuffles),
-    but each vector is 64 int8 codes instead of 64 float64s, and the
-    block kernel is ONE exact int64 matmul per (queries × batch)
-    block instead of a dims-ordered float accumulation loop.
+    memory-scale variant of ``brute_force_topk``: same ``_scan_topk``
+    shape (the corpus never shuffles), but each vector is 64 int8
+    codes instead of 64 float64s, and the block kernel is ONE exact
+    int64 matmul per (queries × batch) block instead of a dims-ordered
+    float accumulation loop.
 
     score = cos of the CODE vectors: dot(qa, qb) and both squared
     norms are exact integer sums (order-free — no fold-order
@@ -418,72 +498,14 @@ def sq8_topk(
     number a fleet reads before switching its scan to int8.
     """
     import numpy as np
-    import pandas as pd
 
     corpus = _load(spark, sf_dir).select(
         "vec_id", sq8_codes(F.col("v")).alias("c")
     )
-    # external-query option: same rationale as brute_force_topk
-    qsrc = (
-        corpus.filter(F.col("vec_id") % query_every == 0)
-        if queries is None
-        else queries.select("vec_id", sq8_codes(F.col("v")).alias("c"))
+    q_ids, Q = _query_matrix(
+        corpus.filter(F.col("vec_id") % query_every == 0), "c", np.int64
     )
-    qrows = qsrc.select(
-        F.col("vec_id").alias("q_id"), F.col("c").alias("qc")
-    ).collect()
-    q_ids = np.array([r["q_id"] for r in qrows], dtype=np.int64)
-    Q = np.array([r["qc"] for r in qrows], dtype=np.int64)
-    bq = spark.sparkContext.broadcast((q_ids, Q))
-
-    def score_blocks(batches):
-        ids, qm = bq.value
-        if qm.size == 0:
-            return
-        nq = qm.shape[0]
-        # exact: |codes| <= 127, dims = 64 -> |dot| <= 64*127^2 ~ 1e6
-        qsq = (qm * qm).sum(axis=1)  # int64, exact
-        qn = np.sqrt(qsq.astype(np.float64))
-        for pdf in batches:
-            if len(pdf) == 0 or nq == 0:
-                continue
-            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            V = np.array(list(pdf["c"]), dtype=np.int64)
-            dots = qm @ V.T  # int64 matmul: exact, order-free
-            vsq = (V * V).sum(axis=1)
-            vn = np.sqrt(vsq.astype(np.float64))
-            denom = np.multiply.outer(qn, vn)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                cos = np.where(denom == 0.0, 0.0, dots / denom)
-            self_mask = np.equal.outer(ids, vid)
-            cos_sel = np.where(self_mask, -np.inf, cos)
-            n = len(vid)
-            kth = (
-                np.sort(cos_sel, axis=1)[:, -min(k, n)]
-                if n > 0
-                else np.full(nq, -np.inf)
-            )
-            keep = (cos_sel >= (kth[:, None] - 2e-6)) & ~self_mask
-            qi, vi = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "q_id": ids[qi],
-                    "neighbor_id": vid[vi],
-                    "cos": cos[qi, vi],
-                }
-            )
-
-    scored = corpus.mapInPandas(
-        score_blocks, schema="q_id long, neighbor_id long, cos double"
-    ).select("q_id", "neighbor_id", F.round(F.col("cos"), 6).alias("cos"))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "neighbor_id", "cos")
-    )
+    return _scan_topk(corpus, "c", q_ids, Q, k, _code_cos)
 
 
 def _flip_bit(bucket: Column, i: int, n_planes: int = N_PLANES) -> Column:
@@ -529,20 +551,7 @@ def lsh_bucketed_topk(
     cand = corpus.join(
         F.broadcast(queries), F.col("bucket") == F.col("qb")
     ).filter(F.col("vec_id") != F.col("q_id"))
-    scored = pairwise_cosine(
-        cand.select("q_id", F.col("vec_id").alias("neighbor_id"), "qv", "v"),
-        "qv",
-        "v",
-        keep=["q_id", "neighbor_id"],
-    ).select("q_id", "neighbor_id", F.round(F.col("cos"), 6).alias("cos"))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "neighbor_id", "cos")
-    )
+    return _rerank(cand, k)
 
 
 CENTROID_EVERY = 37  # deterministic IVF "training": every 37th vector
@@ -625,31 +634,6 @@ def _collect_centroids(cents: DataFrame):
 CENT_BLOCK = 1024
 
 
-def _cos_block(V, vnorm, Cb):
-    """(rows × |Cb|) cosine block, dim-ordered — the ONE fold whose
-    per-element op sequence every assignment kernel's bit-parity
-    rests on (one IEEE mul+add per dimension step, sqrt/mul/divide
-    the same correctly-rounded ops, zero denominators → 0.0).
-    Slicing either axis — contiguous centroid blocks OR an arbitrary
-    gathered candidate subset — touches no element's arithmetic, so
-    block results equal the corresponding entries of the full (rows
-    × C) matrix exactly."""
-    import numpy as np
-
-    n, dims = V.shape
-    cnorm = np.zeros(len(Cb))
-    for j in range(dims):
-        cnorm = cnorm + Cb[:, j] * Cb[:, j]
-    cnorm = np.sqrt(cnorm)
-    acc = np.zeros((n, len(Cb)))
-    # allocating form on purpose — see brute_force_topk NOTE
-    for j in range(dims):
-        acc = acc + np.multiply.outer(V[:, j], Cb[:, j])
-    denom = np.multiply.outer(vnorm, cnorm)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        return np.where(denom == 0.0, 0.0, acc / denom)
-
-
 def _first_max_assign(V, Cm, block: int = CENT_BLOCK):
     """First-max nearest-centroid assignment, streamed over centroid
     BLOCKS: per block the usual dim-ordered cosine (``_cos_block`` —
@@ -662,15 +646,11 @@ def _first_max_assign(V, Cm, block: int = CENT_BLOCK):
     bound and the tie rule cannot drift."""
     import numpy as np
 
-    n, dims = V.shape
-    C = len(Cm)
-    vnorm = np.zeros(n)
-    for j in range(dims):
-        vnorm = vnorm + V[:, j] * V[:, j]
-    vnorm = np.sqrt(vnorm)
+    n = len(V)
+    vnorm = _row_norms(V)
     best = np.full(n, -np.inf)
     besti = np.zeros(n, dtype=np.int64)
-    for c0 in range(0, C, block):
+    for c0 in range(0, len(Cm), block):
         sims = _cos_block(V, vnorm, Cm[c0:c0 + block])
         bi = np.argmax(sims, axis=1)
         bv = sims[np.arange(n), bi]
@@ -745,94 +725,66 @@ def assign_centroids(
     df: DataFrame,
     cents: DataFrame,
     keep: list[str],
-    probe: int | None = None,
     vec_col: str = "v",
     two_level: bool = False,
 ) -> DataFrame:
     """Nearest-centroid assignment as a numpy block kernel: returns
-    ``df[keep]`` + ``cid`` (+ ``pcids``, the ``probe`` nearest list
-    ids in (sim desc, cid asc) order, when requested).
+    ``df[keep]`` + ``cid``.
 
     This is the IVF hot loop — every corpus vector × every centroid —
     and the interpreted ``transform(cents, c -> cosine(v, c.cv))``
     fold costs ~dims·4 lambda evaluations per (vector, centroid):
     ~2 minutes for 20k×540×64d at sf1 where this kernel takes ~1 s.
-    Bit-parity with the JVM fold (same discipline as
-    ``brute_force_topk``): accumulate over dimensions IN ORDER (one
-    IEEE mul+add per step), sqrt/mul/divide are the same
-    correctly-rounded ops, zero denominators map to 0.0, and
-    ``np.argmax`` takes the FIRST max exactly like
-    ``array_position(sims, array_max(sims))``. Tie order inside
-    ``pcids`` is stable-argsort over cid-sorted columns == the JVM
-    ``array_sort(struct(-sim, cid))``. The centroid matrix is
+    Bit-parity with the JVM fold: ``_first_max_assign`` scores with
+    ``_cos_block`` and takes the FIRST max exactly like
+    ``array_position(sims, array_max(sims))``. The centroid matrix is
     O(C·dims) — driver-collected and broadcast, never joined.
 
-    ``two_level=True`` (corpus path only): assign through the 2-level
-    coarse→fine quantizer (``_two_level_assign``). Used by
-    semantic_dedup, whose C ≈ 4√n makes the flat scan the pipeline's
-    n^1.5 term."""
+    ``two_level=True``: assign through the 2-level coarse→fine
+    quantizer (``_two_level_assign``). Used by semantic_dedup, whose
+    C ≈ 4√n makes the flat scan the pipeline's n^1.5 term."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
     spark = df.sparkSession
     cids_, Cm_ = _collect_centroids(cents)
-    tl_ = (
-        _two_level_structure(cids_, Cm_)
-        if (two_level and not probe)
-        else None
-    )
+    tl_ = _two_level_structure(cids_, Cm_) if two_level else None
     bc = spark.sparkContext.broadcast((cids_, Cm_, tl_))
 
     in_df = df.select(*keep) if vec_col in keep else df.select(*keep, vec_col)
     fields = [in_df.schema[c] for c in keep]
     fields.append(T.StructField("cid", T.LongType()))
-    if probe:
-        fields.append(T.StructField("pcids", T.ArrayType(T.LongType())))
     out_schema = T.StructType(fields)
 
     def blocks(batches):
         cids, Cm, tl = bc.value
-        C, dims = Cm.shape
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             V = np.array(list(pdf[vec_col]), dtype=np.float64)
-            n = len(pdf)
             out = pdf[keep].copy()
-            if probe:
-                # query-side path: |rows| is the tiny query slice, so
-                # the full (rows × C) matrix is fine — and the probe
-                # ranking needs it whole. Stable sort on -sim over
-                # cid-ascending columns == array_sort(struct(-sim,
-                # cid)): ties break to the lower cid.
-                vnorm = np.zeros(n)
-                for j in range(dims):
-                    vnorm = vnorm + V[:, j] * V[:, j]
-                vnorm = np.sqrt(vnorm)
-                sims = _cos_block(V, vnorm, Cm)
-                out["cid"] = cids[np.argmax(sims, axis=1)]
-                order = np.argsort(-sims, axis=1, kind="stable")
-                out["pcids"] = list(cids[order[:, :probe]])
-            elif tl is not None:
+            if tl is not None:
                 # 2-level coarse→fine quantizer (round 5): O(2·√C)
                 # evals per vector; the oracle mirrors the 2-level
                 # rule, which defines the assignment semantics
                 out["cid"] = cids[_two_level_assign(V, Cm, *tl)]
             else:
-                # corpus-side path: C grows as 4·√n, so a full
-                # (batch × C) sims matrix is O(batch·√n) doubles PER
-                # WORKER — measured killing Python workers at sf30
-                # (1.5M vectors, C≈4900). _first_max_assign streams
-                # centroid blocks with a running strictly-greater
-                # argmax — bit-identical to np.argmax over the full
-                # row, memory bounded by the block width.
+                # C grows as 4·√n, so a full (batch × C) sims matrix
+                # is O(batch·√n) doubles PER WORKER — measured killing
+                # Python workers at sf30 (1.5M vectors, C≈4900).
+                # _first_max_assign streams centroid blocks, memory
+                # bounded by the block width.
                 out["cid"] = cids[_first_max_assign(V, Cm)]
             yield out
 
     return in_df.mapInPandas(blocks, schema=out_schema)
 PROBE_LISTS = 3      # clusters probed per query
+
+
+def _cent_rows(cents: DataFrame) -> list:
+    """Centroid table (cid, cv) collected as cid-sorted driver Rows."""
+    return sorted(cents.collect(), key=lambda r: r["cid"])
 
 
 def ivf_topk(
@@ -846,18 +798,18 @@ def ivf_topk(
     """IVF (inverted-file) approximate top-k — the documented scale
     path beyond hyperplane LSH: partition the corpus into C centroid
     lists, probe only the ``probe`` closest lists per query, rank
-    candidates exactly.
+    candidates exactly (``_ivf_search``).
 
     Scale shape: centroid assignment is MAP-SIDE — the (small, sorted)
-    centroid array rides a 1-row broadcast cross join and each vector
-    folds over it once; the corpus never shuffles. Candidate scan cost
-    is ~probe/C of the corpus per query. A production system would
-    k-means the centroids and store ``cid`` as a partition column so
-    probes become partition pruning; here centroids are every
-    ``centroid_every``-th vector, deterministically, so the DuckDB
-    oracle reproduces the exact assignment (ties broken toward the
-    lowest centroid id via first-max position). The default stride is
-    adaptive (``centroid_stride``): C = O(√n), never O(n).
+    centroid array rides a broadcast and each vector folds over it
+    once; the corpus never shuffles. Candidate scan cost is ~probe/C
+    of the corpus per query. ``write_ivf_index`` stores ``cid`` as a
+    partition column so probes become partition pruning; here
+    centroids are every ``centroid_every``-th vector,
+    deterministically, so the DuckDB oracle reproduces the exact
+    assignment (ties broken toward the lowest centroid id via
+    first-max position). The default stride is adaptive
+    (``centroid_stride``): C = O(√n), never O(n).
     """
     if centroid_every is None:
         centroid_every = centroid_stride(_corpus_count(spark, sf_dir))
@@ -865,49 +817,46 @@ def ivf_topk(
     cents = corpus.filter(F.col("vec_id") % centroid_every == 0).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
     )
-    return _ivf_rank(corpus, cents, k, query_every, probe)
+    return _ivf_search(
+        spark,
+        assign_centroids(corpus, cents, keep=["vec_id", "v"]),
+        _query_rows(corpus, query_every),
+        _cent_rows(cents),
+        k,
+        probe,
+    )
 
 
-def _ivf_rank(
-    corpus: DataFrame, cents: DataFrame, k: int, query_every: int, probe: int
+def _ivf_search(
+    spark, assigned: DataFrame, qrows, cents, k: int, probe: int
 ) -> DataFrame:
-    """Shared IVF search stage: assign every vector to its nearest
-    centroid list (map-side, 1-row broadcast of the centroid array),
-    probe the ``probe`` closest lists per query, exact cosine re-rank.
-    Used by both the sampled-centroid and the k-means-trained paths."""
-    # Assignment is the numpy block kernel (bit-identical to the
-    # retired JVM transform/array_position fold — see
-    # ``assign_centroids``); the centroid array is driver-collected
-    # once and broadcast, the corpus never shuffles. Queries re-run
-    # the kernel with ``probe`` ranking on their 1/query_every slice.
-    assigned = assign_centroids(corpus, cents, keep=["vec_id", "v"])
-    queries = assign_centroids(
-        corpus.filter(F.col("vec_id") % query_every == 0),
-        cents,
-        keep=["vec_id", "v"],
-        probe=probe,
-    ).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.explode("pcids").alias("cid"),
+    """The one IVF search, over in-memory lists (``ivf_topk``,
+    ``ivf_kmeans_topk``) or a ``write_ivf_index`` table
+    (``probe_ivf_index``): the driver plans the probe set
+    (``_plan_probes`` — queries × their ``probe`` nearest centroids,
+    O(|Q|·C) on collected centroid rows, tiny), ``assigned`` (vec_id,
+    v, cid) is filtered with ``cid IN (<literal probes>)`` — on the
+    cid-partitioned index table Spark's file-source planner PRUNES
+    the unprobed list directories, so the scan reads ~probe/C of the
+    index from disk (asserted by the plan test) — and the candidates
+    broadcast-join the per-query probe map and re-rank exactly.
+
+    ``qrows``: Row(vec_id, v) queries; ``cents``: cid-sorted
+    Row(cid, cv)."""
+    qv_by_id = {int(r["vec_id"]): list(r["v"]) for r in qrows}
+    plan = [
+        (q_id, cid, qv_by_id[q_id])
+        for q_id, cid in _plan_probes(qrows, cents, probe)
+    ]
+    qdf = spark.createDataFrame(
+        plan, "q_id long, cid bigint, qv array<double>"
     )
-    cand = assigned.join(F.broadcast(queries), "cid").filter(
-        F.col("vec_id") != F.col("q_id")
+    cand = (
+        assigned.filter(F.col("cid").isin(sorted({c for _, c, _v in plan})))
+        .join(F.broadcast(qdf), "cid")
+        .filter(F.col("vec_id") != F.col("q_id"))
     )
-    out = pairwise_cosine(
-        cand.select("q_id", F.col("vec_id").alias("neighbor_id"), "qv", "v"),
-        "qv",
-        "v",
-        keep=["q_id", "neighbor_id"],
-    ).select("q_id", "neighbor_id", F.round(F.col("cos"), 6).alias("cos"))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        out.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "neighbor_id", "cos")
-    )
+    return _rerank(cand, k)
 
 
 KMEANS_ITERS = 3   # unrolled Lloyd iterations (fixed → reproducible)
@@ -962,7 +911,7 @@ def kmeans_centroids(
     (asserted by test_kmeans_centroids_match_numpy_reference, which
     checks BOTH against an independent scalar-fold reference). The
     final full-corpus assignment happens exactly once, in the search/
-    index stage (``_ivf_rank``/``write_ivf_index``), not here. At
+    index stage (``_ivf_search``/``write_ivf_index``), not here. At
     10^12 rows the stride would be chosen (hash-stride) to keep the
     sample at a fixed size; the modulus form is what the DuckDB
     oracle can mirror exactly.
@@ -1022,26 +971,10 @@ def _kmeans_local(
     cids, Cm = ids[seed], V[seed]  # ascending cid order
     T = V[ids % train_every == 0]
     Q = np.floor(T * 1e6 + 0.5).astype(np.int64)
-    n, dims = T.shape
-    tnorm = np.zeros(n)
-    for j in range(dims):
-        tnorm = tnorm + T[:, j] * T[:, j]
-    tnorm = np.sqrt(tnorm)
     for _ in range(iters):
         C = len(Cm)
-        cnorm = np.zeros(C)
-        for j in range(dims):
-            cnorm = cnorm + Cm[:, j] * Cm[:, j]
-        cnorm = np.sqrt(cnorm)
-        acc = np.zeros((n, C))
-        # allocating form on purpose — see brute_force_topk NOTE
-        for j in range(dims):
-            acc = acc + np.multiply.outer(T[:, j], Cm[:, j])
-        denom = np.multiply.outer(tnorm, cnorm)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            sims = np.where(denom == 0.0, 0.0, acc / denom)
-        best = np.argmax(sims, axis=1)  # first max, like array_position
-        sums = np.zeros((C, dims), dtype=np.int64)
+        best = _first_max_assign(T, Cm)  # first max, like array_position
+        sums = np.zeros((C, T.shape[1]), dtype=np.int64)
         np.add.at(sums, best, Q)  # exact int adds, order-independent
         counts = np.bincount(best, minlength=C)
         keep = counts > 0
@@ -1116,12 +1049,19 @@ def ivf_kmeans_topk(
         centroid_every = centroid_stride(n)
     corpus = _load(spark, sf_dir)
     cents = kmeans_centroids(corpus, iters, centroid_every, train_every, n=n)
-    return _ivf_rank(corpus, cents, k, query_every, probe)
+    return _ivf_search(
+        spark,
+        assign_centroids(corpus, cents, keep=["vec_id", "v"]),
+        _query_rows(corpus, query_every),
+        _cent_rows(cents),
+        k,
+        probe,
+    )
 
 
 def _plan_probes(qrows, cents, probe: int) -> list[tuple[int, int]]:
-    """Driver-side probe planner, vectorized (round 5): one numpy
-    |Q|×C cosine with the dim-ordered accumulation discipline — the
+    """Driver-side probe planner, vectorized (round 5): one |Q|×C
+    ``_cos_block`` with the dim-ordered accumulation discipline — the
     same sequence of IEEE mul+adds as the scalar ``_fold_cos`` fold
     it replaces, so the floats are bit-identical — then a per-query
     stable lexsort on ``(-cos, cid)``, the identical tie rule. The
@@ -1138,44 +1078,22 @@ def _plan_probes(qrows, cents, probe: int) -> list[tuple[int, int]]:
 
     ccid = np.array([c["cid"] for c in cents], dtype=np.int64)
     Cm = np.array([list(c["cv"]) for c in cents], dtype=np.float64)
-    nc, dims = Cm.shape
-    cn = np.zeros(nc)
-    for j in range(dims):
-        cn = cn + Cm[:, j] * Cm[:, j]
-    cn = np.sqrt(cn)
-    good_idx = [
-        i
-        for i, r in enumerate(qrows)
-        if r["v"] is not None and len(r["v"]) == dims
-    ]
-    cos_by_row: dict[int, object] = {}
-    if good_idx:
-        Q = np.array(
-            [list(qrows[i]["v"]) for i in good_idx], dtype=np.float64
-        )
-        nq = len(good_idx)
-        acc = np.zeros((nq, nc))
-        qn = np.zeros(nq)
-        for j in range(dims):
-            acc = acc + np.multiply.outer(Q[:, j], Cm[:, j])
-            qn = qn + Q[:, j] * Q[:, j]
-        denom = np.multiply.outer(np.sqrt(qn), cn)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            cos = np.where(denom == 0.0, 0.0, acc / denom)
-        for pos, i in enumerate(good_idx):
-            cos_by_row[i] = cos[pos]
+    dims = Cm.shape[1]
+    good = [r["v"] is not None and len(r["v"]) == dims for r in qrows]
+    Q = np.array(
+        [list(r["v"]) for r, g in zip(qrows, good) if g], dtype=np.float64
+    ).reshape(-1, dims)
+    cos_rows = iter(_cos_block(Q, _row_norms(Q), Cm))
     plan: list[tuple[int, int]] = []
-    for i, r in enumerate(qrows):
-        row = cos_by_row.get(i)
-        if row is not None:
+    for r, g in zip(qrows, good):
+        if g:
             # lexsort: primary = last key (-cos asc == cos desc),
             # secondary cid asc — exactly sorted([(-cos, cid)])
-            for t in np.lexsort((ccid, -row))[:probe]:
-                plan.append((int(r["vec_id"]), int(ccid[t])))
+            top = ccid[np.lexsort((ccid, -next(cos_rows)))[:probe]]
         else:
             sims = [(-_fold_cos(r["v"], c["cv"]), c["cid"]) for c in cents]
-            for _, cid in sorted(sims)[:probe]:
-                plan.append((int(r["vec_id"]), int(cid)))
+            top = [cid for _, cid in sorted(sims)[:probe]]
+        plan.extend((int(r["vec_id"]), int(cid)) for cid in top)
     return plan
 
 
@@ -1205,50 +1123,19 @@ def probe_ivf_index(
     query_every: int = QUERY_EVERY,
     probe: int = PROBE_LISTS,
 ) -> DataFrame:
-    """Search a ``write_ivf_index`` table. The driver plans the probe
-    set (queries × their ``probe`` nearest centroids — O(|Q|·C) work
-    on collected centroid rows, tiny), then scans the vector table
-    with ``cid IN (<literal probes>)`` so Spark's file-source planner
-    PRUNES the unprobed list directories — the scan reads ~probe/C of
-    the index from disk (asserted by the plan test). Candidates then
-    broadcast-join the per-query probe map and re-rank exactly."""
+    """Search a ``write_ivf_index`` table with ``_ivf_search``: the
+    ``cid IN (<planned probes>)`` filter prunes the unprobed list
+    directories of the cid-partitioned vector table. Results equal
+    the in-memory ``ivf_kmeans_topk`` over the same centroids."""
     base = path.rstrip("/")
-    cents = spark.read.parquet(f"{base}/centroids").collect()
-    cents = sorted(cents, key=lambda r: r["cid"])
     vec = spark.read.parquet(f"{base}/vectors")
-
-    qrows = vec.filter(F.col("vec_id") % query_every == 0).select(
-        "vec_id", "v"
-    ).collect()
-    # driver-side probe plan: vectorized numpy planner, bit-equal to
-    # the in-engine assignment fold (see _plan_probes)
-    qv_by_id = {int(r["vec_id"]): list(r["v"]) for r in qrows}
-    plan = [
-        (q_id, cid, qv_by_id[q_id])
-        for q_id, cid in _plan_probes(qrows, cents, probe)
-    ]
-    probe_cids = sorted({cid for _, cid, _v in plan})
-
-    qdf = spark.createDataFrame(
-        plan, "q_id long, cid bigint, qv array<double>"
-    )
-    pruned = vec.filter(F.col("cid").isin(probe_cids))
-    cand = pruned.join(F.broadcast(qdf), "cid").filter(
-        F.col("vec_id") != F.col("q_id")
-    )
-    out = pairwise_cosine(
-        cand.select("q_id", F.col("vec_id").alias("neighbor_id"), "qv", "v"),
-        "qv",
-        "v",
-        keep=["q_id", "neighbor_id"],
-    ).select("q_id", "neighbor_id", F.round(F.col("cos"), 6).alias("cos"))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        out.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "neighbor_id", "cos")
+    return _ivf_search(
+        spark,
+        vec,
+        _query_rows(vec, query_every),
+        _cent_rows(spark.read.parquet(f"{base}/centroids")),
+        k,
+        probe,
     )
 
 
@@ -1274,9 +1161,18 @@ def pq_codebooks(
 
     Returns ([(cids, Cm)] per subspace, n, sub_dims)."""
     n = _corpus_count(spark, sf_dir)
-    stride = centroid_stride(n)
     corpus = _load_raw(spark, sf_dir)
     dims = len(corpus.select("v").first()["v"])
+    books, sub = _train_books(corpus, "v", n, dims, iters, train_every)
+    return books, n, sub
+
+
+def _train_books(
+    df: DataFrame, col: str, n: int, dims: int, iters: int, train_every: int
+):
+    """PQ_M fixed-point Lloyd chains (``kmeans_centroids``), one per
+    contiguous subvector slice of ``col``, at the shared adaptive
+    stride. Returns ([(cids, Cm)] per subspace, sub_dims)."""
     if dims % PQ_M:
         # the subspace slicing silently drops tail dimensions and the
         # reconstruction buffers fill only PQ_M·(dims//PQ_M) columns
@@ -1284,18 +1180,17 @@ def pq_codebooks(
         raise ValueError(
             f"PQ requires dims divisible by PQ_M={PQ_M}; got {dims}"
         )
+    stride = centroid_stride(n)
     sub = dims // PQ_M
     books = []
     for m in range(PQ_M):
-        sf = corpus.select(
-            "vec_id", F.slice("v", m * sub + 1, sub).alias("v")
-        )
+        sf = df.select("vec_id", F.slice(col, m * sub + 1, sub).alias("v"))
         books.append(
             _collect_centroids(
                 kmeans_centroids(sf, iters, stride, train_every, n=n)
             )
         )
-    return books, n, sub
+    return books, sub
 
 
 def pq_topk(
@@ -1303,7 +1198,6 @@ def pq_topk(
     sf_dir: str,
     k: int = DEFAULT_K,
     query_every: int = QUERY_EVERY,
-    queries: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k over product-quantized vectors — the
     compressed-exhaustive-scan regime ``sq8_topk`` occupies, at a far
@@ -1324,89 +1218,32 @@ def pq_topk(
 
     Shape at scale: codebooks are driver-trained on strided samples
     (the kmeans_centroids dispatch) and broadcast; the corpus is
-    scanned ONCE in one mapInPandas kernel (assign -> reconstruct ->
-    score -> partition-local top-k with the epsilon guard), so only
-    O(parts * |Q| * ~k) candidate rows reach the final rank window —
-    the corpus never shuffles."""
+    scanned ONCE by ``_scan_topk`` (assign -> reconstruct -> score ->
+    partition-local top-k), so the corpus never shuffles."""
     import numpy as np
-    import pandas as pd
 
     books, n, sub = pq_codebooks(spark, sf_dir)
     corpus = _load(spark, sf_dir)
-    # external-query option: same rationale as brute_force_topk
-    qsrc = (
-        corpus.filter(F.col("vec_id") % query_every == 0)
-        if queries is None
-        else queries
+    q_ids, Q = _query_matrix(
+        corpus.filter(F.col("vec_id") % query_every == 0), "v", np.float64
     )
-    qrows = qsrc.select("vec_id", "v").collect()
-    q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    Q = np.array([list(r["v"]) for r in qrows], dtype=np.float64)
-    bq = spark.sparkContext.broadcast((q_ids, Q, books))
+    return _scan_topk(corpus, "v", q_ids, Q, k, _pq_cos, (books, sub))
 
-    def blocks(batches):
-        ids, Qm, bks = bq.value
-        nq = Qm.shape[0]
-        if nq == 0:
-            return
-        dims = Qm.shape[1]
-        qn = np.zeros(nq)
-        for j in range(dims):
-            qn = qn + Qm[:, j] * Qm[:, j]
-        qn = np.sqrt(qn)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            V = np.array(list(pdf["v"]), dtype=np.float64)
-            nr = len(vid)
-            R = np.empty_like(V)
-            for m, (_cids, Cm) in enumerate(bks):
-                Vm = V[:, m * sub:(m + 1) * sub]
-                # shared memory-bounded blocked first-max (identical
-                # to argmax over the full sims row — see
-                # _first_max_assign)
-                code = _first_max_assign(Vm, Cm)
-                R[:, m * sub:(m + 1) * sub] = Cm[code]
-            # score queries against reconstructions: full dim order ==
-            # DuckDB's fold over the concatenated centroid lists
-            acc = np.zeros((nq, nr))
-            rn = np.zeros(nr)
-            for j in range(dims):
-                acc = acc + np.multiply.outer(Qm[:, j], R[:, j])
-                rn = rn + R[:, j] * R[:, j]
-            rn = np.sqrt(rn)
-            denom = np.multiply.outer(qn, rn)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                cos = np.where(denom == 0.0, 0.0, acc / denom)
-            self_mask = np.equal.outer(ids, vid)
-            cos_sel = np.where(self_mask, -np.inf, cos)
-            kth = (
-                np.sort(cos_sel, axis=1)[:, -min(k, nr)]
-                if nr > 0
-                else np.full(nq, -np.inf)
-            )
-            keep = (cos_sel >= (kth[:, None] - 2e-6)) & ~self_mask
-            qi, vi = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "q_id": ids[qi],
-                    "neighbor_id": vid[vi],
-                    "cos": cos[qi, vi],
-                }
-            )
 
-    scored = corpus.mapInPandas(
-        blocks, schema="q_id long, neighbor_id long, cos double"
-    ).select("q_id", "neighbor_id", F.round(F.col("cos"), 6).alias("cos"))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "neighbor_id", "cos")
-    )
+def _pq_cos(Q, V, payload):
+    """Cosine of the queries against PQ reconstructions of a corpus
+    batch: each subvector is replaced by its first-max codebook
+    centroid (``_first_max_assign``), then ``_cos_block`` folds the
+    FULL dim range in order — DuckDB's fold over the concatenated
+    centroid lists."""
+    import numpy as np
+
+    books, sub = payload
+    R = np.empty_like(V)
+    for m, (_cids, Cm) in enumerate(books):
+        part = slice(m * sub, (m + 1) * sub)
+        R[:, part] = Cm[_first_max_assign(V[:, part], Cm)]
+    return _cos_block(Q, _row_norms(Q), R)
 
 
 # ADC shortlist exact-re-ranked per query. Depth tuned on the recall
@@ -1445,23 +1282,7 @@ def ivfpq_codebooks(
     list structure, so the same codebook budget buys far less
     distortion than PQ over raw vectors. Stride follows the shared
     adaptive rule (C ≈ 4·√n per subspace)."""
-    stride = centroid_stride(n)
-    if dims % PQ_M:
-        raise ValueError(
-            f"IVF-PQ requires dims divisible by PQ_M={PQ_M}; got {dims}"
-        )
-    sub = dims // PQ_M
-    books = []
-    for m in range(PQ_M):
-        sf = res.select(
-            "vec_id", F.slice("r", m * sub + 1, sub).alias("v")
-        )
-        books.append(
-            _collect_centroids(
-                kmeans_centroids(sf, iters, stride, train_every, n=n)
-            )
-        )
-    return books, sub
+    return _train_books(res, "r", n, dims, iters, train_every)
 
 
 def ivfpq_topk(
@@ -1516,15 +1337,12 @@ def ivfpq_topk(
     res = _residual_frame(corpus, cents).persist()
     try:
         books, sub = ivfpq_codebooks(res, n, dims, iters, train_every)
-        qrows = corpus.filter(F.col("vec_id") % query_every == 0).select(
-            "vec_id", "v"
-        ).collect()
         return _ivfpq_search(
             spark,
             _encode_codes(res, books, sub),
             corpus,
-            qrows,
-            sorted(cents.collect(), key=lambda r: r["cid"]),
+            _query_rows(corpus, query_every),
+            _cent_rows(cents),
             books,
             k,
             probe,
@@ -1540,7 +1358,6 @@ def _encode_codes(res: DataFrame, books, sub: int) -> DataFrame:
     instead of dims×8-byte raw vectors. One map-side pass, shared
     blocked first-max assignment."""
     import numpy as np
-    import pandas as pd
 
     spark = res.sparkSession
     bc = spark.sparkContext.broadcast(books)
@@ -1624,10 +1441,6 @@ def probe_ivfpq_index(
     import numpy as np
 
     base = path.rstrip("/")
-    cents = sorted(
-        spark.read.parquet(f"{base}/centroids").collect(),
-        key=lambda r: r["cid"],
-    )
     brows = spark.read.parquet(f"{base}/codebooks").collect()
     n_m = 1 + max(r["m"] for r in brows)
     books = []
@@ -1642,15 +1455,12 @@ def probe_ivfpq_index(
             )
         )
     vec = spark.read.parquet(f"{base}/vectors")
-    qrows = vec.filter(F.col("vec_id") % query_every == 0).select(
-        "vec_id", "v"
-    ).collect()
     return _ivfpq_search(
         spark,
         spark.read.parquet(f"{base}/codes"),
         vec,
-        qrows,
-        cents,
+        _query_rows(vec, query_every),
+        _cent_rows(spark.read.parquet(f"{base}/centroids")),
         books,
         k,
         probe,
@@ -1694,7 +1504,7 @@ def _ivfpq_search(
     probe_cids = sorted({cid for _, cid in plan})
     q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
     Qm = np.array([list(r["v"]) for r in qrows], dtype=np.float64)
-    qprobe = {}
+    qprobe: dict[int, list[int]] = {}
     for qid, cid in plan:
         qprobe.setdefault(int(cid), []).append(int(qid))
     bq = spark.sparkContext.broadcast(
@@ -1705,11 +1515,7 @@ def _ivfpq_search(
 
     def adc_blocks(batches):
         ids, Q, ccid_a, Ccm_b, bks, qp = bq.value
-        nq, dims = Q.shape
-        qn = np.zeros(nq)
-        for j in range(dims):
-            qn = qn + Q[:, j] * Q[:, j]
-        qn = np.sqrt(qn)
+        qn = _row_norms(Q)
         qpos = {int(q): i for i, q in enumerate(ids)}
         for pdf in batches:
             if len(pdf) == 0:
@@ -1719,22 +1525,12 @@ def _ivfpq_search(
             codes = np.array(list(pdf["codes"]), dtype=np.int64)
             nr = len(vid)
             # reconstruct: coarse centroid + concatenated codebook rows
-            R = np.empty((nr, dims))
+            R = np.empty((nr, Q.shape[1]))
             ci = np.searchsorted(ccid_a, cid)
             base_c = Ccm_b[ci]
             for m, (_c, Cm) in enumerate(bks):
                 R[:, m * sub:(m + 1) * sub] = Cm[codes[:, m]]
-            R = base_c + R
-            # ADC cosine, dim-ordered (== pairwise_cosine's kernel)
-            acc = np.zeros((nq, nr))
-            rn = np.zeros(nr)
-            for j in range(dims):
-                acc = acc + np.multiply.outer(Q[:, j], R[:, j])
-                rn = rn + R[:, j] * R[:, j]
-            rn = np.sqrt(rn)
-            denom = np.multiply.outer(qn, rn)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                cos = np.where(denom == 0.0, 0.0, acc / denom)
+            cos = _cos_block(Q, qn, base_c + R)  # ADC cosine
             # emit only (query, vector) pairs whose vector sits in a
             # list the query probed — a join on cid, done in place
             out_q, out_v, out_c = [], [], []
@@ -1752,9 +1548,6 @@ def _ivfpq_search(
 
     adc = pruned.mapInPandas(
         adc_blocks, schema="q_id long, neighbor_id long, adc double"
-    ).select("q_id", "neighbor_id", F.round(F.col("adc"), 6).alias("adc"))
-    wa = Window.partitionBy("q_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id").asc()
     )
     # MATERIALIZE the short-list (round 5, was .persist()): it feeds
     # BOTH the neighbor fetch and the exact re-rank join — uncached,
@@ -1764,15 +1557,11 @@ def _ivfpq_search(
     # O(|Q|·shortlist) ids — corpus-independent, the thing a serving
     # node holds in memory anyway — and the ADC scan runs exactly
     # once, with no cache entry left behind.
-    short_rows = [
-        (int(r["q_id"]), int(r["neighbor_id"]))
-        for r in adc.withColumn("srank", F.row_number().over(wa))
-        .filter(F.col("srank") <= shortlist)
-        .select("q_id", "neighbor_id")
-        .collect()
-    ]
     short = spark.createDataFrame(
-        short_rows, "q_id long, neighbor_id long"
+        _rank_topk(adc, shortlist, score="adc")
+        .select("q_id", "neighbor_id")
+        .collect(),
+        "q_id long, neighbor_id long",
     )
     qvs = spark.createDataFrame(
         [(int(r["vec_id"]), list(r["v"])) for r in qrows],
@@ -1783,21 +1572,11 @@ def _ivfpq_search(
                     .distinct()),
         "vec_id",
     ).select(F.col("vec_id").alias("neighbor_id"), "v")
-    exact = pairwise_cosine(
-        short.select("q_id", "neighbor_id")
-        .join(F.broadcast(qvs), "q_id")
-        .join(F.broadcast(fetch), "neighbor_id"),
-        "qv",
-        "v",
-        keep=["q_id", "neighbor_id"],
-    ).select("q_id", "neighbor_id", F.round(F.col("cos"), 6).alias("cos"))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "neighbor_id", "cos")
+    return _rerank(
+        short.join(F.broadcast(qvs), "q_id").join(
+            F.broadcast(fetch), "neighbor_id"
+        ),
+        k,
     )
 
 
@@ -1809,7 +1588,7 @@ def recall_vs_exact(
     method: (method, n_queries, hits, recall) where recall =
     hits / (n_queries * k), micro-averaged.
 
-    Shape: the union of both approximate results left-semi-joins the
+    Shape: the union of the approximate results left-semi-joins the
     exact top-k on (q_id, neighbor_id) — the join sides are O(queries
     * k), never the corpus, so the recall audit costs no more than the
     searches themselves. Integer hit counts make the ratio exact in
@@ -1819,49 +1598,49 @@ def recall_vs_exact(
     exact = brute_force_topk(spark, sf_dir, k, query_every).select(
         "q_id", "neighbor_id"
     )
-    approx = (
-        lsh_bucketed_topk(spark, sf_dir, k, query_every)
-        .select(F.lit("lsh").alias("method"), "q_id", "neighbor_id")
-        .unionByName(
-            ivf_topk(spark, sf_dir, k, query_every).select(
-                F.lit("ivf").alias("method"), "q_id", "neighbor_id"
-            )
-        )
-        .unionByName(
-            ivf_kmeans_topk(spark, sf_dir, k, query_every).select(
-                F.lit("ivf_kmeans").alias("method"), "q_id", "neighbor_id"
-            )
-        )
-        .unionByName(
-            sq8_topk(spark, sf_dir, k, query_every).select(
-                F.lit("sq8").alias("method"), "q_id", "neighbor_id"
-            )
-        )
-        .unionByName(
-            pq_topk(spark, sf_dir, k, query_every).select(
-                F.lit("pq").alias("method"), "q_id", "neighbor_id"
-            )
-        )
-        .unionByName(
-            ivfpq_topk(spark, sf_dir, k, query_every).select(
-                F.lit("ivfpq").alias("method"), "q_id", "neighbor_id"
-            )
-        )
+    methods = (
+        ("lsh", lsh_bucketed_topk),
+        ("ivf", ivf_topk),
+        ("ivf_kmeans", ivf_kmeans_topk),
+        ("sq8", sq8_topk),
+        ("pq", pq_topk),
+        ("ivfpq", ivfpq_topk),
     )
+    approx = functools.reduce(
+        DataFrame.unionByName,
+        [
+            search(spark, sf_dir, k, query_every).select(
+                F.lit(name).alias("method"), "q_id", "neighbor_id"
+            )
+            for name, search in methods
+        ],
+    )
+    # every method keeps its row: sparse buckets at high n_planes are
+    # exactly the zero-hit regime this audit exposes
+    keys = spark.createDataFrame(
+        [(name,) for name, _ in methods], "method string"
+    )
+    return _recall_rows(keys, approx, exact, k)
+
+
+def _recall_rows(
+    keys: DataFrame, approx: DataFrame, exact: DataFrame, k: int
+) -> DataFrame:
+    """(key, n_queries, hits, recall) per row of the one-column
+    ``keys`` frame: hits = ``approx`` (key, q_id, neighbor_id) rows
+    found in ``exact`` (q_id, neighbor_id), recall = hits /
+    (n_queries·k) micro-averaged, floor-rounded to 6 decimals (an r6
+    HALF_UP the DuckDB oracle mirrors bit-for-bit). LEFT JOIN from
+    ``keys``: a key with ZERO hits shows recall 0.0 instead of
+    vanishing from the report."""
+    key = keys.columns[0]
     hit0 = (
         approx.join(exact, ["q_id", "neighbor_id"], "left_semi")
-        .groupBy("method")
+        .groupBy(key)
         .agg(F.count("*").alias("hits"))
     )
-    # LEFT JOIN from the method list: a method with ZERO hits must
-    # show recall 0.0, not vanish from the report (sparse buckets at
-    # high n_planes are exactly the regime this audit exposes).
-    methods = spark.createDataFrame(
-        [("lsh",), ("ivf",), ("ivf_kmeans",), ("sq8",), ("pq",), ("ivfpq",)],
-        "method string",
-    )
-    hits = methods.join(hit0, "method", "left").select(
-        "method", F.coalesce("hits", F.lit(0).cast("long")).alias("hits")
+    hits = keys.join(hit0, key, "left").select(
+        key, F.coalesce("hits", F.lit(0).cast("long")).alias("hits")
     )
     nq = exact.agg(F.countDistinct("q_id").alias("n_queries"))
     recall = (
@@ -1874,7 +1653,7 @@ def recall_vs_exact(
         / 1e6
     )
     return hits.crossJoin(F.broadcast(nq)).select(
-        "method", "n_queries", "hits", recall.alias("recall")
+        key, "n_queries", "hits", recall.alias("recall")
     )
 
 
@@ -1887,7 +1666,6 @@ def prefix_topk(
     k: int = DEFAULT_K,
     query_every: int = QUERY_EVERY,
     cuts: tuple[int, ...] = DIM_RECALL_CUTS,
-    queries: DataFrame | None = None,
 ) -> DataFrame:
     """Exact cosine top-k at EVERY prefix cut AND at full dims in ONE
     corpus scan — the audit kernel behind ``dim_recall``.
@@ -1911,22 +1689,9 @@ def prefix_topk(
     import pandas as pd
 
     corpus = _load(spark, sf_dir)
-    # queries: an EXTERNAL (vec_id, v) table — the serving shape,
-    # where |Q| is fixed and tiny regardless of corpus size. The
-    # default derives the contract fixture from the corpus (a
-    # 1/query_every slice), which at a 100 TB corpus would not fit
-    # on the driver — the collect below is O(|Q|) either way, but
-    # only the external table keeps |Q| corpus-independent.
-    qsrc = (
-        corpus.filter(F.col("vec_id") % query_every == 0)
-        if queries is None
-        else queries
+    q_ids, Q = _query_matrix(
+        corpus.filter(F.col("vec_id") % query_every == 0), "v", np.float64
     )
-    qrows = qsrc.select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    ).collect()
-    q_ids = np.array([r["q_id"] for r in qrows], dtype=np.int64)
-    Q = np.array([r["qv"] for r in qrows], dtype=np.float64)
     cut_list = sorted({int(c) for c in cuts if c > 0})
     bq = spark.sparkContext.broadcast((q_ids, Q, cut_list))
 
@@ -1952,7 +1717,6 @@ def prefix_topk(
             vid = pdf["vec_id"].to_numpy(dtype=np.int64)
             V = np.array(list(pdf["v"]), dtype=np.float64)
             n = len(vid)
-            self_mask = np.equal.outer(ids, vid)
             acc = np.zeros((nq, n))
             vn = np.zeros(n)
             prev = 0
@@ -1964,14 +1728,7 @@ def prefix_topk(
                 denom = np.multiply.outer(qnorm[c], np.sqrt(vn))
                 with np.errstate(invalid="ignore", divide="ignore"):
                     cos = np.where(denom == 0, 0.0, acc / denom)
-                cos_sel = np.where(self_mask, -np.inf, cos)
-                kth = (
-                    np.sort(cos_sel, axis=1)[:, -min(k, n)]
-                    if n > 0
-                    else np.full(nq, -np.inf)
-                )
-                keep = (cos_sel >= (kth[:, None] - 2e-6)) & ~self_mask
-                qi, vi = np.nonzero(keep)
+                qi, vi = _local_cut(cos, ids, vid, k)
                 yield pd.DataFrame(
                     {
                         "dims": np.full(len(qi), c, dtype=np.int32),
@@ -1986,21 +1743,8 @@ def prefix_topk(
         score_blocks,
         schema="dims int, is_full boolean, q_id long, "
         "neighbor_id long, cos double",
-    ).select(
-        "dims",
-        "is_full",
-        "q_id",
-        "neighbor_id",
-        F.round(F.col("cos"), 6).alias("cos"),
     )
-    w = Window.partitionBy("dims", "q_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("dims", "is_full", "q_id", "rank", "neighbor_id", "cos")
-    )
+    return _rank_topk(scored, k, part=("dims", "q_id"))
 
 
 def dim_recall(
@@ -2026,33 +1770,11 @@ def dim_recall(
     approx = pt.filter(~F.col("is_full")).select(
         "dims", "q_id", "neighbor_id"
     )
-    hit0 = (
-        approx.join(exact, ["q_id", "neighbor_id"], "left_semi")
-        .groupBy("dims")
-        .agg(F.count("*").alias("hits"))
-    )
-    # LEFT JOIN from the cut list: a cut with ZERO hits must show
-    # recall 0.0, not vanish from the report
     cut_rows = spark.createDataFrame(
         [(int(c),) for c in sorted({int(c) for c in cuts if c > 0})],
         "dims int",
     )
-    hits = cut_rows.join(hit0, "dims", "left").select(
-        "dims", F.coalesce("hits", F.lit(0).cast("long")).alias("hits")
-    )
-    nq = exact.agg(F.countDistinct("q_id").alias("n_queries"))
-    recall = (
-        F.floor(
-            F.col("hits").cast("double")
-            / (F.col("n_queries") * F.lit(k)).cast("double")
-            * 1e6
-            + F.lit(0.5)
-        )
-        / 1e6
-    )
-    return hits.crossJoin(F.broadcast(nq)).select(
-        "dims", "n_queries", "hits", recall.alias("recall")
-    )
+    return _recall_rows(cut_rows, approx, exact, k)
 
 
 def neardup_pairs(spark, sf_dir: str) -> DataFrame:

@@ -55,6 +55,21 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 
+def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """``spark.read.parquet(path)``, or None when the path does not
+    exist. ONLY a missing path means absent (a fresh run, a first
+    batch): a corrupt or schema-conflicting table must fail loudly —
+    treating it as empty would silently reprocess or re-emit data."""
+    from pyspark.sql.utils import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if (e.getCondition() or "") != "PATH_NOT_FOUND":
+            raise
+        return None
+
+
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     """Deterministic bucket column on doc_id (same every run)."""
     return df.withColumn(
@@ -65,33 +80,26 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
 def completed_buckets(
     spark: SparkSession, output: str, n_buckets: int | None = None
 ) -> set[int]:
-    from pyspark.sql.utils import AnalysisException
-
-    try:
-        manifest = spark.read.parquet(f"{output}/_lineage")
-        if n_buckets is not None and "n_buckets" in manifest.columns:
-            seen = {
-                r["n_buckets"]
-                for r in manifest.select("n_buckets").distinct().collect()
-            }
-            if seen and seen != {n_buckets}:
-                raise ValueError(
-                    f"checkpoint at {output} was written with "
-                    f"n_buckets={sorted(seen)} but this run uses "
-                    f"n_buckets={n_buckets}; part_ids are not "
-                    "comparable across bucketings — rerun with the "
-                    "original value or use a fresh output dir"
-                )
-        rows = manifest.select("part_id").collect()
-        return {r["part_id"] for r in rows}
-    except AnalysisException as e:
-        # ONLY a missing manifest means "fresh run". A corrupt or
-        # unreadable manifest must fail loudly — treating it as fresh
-        # would reprocess every bucket AND append duplicate lineage
-        # rows, double-counting the completeness audit.
-        if (e.getErrorClass() or "") != "PATH_NOT_FOUND":
-            raise
+    # a corrupt manifest raises: treating it as fresh would reprocess
+    # every bucket AND append duplicate lineage rows, double-counting
+    # the completeness audit
+    manifest = read_parquet_or_none(spark, f"{output}/_lineage")
+    if manifest is None:
         return set()
+    if n_buckets is not None and "n_buckets" in manifest.columns:
+        seen = {
+            r["n_buckets"]
+            for r in manifest.select("n_buckets").distinct().collect()
+        }
+        if seen and seen != {n_buckets}:
+            raise ValueError(
+                f"checkpoint at {output} was written with "
+                f"n_buckets={sorted(seen)} but this run uses "
+                f"n_buckets={n_buckets}; part_ids are not "
+                "comparable across bucketings — rerun with the "
+                "original value or use a fresh output dir"
+            )
+    return {r["part_id"] for r in manifest.select("part_id").collect()}
 
 
 def run_with_checkpoint(

@@ -11,8 +11,9 @@ Scale shape: the whole pipeline is map-side. Span ordering is an
 in-array sort, content assembly an in-array fold, similarity a
 per-row expression — zero shuffles end-to-end, so throughput scales
 linearly with executors; the only Arrow boundary is the embedded
-OCR-classify stage. Skew from mega-documents is defused by an
-explicit hash repartition on doc_id before the Arrow stage.
+OCR-classify stage. Skew from mega-documents is defused by the
+``mega_media_chunk`` split path, which spreads their spans across
+tasks.
 """
 
 from __future__ import annotations
@@ -344,7 +345,6 @@ def extract_documents(
     enable_validation=True,
     similarity_method: str = "number_frequency",
     similarity_threshold: float = SIMILARITY_THRESHOLD,
-    repartition: int | None = None,
     mega_media_chunk: int | None = None,
     ocr_burn: int = 0,
 ) -> DataFrame:
@@ -367,12 +367,6 @@ def extract_documents(
     ``ocr_burn``: bench-only per-page latency emulation for the md5
     stand-in (see ``operators.ocr.fake_ocr_text``); 0 = production.
     """
-    if repartition:
-        # Spread mega-documents before the Arrow stage: hash on doc_id
-        # balances docs across tasks; Arrow batch size (configured in
-        # session.py) bounds per-batch memory for fat span arrays.
-        df = df.repartition(repartition, "doc_id")
-
     query = F.col(query_col) if query_col and query_col in df.columns else F.lit("")
     explicit = explicit_col if explicit_col and explicit_col in df.columns else None
     if isinstance(enable_validation, str):

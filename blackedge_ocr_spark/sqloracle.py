@@ -1053,18 +1053,17 @@ SELECT q_id, rank, neighbor_id, cos FROM (
   FROM s) WHERE rank <= {k}"""
 
 
-def sql_ann_topk_served(
-    k: int = 5, n_q: int = 8, dims: int = 64, base: int = 1_000_000
-) -> str:
+def sql_ann_topk_served(k: int = 5, n_q: int = 8, dims: int = 64) -> str:
     """Mirror of queries.q_ann_topk_served: the EXTERNAL query table
     is rebuilt from the same integer formula as ann.served_query_set
     (((i·37 + j·11) mod 19 − 9) / 9.0) — pure bigint arithmetic then
     one double division, bit-identical in both engines. q_ids are
-    corpus-disjoint, so no self-exclusion predicate is needed (kept
-    anyway for form parity with sql_ann_topk)."""
+    negative (-1 - i) and corpus vec_ids start at 0, so no
+    self-exclusion predicate is needed (kept anyway for form parity
+    with sql_ann_topk)."""
     return f"""
 WITH {EMB},
-q AS (SELECT {base} + i AS q_id,
+q AS (SELECT -1 - i AS q_id,
              list_transform(range({dims}),
                             j -> (((i*37 + j*11) % 19) - 9) / 9.0) AS qv
       FROM range({n_q}) t(i)),

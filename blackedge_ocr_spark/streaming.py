@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from blackedge_ocr_spark.lineage import read_parquet_or_none
+
 RAW_DOCUMENTS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), True),
@@ -141,13 +143,9 @@ def compact_stream_registry(
     import shutil
 
     from pyspark.sql import functions as F
-    from pyspark.sql.utils import AnalysisException
 
-    try:
-        t = spark.read.parquet(path)
-    except AnalysisException as e:
-        if (e.getErrorClass() or "") != "PATH_NOT_FOUND":
-            raise
+    t = read_parquet_or_none(spark, path)
+    if t is None:
         return
     if "run" not in t.columns or "batch_id" not in t.columns:
         return  # legacy plain-append layout: nothing to fold safely
@@ -847,7 +845,6 @@ def stream_dedup(
     ``stream_extract``'s docstring.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.utils import AnalysisException
 
     from blackedge_ocr_spark.functions.text import normalize_for_comparison
 
@@ -885,23 +882,12 @@ def stream_dedup(
             .select("content_hash", "r.*")
         )
 
-        def _read_or_first_batch(path: str):
-            """Registry read that treats ONLY a missing path as 'first
-            batch'; a corrupt or schema-conflicting table must fail
-            loudly, not silently disable dedup."""
-            try:
-                return spark.read.parquet(path)
-            except AnalysisException as e:
-                if (e.getErrorClass() or "") != "PATH_NOT_FOUND":
-                    raise
-                return None
-
         out_cols = firsts.columns
         definitely_new = None
         probed_cache = None
         candidates = firsts
         if bloom_dir is not None:
-            bits = _read_or_first_batch(bloom_dir)
+            bits = read_parquet_or_none(spark, bloom_dir)
             if bits is not None:
                 from blackedge_ocr_spark.analysis.sketches import (
                     BLOOM_DEPTH,
@@ -930,7 +916,7 @@ def stream_dedup(
                 definitely_new = probed.filter(~F.col("_hit")).select(out_cols)
                 candidates = probed.filter(F.col("_hit")).select(out_cols)
 
-        seen = _read_or_first_batch(registry_dir)
+        seen = read_parquet_or_none(spark, registry_dir)
         if seen is not None:
             # no broadcast hint: the registry grows to O(distinct
             # corpus) — AQE broadcasts while it's small and falls back
@@ -1070,7 +1056,6 @@ def stream_neardup(
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F
-    from pyspark.sql.utils import AnalysisException
 
     from blackedge_ocr_spark.analysis.dedup import (
         jaccard,
@@ -1085,14 +1070,6 @@ def stream_neardup(
         .parquet(input_dir)
     )
     cols = [f.name for f in RAW_DOCUMENTS_SCHEMA.fields]
-
-    def _read_or_none(path: str):
-        try:
-            return spark.read.parquet(path)
-        except AnalysisException as e:
-            if (e.getErrorClass() or "") != "PATH_NOT_FOUND":
-                raise
-            return None
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1122,7 +1099,7 @@ def stream_neardup(
             partial writes (a surviving band write would double-
             count the batch into the cap positions). Other runs'
             partitions are valid history and stay visible."""
-            t = _read_or_none(path)
+            t = read_parquet_or_none(spark, path)
             if t is None:
                 return None
             if "run" not in t.columns or "batch_id" not in t.columns:
@@ -1337,7 +1314,6 @@ def stream_incremental_extract(
     ``_crash_hook(stage, batch_id)`` is the fault-injection surface.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.utils import AnalysisException
 
     from blackedge_ocr_spark.incremental import SRC_HASH_COL, with_src_hash
     from blackedge_ocr_spark.pipeline import extract_documents
@@ -1360,19 +1336,17 @@ def stream_incremental_extract(
                 batch_id=batch_id,
             )
         cur = with_src_hash(_spansify_batch(batch_df))
-        try:
-            seen = spark.read.parquet(registry_dir)
-            # AQE broadcasts the registry while small, falls back to a
-            # shuffled anti-join when it isn't (Iceberg form: both
-            # sides bucketed by doc_id, the join prunes to buckets).
-            delta = cur.join(seen, ["doc_id", SRC_HASH_COL], "left_anti")
-        except AnalysisException as e:
-            # ONLY a missing path means "first batch". A corrupt or
-            # schema-conflicting registry must fail the query loudly —
-            # treating it as empty would silently re-emit the corpus.
-            if (e.getErrorClass() or "") != "PATH_NOT_FOUND":
-                raise
-            delta = cur
+        # ONLY a missing path means "first batch" — a corrupt registry
+        # fails loudly instead of silently re-emitting the corpus. AQE
+        # broadcasts the registry while small, falls back to a
+        # shuffled anti-join when it isn't (Iceberg form: both sides
+        # bucketed by doc_id, the join prunes to buckets).
+        seen = read_parquet_or_none(spark, registry_dir)
+        delta = (
+            cur
+            if seen is None
+            else cur.join(seen, ["doc_id", SRC_HASH_COL], "left_anti")
+        )
         delta = delta.persist()
         if not delta.isEmpty():
             result = extract_documents(

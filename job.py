@@ -41,7 +41,10 @@ def main(argv=None) -> int:
     from pyspark.sql import functions as F
 
     from blackedge_ocr_spark.datagen import spansify_documents
-    from blackedge_ocr_spark.lineage import run_with_checkpoint
+    from blackedge_ocr_spark.lineage import (
+        read_parquet_or_none,
+        run_with_checkpoint,
+    )
     from blackedge_ocr_spark.pipeline import extract_documents
     from blackedge_ocr_spark.session import build_session
 
@@ -73,10 +76,9 @@ def main(argv=None) -> int:
     )
     # a run that processed zero batches against a fresh output dir
     # has no manifest yet — print an empty summary, don't crash
-    from pyspark.sql.utils import AnalysisException
-
-    try:
-        lineage = spark.read.parquet(f"{args.output}/_lineage")
+    lineage = read_parquet_or_none(spark, f"{args.output}/_lineage")
+    summary = {}
+    if lineage is not None:
         summary = lineage.agg(
             *[F.sum(c).alias(c)
               for c in ("n_docs", "n_spans", "n_problem_docs", "n_errors")]
@@ -90,10 +92,6 @@ def main(argv=None) -> int:
             .agg(F.sum("batch_wall_sec")).collect()[0][0]
         )
         summary["wall_s"] = round(float(wall), 3)
-    except AnalysisException as e:
-        if (e.getErrorClass() or "") != "PATH_NOT_FOUND":
-            raise
-        summary = {}
     print(json.dumps({
         "processed": len(report["processed"]),
         "skipped": len(report["skipped"]),

@@ -622,6 +622,31 @@ def test_prefix_topk_snapshots_equal_standalone_scans(spark):
         assert by_cut[c] == sliced
 
 
+def test_served_queries_see_every_corpus_vector(spark, tmp_path):
+    """Served (external) query ids must never equal a corpus vec_id:
+    self-exclusion drops ``vec_id == q_id``, so a collision silently
+    removes a real neighbour. The corpus holds vec_id 1,000,000 (an
+    sf30 corpus has 1.5M vectors); with k = corpus size every served
+    query must rank every corpus vector."""
+    from blackedge_ocr_spark.analysis import ann
+
+    ids = [0, 1, 2, 999_999, 1_000_000, 1_000_001, 1_000_007]
+    corpus = spark.createDataFrame(
+        [(v, [float((v + j) % 5 - 2) for j in range(64)]) for v in ids],
+        "vec_id long, embedding array<float>",
+    )
+    sf = str(tmp_path / "sf")
+    corpus.write.parquet(f"{sf}/embeddings.parquet")
+    rows = ann.brute_force_topk(
+        spark, sf, k=len(ids), queries=ann.served_query_set(spark)
+    ).collect()
+    seen = {}
+    for r in rows:
+        seen.setdefault(r["q_id"], set()).add(r["neighbor_id"])
+    assert len(seen) == ann.SERVED_Q_N
+    assert all(s == set(ids) for s in seen.values()), seen
+
+
 def test_dim_recall_curve_shape(spark):
     """One row per cut; recall within [0,1]; the widest cut beats the
     narrowest on the contract corpus. (Strict monotonicity is NOT

@@ -1,12 +1,19 @@
 """Dump formatted physical plans for the headline queries → PLANS.md.
 
 Judge-facing artifact: shows pushdown, codegen spans, exchange
-placement and Arrow boundaries for each flagship plan.
+placement and Arrow boundaries for each flagship plan. Expression
+ids, ``plan_id``s and RDD ids are renumbered per plan in order of
+first appearance (``stable_ids``), so a rerun on the same tree writes
+a byte-identical file and a change to one plan rewrites only that
+plan's section.
+
+Usage: ``python tools/explain_report.py [sf_dir]``
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -112,6 +119,24 @@ REPORT_QUERIES = (
 )
 
 
+# (prefix, id) patterns whose ids are session counters, not plan shape
+_SESSION_IDS = (r"(#)(\d+)", r"(plan_id=)(\d+)", r"(RDD\[)(\d+)")
+
+
+def stable_ids(plan: str) -> str:
+    """Renumber every session-counter id in one formatted plan by order
+    of first appearance (0, 1, …), keeping which references share an
+    id — the same plan shape always prints the same text."""
+    for pat in _SESSION_IDS:
+        seen: dict[str, int] = {}
+        plan = re.sub(
+            pat,
+            lambda m: m.group(1) + str(seen.setdefault(m.group(2), len(seen))),
+            plan,
+        )
+    return plan
+
+
 def main() -> None:
     import __spark_entry__ as se
     from blackedge_ocr_spark import plans
@@ -152,7 +177,7 @@ def main() -> None:
             *cache_note,
             "",
             "```",
-            plan.strip(),
+            stable_ids(plan.strip()),
             "```",
             "",
         ]
@@ -185,7 +210,7 @@ def main() -> None:
             f"- exchanges (shuffles): {n_ex}",
             "",
             "```",
-            plans.formatted_plan(df).strip(),
+            stable_ids(plans.formatted_plan(df).strip()),
             "```",
             "",
         ]
