@@ -1763,18 +1763,25 @@ def dim_recall(
 
     Cost: ONE corpus scan for the whole curve (``prefix_topk``
     snapshots the dim-ordered fold at each cut); the join sides are
-    O(queries × k × cuts), never the corpus.
+    O(queries × k × cuts), never the corpus. The curve runs as one
+    action here, so the snapshot table it persists is released before
+    returning: the result is a local frame of the per-cut rows.
     """
     pt = prefix_topk(spark, sf_dir, k, query_every, cuts).persist()
-    exact = pt.filter(F.col("is_full")).select("q_id", "neighbor_id")
-    approx = pt.filter(~F.col("is_full")).select(
-        "dims", "q_id", "neighbor_id"
-    )
-    cut_rows = spark.createDataFrame(
-        [(int(c),) for c in sorted({int(c) for c in cuts if c > 0})],
-        "dims int",
-    )
-    return _recall_rows(cut_rows, approx, exact, k)
+    try:
+        exact = pt.filter(F.col("is_full")).select("q_id", "neighbor_id")
+        approx = pt.filter(~F.col("is_full")).select(
+            "dims", "q_id", "neighbor_id"
+        )
+        cut_rows = spark.createDataFrame(
+            [(int(c),) for c in sorted({int(c) for c in cuts if c > 0})],
+            "dims int",
+        )
+        curve = _recall_rows(cut_rows, approx, exact, k)
+        rows = curve.collect()
+    finally:
+        pt.unpersist()
+    return spark.createDataFrame(rows, curve.schema)
 
 
 def neardup_pairs(spark, sf_dir: str) -> DataFrame:

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -55,15 +56,20 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 
-def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+def read_parquet_or_none(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame | None:
     """``spark.read.parquet(path)``, or None when the path does not
     exist. ONLY a missing path means absent (a fresh run, a first
     batch): a corrupt or schema-conflicting table must fail loudly —
-    treating it as empty would silently reprocess or re-emit data."""
+    treating it as empty would silently reprocess or re-emit data.
+    A known ``schema`` skips the footer-inference job; a corrupt file
+    then fails when the read runs instead of here."""
     from pyspark.sql.utils import AnalysisException
 
     try:
-        return spark.read.parquet(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(path)
     except AnalysisException as e:
         if (e.getCondition() or "") != "PATH_NOT_FOUND":
             raise
@@ -82,24 +88,22 @@ def completed_buckets(
 ) -> set[int]:
     # a corrupt manifest raises: treating it as fresh would reprocess
     # every bucket AND append duplicate lineage rows, double-counting
-    # the completeness audit
-    manifest = read_parquet_or_none(spark, f"{output}/_lineage")
+    # the completeness audit. A manifest written before n_buckets was
+    # pinned reads it as NULL, which skips the bucketing check.
+    manifest = read_parquet_or_none(spark, f"{output}/_lineage", LINEAGE_SCHEMA)
     if manifest is None:
         return set()
-    if n_buckets is not None and "n_buckets" in manifest.columns:
-        seen = {
-            r["n_buckets"]
-            for r in manifest.select("n_buckets").distinct().collect()
-        }
-        if seen and seen != {n_buckets}:
-            raise ValueError(
-                f"checkpoint at {output} was written with "
-                f"n_buckets={sorted(seen)} but this run uses "
-                f"n_buckets={n_buckets}; part_ids are not "
-                "comparable across bucketings — rerun with the "
-                "original value or use a fresh output dir"
-            )
-    return {r["part_id"] for r in manifest.select("part_id").collect()}
+    rows = manifest.select("part_id", "n_buckets").collect()
+    seen = {r["n_buckets"] for r in rows} - {None}
+    if n_buckets is not None and seen and seen != {n_buckets}:
+        raise ValueError(
+            f"checkpoint at {output} was written with "
+            f"n_buckets={sorted(seen)} but this run uses "
+            f"n_buckets={n_buckets}; part_ids are not "
+            "comparable across bucketings — rerun with the "
+            "original value or use a fresh output dir"
+        )
+    return {r["part_id"] for r in rows}
 
 
 def run_with_checkpoint(
@@ -151,24 +155,15 @@ def run_with_checkpoint(
         # Metrics come from the files just written — auditing the
         # actual sink contents — rather than re-executing the whole
         # transform (including its Arrow OCR stage) a second time.
-        # An ALL-EMPTY batch commits only _SUCCESS (no footer to infer
-        # a schema from) — ack zero-doc lineage rows instead of
-        # crashing, or the rerun loops on the same empty batch forever.
-        from pyspark.sql.utils import AnalysisException
-
-        try:
-            written = spark.read.parquet(f"{output}/data").filter(
-                F.col("part_id").isin(bucket_ids)
-            )
-        except AnalysisException as e:
-            if (e.getErrorClass() or "") not in (
-                "UNABLE_TO_INFER_SCHEMA",
-                "PATH_NOT_FOUND",
-            ):
-                raise
-            written = None
-        metrics = [] if written is None else (
-            written.groupBy("part_id")
+        # Read with the schema just written, so no job infers it from
+        # a footer, and an ALL-EMPTY batch (only _SUCCESS committed)
+        # reads as zero rows: it acks zero-doc lineage rows instead of
+        # looping on the same empty batch forever.
+        metrics = (
+            spark.read.schema(result.schema)
+            .parquet(f"{output}/data")
+            .filter(F.col("part_id").isin(bucket_ids))
+            .groupBy("part_id")
             .agg(
                 F.count("*").alias("n_docs"),
                 F.sum(F.size("out_spans")).alias("n_spans"),
@@ -199,9 +194,11 @@ def run_with_checkpoint(
                     n_buckets,
                 )
             )
-        spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(f"{output}/_lineage")
+        # from pandas: Arrow ships the rows as a local relation, where
+        # a list goes through a Python RDD and its own stage
+        spark.createDataFrame(
+            pd.DataFrame(rows, columns=LINEAGE_SCHEMA.names), LINEAGE_SCHEMA
+        ).coalesce(1).write.mode("append").parquet(f"{output}/_lineage")
         processed.extend(bucket_ids)
 
     return {"processed": processed, "skipped": sorted(done)}

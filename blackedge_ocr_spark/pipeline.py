@@ -18,6 +18,9 @@ tasks.
 
 from __future__ import annotations
 
+import functools
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -338,6 +341,25 @@ def _extract_mega_chunked(
     return merged
 
 
+class _Plan(NamedTuple):
+    """The column plan of one ``extract_documents`` configuration:
+    ``head`` stages run before the mega-document join, ``tail`` stages
+    after it, then ``select`` projects RESULT_SCHEMA. ``validating`` and
+    ``secondary_provider`` also feed the mega split path."""
+
+    head: tuple[tuple[str, Column], ...]
+    tail: tuple[tuple[str, Column], ...]
+    select: tuple[Column | str, ...]
+    validating: Column
+    secondary_provider: Column
+
+
+def _with_stages(df: DataFrame, stages) -> DataFrame:
+    for name, col in stages:
+        df = df.withColumn(name, col)
+    return df
+
+
 def extract_documents(
     df: DataFrame,
     query_col: str | None = "query",
@@ -366,23 +388,76 @@ def extract_documents(
 
     ``ocr_burn``: bench-only per-page latency emulation for the md5
     stand-in (see ``operators.ocr.fake_ocr_text``); 0 = production.
+
+    The column expressions are built once per configuration
+    (``_extract_plan``, memoized) and only applied to ``df`` here:
+    building them cost ~1 s of driver time per call on a local[4]
+    session (py4j round trips and lambda construction), more than
+    Spark needs to run the projection over thousands of documents. A call with a configuration seen
+    before only runs ``withColumn`` per stage; the plan is the same.
+    The mega split path's frame is derived from ``df``, so it is built
+    on every call.
     """
-    query = F.col(query_col) if query_col and query_col in df.columns else F.lit("")
-    explicit = explicit_col if explicit_col and explicit_col in df.columns else None
+    plan = _extract_plan(
+        query_col if query_col and query_col in df.columns else None,
+        explicit_col if explicit_col and explicit_col in df.columns else None,
+        enable_validation
+        if isinstance(enable_validation, str)
+        else bool(enable_validation),
+        similarity_method,
+        similarity_threshold,
+        mega_media_chunk or None,
+        ocr_burn,
+    )
+    df = _with_stages(df, plan.head)
+    if mega_media_chunk:
+        merged = _extract_mega_chunked(
+            df.filter(F.col("_is_mega")),
+            mega_media_chunk,
+            lambda m, p: ocr_media_map(m, p, burn=ocr_burn),
+            plan.secondary_provider,
+            plan.validating,
+            similarity_method,
+        )
+        # NO broadcast hint: the merged rows carry the LARGEST
+        # documents in the job (a 100k-media doc is ~20 MB per
+        # provider) — forcing a broadcast would collect exactly that
+        # to the driver. AQE broadcasts at runtime while the merged
+        # side is small and falls back to a shuffled join when it is
+        # not; mega rows are few either way.
+        df = df.join(merged, "doc_id", "left")
+    return _with_stages(df, plan.tail).select(*plan.select)
+
+
+@functools.lru_cache(maxsize=None, typed=True)
+def _extract_plan(
+    query_col: str | None,
+    explicit_col: str | None,
+    enable_validation: bool | str,
+    similarity_method: str,
+    similarity_threshold: float,
+    mega_media_chunk: int | None,
+    ocr_burn: int,
+) -> _Plan:
+    """Build ``extract_documents``' stages for one configuration.
+    ``query_col``/``explicit_col`` are the names present in the input
+    (None when absent). Holds Column expressions only — no DataFrame,
+    no session — so the cache is bounded by the configurations used."""
+    query = F.col(query_col) if query_col else F.lit("")
     if isinstance(enable_validation, str):
         validation_requested = F.col(enable_validation)
     else:
-        validation_requested = F.lit(bool(enable_validation))
+        validation_requested = F.lit(enable_validation)
 
-    workflow = route_workflow(query, explicit)
+    workflow = route_workflow(query, explicit_col)
     provider = _map_literal(workflow, PRIMARY_PROVIDER)
     secondary_provider = _map_literal(workflow, SECONDARY_PROVIDER)
 
-    df = (
-        df.withColumn("workflow", workflow)
-        .withColumn("provider", provider)
-        .withColumn("_sorted", sort_spans(F.col("spans")))
-    )
+    head = [
+        ("workflow", workflow),
+        ("provider", provider),
+        ("_sorted", sort_spans(F.col("spans"))),
+    ]
 
     # Embedded extraction: media refs go through the Arrow-batched
     # OCR-classify stage (§2.14-2) producing an offset→text map; the
@@ -398,9 +473,10 @@ def extract_documents(
     # attribute precisely so the optimizer CANNOT inline it into the
     # fill lambda.
     media_map = lambda m, p: ocr_media_map(m, p, burn=ocr_burn)
-    df = df.withColumn("_media", filter_media(F.col("_sorted"))).withColumn(
-        "_media", first_per_offset(F.col("_media"))
-    )
+    head += [
+        ("_media", filter_media(F.col("_sorted"))),
+        ("_media", first_per_offset(F.col("_media"))),
+    ]
 
     # Validation only exists for workflows whose handler wires a
     # secondary client (constants.VALIDATING_WORKFLOWS).
@@ -411,9 +487,10 @@ def extract_documents(
     if mega_media_chunk:
         # Straggler defense: docs above the span threshold run every
         # span-linear stage through the chunked split path
-        # (_extract_mega_chunked) and feed the direct UDF an EMPTY
-        # array (input gating — a CASE WHEN around the UDF would be
-        # hoisted and still run it).
+        # (_extract_mega_chunked, joined in by the caller between head
+        # and tail) and feed the direct UDF an EMPTY array (input
+        # gating — a CASE WHEN around the UDF would be hoisted and
+        # still run it).
         #
         # _is_mega triggers on TOTAL span count (round 4): the chunked
         # path now parallelizes content assembly, problem regexes and
@@ -428,26 +505,8 @@ def extract_documents(
         # O(spans·spans) on a mega row (thread-dumped as
         # ArrayFilter/In under the fill lambda, ~100 s on a 20k-media
         # document with the model cost at zero).
-        df = df.withColumn(
-            "_is_mega", F.size(F.col("spans")) > mega_media_chunk
-        )
+        head.append(("_is_mega", F.size(F.col("spans")) > mega_media_chunk))
         is_mega = F.col("_is_mega")
-        mega = df.filter(is_mega)
-        merged = _extract_mega_chunked(
-            mega,
-            mega_media_chunk,
-            media_map,
-            secondary_provider,
-            validating,
-            similarity_method,
-        )
-        # NO broadcast hint: the merged rows carry the LARGEST
-        # documents in the job (a 100k-media doc is ~20 MB per
-        # provider) — forcing a broadcast would collect exactly that
-        # to the driver. AQE broadcasts at runtime while the merged
-        # side is small and falls back to a shuffled join when it is
-        # not; mega rows are few either way.
-        df = df.join(merged, "doc_id", "left")
         gated_media = F.when(~is_mega, F.col("_media")).otherwise(
             F.slice(F.col("_media"), 1, 0)
         )
@@ -455,9 +514,10 @@ def extract_documents(
         is_mega = F.lit(False)
         gated_media = F.col("_media")
 
-    df = df.withColumn("_media_pri", gated_media).withColumn(
-        "_ocr_direct", media_map(F.col("_media_pri"), F.col("provider"))
-    )
+    tail = [
+        ("_media_pri", gated_media),
+        ("_ocr_direct", media_map(F.col("_media_pri"), F.col("provider"))),
+    ]
     # The fill branches OUTSIDE the transform (CASE WHEN picks one
     # whole-array value per row, lazily — CaseWhen is a JVM lazy
     # expression, so mega rows never evaluate the direct fill's
@@ -468,7 +528,7 @@ def extract_documents(
         out_spans_col = F.when(
             is_mega, F.col("_out_spans_m")
         ).otherwise(out_spans_col)
-    df = df.withColumn("out_spans", out_spans_col)
+    tail.append(("out_spans", out_spans_col))
 
     # Gate the UDF's INPUT, not its output: Spark hoists Python UDFs
     # out of CASE WHEN into an unconditional ArrowEvalPython stage, so
@@ -476,19 +536,22 @@ def extract_documents(
     # inference for every row. Feeding non-validating rows an empty
     # media array makes their Arrow batch entries empty (zero media
     # refs → zero model calls), which is the real cost gate.
-    df = df.withColumn(
-        "_media_sec",
-        F.when(validating & ~is_mega, F.col("_media")).otherwise(
-            F.slice(F.col("_media"), 1, 0)
+    tail += [
+        (
+            "_media_sec",
+            F.when(validating & ~is_mega, F.col("_media")).otherwise(
+                F.slice(F.col("_media"), 1, 0)
+            ),
         ),
-    ).withColumn(
-        "_ocr_sec_direct", media_map(F.col("_media_sec"), secondary_provider)
-    )
-    sec_spans_col = F.when(
-        validating & ~is_mega,
-        fill_media_text(F.col("_sorted"), F.col("_ocr_sec_direct")),
-    )
-    df = df.withColumn("_secondary_spans", sec_spans_col)
+        ("_ocr_sec_direct", media_map(F.col("_media_sec"), secondary_provider)),
+        (
+            "_secondary_spans",
+            F.when(
+                validating & ~is_mega,
+                fill_media_text(F.col("_sorted"), F.col("_ocr_sec_direct")),
+            ),
+        ),
+    ]
 
     # Mega rows take the chunk-merged content/problems from the join —
     # the per-span regex battery and the assembly fold must not re-run
@@ -507,11 +570,11 @@ def extract_documents(
         ).otherwise(secondary_content)
         problems = F.when(is_mega, F.col("_problems_m")).otherwise(problems)
 
-    df = (
-        df.withColumn("problems", problems)
-        .withColumn("_primary_content", primary_content)
-        .withColumn("_secondary_content", secondary_content)
-    )
+    tail += [
+        ("problems", problems),
+        ("_primary_content", primary_content),
+        ("_secondary_content", secondary_content),
+    ]
 
     has_problems = F.size(F.col("problems")) > 0
     # Stage 2 similarity runs only when stage 1 found no problems
@@ -537,18 +600,22 @@ def extract_documents(
         similarity_method == "number_frequency"
     )
     sim_prep_gate = sim_gate & ~is_mega if mega_relational_sim else sim_gate
-    df = df.withColumn(
-        "_sim_a",
-        F.when(
-            sim_prep_gate, S.prepare(F.col("_primary_content"), similarity_method)
+    tail += [
+        (
+            "_sim_a",
+            F.when(
+                sim_prep_gate,
+                S.prepare(F.col("_primary_content"), similarity_method),
+            ),
         ),
-    ).withColumn(
-        "_sim_b",
-        F.when(
-            sim_prep_gate,
-            S.prepare(F.col("_secondary_content"), similarity_method),
+        (
+            "_sim_b",
+            F.when(
+                sim_prep_gate,
+                S.prepare(F.col("_secondary_content"), similarity_method),
+            ),
         ),
-    )
+    ]
     similarity = F.when(
         sim_gate,
         S.from_prepared(F.col("_sim_a"), F.col("_sim_b"), similarity_method),
@@ -558,7 +625,7 @@ def extract_documents(
             is_mega,
             F.when(sim_gate, F.coalesce(F.col("_sim_m"), F.lit(1.0))),
         ).otherwise(similarity)
-    df = df.withColumn("similarity", similarity)
+    tail.append(("similarity", similarity))
 
     used_secondary = validating & (
         has_problems | (F.col("similarity") < F.lit(similarity_threshold))
@@ -571,7 +638,7 @@ def extract_documents(
         used_secondary, F.col("_secondary_content")
     ).otherwise(F.col("_primary_content"))
 
-    return df.select(
+    select = (
         "doc_id",
         "workflow",
         "out_spans",
@@ -583,3 +650,4 @@ def extract_documents(
         F.size("spans").cast("int").alias("pages"),
         "provider",
     )
+    return _Plan(tuple(head), tuple(tail), select, validating, secondary_provider)

@@ -13,6 +13,15 @@ import re
 from pyspark.sql import DataFrame
 
 
+def cached_frame_count(spark) -> int:
+    """Entries in the session's CacheManager: what persisted frames
+    are still held, by this caller or anyone else."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    fld = cm.getClass().getDeclaredField("cachedData")
+    fld.setAccessible(True)
+    return int(fld.get(cm).size())
+
+
 def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"

@@ -665,6 +665,17 @@ def test_dim_recall_curve_shape(spark):
     assert rows[-1]["recall"] >= rows[0]["recall"]
 
 
+def test_dim_recall_leaves_no_cached_frame(spark):
+    """dim_recall persists its prefix snapshots for one action and
+    releases them: the session's CacheManager is empty afterwards."""
+    from blackedge_ocr_spark import plans
+    from blackedge_ocr_spark.analysis import ann
+
+    spark.catalog.clearCache()  # start from frames earlier tests left
+    assert len(ann.dim_recall(spark, SF).collect()) == len(ann.DIM_RECALL_CUTS)
+    assert plans.cached_frame_count(spark) == 0
+
+
 def test_quality_sample_rate_tracks_quality(spark):
     """High-quality docs keep at ~their quality rate; empty docs
     (quality 0) are never kept."""

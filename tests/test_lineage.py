@@ -176,3 +176,67 @@ def test_resume_with_different_n_buckets_refuses(spark, tmp_path):
     run_with_checkpoint(spark, docs, transform, out, n_buckets=16)
     with pytest.raises(ValueError, match="n_buckets"):
         run_with_checkpoint(spark, docs, transform, out, n_buckets=64)
+
+
+def _empty_transform(d):
+    return d.select(
+        "doc_id",
+        F.array().cast(
+            "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+        ).alias("out_spans"),
+        F.array().cast("array<struct<offset:int,labels:array<string>>>").alias(
+            "problems"
+        ),
+        F.lit(False).alias("used_secondary"),
+        F.lit("wf").alias("workflow"),
+    )
+
+
+def test_corrupt_manifest_fails_loudly(spark, tmp_path):
+    """Garbage in the lineage manifest must raise on resume — read as
+    absent, it would reprocess every bucket and append duplicate
+    lineage rows."""
+    import os
+
+    import pytest
+
+    docs = spark.createDataFrame(
+        [(str(i), "alpha beta") for i in range(20)],
+        "doc_id string, text string",
+    )
+    out = str(tmp_path / "o")
+    run_with_checkpoint(
+        spark, docs, _empty_transform, out, n_buckets=4, buckets_per_batch=2,
+        max_batches=1,
+    )
+    before = sorted(os.listdir(f"{out}/data"))
+    with open(f"{out}/_lineage/part-99999-corrupt.parquet", "wb") as f:
+        f.write(b"\x00garbage, not a parquet file\xff" * 8)
+    with pytest.raises(Exception):
+        run_with_checkpoint(
+            spark, docs, _empty_transform, out, n_buckets=4,
+            buckets_per_batch=2,
+        )
+    assert sorted(os.listdir(f"{out}/data")) == before
+
+
+def test_manifest_without_n_buckets_resumes(spark, tmp_path):
+    """A manifest written before ``n_buckets`` was pinned still reads:
+    its buckets count as done and the bucketing check is skipped."""
+    from blackedge_ocr_spark.lineage import LINEAGE_SCHEMA
+
+    out = str(tmp_path / "o")
+    old = [f for f in LINEAGE_SCHEMA.fields if f.name != "n_buckets"]
+    spark.createDataFrame(
+        [(p, 0, 0, 0, 0, 0, 0.0, 0) for p in (0, 1)],
+        LINEAGE_SCHEMA.__class__(old),
+    ).write.parquet(f"{out}/_lineage")
+    assert completed_buckets(spark, out, 4) == {0, 1}
+
+    docs = spark.createDataFrame(
+        [(str(i), "alpha beta") for i in range(20)],
+        "doc_id string, text string",
+    )
+    r = run_with_checkpoint(spark, docs, _empty_transform, out, n_buckets=4)
+    assert r["skipped"] == [0, 1] and r["processed"] == [2, 3]
+    assert completed_buckets(spark, out, 4) == {0, 1, 2, 3}

@@ -9,6 +9,7 @@ import re
 
 import pytest
 
+from blackedge_ocr_spark import plans
 from blackedge_ocr_spark.analysis import retrieval, textstats
 
 
@@ -257,8 +258,6 @@ def test_bm25_index_scan_prunes_shards(spark, bm25_src):
     the IVF index pruning test)."""
     import pyspark.sql.functions as F
 
-    from blackedge_ocr_spark import plans
-
     _d, q, path = bm25_src
     one = q.limit(1)
     term = one.collect()[0]["term"]
@@ -276,13 +275,6 @@ def test_bm25_index_scan_prunes_shards(spark, bm25_src):
     ), fp[:4000]
 
 
-def _cache_entries(spark) -> int:
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    fld = cm.getClass().getDeclaredField("cachedData")
-    fld.setAccessible(True)
-    return int(fld.get(cm).size())
-
-
 def test_bm25_leaves_only_callers_cache(spark, bm25_src):
     """bm25_topk releases everything it stages and leaves the caller's
     cached frames alone, over both sources and any range count."""
@@ -295,7 +287,7 @@ def test_bm25_leaves_only_callers_cache(spark, bm25_src):
             for ranges in (1, 3):
                 retrieval.bm25_topk(src, queries=q, query_ranges=ranges).collect()
         cm = spark._jsparkSession.sharedState().cacheManager()
-        assert _cache_entries(spark) == 1
+        assert plans.cached_frame_count(spark) == 1
         assert cm.lookupCachedData(marker._jdf).isDefined()
     finally:
         marker.unpersist()

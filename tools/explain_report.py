@@ -121,12 +121,17 @@ REPORT_QUERIES = (
 
 # (prefix, id) patterns whose ids are session counters, not plan shape
 _SESSION_IDS = (r"(#)(\d+)", r"(plan_id=)(\d+)", r"(RDD\[)(\d+)")
+# the JVM call site an RDD was made at, e.g. "NativeMethodAccessorImpl
+# .java:0" or "<unknown>:0" for the same py4j call on another JVM run
+_CALL_SITE = re.compile(r"(RDD\[\d+\] at \S+) at \S+:\d+")
 
 
 def stable_ids(plan: str) -> str:
     """Renumber every session-counter id in one formatted plan by order
     of first appearance (0, 1, …), keeping which references share an
-    id — the same plan shape always prints the same text."""
+    id, and drop RDD call-site locations — the same plan shape always
+    prints the same text."""
+    plan = _CALL_SITE.sub(r"\1", plan)
     for pat in _SESSION_IDS:
         seen: dict[str, int] = {}
         plan = re.sub(
