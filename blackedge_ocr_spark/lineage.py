@@ -56,6 +56,13 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of its Hadoop ``FileSystem``
+    directly: no Spark read, so no job and no logged warning."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+
+
 def read_parquet_or_none(
     spark: SparkSession, path: str, schema: T.StructType | None = None
 ) -> DataFrame | None:
@@ -65,15 +72,10 @@ def read_parquet_or_none(
     treating it as empty would silently reprocess or re-emit data.
     A known ``schema`` skips the footer-inference job; a corrupt file
     then fails when the read runs instead of here."""
-    from pyspark.sql.utils import AnalysisException
-
-    try:
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        return reader.parquet(path)
-    except AnalysisException as e:
-        if (e.getCondition() or "") != "PATH_NOT_FOUND":
-            raise
+    if not path_exists(spark, path):
         return None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -155,14 +157,17 @@ def run_with_checkpoint(
         # Metrics come from the files just written — auditing the
         # actual sink contents — rather than re-executing the whole
         # transform (including its Arrow OCR stage) a second time.
-        # Read with the schema just written, so no job infers it from
-        # a footer, and an ALL-EMPTY batch (only _SUCCESS committed)
-        # reads as zero rows: it acks zero-doc lineage rows instead of
+        # Only this batch's partition directories are listed, read with
+        # the schema just written, so no job infers it from a footer.
+        # A bucket without documents writes no directory; an ALL-EMPTY
+        # batch reads nothing and acks zero-doc lineage rows instead of
         # looping on the same empty batch forever.
-        metrics = (
+        dirs = [f"{output}/data/part_id={pid}" for pid in bucket_ids]
+        written = [d for d in dirs if path_exists(spark, d)]
+        metrics = [] if not written else (
             spark.read.schema(result.schema)
-            .parquet(f"{output}/data")
-            .filter(F.col("part_id").isin(bucket_ids))
+            .option("basePath", f"{output}/data")
+            .parquet(*written)
             .groupBy("part_id")
             .agg(
                 F.count("*").alias("n_docs"),

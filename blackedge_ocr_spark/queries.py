@@ -1104,7 +1104,7 @@ def q_frame_sample(spark, sf_dir) -> DataFrame:
 
 def q_segment_stats(spark, sf_dir) -> DataFrame:
     """M4 segmentation end-to-end: deterministic HTML corpus →
-    DOM-parse + boilerplate-strip mapInPandas → per-doc span stats and
+    DOM-parse + boilerplate-strip scalar Arrow UDF → per-doc span stats and
     an md5 over the ordered kept texts. The HTML is simple enough that
     the DuckDB oracle predicts the exact segmentation output."""
     from blackedge_ocr_spark.segmentation import htmlify_documents, segment_documents

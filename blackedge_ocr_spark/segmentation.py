@@ -10,15 +10,23 @@ src/services/workflows/text_extraction_handler.py:96-150,
 src/services/clients/mistral_client.py:164-218) with one vectorized
 stage:
 
-    raw_documents(doc_id, raw:string) --mapInPandas--> documents(doc_id, spans)
+    raw_documents(doc_id, raw:string) --arrow_udf--> documents(doc_id, spans)
 
 Design:
 - ``segment_html`` is a PURE function (stdlib HTMLParser, no Spark) —
   unit-testable without a session, per SURVEY §7 M4.
-- ``segment_documents`` wraps it in Arrow-batched ``mapInPandas``; the
-  stage is a pure map (no shuffle), so it scales linearly with
-  executors; mega-docs are bounded per Arrow batch by
-  ``spark.sql.execution.arrow.maxRecordsPerBatch``.
+- ``segment_documents`` wraps it in a scalar ``F.arrow_udf`` (one doc
+  in, one span array out); the stage is a pure map (no shuffle), so it
+  scales linearly with executors; mega-docs are bounded per Arrow
+  batch by ``spark.sql.execution.arrow.maxRecordsPerBatch``. Unlike
+  ``mapInPandas``, the planner can push a ``doc_id`` filter through a
+  scalar UDF, so a checkpoint batch parses only its own buckets; and
+  unlike a scalar ``pandas_udf``, its output is not folded into a
+  downstream UDF's arguments, so ``extract_documents``' staged arrays
+  stay attributes.
+- ``htmlify_documents`` widens a starved scan to one task per core
+  (``session.spread_if_starved``): each Python task pays a fixed
+  worker set-up, so more tasks than cores buy nothing here.
 
 Boilerplate heuristics (justext/Arc90-family, re-derived from the
 published approach, not copied from any implementation):
@@ -34,15 +42,16 @@ published approach, not copied from any implementation):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from html.parser import HTMLParser
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
-from blackedge_ocr_spark.schema import DOCUMENTS_SCHEMA
+from blackedge_ocr_spark.schema import SPAN_STRUCT
+from blackedge_ocr_spark.session import spread_if_starved
 
 MAX_LINK_DENSITY = 0.33
 MIN_BLOCK_CHARS = 25
@@ -257,28 +266,26 @@ def segment_html(raw: str) -> list[tuple[str, str, str, int]]:
     return spans
 
 
-def _segment_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].astype(str),
-                "spans": [
-                    [
-                        {"kind": k, "text": t, "media_ref": m, "offset": o}
-                        for k, t, m, o in segment_html(raw)
-                    ]
-                    for raw in pdf["raw"]
-                ],
-            }
-        )
+_SPANS_ARROW = to_arrow_type(T.ArrayType(SPAN_STRUCT))
+
+
+@F.arrow_udf(T.ArrayType(SPAN_STRUCT))
+def _segment(raw: pa.Array) -> pa.Array:
+    return pa.array(
+        [segment_html(r) for r in raw.to_pylist()], type=_SPANS_ARROW
+    )
 
 
 def segment_documents(raw_docs: DataFrame) -> DataFrame:
-    """raw_documents(doc_id, raw) → documents(doc_id, spans) via
-    Arrow-batched mapInPandas (SURVEY §2.14-1)."""
+    """raw_documents(doc_id, raw) → documents(doc_id, spans) via a
+    scalar Arrow UDF (SURVEY §2.14-1). The parse is one row in, one
+    row out, so Catalyst pushes a filter on ``doc_id`` (the bucket
+    filter of ``run_with_checkpoint``) past it down to the scan:
+    each batch parses only its own documents."""
     return raw_docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "raw"
-    ).mapInPandas(_segment_batches, DOCUMENTS_SCHEMA)
+        F.col("doc_id").cast("string").alias("doc_id"),
+        _segment("raw").alias("spans"),
+    )
 
 
 # ---------------------------------------------------------------------
@@ -301,7 +308,9 @@ def htmlify_documents(spark, sf_dir: str, words_per_para: int = 30) -> DataFrame
     with a heading, an img every 3rd doc and a table every 5th.
     Pure column arithmetic — seed-free, reproducible."""
     docs = spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism * 4, "doc_id")
+    # one task per core on a single-file input, none added at scale:
+    # every task pays a fixed Python worker set-up in the parse
+    docs = spread_if_starved(docs, None, "doc_id")
     toks = F.split(F.col("text"), " ")
     n_paras = F.greatest(
         F.ceil(F.size(toks) / F.lit(words_per_para)).cast("int"), F.lit(1)

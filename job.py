@@ -38,10 +38,9 @@ def main(argv=None) -> int:
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
-    from pyspark.sql import functions as F
-
     from blackedge_ocr_spark.datagen import spansify_documents
     from blackedge_ocr_spark.lineage import (
+        LINEAGE_SCHEMA,
         read_parquet_or_none,
         run_with_checkpoint,
     )
@@ -76,21 +75,21 @@ def main(argv=None) -> int:
     )
     # a run that processed zero batches against a fresh output dir
     # has no manifest yet — print an empty summary, don't crash
-    lineage = read_parquet_or_none(spark, f"{args.output}/_lineage")
+    lineage = read_parquet_or_none(
+        spark, f"{args.output}/_lineage", LINEAGE_SCHEMA
+    )
     summary = {}
     if lineage is not None:
-        summary = lineage.agg(
-            *[F.sum(c).alias(c)
-              for c in ("n_docs", "n_spans", "n_problem_docs", "n_errors")]
-        ).collect()[0].asDict()
+        rows = lineage.collect()  # one row per bucket: small
+        summary = {
+            c: sum(r[c] for r in rows)
+            for c in ("n_docs", "n_spans", "n_problem_docs", "n_errors")
+        }
         # compute wall = sum of per-batch walls (batch_wall_sec is
         # identical on every bucket row of a batch — distinct first).
         # Excludes JVM/session startup; cumulative across resumed
         # runs sharing this output dir.
-        wall = (
-            lineage.select("batch", "batch_wall_sec").distinct()
-            .agg(F.sum("batch_wall_sec")).collect()[0][0]
-        )
+        wall = sum(w for _, w in {(r["batch"], r["batch_wall_sec"]) for r in rows})
         summary["wall_s"] = round(float(wall), 3)
     print(json.dumps({
         "processed": len(report["processed"]),

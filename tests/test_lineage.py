@@ -240,3 +240,38 @@ def test_manifest_without_n_buckets_resumes(spark, tmp_path):
     r = run_with_checkpoint(spark, docs, _empty_transform, out, n_buckets=4)
     assert r["skipped"] == [0, 1] and r["processed"] == [2, 3]
     assert completed_buckets(spark, out, 4) == {0, 1, 2, 3}
+
+
+def test_pushed_bucket_filter_keeps_bucket_membership(spark, tmp_path):
+    """The bucket filter reaches the scan below the HTML parse, where
+    it hashes the source doc_id cast to string: every bucket must hold
+    exactly the docs ``with_bucket`` assigns it on the unfiltered
+    segmented corpus — none lost, none in two buckets."""
+    from blackedge_ocr_spark.segmentation import (
+        htmlify_documents,
+        segment_documents,
+    )
+
+    seg = segment_documents(htmlify_documents(spark, SF))
+
+    def transform(d):
+        # keeps the parsed spans, so the parse stays in the plan
+        return d.select(
+            "doc_id",
+            F.col("spans").alias("out_spans"),
+            F.array().cast("array<struct<offset:int,labels:array<string>>>").alias(
+                "problems"
+            ),
+            F.lit(False).alias("used_secondary"),
+            F.lit("wf").alias("workflow"),
+        )
+
+    out = str(tmp_path / "o")
+    run_with_checkpoint(
+        spark, seg, transform, out, n_buckets=4, buckets_per_batch=2,
+    )
+    written = spark.read.parquet(f"{out}/data").select("part_id", "doc_id")
+    expected = with_bucket(seg, 4).select("part_id", "doc_id").collect()
+    assert len(expected) == 500
+    assert {r["part_id"] for r in expected} == {0, 1, 2, 3}
+    assert sorted(map(tuple, written.collect())) == sorted(map(tuple, expected))

@@ -1,6 +1,8 @@
 """Plan-shape regression tests: shuffle counts, pushdown, UDF
 boundaries — the 100x-scale guarantees, asserted mechanically."""
 
+import re
+
 import pyspark.sql.functions as F
 
 from blackedge_ocr_spark import plans
@@ -407,3 +409,55 @@ def test_no_unpartitioned_windows_in_tiny_window_queries(spark):
         df = qs[name](spark, SF)
         bad = plans.unpartitioned_window_specs(df)
         assert bad == [], (name, bad)
+
+
+def _checkpoint_batch(spark):
+    """One ``run_with_checkpoint`` batch over the segmented HTML corpus:
+    its bucket filter, then the flagship extraction."""
+    from blackedge_ocr_spark.lineage import with_bucket
+    from blackedge_ocr_spark.segmentation import (
+        htmlify_documents,
+        segment_documents,
+    )
+
+    seg = segment_documents(htmlify_documents(spark, SF))
+    part = with_bucket(seg, 4).filter(F.col("part_id").isin([0, 1]))
+    return extract_documents(part.drop("part_id"), query_col=None)
+
+
+def test_bucket_filter_reaches_scan_below_segmentation(spark):
+    """A checkpoint batch parses only its own buckets: the bucket
+    predicate lands in the scan's DataFilters, under the segmentation
+    ArrowEvalPython, instead of over the parse's output."""
+    plan = plans.simple_plan(_checkpoint_batch(spark))
+    lines = plan.splitlines()
+    seg = next(i for i, ln in enumerate(lines)
+               if "ArrowEvalPython [_segment(" in ln)
+    scan = next(i for i, ln in enumerate(lines) if "FileScan parquet" in ln)
+    assert seg < scan, plan
+    data_filters = re.search(r"DataFilters: \[(.*?)\], Format", lines[scan])
+    assert data_filters and "xxhash64(cast(doc_id" in data_filters.group(1), (
+        lines[scan])
+    assert "xxhash64" not in "\n".join(lines[:seg]), plan
+
+
+def test_segmented_ocr_args_stay_attributes(spark):
+    """The staged media arrays reach the OCR UDF as attributes: a
+    segmentation UDF the optimizer could inline (a scalar pandas_udf)
+    folds them in as ``array_sort(pythonUDF…)``, re-sorted per span."""
+    plan = plans.formatted_plan(_checkpoint_batch(spark))
+    assert "array_sort(pythonUDF" not in plan
+
+
+def test_segmented_frame_one_task_per_core(spark):
+    """A single-file corpus is widened to one task per core, not 4×:
+    each Python task pays a fixed worker set-up."""
+    from blackedge_ocr_spark.segmentation import (
+        htmlify_documents,
+        segment_documents,
+    )
+
+    par = spark.sparkContext.defaultParallelism
+    assert spark.read.parquet(f"{SF}/documents.parquet").rdd.getNumPartitions() == 1
+    seg = segment_documents(htmlify_documents(spark, SF))
+    assert seg.rdd.getNumPartitions() == par
