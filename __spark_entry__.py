@@ -107,30 +107,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "curation_funnel": q.q_curation_funnel,
         "final_content": q.q_final_content,
         "similarity_report": q.q_similarity_report,
-        "event_rollup": q.q_event_rollup,
-        "event_funnel": q.q_event_funnel,
-        "cohort_retention": q.q_cohort_retention,
-        "asof_join": q.q_asof_join,
-        "range_join": q.q_range_join,
-        "hypertable_rollup": q.q_hypertable_rollup,
-        "event_transitions": q.q_event_transitions,
-        "tpch_q1": q.q_tpch_q1,
-        "tpch_q3": q.q_tpch_q3,
-        "tpch_q5": q.q_tpch_q5,
-        "pricing_rollup": q.q_pricing_rollup,
-        "user_sessions": q.q_user_sessions,
-        "user_sessions_2p": q.q_user_sessions_2p,
-        "user_sessions_native": q.q_user_sessions_native,
-        "peak_concurrency": q.q_peak_concurrency,
-        "zorder_prune": q.q_zorder_prune,
-        "view_click_pairs": q.q_view_click_pairs,
-        "pricing_cube": q.q_pricing_cube,
-        "gapfill": q.q_gapfill,
-        "hour_anomalies": q.q_hour_anomalies,
-        "value_ranks": q.q_value_ranks,
-        "daily_pivot": q.q_daily_pivot,
-        "type_quantiles": q.q_type_quantiles,
-        "moving_stats": q.q_moving_stats,
         # corpus curation (analysis/corpusops.py)
         "dup_ngrams": q.q_dup_ngrams,
         "decontaminate": q.q_decontaminate,

@@ -39,8 +39,6 @@ BENCH_QUERIES = (
     "ann_topk",
     "ann_ivf_kmeans_topk",
     "embedding_neardup_lsh",
-    "event_rollup",
-    "user_sessions_2p",
     "dup_ngrams",
     "paragraph_dedup",
     "corpus_shuffle",
@@ -72,22 +70,8 @@ BENCH_QUERIES = (
     "source_drift",
     "lm2_scores",
     "pagerank",
-    "event_funnel",
-    "asof_join",
-    "range_join",
-    "hypertable_rollup",
-    "tpch_q1",
-    "tpch_q5",
-    "peak_concurrency",
-    "zorder_prune",
     "link_hits",
     "triangle_stats",
-    "view_click_pairs",
-    "gapfill",
-    "hour_anomalies",
-    "value_ranks",
-    "daily_pivot",
-    "pricing_cube",
 )
 
 

@@ -158,9 +158,9 @@ def token_packing(docs: DataFrame, cap: int = PACK_CAP) -> DataFrame:
     Shape at scale: the window partitions by source — shards build in
     parallel across sources, never a global sort. A single mega
     source would serialize its cumsum into one task; the fix is the
-    same two-phase split q_user_sessions_2p uses (pre-aggregate
-    per (source, bucket), prefix-sum the bucket totals) — not needed
-    at the benched scales (BENCH/SKEW.md discipline)."""
+    two-phase split of ``token_packing_2p`` (pre-aggregate per
+    (source, bucket), prefix-sum the bucket totals) — not needed at
+    the benched scales (BENCH/SKEW.md discipline)."""
     tok = F.size(tokens(F.col("text"))).cast("long")
     w = (
         Window.partitionBy("source")
@@ -195,9 +195,9 @@ PACK_BUCKET_IDS = 4096  # phase-1 doc_id range per prefix-sum bucket
 def token_packing_2p(
     docs: DataFrame, cap: int = PACK_CAP, bucket_ids: int = PACK_BUCKET_IDS
 ) -> DataFrame:
-    """Two-phase token_packing — the mega-source skew defense, same
-    discipline as q_user_sessions_2p: a classic distributed prefix
-    sum instead of one serialized cumsum task per source.
+    """Two-phase token_packing — the mega-source skew defense: a
+    classic distributed prefix sum instead of one serialized cumsum
+    task per source.
 
     Phase 1 cumsums WITHIN (source, doc_id-range bucket) partitions —
     a source with 10^9 docs spreads across 10^9/bucket_ids tasks.
@@ -508,8 +508,8 @@ def span_packing(spansified: DataFrame) -> DataFrame:
     doc_id, so the window adds a LOCAL sort, no new exchange) → one
     combinable hash agg on (doc_id, seq_id). The per-task sort is
     bounded by max spans/doc (the mega-doc stratum is a bounded 25x);
-    a pathological 10^6-span doc would take the user_sessions_2p
-    two-phase split. Contrast with token_packing (doc-level corpus
+    a pathological 10^6-span doc would take the two-phase split of
+    ``token_packing_2p``. Contrast with token_packing (doc-level corpus
     sharding); this packs WITHIN documents and keeps media interleaved.
     """
     from blackedge_ocr_spark.constants import MEDIA_KINDS

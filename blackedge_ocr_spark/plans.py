@@ -127,10 +127,6 @@ def count_python_stages(df: DataFrame) -> int:
     return plan_counts(formatted_plan(df))["python_stages"]
 
 
-def count_cache_build_python_stages(df: DataFrame) -> int:
-    return plan_counts(formatted_plan(df))["cache_python_stages"]
-
-
 def scan_info(df: DataFrame) -> dict:
     """PushedFilters / ReadSchema of the first parquet scan."""
     plan = formatted_plan(df)

@@ -16,23 +16,16 @@ Scale notes per query live in the docstrings — the judge's question
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from blackedge_ocr_spark.constants import CONTENT_SEPARATOR, PROBLEM_LABELS
+from blackedge_ocr_spark.constants import CONTENT_SEPARATOR
 from blackedge_ocr_spark.datagen import spansify_documents
 from blackedge_ocr_spark.functions.problems import problem_flags, problems_array
-from blackedge_ocr_spark.functions.similarity import (
-    levenshtein_similarity,
-    number_frequency_similarity,
-    word_overlap_similarity,
-    wordfreq_cosine_similarity,
-)
 from blackedge_ocr_spark.functions.text import (
     extract_numbers,
     key_terms,
     normalize_text,
-    word_frequency,
 )
 from blackedge_ocr_spark.operators.routing import route_workflow
 from blackedge_ocr_spark.pipeline import extract_documents
@@ -1448,1071 +1441,6 @@ def q_similarity_report(spark, sf_dir) -> DataFrame:
         F.round(S.jaccard_terms_guarded(F.col("ka"), F.col("kb")), 6).alias("word_overlap"),
         F.round(S.multiset_cosine_arrow(F.col("fa"), F.col("fb")), 6).alias("cosine"),
         F.round(lev, 6).alias("levenshtein"),
-    )
-
-
-SESSION_GAP_SEC = 1800  # 30-min inactivity closes a session
-
-
-def q_user_sessions(spark, sf_dir) -> DataFrame:
-    """Gap-based sessionization (30-min inactivity closes a session):
-    lag → new-session flag → running-sum session id → hash agg. The
-    batch twin of the stateful streaming operator
-    (streaming.stream_sessionize, applyInPandasWithState); both
-    produce identical closed sessions (pytest parity). Shuffle shape:
-    ONE exchange on user_id serves both the window and the
-    aggregation (same partitioning), and the agg combines map-side.
-    """
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    e = e.repartition(_par(spark), "user_id")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # Gap in INTEGER microseconds — round-2 used unix_timestamp, which
-    # truncates to whole seconds and could sessionize differently from
-    # the DuckDB oracle (fractional epoch) and the streaming twin near
-    # the 1800 s threshold. unix_micros vs epoch_us vs pandas ts.value
-    # are all exact integers: the three implementations now agree by
-    # construction, not by luck of the data. (ts is TIMESTAMP_NTZ; the
-    # cast to TIMESTAMP is identity because the session tz is UTC.)
-    ep = F.unix_micros(F.col("ts").cast("timestamp"))
-    gap = ep - F.lag(ep).over(w)
-    new_s = F.when(
-        gap.isNull() | (gap > F.lit(SESSION_GAP_SEC * 1_000_000).cast("long")), 1
-    ).otherwise(0)
-    sid = F.sum(new_s).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    staged = e.select(
-        "user_id", "ts", "value", "event_id", sid.alias("sid")
-    )
-    return staged.groupBy("user_id", "sid").agg(
-        F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias(
-            "session_start"
-        ),
-        F.count("*").cast("bigint").alias("n_events"),
-        F.round(F.sum("value"), 3).alias("total_value"),
-    ).select("user_id", "session_start", "n_events", "total_value")
-
-
-def q_user_sessions_native(spark, sf_dir) -> DataFrame:
-    """The THIRD batch sessionizer: Spark's native
-    ``session_window`` operator, checked against the SAME DuckDB
-    oracle as the manual lag/running-sum and two-phase variants —
-    three independent formulations, one contract.
-
-    Boundary semantics (verified at the µs, not luck-of-the-data):
-    the manual rule MERGES an event at exactly gap seconds after
-    the previous one (``gap > 1800s`` starts a session), and
-    Spark's session_window merge condition is likewise INCLUSIVE
-    (``next − last ≤ gap`` — an event exactly at the window end
-    extends it; one 1 µs later does not), so the plain 1800 s gap
-    is already bit-equal to the manual rule — pinned by the
-    boundary pytest with ±1 µs events. (Null-ts rows differ — the
-    manual path emits a NULL-start singleton, session_window drops
-    them; unreachable on the corpus, same documented class as the
-    streaming twin's note.)
-    """
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    win = F.session_window(
-        F.col("ts").cast("timestamp"), f"{SESSION_GAP_SEC} seconds"
-    )
-    return (
-        e.groupBy("user_id", win)
-        .agg(
-            F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias(
-                "session_start"
-            ),
-            F.count("*").cast("bigint").alias("n_events"),
-            F.round(F.sum("value"), 3).alias("total_value"),
-        )
-        .select("user_id", "session_start", "n_events", "total_value")
-    )
-
-
-SESSION_BUCKET_US = 3_600 * 1_000_000  # phase-1 time bucket (1 hour)
-
-
-def _presessions_merged(e: DataFrame) -> DataFrame:
-    """Shared two-phase sessionization staging (q_user_sessions_2p
-    and q_peak_concurrency — ONE implementation, so the gap rule,
-    bucket width and tie-break ordering cannot diverge). Phase 1
-    sessionizes WITHIN (user_id, hour-bucket) partitions, so a bot
-    with 10^7 events spreads across tasks instead of serializing one
-    window sort; its output is pre-sessions — one row per burst,
-    usually orders of magnitude fewer than events. Phase 2 merges
-    adjacent pre-sessions whose boundary gap is <= the threshold,
-    which reconstructs the single-phase sessions EXACTLY: phase 1
-    only ever splits at real session breaks or at bucket edges, and
-    phase 2 re-joins exactly the bucket-edge splits. Returns one row
-    per PRE-session tagged with the merged id: (user_id, _sid,
-    _start_us, _end_us, _start_ts, _n, _total); callers aggregate
-    per (user_id, _sid). Worst case (every event its own session)
-    degrades to the single-phase cost, never worse than events; best
-    case (the skewed bot) is bounded by O(events/bucket) per task.
-    """
-    spark = e.sparkSession
-    ep = F.unix_micros(F.col("ts").cast("timestamp"))
-    gap_us = F.lit(SESSION_GAP_SEC * 1_000_000).cast("long")
-    e = e.withColumn("_ep", ep).withColumn(
-        "_bkt", F.floor(F.col("_ep") / F.lit(SESSION_BUCKET_US))
-    )
-    e = e.repartition(_par(spark), "user_id", "_bkt")
-
-    w1 = Window.partitionBy("user_id", "_bkt").orderBy("ts", "event_id")
-    g1 = F.col("_ep") - F.lag("_ep").over(w1)
-    new1 = F.when(g1.isNull() | (g1 > gap_us), 1).otherwise(0)
-    sid1 = F.sum(new1).over(
-        w1.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pre = (
-        e.select("user_id", "_bkt", "ts", "value", "_ep", sid1.alias("_sid1"))
-        .groupBy("user_id", "_bkt", "_sid1")
-        .agg(
-            F.min("_ep").alias("_start_us"),
-            F.max("_ep").alias("_end_us"),
-            F.min("ts").alias("_start_ts"),
-            F.count("*").alias("_n"),
-            F.sum("value").alias("_total"),
-        )
-    )
-
-    w2 = Window.partitionBy("user_id").orderBy("_start_us", "_end_us")
-    g2 = F.col("_start_us") - F.lag("_end_us").over(w2)
-    new2 = F.when(g2.isNull() | (g2 > gap_us), 1).otherwise(0)
-    sid2 = F.sum(new2).over(
-        w2.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return pre.select(
-        "user_id", "_start_us", "_end_us", "_start_ts", "_n", "_total",
-        sid2.alias("_sid"),
-    )
-
-
-def q_user_sessions_2p(spark, sf_dir) -> DataFrame:
-    """Two-phase sessionization — the hot-user skew defense for
-    q_user_sessions (staging shared with q_peak_concurrency, see
-    _presessions_merged). Oracle: the very same sql_user_sessions
-    the single-phase query checks against — equality by oracle, not
-    by construction argument alone.
-    """
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    return (
-        _presessions_merged(e)
-        .groupBy("user_id", "_sid")
-        .agg(
-            F.date_format(F.min("_start_ts"), "yyyy-MM-dd HH:mm:ss").alias(
-                "session_start"
-            ),
-            F.sum("_n").cast("bigint").alias("n_events"),
-            F.round(F.sum("_total"), 3).alias("total_value"),
-        )
-        .select("user_id", "session_start", "n_events", "total_value")
-    )
-
-
-def q_peak_concurrency(spark, sf_dir) -> DataFrame:
-    """Sweep-line peak session concurrency per day — the classic
-    interval-overlap aggregation (max simultaneous open sessions)
-    done scalably: never a single global ordered pass.
-
-    Stages: (1) the SAME µs-exact sessionization as
-    ``q_user_sessions`` reduces events to (start_us, end_us)
-    intervals; (2) each interval emits a +1 point at start and a -1
-    point at end (INCLUSIVE ends: a session ending at t overlaps one
-    starting at t, so the per-timestamp candidate counts starts
-    BEFORE ends — cand = running_net_incl + ends, algebraically
-    identical to "apply all +1s at t, then peak, then -1s");
-    (3) points collapse per distinct timestamp (combinable count
-    agg), so the window input is O(distinct boundary times), not
-    O(events); (4) the running net is computed per DAY partition
-    with a cross-day carry from the |days|-row per-day net table —
-    the only totally-ordered window runs over that tiny table, never
-    over the point stream. Peak(day) = max in-day candidate + carry.
-
-    Scale shape: shuffles are sessionize ((user, hour-bucket) —
-    the TWO-PHASE staging of q_user_sessions_2p, so a bot user's
-    10^7 events pre-sessionize across tasks and only its pre-session
-    rows serialize in the merge window; measured 5.8 → 2.8 s on an
-    80%-one-key corpus), point collapse (t), day window (day) — all
-    O(boundaries) or less; the single-partition carry window touches
-    |days| rows (~365/yr at any corpus size). Day-partition skew is
-    bounded by boundaries per day; a hotter granularity would swap
-    day for hour without touching the carry algebra. Everything is
-    exact int64 — no floats anywhere.
-    """
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    sess = (
-        _presessions_merged(e)
-        .groupBy("user_id", "_sid")
-        .agg(
-            F.min("_start_us").alias("s_us"),
-            F.max("_end_us").alias("e_us"),
-        )
-    )
-    # one pass over sess: a union of two selects would re-derive the
-    # whole sessionize subtree per branch (observed 4x recompute)
-    pts = sess.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("s_us").alias("t"),
-                    F.lit(1).alias("s"),
-                    F.lit(0).alias("e"),
-                ),
-                F.struct(
-                    F.col("e_us").alias("t"),
-                    F.lit(0).alias("s"),
-                    F.lit(1).alias("e"),
-                ),
-            )
-        ).alias("p")
-    ).select("p.t", "p.s", "p.e")
-    per_t = (
-        pts.filter(F.col("t").isNotNull())
-        .groupBy("t")
-        .agg(F.sum("s").alias("starts"), F.sum("e").alias("ends"))
-        .withColumn(
-            "day", F.date_format(F.timestamp_micros(F.col("t")), "yyyy-MM-dd")
-        )
-    )
-    wd = Window.partitionBy("day").orderBy("t").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = F.sum(F.col("starts") - F.col("ends")).over(wd)
-    days = (
-        per_t.select(
-            "day", "starts", "ends", (cum + F.col("ends")).alias("cand")
-        )
-        .groupBy("day")
-        .agg(
-            F.max("cand").alias("rel_peak"),
-            F.sum("starts").alias("started"),
-            F.sum("ends").alias("ended"),
-            F.sum(F.col("starts") - F.col("ends")).alias("net"),
-        )
-    )
-    # Day spine: a day fully inside a long session has NO boundary
-    # points, so it would vanish from the grouped table even though
-    # concurrency was >= carry all day — gapfill the [first, last]
-    # day range (tiny domain) so hole days emit peak = carry.
-    # days feeds BOTH the span agg and the join: persist the
-    # |days|-row table so the point pipeline isn't derived twice.
-    days = days.persist()
-    span = days.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
-    spine = span.select(
-        F.explode(
-            F.sequence(F.to_date("lo"), F.to_date("hi"))
-        ).alias("_d")
-    ).select(F.date_format("_d", "yyyy-MM-dd").alias("day"))
-    filled = spine.join(F.broadcast(days), "day", "left").select(
-        "day",
-        F.coalesce("rel_peak", F.lit(0)).alias("rel_peak"),
-        F.coalesce("started", F.lit(0)).alias("started"),
-        F.coalesce("ended", F.lit(0)).alias("ended"),
-        F.coalesce("net", F.lit(0)).alias("net"),
-    )
-    # |days|-row table: the only totally-ordered window in the query.
-    # Deliberate single partition over a calendar-bounded domain; the
-    # key is constant-per-row but non-foldable (a plain literal would
-    # be constant-folded out of the spec) so the global-window WARN
-    # channel stays clean (see dsir.dsir_select, same convention).
-    wc = (
-        Window.partitionBy(F.least(F.length("day"), F.lit(0)))
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = F.coalesce(F.sum("net").over(wc), F.lit(0))
-    return filled.select(
-        "day",
-        (F.col("rel_peak") + carry).cast("bigint").alias("peak_concurrent"),
-        F.col("started").cast("bigint").alias("sessions_started"),
-        F.col("ended").cast("bigint").alias("sessions_ended"),
-        (carry + F.col("net")).cast("bigint").alias("active_at_eod"),
-    )
-
-
-def q_view_click_pairs(spark, sf_dir) -> DataFrame:
-    """Attribution pair join: every (view, click) pair of the same
-    user with the click 0..30 min after the view — the batch twin of
-    ``streaming.stream_interval_join`` (the native watermarked
-    stream-stream join), and the pair-emitting sibling of
-    ``q_range_join``'s count form.
-
-    Scale shape: the same two-bucket probe trick as q_range_join —
-    clicks probe (bucket, bucket-1), plain equi-join on
-    (user_id, bucket), band predicate on the candidates. Candidates
-    are O(matches + band-adjacent misses); the DuckDB oracle is the
-    naive inequality join, so the scale path is verified against the
-    spec, never trusted."""
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    w_us = RANGE_WINDOW_SEC * 1_000_000
-    ep = "unix_micros(cast(ts as timestamp))"
-    views = e.filter(F.col("event_type") == "view").select(
-        "user_id",
-        F.col("event_id").alias("view_id"),
-        F.expr(ep).alias("t_view"),
-        F.expr(f"{ep} div {w_us}").alias("probe"),
-    )
-    clicks = e.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.expr(ep).alias("t_clk"),
-        F.explode(
-            F.array(
-                F.expr(f"{ep} div {w_us}"),
-                F.expr(f"{ep} div {w_us}") - 1,
-            )
-        ).alias("probe"),
-    )
-    return (
-        clicks.join(views, ["user_id", "probe"])
-        .filter(
-            (F.col("t_clk") - F.col("t_view") >= 0)
-            & (F.col("t_clk") - F.col("t_view") <= w_us)
-        )
-        .select(
-            "user_id",
-            "view_id",
-            "click_id",
-            (F.col("t_clk") - F.col("t_view")).cast("bigint").alias(
-                "wait_us"
-            ),
-        )
-    )
-
-
-def q_zorder_prune(spark, sf_dir) -> DataFrame:
-    """Z-order write-layout audit: per-layout zone-map pruning counts
-    for 5% band predicates on user, on hour, and on both — the
-    measurable form of "OPTIMIZE ZORDER BY (user_id, ts)". The
-    single-dim layouts prune only their own dimension; the Morton
-    layout prunes both. One corpus scan, one (layout, bucket) hash
-    agg, exact integers end-to-end (analysis/zorder.py)."""
-    from blackedge_ocr_spark.analysis import zorder
-
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    return zorder.layout_prune_stats(e)
-
-
-def q_event_rollup(spark, sf_dir) -> DataFrame:
-    """Hour-windowed event aggregation with JSON props extraction —
-    the batch form of the engine's streaming rollup (window().start
-    aligns with epoch hours in both engines). Hash agg on (window,
-    type): partial map-side combine keeps the shuffle O(windows x
-    types) regardless of event count."""
-    from blackedge_ocr_spark.session import spread_if_starved
-
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    # The groupBy below combines map-side, so pre-shuffling raw events
-    # is pure waste at scale (the round-2 unconditional repartition
-    # moved O(n) rows to buy nothing). Shared starvation gate: widens
-    # only when the scan has fewer splits than cores.
-    e = spread_if_starved(e)
-    w = F.window(F.col("ts"), "1 hour")
-    return (
-        e.groupBy(
-            F.date_format(w["start"], "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "event_type",
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 3).alias("total_value"),
-            F.sum(
-                F.get_json_object(F.col("props"), "$.k").cast("long")
-            ).alias("sum_k"),
-        )
-    )
-
-
-FUNNEL_STEPS = ("view", "click", "purchase")
-FUNNEL_WINDOW_HOURS = 72  # anchor window; 24h converts too few on
-                          # the shipped corpus (14/150), 168h nearly
-                          # everyone (126/150) — 72h discriminates
-
-
-def q_event_funnel(spark, sf_dir) -> DataFrame:
-    """First-touch ordered funnel over the event stream: per user,
-    anchor at the EARLIEST step-1 event; each later step is the
-    earliest qualifying event strictly after the previous step and
-    inside the window anchored at step 1 — the product-analytics
-    default (first-touch, greedy-earliest). Both engines implement
-    the same greedy chain, so parity is structural; a later anchor
-    could in principle convert a user the greedy chain misses, which
-    is the documented first-touch semantics, not a bug.
-
-    One row per step: (step, event_type, n_users, total_wait_us)
-    with the wait summed in EXACT integer microseconds
-    (unix_micros == DuckDB epoch_us — the session-gap precision
-    lesson applied from the start).
-
-    Shape: per-step filtered min-aggregations chained by user_id
-    equi-joins — every shuffle keys on user_id so one partitioning
-    serves all stages, and each stage's table is O(users), never
-    O(events); the event scan is filtered to one type per stage
-    (predicate reaches the parquet scan).
-    """
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").select(
-        "user_id", "event_type", "ts"
-    )
-    win_us = FUNNEL_WINDOW_HOURS * 3600 * 1_000_000
-
-    def ep(c) -> Column:
-        return F.unix_micros(c.cast("timestamp"))
-
-    stages = []
-    s1 = (
-        e.filter(F.col("event_type") == FUNNEL_STEPS[0])
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    stages.append(s1.select("user_id", "t1", F.col("t1").alias("t_cur")))
-    for step in FUNNEL_STEPS[1:]:
-        prev = stages[-1].select(
-            "user_id", "t1", F.col("t_cur").alias("t_prev")
-        )
-        cur = (
-            e.filter(F.col("event_type") == step)
-            .join(prev, "user_id")
-            .filter(
-                (F.col("ts") > F.col("t_prev"))
-                & (ep(F.col("ts")) <= ep(F.col("t1")) + F.lit(win_us))
-            )
-            .groupBy("user_id", "t1")
-            .agg(F.min("ts").alias("t_cur"))
-        )
-        stages.append(cur)
-    out = None
-    for i, (step, st) in enumerate(zip(FUNNEL_STEPS, stages), start=1):
-        row = st.agg(
-            F.lit(i).cast("int").alias("step"),
-            F.lit(step).alias("event_type"),
-            F.count("*").cast("long").alias("n_users"),
-            F.coalesce(
-                F.sum(ep(F.col("t_cur")) - ep(F.col("t1"))),
-                F.lit(0).cast("long"),
-            ).alias("total_wait_us"),
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
-
-
-ASOF_LEFT = "purchase"   # each left event joins the latest...
-ASOF_RIGHT = "view"      # ...right event at or before it, per user
-
-
-def q_asof_join(spark, sf_dir) -> DataFrame:
-    """Backward as-of join over the event stream: every ``purchase``
-    picks the user's most recent ``view`` at or before it (the
-    operator the brief names as one Spark lacks natively — DuckDB
-    validates it with its native ASOF JOIN).
-
-    Implementation is the union + last-ignore-nulls window trick:
-    tag both sides, union, ONE window per user ordered (ts, side,
-    id), carry the last non-null right id forward, keep left rows.
-    That is one shuffle on user_id and O(n log n) per user — no
-    inequality-join range explosion, no per-left binary search; the
-    standard scale shape for as-of alignment of 10^12-row streams.
-
-    Ties: a view AT the purchase timestamp counts (<=, the ASOF
-    convention); multiple views on one (user, ts) resolve to the max
-    event_id — made explicit by pre-reducing the right side, so the
-    Spark window order and DuckDB's ASOF scan cannot disagree.
-    Output lag is exact integer microseconds; rows without any prior
-    view keep NULLs (left join).
-    """
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    ep = F.unix_micros(F.col("ts").cast("timestamp"))
-    right = (
-        e.filter(F.col("event_type") == ASOF_RIGHT)
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("r_id"))
-        .select("user_id", "ts", "r_id", F.lit(None).cast("long").alias("l_id"))
-    )
-    left = e.filter(F.col("event_type") == ASOF_LEFT).select(
-        "user_id",
-        "ts",
-        F.lit(None).cast("long").alias("r_id"),
-        F.col("event_id").alias("l_id"),
-    )
-    # side 0 = right: at equal ts the view sorts BEFORE the purchase,
-    # so "at or before" includes it
-    tagged = right.withColumn("side", F.lit(0)).unionByName(
-        left.withColumn("side", F.lit(1))
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(ep.asc(), F.col("side").asc(), F.col("l_id").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = tagged.select(
-        "user_id",
-        "ts",
-        "l_id",
-        "side",
-        F.last("r_id", ignorenulls=True).over(w).alias("asof_id"),
-        F.last(
-            F.when(F.col("r_id").isNotNull(), ep), ignorenulls=True
-        ).over(w).alias("asof_us"),
-    )
-    return (
-        carried.filter(F.col("side") == 1)
-        .select(
-            F.col("l_id").alias("event_id"),
-            "user_id",
-            F.col("asof_id").alias("view_event_id"),
-            (ep - F.col("asof_us")).alias("lag_us"),
-        )
-    )
-
-
-RANGE_WINDOW_SEC = 1800   # look-back band width (also bucket width)
-RANGE_LEFT = "error"      # each left event counts the user's...
-RANGE_RIGHT = "click"     # ...right events in (t - W, t]
-
-
-def q_range_join(spark, sf_dir) -> DataFrame:
-    """Temporal range join, the second operator the brief names as
-    missing from Spark: for every ``error`` event, count the same
-    user's ``click`` events in the preceding 30-minute band
-    (0 ≤ t_err − t_click ≤ W).
-
-    Scale shape: NOT the naive inequality join (which degenerates to
-    a per-user cross product). Timestamps bucket into W-wide integer
-    bins; each left event probes exactly TWO buckets (its own and
-    the previous — sufficient because the band width equals the
-    bucket width), the join is a plain equi-join on
-    (user_id, bucket), and the band predicate filters the ≤2-bucket
-    candidates. Candidate count is O(matches + band-adjacent misses),
-    never O(n²) — the temporal analog of the LSH band join, and the
-    same verify-the-scale-path-against-the-naive-spec discipline:
-    the DuckDB oracle IS the naive inequality join.
-
-    Output keeps zero-count left events (left join semantics).
-    """
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    w_us = RANGE_WINDOW_SEC * 1_000_000
-    ep = "unix_micros(cast(ts as timestamp))"
-    err = e.filter(F.col("event_type") == RANGE_LEFT).select(
-        "event_id",
-        "user_id",
-        F.expr(ep).alias("t_err"),
-        F.expr(f"{ep} div {w_us}").alias("b"),
-    )
-    clk = e.filter(F.col("event_type") == RANGE_RIGHT).select(
-        F.col("user_id"),
-        F.expr(ep).alias("t_clk"),
-        F.expr(f"{ep} div {w_us}").alias("probe"),
-    )
-    probed = err.select(
-        "event_id",
-        "user_id",
-        "t_err",
-        F.explode(F.array(F.col("b"), F.col("b") - 1)).alias("probe"),
-    )
-    hits = (
-        probed.join(clk, ["user_id", "probe"])
-        .filter(
-            (F.col("t_err") - F.col("t_clk") >= 0)
-            & (F.col("t_err") - F.col("t_clk") <= w_us)
-        )
-        .groupBy("event_id")
-        .agg(F.count("*").alias("n"))
-    )
-    return err.join(hits, "event_id", "left").select(
-        "event_id",
-        "user_id",
-        F.coalesce("n", F.lit(0).cast("long")).alias("n_prior_clicks"),
-    )
-
-
-def q_tpch_q1(spark, sf_dir) -> DataFrame:
-    """TPC-H Q1-class pricing summary (exact integer money units)."""
-    from blackedge_ocr_spark.analysis import relational
-
-    return relational.tpch_q1(spark, sf_dir)
-
-
-def q_tpch_q3(spark, sf_dir) -> DataFrame:
-    """TPC-H Q3-class shipping-priority top-10 (broadcast dim +
-    fact-key join + TakeOrdered)."""
-    from blackedge_ocr_spark.analysis import relational
-
-    return relational.tpch_q3(spark, sf_dir)
-
-
-def q_tpch_q5(spark, sf_dir) -> DataFrame:
-    """TPC-H Q5-class local-supplier volume (broadcast dim chain +
-    two fact joins)."""
-    from blackedge_ocr_spark.analysis import relational
-
-    return relational.tpch_q5(spark, sf_dir)
-
-
-def q_pricing_rollup(spark, sf_dir) -> DataFrame:
-    """Multi-dimensional aggregate (ROLLUP grouping sets): the Q1
-    pricing metrics at (flag, status), per-flag subtotal, and grand
-    total in ONE pass — Spark expands the grouping sets before the
-    same single map-side-combined exchange, the warehouse-standard
-    subtotal shape. NULL group values are disambiguated from real
-    NULLs by grouping_id (named ``gid``), matching DuckDB's
-    GROUPING() semantics bit-for-bit; measures are the exact
-    integer-unit sums of tpch_q1."""
-    from blackedge_ocr_spark.analysis.relational import (
-        Q1_CUTOFF,
-        _cents,
-        _disc_price,
-        _e4,
-    )
-
-    l = spark.read.parquet(f"{sf_dir.rstrip('/')}/lineitem.parquet")
-    dp = _disc_price(F.col("l_extendedprice"), F.col("l_discount"))
-    return (
-        l.filter(F.col("l_shipdate") <= F.to_timestamp(F.lit(Q1_CUTOFF)))
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.grouping_id().alias("gid"),
-            F.sum(_cents(F.col("l_extendedprice"))).alias(
-                "sum_base_cents"
-            ),
-            F.sum(_e4(dp)).alias("sum_disc_e4"),
-            F.count("*").alias("n_rows"),
-        )
-        .select(
-            "l_returnflag",
-            "l_linestatus",
-            F.col("gid").cast("long").alias("gid"),
-            "sum_base_cents",
-            "sum_disc_e4",
-            "n_rows",
-        )
-    )
-
-
-def q_gapfill(spark, sf_dir) -> DataFrame:
-    """Time-series gap filling with last-observation-carried-forward
-    — the hypertable family's other half (TimescaleDB
-    ``time_bucket_gapfill`` + ``locf``): every (event_type, hour)
-    slot between each series' first and last observation exists in
-    the output, empty slots carry n_events = 0, gap_filled = true,
-    and the carried total from the latest observed hour.
-
-    Scale shape: the hourly rollup is the same combinable hash agg
-    as q_event_rollup; the spine explode is O(series × span-hours) —
-    bounded by wall-clock duration, not event count — and the LOCF
-    window partitions per series, so a 10^12-event feed with 10^6
-    device series still sorts only span-hours rows per task. First
-    spine slot per series always has data (it IS the series min), so
-    the carried value is never null."""
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    hr = F.expr("unix_micros(cast(ts as timestamp)) div 3600000000")
-    hourly = (
-        e.select("event_type", hr.alias("hr"), "value")
-        .groupBy("event_type", "hr")
-        .agg(
-            F.count("*").alias("n_obs"),
-            F.round(F.sum("value"), 3).alias("total_value"),
-        )
-    )
-    spine = (
-        hourly.groupBy("event_type")
-        .agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-        .select(
-            "event_type",
-            F.explode(F.sequence(F.col("lo"), F.col("hi"))).alias("hr"),
-        )
-    )
-    j = spine.join(hourly, ["event_type", "hr"], "left")
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("hr")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return j.select(
-        "event_type",
-        F.date_format(
-            F.timestamp_micros(F.col("hr") * 3_600_000_000),
-            "yyyy-MM-dd HH:mm:ss",
-        ).alias("hour"),
-        F.coalesce("n_obs", F.lit(0)).cast("bigint").alias("n_events"),
-        F.last("total_value", ignorenulls=True).over(w).alias(
-            "total_value_locf"
-        ),
-        F.col("n_obs").isNull().alias("gap_filled"),
-    )
-
-
-def q_type_quantiles(spark, sf_dir) -> DataFrame:
-    """Exact per-group quantiles (p25/p50/p75/p95/p99 of value per
-    event_type): Spark's ``percentile`` and DuckDB's
-    ``quantile_cont`` share the (n−1)·p linear-interpolation
-    definition, so the rounded outputs hash-match (probed, not
-    assumed). Scale note: the exact aggregate buffers each group's
-    values — correct for bounded-cardinality groups like these; the
-    corpus-scale unbounded path is `sampled_quantiles`' deterministic
-    hash-sample, which answers to THIS spec."""
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    qs = {"p25": 0.25, "p50": 0.5, "p75": 0.75, "p95": 0.95, "p99": 0.99}
-    return e.groupBy("event_type").agg(
-        F.count("*").cast("bigint").alias("n"),
-        *[
-            F.round(F.expr(f"percentile(value, {p})"), 6).alias(name)
-            for name, p in qs.items()
-        ],
-    )
-
-
-def q_moving_stats(spark, sf_dir) -> DataFrame:
-    """Bounded-frame sliding window — the one window shape the rest
-    of the surface doesn't exercise (everything else is unbounded
-    running or grouped): a centered ±3-hour frame over each series'
-    hourly counts, emitting the frame's exact integer sum/slots/min/
-    max and the micro-rounded mean. Frames are ROWS-based over the
-    gapless hourly grid (every hour in [min, max] exists after the
-    rollup's spine — reusing the gapfill spine so edge frames are
-    honest 4..6-slot windows, not silently shrunk by missing hours).
-    One series-partitioned window, O(span-hours) rows per task."""
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    hr = F.expr("unix_micros(cast(ts as timestamp)) div 3600000000")
-    hourly = (
-        e.select("event_type", hr.alias("hr"))
-        .groupBy("event_type", "hr")
-        .agg(F.count("*").alias("x"))
-    )
-    spine = (
-        hourly.groupBy("event_type")
-        .agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-        .select(
-            "event_type",
-            F.explode(F.sequence(F.col("lo"), F.col("hi"))).alias("hr"),
-        )
-    )
-    grid = spine.join(hourly, ["event_type", "hr"], "left").select(
-        "event_type", "hr", F.coalesce("x", F.lit(0)).alias("x")
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("hr")
-        .rowsBetween(-3, 3)
-    )
-    s = F.sum("x").over(w)
-    n = F.count("x").over(w)
-    return grid.select(
-        "event_type",
-        F.date_format(
-            F.timestamp_micros(F.col("hr") * 3_600_000_000),
-            "yyyy-MM-dd HH:mm:ss",
-        ).alias("hour"),
-        F.col("x").cast("bigint").alias("n_events"),
-        s.cast("bigint").alias("frame_sum"),
-        n.cast("bigint").alias("frame_slots"),
-        F.min("x").over(w).cast("bigint").alias("frame_min"),
-        F.max("x").over(w).cast("bigint").alias("frame_max"),
-        F.round(s.cast("double") / n.cast("double"), 6).alias("frame_avg"),
-    )
-
-
-def q_value_ranks(spark, sf_dir) -> DataFrame:
-    """The ranking-window family — rank, dense_rank, percent_rank,
-    cume_dist per event_type ordered by value, head-40 slice per
-    type — WITHOUT ever sorting a whole type in one task (5 types ⇒
-    5 straggler sorts at 10^12 rows in the naive window form).
-
-    Scale path: each SCAN partition keeps its local rank ≤ K rows
-    (small per-task sorts over (type, partition_id)); a row with
-    global rank ≤ K has < K strictly-smaller rows in total, hence in
-    its own partition, so it always survives — and every row with
-    value ≤ a surviving head value survives too (its partition would
-    otherwise prove ≥ K smaller globally). The final exact window
-    therefore sees ALL rows needed: global rank and dense_rank on
-    survivors equal the full-corpus values within the head, and
-    percent_rank/cume_dist are rebuilt from the broadcast per-type
-    TOTALS — (rank−1)/(n−1) and (rank+ties−1)/n — not from
-    survivor-relative window counts, which would silently use the
-    pruned cardinality. Final-window input is O(tasks × K + ties),
-    independent of corpus size. The pruning boundary depends on the
-    physical partitioning; the OUTPUT provably does not."""
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    k = 40
-    base = e.select(
-        "event_type", "event_id", "value", F.spark_partition_id().alias("_pid")
-    )
-    wp = Window.partitionBy("event_type", "_pid").orderBy("value")
-    surv = (
-        base.withColumn("_lr", F.rank().over(wp))
-        .filter(F.col("_lr") <= k)
-        .drop("_lr", "_pid")
-    )
-    totals = e.groupBy("event_type").agg(F.count("*").alias("n"))
-    w = Window.partitionBy("event_type").orderBy("value")
-    ties = Window.partitionBy("event_type", "value")
-    ranked = surv.select(
-        "event_type",
-        "event_id",
-        "value",
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("drnk"),
-        F.count("*").over(ties).alias("_tie"),
-    ).filter(F.col("rnk") <= k)
-    return ranked.join(F.broadcast(totals), "event_type").select(
-        "event_type",
-        F.col("event_id").cast("bigint").alias("event_id"),
-        F.round("value", 3).alias("value"),
-        F.col("rnk").cast("bigint").alias("rnk"),
-        F.col("drnk").cast("bigint").alias("drnk"),
-        # n == 1 guard: native percent_rank defines the single-row
-        # group as 0.0; the raw formula would emit 0/0 = NaN here
-        # while the oracle's native percent_rank stays 0.0
-        F.when(F.col("n") > 1,
-            F.round(
-                (F.col("rnk") - 1).cast("double")
-                / (F.col("n") - 1).cast("double"),
-                6,
-            ),
-        ).otherwise(F.lit(0.0)).alias("prnk"),
-        F.round(
-            (F.col("rnk") + F.col("_tie") - 1).cast("double")
-            / F.col("n").cast("double"),
-            6,
-        ).alias("cdist"),
-    )
-
-
-PIVOT_TYPES = ("click", "error", "purchase", "signup", "view")
-
-
-def q_daily_pivot(spark, sf_dir) -> DataFrame:
-    """Crosstab (PIVOT): one row per day, one count column per event
-    type — the reporting shape, written as ONE conditional hash agg.
-    Two deliberate choices for 10^12 rows: an EXPLICIT pivot domain
-    (no discovery scan over the corpus to learn the column set), and
-    the count-FILTER lowering instead of ``DataFrame.pivot`` — the
-    built-in pivot first aggregates on (day, type) and re-aggregates
-    on day, paying a second exchange for nothing when the domain is
-    already known (measured: 2 exchanges vs 1 here, same output)."""
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    day = F.date_format(F.col("ts").cast("timestamp"), "yyyy-MM-dd")
-    return (
-        e.select(day.alias("day"), "event_type")
-        .groupBy("day")
-        .agg(
-            *[
-                F.count(F.when(F.col("event_type") == t, 1))
-                .cast("bigint")
-                .alias(f"n_{t}")
-                for t in PIVOT_TYPES
-            ]
-        )
-    )
-
-
-def q_hour_anomalies(spark, sf_dir) -> DataFrame:
-    """Per-series statistical anomaly flags: hours whose event count
-    deviates > 3σ from the series' own (population) mean — the
-    monitoring-alert shape over the same hourly rollup the gapfill
-    and hypertable queries share.
-
-    Determinism without a rounding grid: the z-test is evaluated as
-    the cross-multiplied inequality
-        (m·x − S)² > 9 · (m·SS − S²)
-    (m hours, S = Σx, SS = Σx²; all exact int64 aggregates) — no
-    division, no sqrt, no mean materialized. The comparison runs in
-    double AFTER the exact integer aggregation: both engines convert
-    the same int64s and execute the same IEEE op sequence, so the
-    flags are identical even where SS exceeds double's 2^53 integer
-    range. σ = 0 series flag nothing by the rhs > 0 guard.
-
-    Scale shape: combinable (type, hour) count agg, a |series|-row
-    moment agg, broadcast join back — no window at all."""
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    hr = F.expr("unix_micros(cast(ts as timestamp)) div 3600000000")
-    hourly = (
-        e.select("event_type", hr.alias("hr"))
-        .groupBy("event_type", "hr")
-        .agg(F.count("*").alias("x"))
-    )
-    stats = hourly.groupBy("event_type").agg(
-        F.count("*").alias("m"),
-        F.sum("x").alias("s"),
-        F.sum(F.col("x") * F.col("x")).alias("ss"),
-    )
-    j = hourly.join(F.broadcast(stats), "event_type")
-    md = F.col("m").cast("double")
-    sd = F.col("s").cast("double")
-    ssd = F.col("ss").cast("double")
-    xd = F.col("x").cast("double")
-    lhs = (md * xd - sd) * (md * xd - sd)
-    rhs = md * ssd - sd * sd
-    return j.select(
-        "event_type",
-        F.date_format(
-            F.timestamp_micros(F.col("hr") * 3_600_000_000),
-            "yyyy-MM-dd HH:mm:ss",
-        ).alias("hour"),
-        F.col("x").cast("bigint").alias("n_events"),
-        ((rhs > 0) & (lhs > F.lit(9.0) * rhs)).alias("is_anomaly"),
-    )
-
-
-def q_pricing_cube(spark, sf_dir) -> DataFrame:
-    """CUBE grouping sets — completes the warehouse subtotal family
-    next to ROLLUP: all four grouping sets (leaf, per-flag,
-    per-STATUS, grand total) in the same single-exchange expansion;
-    the per-status slice is the one ROLLUP cannot produce. Same
-    exact-integer measures and grouping_id discipline."""
-    from blackedge_ocr_spark.analysis.relational import (
-        Q1_CUTOFF,
-        _cents,
-        _disc_price,
-        _e4,
-    )
-
-    l = spark.read.parquet(f"{sf_dir.rstrip('/')}/lineitem.parquet")
-    dp = _disc_price(F.col("l_extendedprice"), F.col("l_discount"))
-    return (
-        l.filter(F.col("l_shipdate") <= F.to_timestamp(F.lit(Q1_CUTOFF)))
-        .cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.grouping_id().alias("gid"),
-            F.sum(_cents(F.col("l_extendedprice"))).alias(
-                "sum_base_cents"
-            ),
-            F.sum(_e4(dp)).alias("sum_disc_e4"),
-            F.count("*").alias("n_rows"),
-        )
-        .select(
-            "l_returnflag",
-            "l_linestatus",
-            F.col("gid").cast("long").alias("gid"),
-            "sum_base_cents",
-            "sum_disc_e4",
-            "n_rows",
-        )
-    )
-
-
-def q_event_transitions(spark, sf_dir) -> DataFrame:
-    """First-order Markov transition counts over each user's
-    time-ordered event stream — the sequence-analytics shape (path
-    analysis, next-action prediction features). ONE exchange on
-    user_id serves the lag window and the count agg combines
-    map-side, so the shuffle to the final agg is O(type²) per
-    partition, never O(events). Order ties break on event_id in both
-    engines — deterministic by construction."""
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    e = e.repartition(_par(spark), "user_id")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    staged = e.select(
-        F.lag("event_type").over(w).alias("prev_type"), "event_type"
-    )
-    return (
-        staged.filter(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", "event_type")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-HOUR_US = 3_600 * 1_000_000
-DAY_US = 24 * HOUR_US
-
-
-def q_hypertable_rollup(spark, sf_dir) -> DataFrame:
-    """Hypertable-style continuous aggregate (the multi-resolution
-    rollup the brief names): hour → day → week levels where every
-    COARSER level aggregates the next-finer PRE-AGGREGATE, never the
-    raw events — the invariant that makes continuous aggregates
-    cheap to maintain at 10^12 rows (a day re-rolls 24 hour-rows,
-    not a day of raw data). The DuckDB oracle computes all three
-    levels DIRECTLY from raw events, so the reuse identity
-    (rollup-of-rollup == direct) is what the hash check proves.
-
-    Buckets are integer floor-divisions of epoch microseconds; the
-    nesting is exact because div composes: (t div H) div 24 ==
-    t div D and (t div D) div 7 == t div W. Measures are integers
-    only (row count + the JSON ``k`` sum) — order-free exact sums,
-    so re-aggregation cannot drift the way a float re-sum would.
-    """
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    k = F.get_json_object(F.col("props"), "$.k").cast("long")
-    # Each level is PERSISTED before reuse: the union's three
-    # branches would otherwise re-plan their inputs independently and
-    # re-scan raw events once per level (measured: 3 scans, 6
-    # exchanges) — the exact failure mode a continuous aggregate
-    # exists to avoid. With the materialized levels the raw scan and
-    # every agg runs once (cache builds), as in a real hypertable
-    # where the finer level IS a stored table.
-    hours = (
-        e.groupBy(
-            F.expr(
-                f"unix_micros(cast(ts as timestamp)) div {HOUR_US}"
-            ).alias("b"),
-            "event_type",
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(k).alias("sum_k"),
-        )
-        .persist()
-    )
-    days = hours.groupBy(
-        F.expr("b div 24").alias("b"), "event_type"
-    ).agg(
-        F.sum("n_events").alias("n_events"), F.sum("sum_k").alias("sum_k")
-    ).persist()
-    weeks = days.groupBy(
-        F.expr("b div 7").alias("b"), "event_type"
-    ).agg(
-        F.sum("n_events").alias("n_events"), F.sum("sum_k").alias("sum_k")
-    )
-    lvl = lambda df, name: df.select(  # noqa: E731
-        F.lit(name).alias("level"), "b", "event_type", "n_events", "sum_k"
-    )
-    return (
-        lvl(hours, "hour")
-        .unionByName(lvl(days, "day"))
-        .unionByName(lvl(weeks, "week"))
-    )
-
-
-WEEK_US = 7 * 86_400 * 1_000_000  # cohort bucket in exact microseconds
-
-
-def q_cohort_retention(spark, sf_dir) -> DataFrame:
-    """Weekly cohort retention: users cohorted by the epoch-week of
-    their first ``signup`` event; one row per (cohort_week,
-    week_offset) counting distinct users with ANY activity in that
-    week at or after signup. Week indices are exact integer
-    microsecond divisions (unix_micros div WEEK_US == DuckDB
-    epoch_us // WEEK_US), so bucket edges cannot drift between
-    engines.
-
-    Shape: first-event agg + activity join both key on user_id (one
-    partitioning), then a distinct-count agg on the O(users × weeks)
-    pair table — no O(events) shuffle survives past the first agg's
-    map-side combine.
-    """
-    e = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").select(
-        "user_id", "event_type", "ts"
-    )
-
-    def wk(c) -> Column:
-        return F.expr(f"unix_micros(cast({c} as timestamp)) div {WEEK_US}")
-
-    f0 = (
-        e.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t0"))
-        .select("user_id", wk("t0").alias("cohort_week"))
-    )
-    act = (
-        e.join(f0, "user_id")
-        .select(
-            "user_id",
-            "cohort_week",
-            (wk("ts") - F.col("cohort_week")).alias("week_offset"),
-        )
-        .filter(F.col("week_offset") >= 0)
-    )
-    return act.groupBy("cohort_week", "week_offset").agg(
-        F.countDistinct("user_id").alias("n_active")
     )
 
 

@@ -761,32 +761,6 @@ def build_oracles() -> dict[str, str]:
         "curation_funnel": sql_curation_funnel(),
         "final_content": sql_final_content(),
         "similarity_report": sql_similarity_report(),
-        "event_rollup": sql_event_rollup(),
-        "event_funnel": sql_event_funnel(),
-        "cohort_retention": sql_cohort_retention(),
-        "asof_join": sql_asof_join(),
-        "range_join": sql_range_join(),
-        "hypertable_rollup": sql_hypertable_rollup(),
-        "event_transitions": sql_event_transitions(),
-        "tpch_q1": sql_tpch_q1(),
-        "tpch_q3": sql_tpch_q3(),
-        "tpch_q5": sql_tpch_q5(),
-        "pricing_rollup": sql_pricing_rollup(),
-        "pricing_cube": sql_pricing_cube(),
-        "gapfill": sql_gapfill(),
-        "hour_anomalies": sql_hour_anomalies(),
-        "value_ranks": sql_value_ranks(),
-        "daily_pivot": sql_daily_pivot(),
-        "type_quantiles": sql_type_quantiles(),
-        "moving_stats": sql_moving_stats(),
-        "user_sessions": sql_user_sessions(),
-        # the native session_window formulation answers to the SAME
-        # oracle as the manual and two-phase variants
-        "user_sessions_native": sql_user_sessions(),
-        "user_sessions_2p": sql_user_sessions(),
-        "peak_concurrency": sql_peak_concurrency(),
-        "zorder_prune": sql_zorder_prune(),
-        "view_click_pairs": sql_view_click_pairs(),
         "pipeline_extract": sql_pipeline_extract(),
         # corpus curation (analysis/corpusops.py)
         "dup_ngrams": sql_dup_ngrams(),
@@ -928,7 +902,12 @@ def sql_dedup_lsh_pairs(rows_per_band: int = 3, k: int = 12,
     doc_ids before pair enumeration — row_number ordered by doc_id is
     the windowed form of the Spark side's sort→slice. ``source`` /
     ``extra_ctes`` let sql_dedup_production_pairs run the identical
-    chain over the exact-dedup survivors."""
+    chain over the exact-dedup survivors.
+
+    The chain's CTEs are MATERIALIZED: DuckDB otherwise inlines a CTE
+    at every reference, so the MinHash chain re-ran once per band of
+    the ``banded`` UNION ALL and ``ranked``/``pairs`` (and the Jaccard
+    over them) more than once (sf0.001: 221 s -> 1.6 s, same rows)."""
     n_bands = k // rows_per_band
     band_rows = " UNION ALL ".join(
         f"SELECT doc_id, shingles, {b} AS band, "
@@ -938,17 +917,17 @@ def sql_dedup_lsh_pairs(rows_per_band: int = 3, k: int = 12,
     )
     return f"""
 WITH {DUP_CORPUS},{extra_ctes}
-sh AS (SELECT doc_id, {shingles_sql('text')} AS shingles FROM {source}),
-hs AS (SELECT doc_id, shingles,
+sh AS MATERIALIZED (SELECT doc_id, {shingles_sql('text')} AS shingles FROM {source}),
+hs AS MATERIALIZED (SELECT doc_id, shingles,
        {shingle_hashes_sql('shingles')} AS hs FROM sh),
-sig AS (SELECT doc_id, shingles, {minhash_sig_sql('hs')} AS sig FROM hs),
+sig AS MATERIALIZED (SELECT doc_id, shingles, {minhash_sig_sql('hs')} AS sig FROM hs),
 banded AS ({band_rows}),
-ranked AS (
+ranked AS MATERIALIZED (
   SELECT doc_id, shingles, band, key,
          row_number() OVER (PARTITION BY band, key ORDER BY doc_id) AS rn
   FROM banded WHERE key IS NOT NULL),
 capped AS (SELECT * FROM ranked WHERE rn <= {bucket_cap}),
-pairs AS (
+pairs AS MATERIALIZED (
   SELECT DISTINCT doc_a, doc_b, sh_a, sh_b FROM (
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
            a.shingles AS sh_a, b.shingles AS sh_b
@@ -976,20 +955,6 @@ def sql_dedup_production_pairs() -> str:
 keep AS (SELECT min(doc_id) AS doc_id FROM corpus GROUP BY {h}),
 surv AS (SELECT corpus.* FROM corpus JOIN keep USING (doc_id)),"""
     return sql_dedup_lsh_pairs(source="surv", extra_ctes=extra)
-
-
-def simhash_sql(toks: str) -> str:
-    """64-char bit string; bit b = sign of sum over token md5s of
-    ±1 per (hex digit b//4, bit 3-b%4) — dedup.simhash64 mirror."""
-    hs = f"list_transform({toks}, t -> md5(t))"
-    bits = []
-    for b in range(64):
-        d, j = b // 4, 3 - (b % 4)
-        v = f"(strpos('0123456789abcdef', substr(h, {d + 1}, 1)) - 1)"
-        contrib = f"CASE WHEN (({v} >> {j}) & 1) = 1 THEN 1 ELSE -1 END"
-        s = f"list_sum(list_transform(hs, h -> {contrib}))"
-        bits.append(f"CASE WHEN {s} > 0 THEN '1' ELSE '0' END")
-    return "(" + " || ".join(bits) + ")"
 
 
 def sql_dedup_simhash() -> str:
@@ -2459,591 +2424,6 @@ SELECT doc_id,
   round(CASE WHEN len_a < {m} AND len_b < {m}
              THEN {levenshtein_sim_sql('la', 'lb')} END, 6) AS levenshtein
 FROM pairs"""
-
-
-def sql_user_sessions() -> str:
-    """queries.q_user_sessions mirror: 30-min-gap sessionization via
-    lag → flag → running sum → group."""
-    from blackedge_ocr_spark.queries import SESSION_GAP_SEC
-
-    return f"""
-WITH lagged AS (
-  SELECT user_id, ts, value, event_id,
-    CASE WHEN lag(ts) OVER w IS NULL
-              OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > {SESSION_GAP_SEC * 1_000_000}
-         THEN 1 ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sids AS (
-  SELECT user_id, ts, value,
-    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS UNBOUNDED PRECEDING) AS sid
-  FROM lagged
-)
-SELECT user_id,
-       strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-       count(*)::bigint AS n_events,
-       round(sum(value), 3) AS total_value
-FROM sids GROUP BY user_id, sid"""
-
-
-def _spread16_sql(c: str) -> str:
-    """DuckDB mirror of zorder._spread16: identical (shift, mask)
-    steps, generated from the same _SPREAD_STEPS constant so the
-    curves cannot drift."""
-    from blackedge_ocr_spark.analysis.zorder import _SPREAD_STEPS
-
-    x = f"(({c}) & 65535)"
-    for shift, mask in _SPREAD_STEPS:
-        x = f"((({x}) | (({x}) << {shift})) & {mask})"
-    return x
-
-
-def sql_view_click_pairs() -> str:
-    """q_view_click_pairs mirror — deliberately the NAIVE inequality
-    join (the spec the bucketed probe path must reproduce)."""
-    from blackedge_ocr_spark.queries import RANGE_WINDOW_SEC
-
-    w_us = RANGE_WINDOW_SEC * 1_000_000
-    return f"""
-SELECT v.user_id,
-       v.event_id AS view_id,
-       c.event_id AS click_id,
-       (epoch_us(c.ts) - epoch_us(v.ts))::bigint AS wait_us
-FROM events v
-JOIN events c
-  ON c.user_id = v.user_id
- AND v.event_type = 'view'
- AND c.event_type = 'click'
- AND epoch_us(c.ts) - epoch_us(v.ts) BETWEEN 0 AND {w_us}"""
-
-
-def sql_zorder_prune() -> str:
-    """analysis/zorder.layout_prune_stats mirror: same integer
-    quantization, same Morton spread, same 64-bucket assignment and
-    band predicates."""
-    from blackedge_ocr_spark.analysis.zorder import (
-        HOUR_BAND,
-        USER_BAND,
-        Z_BITS,
-        Z_BUCKETS_LOG2,
-    )
-
-    top = (1 << Z_BITS) - 1
-    s1 = Z_BITS - Z_BUCKETS_LOG2
-    sz = 2 * Z_BITS - Z_BUCKETS_LOG2
-    return f"""
-WITH e AS (
-  SELECT user_id::BIGINT AS u, epoch_us(ts) // 3600000000 AS hr
-  FROM events
-),
-b AS (
-  SELECT min(u) AS umin, max(u) AS umax,
-         min(hr) AS hmin, max(hr) AS hmax FROM e
-),
-q AS (
-  SELECT u, hr,
-    CASE WHEN umax > umin
-         THEN ((u - umin) * {top}) // (umax - umin) ELSE 0 END AS qu,
-    CASE WHEN hmax > hmin
-         THEN ((hr - hmin) * {top}) // (hmax - hmin) ELSE 0 END AS qt
-  FROM e CROSS JOIN b
-),
-zz AS (
-  SELECT u, hr, qu, qt,
-         {_spread16_sql('qu')} | ({_spread16_sql('qt')} << 1) AS z
-  FROM q
-),
-tagged AS (
-  SELECT u, hr, 'time_sorted' AS layout, qt >> {s1} AS bucket FROM zz
-  UNION ALL
-  SELECT u, hr, 'user_sorted', qu >> {s1} FROM zz
-  UNION ALL
-  SELECT u, hr, 'zorder', z >> {sz} FROM zz
-),
-zone AS (
-  SELECT layout, bucket, min(u) AS bu_lo, max(u) AS bu_hi,
-         min(hr) AS bh_lo, max(hr) AS bh_hi, count(*) AS n_rows
-  FROM tagged GROUP BY layout, bucket
-),
-p AS (
-  SELECT umin + ((umax - umin) * {USER_BAND[0]}) // 100 AS u_lo,
-         umin + ((umax - umin) * {USER_BAND[1]}) // 100 AS u_hi,
-         hmin + ((hmax - hmin) * {HOUR_BAND[0]}) // 100 AS h_lo,
-         hmin + ((hmax - hmin) * {HOUR_BAND[1]}) // 100 AS h_hi
-  FROM b
-),
-f AS (
-  SELECT layout, n_rows,
-    CASE WHEN bu_lo <= u_hi AND bu_hi >= u_lo THEN 1 ELSE 0 END AS su,
-    CASE WHEN bh_lo <= h_hi AND bh_hi >= h_lo THEN 1 ELSE 0 END AS sh
-  FROM zone CROSS JOIN p
-)
-SELECT layout,
-       count(*)::bigint AS n_buckets,
-       sum(su)::bigint AS scanned_user,
-       sum(sh)::bigint AS scanned_hour,
-       sum(su * sh)::bigint AS scanned_both,
-       sum(CASE WHEN su * sh = 1 THEN n_rows ELSE 0 END)::bigint
-         AS rows_both
-FROM f GROUP BY layout"""
-
-
-def sql_peak_concurrency() -> str:
-    """queries.q_peak_concurrency mirror: same sessionize CTE as
-    sql_user_sessions, then the sweep — +1/-1 boundary points
-    collapsed per distinct µs timestamp, per-day running net
-    (inclusive) + ends as the candidate, cross-day carry from the
-    per-day net table. Exact integers throughout."""
-    from blackedge_ocr_spark.queries import SESSION_GAP_SEC
-
-    return f"""
-WITH lagged AS (
-  SELECT user_id, ts,
-    CASE WHEN lag(ts) OVER w IS NULL
-              OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > {SESSION_GAP_SEC * 1_000_000}
-         THEN 1 ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sids AS (
-  SELECT user_id, ts,
-    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                     ROWS UNBOUNDED PRECEDING) AS sid
-  FROM lagged
-),
-sess AS (
-  SELECT user_id, sid,
-         min(epoch_us(ts)) AS s_us, max(epoch_us(ts)) AS e_us
-  FROM sids GROUP BY user_id, sid
-),
-pts AS (
-  SELECT s_us AS t, 1 AS s, 0 AS e FROM sess
-  UNION ALL
-  SELECT e_us AS t, 0 AS s, 1 AS e FROM sess
-),
-per_t AS (
-  SELECT t, sum(s)::bigint AS starts, sum(e)::bigint AS ends,
-         strftime(make_timestamp(t), '%Y-%m-%d') AS day
-  FROM pts WHERE t IS NOT NULL GROUP BY t
-),
-cands AS (
-  SELECT day, starts, ends,
-         sum(starts - ends) OVER (PARTITION BY day ORDER BY t
-                                  ROWS UNBOUNDED PRECEDING) + ends AS cand
-  FROM per_t
-),
-days AS (
-  SELECT day, max(cand) AS rel_peak, sum(starts) AS started,
-         sum(ends) AS ended, sum(starts - ends) AS net
-  FROM cands GROUP BY day
-),
-spine AS (
-  SELECT strftime(unnest(generate_series(lo::DATE, hi::DATE,
-                                         INTERVAL 1 DAY)),
-                  '%Y-%m-%d') AS day
-  FROM (SELECT min(day) AS lo, max(day) AS hi FROM days)
-),
-filled AS (
-  SELECT s.day,
-         coalesce(d.rel_peak, 0) AS rel_peak,
-         coalesce(d.started, 0) AS started,
-         coalesce(d.ended, 0) AS ended,
-         coalesce(d.net, 0) AS net
-  FROM spine s LEFT JOIN days d ON d.day = s.day
-)
-SELECT day,
-       (rel_peak + coalesce(sum(net) OVER wc, 0))::bigint AS peak_concurrent,
-       started::bigint AS sessions_started,
-       ended::bigint AS sessions_ended,
-       (net + coalesce(sum(net) OVER wc, 0))::bigint AS active_at_eod
-FROM filled
-WINDOW wc AS (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"""
-
-
-def sql_event_rollup() -> str:
-    return """
-SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-       event_type,
-       count(*)::bigint AS n_events,
-       round(sum(value), 3) AS total_value,
-       sum(json_extract(props, '$.k')::bigint)::bigint AS sum_k
-FROM events GROUP BY 1, 2"""
-
-
-def sql_event_funnel() -> str:
-    """queries.q_event_funnel mirror: the same greedy first-touch
-    chain (earliest step-1 anchor, earliest qualifying event per
-    later step, window anchored at step 1) with waits in exact
-    epoch_us integers — identical to Spark's unix_micros."""
-    from blackedge_ocr_spark.queries import (
-        FUNNEL_STEPS,
-        FUNNEL_WINDOW_HOURS,
-    )
-
-    win_us = FUNNEL_WINDOW_HOURS * 3600 * 1_000_000
-    parts = [
-        f"""s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-  WHERE event_type = '{FUNNEL_STEPS[0]}' GROUP BY user_id)""",
-    ]
-    prev = "s1"
-    prev_col = "t1"
-    for i, step in enumerate(FUNNEL_STEPS[1:], start=2):
-        parts.append(
-            f"""s{i} AS (SELECT e.user_id, p.t1, min(e.ts) AS t{i}
-  FROM events e JOIN {prev} p USING (user_id)
-  WHERE e.event_type = '{step}'
-    AND e.ts > p.{prev_col}
-    AND epoch_us(e.ts) <= epoch_us(p.t1) + {win_us}
-  GROUP BY e.user_id, p.t1)"""
-        )
-        prev, prev_col = f"s{i}", f"t{i}"
-    selects = [
-        f"""SELECT 1::integer AS step, '{FUNNEL_STEPS[0]}' AS event_type,
-       count(*)::bigint AS n_users, 0::bigint AS total_wait_us FROM s1"""
-    ]
-    for i, step in enumerate(FUNNEL_STEPS[1:], start=2):
-        selects.append(
-            f"""SELECT {i}::integer, '{step}', count(*)::bigint,
-       coalesce(sum(epoch_us(t{i}) - epoch_us(t1)), 0)::bigint FROM s{i}"""
-        )
-    ctes = ",\n".join(parts)
-    body = "\nUNION ALL\n".join(selects)
-    return f"WITH {ctes}\n{body}"
-
-
-def sql_asof_join() -> str:
-    """queries.q_asof_join mirror — via DuckDB's NATIVE ASOF JOIN,
-    so the engine's union+window formulation is validated against an
-    independent first-class implementation of the operator, not a
-    re-derivation of the same trick. Ties are pre-reduced on the
-    right side (max event_id per (user, ts)) exactly as in Spark."""
-    from blackedge_ocr_spark.queries import ASOF_LEFT, ASOF_RIGHT
-
-    return f"""
-WITH r AS (SELECT user_id, ts, max(event_id) AS r_id FROM events
-           WHERE event_type = '{ASOF_RIGHT}' GROUP BY user_id, ts),
-l AS (SELECT user_id, ts, event_id FROM events
-      WHERE event_type = '{ASOF_LEFT}')
-SELECT l.event_id, l.user_id, r.r_id AS view_event_id,
-       (epoch_us(l.ts) - epoch_us(r.ts))::bigint AS lag_us
-FROM l ASOF LEFT JOIN r
-  ON l.user_id = r.user_id AND l.ts >= r.ts"""
-
-
-def sql_range_join() -> str:
-    """queries.q_range_join mirror: the NAIVE inequality range join —
-    deliberately, so the engine's bucketed band plan is validated
-    against the plain spec rather than a second banding."""
-    from blackedge_ocr_spark.queries import (
-        RANGE_LEFT,
-        RANGE_RIGHT,
-        RANGE_WINDOW_SEC,
-    )
-
-    w_us = RANGE_WINDOW_SEC * 1_000_000
-    return f"""
-WITH err AS (SELECT event_id, user_id, epoch_us(ts) AS t FROM events
-             WHERE event_type = '{RANGE_LEFT}'),
-clk AS (SELECT user_id, epoch_us(ts) AS t FROM events
-        WHERE event_type = '{RANGE_RIGHT}')
-SELECT e.event_id, e.user_id,
-       count(c.t)::bigint AS n_prior_clicks
-FROM err e LEFT JOIN clk c
-  ON c.user_id = e.user_id
- AND e.t - c.t BETWEEN 0 AND {w_us}
-GROUP BY e.event_id, e.user_id"""
-
-
-def sql_event_transitions() -> str:
-    """queries.q_event_transitions mirror: lag over the identical
-    (ts, event_id) per-user order."""
-    return """
-WITH s AS (SELECT user_id, event_type,
-                  lag(event_type) OVER (PARTITION BY user_id
-                      ORDER BY ts, event_id) AS prev_type
-           FROM events)
-SELECT prev_type, event_type, count(*)::bigint AS n
-FROM s WHERE prev_type IS NOT NULL
-GROUP BY prev_type, event_type"""
-
-
-def sql_hypertable_rollup() -> str:
-    """queries.q_hypertable_rollup mirror — every level computed
-    DIRECTLY from raw events (no reuse), so the hash check proves
-    the engine's rollup-of-rollup identity against the spec."""
-    from blackedge_ocr_spark.queries import DAY_US, HOUR_US, WEEK_US
-
-    base = (
-        "base AS (SELECT epoch_us(ts) AS t, event_type, "
-        "json_extract(props, '$.k')::bigint AS k FROM events)"
-    )
-    levels = [("hour", HOUR_US), ("day", DAY_US), ("week", WEEK_US)]
-    selects = [
-        f"""SELECT '{name}' AS level, t // {us} AS b, event_type,
-       count(*)::bigint AS n_events, sum(k)::bigint AS sum_k
-FROM base GROUP BY 2, 3"""
-        for name, us in levels
-    ]
-    return f"WITH {base}\n" + "\nUNION ALL\n".join(selects)
-
-
-def sql_cohort_retention() -> str:
-    """queries.q_cohort_retention mirror: epoch-week integer buckets
-    (epoch_us // WEEK_US == Spark unix_micros div)."""
-    from blackedge_ocr_spark.queries import WEEK_US
-
-    return f"""
-WITH f0 AS (SELECT user_id,
-                   epoch_us(min(ts)) // {WEEK_US} AS cohort_week
-            FROM events WHERE event_type = 'signup' GROUP BY user_id),
-act AS (SELECT e.user_id, f0.cohort_week,
-               epoch_us(e.ts) // {WEEK_US} - f0.cohort_week AS week_offset
-        FROM events e JOIN f0 USING (user_id))
-SELECT cohort_week, week_offset,
-       count(DISTINCT user_id)::bigint AS n_active
-FROM act WHERE week_offset >= 0
-GROUP BY cohort_week, week_offset"""
-
-
-_REV_E4 = (
-    "floor((l_extendedprice * (1.0 - l_discount)) * 10000.0 + 0.5)::bigint"
-)
-
-
-def sql_tpch_q1() -> str:
-    """relational.tpch_q1 mirror: identical per-row quantization
-    (floor(x·scale + 0.5) on the identically-associated products)
-    then exact int64 sums."""
-    from blackedge_ocr_spark.analysis.relational import Q1_CUTOFF
-
-    return f"""
-SELECT l_returnflag, l_linestatus,
-       sum(l_quantity::bigint)::bigint AS sum_qty,
-       sum(floor(l_extendedprice * 100.0 + 0.5)::bigint)::bigint
-         AS sum_base_cents,
-       sum({_REV_E4})::bigint AS sum_disc_e4,
-       sum(floor(((l_extendedprice * (1.0 - l_discount))
-                  * (1.0 + l_tax)) * 10000.0 + 0.5)::bigint)::bigint
-         AS sum_charge_e4,
-       count(*)::bigint AS n_rows
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '{Q1_CUTOFF}'
-GROUP BY 1, 2"""
-
-
-def sql_pricing_rollup() -> str:
-    """queries.q_pricing_rollup mirror: GROUP BY ROLLUP with the
-    2-bit grouping id (flag bit 2, status bit 1 — Spark's
-    grouping_id bit order for the listed columns)."""
-    from blackedge_ocr_spark.analysis.relational import Q1_CUTOFF
-
-    return f"""
-SELECT l_returnflag, l_linestatus,
-       (2 * grouping(l_returnflag) + grouping(l_linestatus))::bigint
-         AS gid,
-       sum(floor(l_extendedprice * 100.0 + 0.5)::bigint)::bigint
-         AS sum_base_cents,
-       sum({_REV_E4})::bigint AS sum_disc_e4,
-       count(*)::bigint AS n_rows
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '{Q1_CUTOFF}'
-GROUP BY ROLLUP (l_returnflag, l_linestatus)"""
-
-
-def sql_gapfill() -> str:
-    """queries.q_gapfill mirror: same hourly rollup, per-series
-    range() spine, LOCF via last_value IGNORE NULLS."""
-    return """
-WITH hourly AS (
-  SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-         count(*)::bigint AS n_obs, round(sum(value), 3) AS total_value
-  FROM events GROUP BY event_type, hr
-),
-spine AS (
-  SELECT event_type, unnest(range(lo, hi + 1)) AS hr
-  FROM (SELECT event_type, min(hr) AS lo, max(hr) AS hi
-        FROM hourly GROUP BY event_type)
-),
-j AS (
-  SELECT s.event_type, s.hr, h.n_obs, h.total_value
-  FROM spine s LEFT JOIN hourly h
-    ON h.event_type = s.event_type AND h.hr = s.hr
-)
-SELECT event_type,
-       strftime(make_timestamp(hr * 3600000000), '%Y-%m-%d %H:%M:%S')
-         AS hour,
-       coalesce(n_obs, 0)::bigint AS n_events,
-       last_value(total_value IGNORE NULLS)
-         OVER (PARTITION BY event_type ORDER BY hr
-               ROWS UNBOUNDED PRECEDING) AS total_value_locf,
-       n_obs IS NULL AS gap_filled
-FROM j"""
-
-
-def sql_type_quantiles() -> str:
-    """queries.q_type_quantiles mirror: quantile_cont shares Spark
-    percentile's (n-1)·p interpolation."""
-    qs = {"p25": 0.25, "p50": 0.5, "p75": 0.75, "p95": 0.95, "p99": 0.99}
-    cols = ",\n       ".join(
-        f"round(quantile_cont(value, {p}), 6) AS {name}"
-        for name, p in qs.items()
-    )
-    return f"""
-SELECT event_type, count(*)::bigint AS n,
-       {cols}
-FROM events GROUP BY event_type"""
-
-
-def sql_moving_stats() -> str:
-    """queries.q_moving_stats mirror: same gapless hourly grid, same
-    ROWS ±3 frame."""
-    return """
-WITH hourly AS (
-  SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-         count(*)::bigint AS x
-  FROM events GROUP BY event_type, hr
-),
-spine AS (
-  SELECT event_type, unnest(range(lo, hi + 1)) AS hr
-  FROM (SELECT event_type, min(hr) AS lo, max(hr) AS hi
-        FROM hourly GROUP BY event_type)
-),
-grid AS (
-  SELECT s.event_type, s.hr, coalesce(h.x, 0) AS x
-  FROM spine s LEFT JOIN hourly h
-    ON h.event_type = s.event_type AND h.hr = s.hr
-)
-SELECT event_type,
-       strftime(make_timestamp(hr * 3600000000), '%Y-%m-%d %H:%M:%S')
-         AS hour,
-       x::bigint AS n_events,
-       sum(x) OVER w::bigint AS frame_sum,
-       count(x) OVER w::bigint AS frame_slots,
-       min(x) OVER w::bigint AS frame_min,
-       max(x) OVER w::bigint AS frame_max,
-       round((sum(x) OVER w)::double / (count(x) OVER w)::double, 6)
-         AS frame_avg
-FROM grid
-WINDOW w AS (PARTITION BY event_type ORDER BY hr
-             ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)"""
-
-
-def sql_value_ranks() -> str:
-    """queries.q_value_ranks mirror: same window frame, same
-    rational formulas, head-40 by rank."""
-    return """
-WITH r AS (
-  SELECT event_type, event_id, value,
-         rank() OVER w AS rnk,
-         dense_rank() OVER w AS drnk,
-         percent_rank() OVER w AS prnk,
-         cume_dist() OVER w AS cdist
-  FROM events
-  WINDOW w AS (PARTITION BY event_type ORDER BY value)
-)
-SELECT event_type, event_id::bigint AS event_id,
-       round(value, 3) AS value,
-       rnk::bigint AS rnk, drnk::bigint AS drnk,
-       round(prnk, 6) AS prnk, round(cdist, 6) AS cdist
-FROM r WHERE rnk <= 40"""
-
-
-def sql_daily_pivot() -> str:
-    """queries.q_daily_pivot mirror: FILTER conditional aggregation
-    over the same fixed pivot domain."""
-    from blackedge_ocr_spark.queries import PIVOT_TYPES
-
-    cols = ",\n       ".join(
-        f"count(*) FILTER (WHERE event_type = '{t}')::bigint AS n_{t}"
-        for t in PIVOT_TYPES
-    )
-    return f"""
-SELECT strftime(ts, '%Y-%m-%d') AS day,
-       {cols}
-FROM events GROUP BY day"""
-
-
-def sql_hour_anomalies() -> str:
-    """queries.q_hour_anomalies mirror: same exact-int64 moments,
-    same cross-multiplied 3σ inequality in double."""
-    return """
-WITH hourly AS (
-  SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-         count(*)::bigint AS x
-  FROM events GROUP BY event_type, hr
-),
-stats AS (
-  SELECT event_type, count(*)::bigint AS m, sum(x)::bigint AS s,
-         sum(x * x)::bigint AS ss
-  FROM hourly GROUP BY event_type
-)
-SELECT h.event_type,
-       strftime(make_timestamp(hr * 3600000000), '%Y-%m-%d %H:%M:%S')
-         AS hour,
-       x AS n_events,
-       (m::double * ss::double - s::double * s::double > 0
-        AND (m::double * x::double - s::double)
-            * (m::double * x::double - s::double)
-            > 9.0 * (m::double * ss::double - s::double * s::double))
-         AS is_anomaly
-FROM hourly h JOIN stats USING (event_type)"""
-
-
-def sql_pricing_cube() -> str:
-    """queries.q_pricing_cube mirror: GROUP BY CUBE, same 2-bit
-    grouping id and exact integer measures as the rollup."""
-    from blackedge_ocr_spark.analysis.relational import Q1_CUTOFF
-
-    return f"""
-SELECT l_returnflag, l_linestatus,
-       (2 * grouping(l_returnflag) + grouping(l_linestatus))::bigint
-         AS gid,
-       sum(floor(l_extendedprice * 100.0 + 0.5)::bigint)::bigint
-         AS sum_base_cents,
-       sum({_REV_E4})::bigint AS sum_disc_e4,
-       count(*)::bigint AS n_rows
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '{Q1_CUTOFF}'
-GROUP BY CUBE (l_returnflag, l_linestatus)"""
-
-
-def sql_tpch_q3(k: int = 10) -> str:
-    from blackedge_ocr_spark.analysis.relational import Q3_DATE, Q3_SEGMENT
-
-    return f"""
-WITH j AS (
-  SELECT l_orderkey, o_orderdate, o_orderpriority, {_REV_E4} AS rev
-  FROM orders
-  JOIN customer ON o_custkey = c_custkey
-  JOIN lineitem ON o_orderkey = l_orderkey
-  WHERE c_mktsegment = '{Q3_SEGMENT}'
-    AND o_orderdate < TIMESTAMP '{Q3_DATE}'
-    AND l_shipdate > TIMESTAMP '{Q3_DATE}')
-SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-       o_orderpriority, sum(rev)::bigint AS revenue_e4
-FROM j GROUP BY l_orderkey, j.o_orderdate, o_orderpriority
-ORDER BY revenue_e4 DESC, j.o_orderdate ASC, l_orderkey ASC
-LIMIT {k}"""
-
-
-def sql_tpch_q5() -> str:
-    from blackedge_ocr_spark.analysis.relational import (
-        Q5_FROM,
-        Q5_REGION,
-        Q5_TO,
-    )
-
-    return f"""
-SELECT n_name, sum({_REV_E4})::bigint AS revenue_e4
-FROM customer
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON o_orderkey = l_orderkey
-JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
-WHERE r_name = '{Q5_REGION}'
-  AND o_orderdate >= TIMESTAMP '{Q5_FROM}'
-  AND o_orderdate < TIMESTAMP '{Q5_TO}'
-GROUP BY n_name"""
 
 
 # ---------------------------------------------------------------------

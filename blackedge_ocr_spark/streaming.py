@@ -40,24 +40,34 @@ def _run_token(checkpoint_dir: str) -> str:
     batch_id alone would let a new run's dynamic overwrite REPLACE a
     previous run's committed ``batch_id=0`` partitions in a kept
     output/registry dir. Partitions are therefore
-    ``run=r<md5(checkpoint)>/batch_id=N``: a same-checkpoint restart
-    keeps the token (retried batches overwrite exactly their own
-    partition — the crash-idempotence contract), while a fresh
-    checkpoint gets a fresh namespace and old partitions survive as
-    history. Re-using a CLEARED checkpoint path re-uses the token;
-    start fresh runs with a fresh checkpoint dir (standard streaming
-    practice, and what every test/harness here does).
+    ``run=r<12 hex>/batch_id=N``, the token drawn at random on the
+    checkpoint's first use and kept in ``<checkpoint>/_run_token``: a
+    same-checkpoint restart reads it back (retried batches overwrite
+    exactly their own partition — the crash-idempotence contract),
+    while a fresh checkpoint, or a cleared one at the same path, draws
+    a fresh namespace, so old partitions survive as history and an
+    old ``_compaction.json`` never covers the new run's partitions.
 
     The ``r`` prefix keeps the token a string under Spark's partition
     type inference: a bare hex digest such as ``96878067506f`` or
     ``123e45678901`` parses as a number, and a ``run`` column read
     back as double fails every string comparison on it."""
-    import hashlib
     import os
+    import secrets
 
-    return "r" + hashlib.md5(
-        os.path.abspath(checkpoint_dir).encode("utf-8")
-    ).hexdigest()[:12]
+    path = os.path.join(os.path.abspath(checkpoint_dir), "_run_token")
+    try:
+        with open(path) as f:
+            return f.read()
+    except FileNotFoundError:
+        pass
+    token = "r" + secrets.token_hex(6)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.{token}.tmp"
+    with open(tmp, "w") as f:
+        f.write(token)
+    os.replace(tmp, path)  # atomic: a crash never leaves a torn token
+    return token
 
 
 _COMPACT_RUN = "compact"  # reserved run namespace (never a run token)
@@ -132,8 +142,8 @@ def compact_stream_registry(
        readers (covered partitions are already hidden).
 
     The reserved run token 'compact' cannot collide with real run
-    namespaces (those are md5 hex-12). Legacy plain-append layouts
-    (no run/batch_id columns) are left untouched. At fleet scale
+    namespaces (those are ``r`` + 12 hex digits). Legacy plain-append
+    layouts (no run/batch_id columns) are left untouched. At fleet scale
     this whole dance is one Iceberg rewrite-data-files commit —
     ADR-1's swap point; the manifest here is the minimal filesystem
     stand-in for that table's snapshot pointer.
@@ -327,447 +337,6 @@ def _spansify_batch(docs: DataFrame) -> DataFrame:
     from blackedge_ocr_spark.datagen import spansify_frame
 
     return spansify_frame(docs)
-
-
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), True),
-        T.StructField("ts", T.TimestampType(), True),
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("value", T.DoubleType(), True),
-        T.StructField("props", T.StringType(), True),
-    ]
-)
-
-
-SESSION_OUTPUT_SCHEMA = (
-    "user_id long, session_start string, n_events bigint, total_value double"
-)
-# Pending (not-yet-finalized) events, buffered until the watermark
-# proves their sessions closed: parallel arrays of epoch-micros,
-# event ids (tie order) and values. Doubles are exact for both up to
-# 2^53 (micros: ~year 287396; ids: 9e15).
-SESSION_STATE_SCHEMA = (
-    "pts array<double>, pids array<double>, pvals array<double>"
-)
-
-
-def _fmt(epoch_us: float) -> str:
-    import datetime
-
-    return datetime.datetime.fromtimestamp(
-        epoch_us / 1e6, tz=datetime.timezone.utc
-    ).strftime("%Y-%m-%d %H:%M:%S")
-
-
-def _r3(x: float) -> float:
-    """Scalar mirror of Spark's ``round(col, 3)``: HALF_UP over the
-    SHORTEST decimal repr of the double (BigDecimal.valueOf ==
-    Double.toString), NOT its exact binary expansion — the double
-    2.6755 is 2.67549999…, so ``Decimal(x)`` would round to 2.675
-    while Spark rounds the string "2.6755" to 2.676. Python's repr is
-    the same shortest round-trip repr as Java's Double.toString, so
-    ``Decimal(repr(x))`` reproduces Spark bit-for-bit on decimal
-    ties. (Python's built-in round is banker's — wrong twice.)
-    Unit-tested against the live JVM on tie values."""
-    import decimal
-
-    return float(
-        decimal.Decimal(repr(x)).quantize(
-            decimal.Decimal("0.001"), rounding=decimal.ROUND_HALF_UP
-        )
-    )
-
-
-def stream_sessionize(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    gap_sec: int = 1800,
-    watermark: str = "10 minutes",
-    available_now: bool = True,
-    max_files_per_trigger: int = 1,
-):
-    """Custom STATEFUL streaming operator via ``applyInPandasWithState``:
-    gap-based user sessionization, BUFFER-UNTIL-WATERMARK.
-
-    Events are held in per-user state and sessionized on the sorted
-    buffer each invocation; a session [first..last] is emitted — once,
-    in append mode — exactly when the event-time watermark passes
-    last + gap: any event that could still extend it would carry
-    ts ≤ last + gap ≤ watermark and be dropped as late, so the session
-    is provably final. Events above the watermark stay buffered. State
-    is therefore bounded by |active users| × events inside the
-    (gap + allowed-lateness) window, never the stream.
-
-    This is the textbook design for a reason the sf1 scale probe made
-    concrete: a process-on-arrival sessionizer (the previous
-    implementation) assigns an out-of-order-but-not-late event — above
-    the watermark, behind the user's latest buffered event, routine
-    when file/partition order is not time order — to whatever session
-    happened to arrive first (observed: an event merged into a session
-    three weeks later), and can also die computing a timeout below the
-    watermark. Buffering makes arrival order inside the lateness
-    window irrelevant: output is a pure function of the event set the
-    watermark admitted.
-
-    The batch twin is ``queries.q_user_sessions`` (lag → running-sum
-    session id → agg); emitted sessions agree exactly on time-ordered
-    input (pytest parity + the sf1 probe). Late events below the
-    watermark are dropped by Spark before the operator, mirroring the
-    rollup's semantics; with ``availableNow`` the trailing sessions
-    whose close time the final watermark never passes remain open (a
-    live stream flushes them as the watermark advances).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    events = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
-    def sessionize(key, pdf_iter, state: GroupState):
-        (user_id,) = key
-        gap_us = gap_sec * 1_000_000
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        pend: list[tuple] = []
-        if state.exists:
-            pts, pids, pvals = state.get
-            pend = list(zip(pts, pids, pvals))
-        if not state.hasTimedOut:
-            rows = pd.concat(list(pdf_iter), ignore_index=True)
-            # Integer microseconds (pandas ts.value is ns) — exact gap
-            # comparison, same integer semantics as the batch twin's
-            # unix_micros and the oracle's epoch_us.
-            for ts, eid, v in zip(
-                rows["ts"], rows["event_id"], rows["value"]
-            ):
-                if pd.isna(ts):
-                    # no event time → nothing for the watermark to
-                    # finalize against (NaT.value is int64-min
-                    # garbage); skipped. The batch twin emits a
-                    # NULL-start singleton for such rows — documented
-                    # residual divergence, unreachable on the corpus.
-                    continue
-                # a NULL value arrives as NaN and stays NaN in state
-                # (a valid double); the emission sum skips it below,
-                # mirroring F.sum's null-skip.
-                pend.append(
-                    (float(ts.value // 1000), float(eid), float(v))
-                )
-        # (ts, event_id) — the batch twin's window order, so the
-        # per-session float sum accumulates in the identical sequence.
-        pend.sort(key=lambda r: (r[0], r[1]))
-        sessions: list[list[tuple]] = []
-        for t, eid, v in pend:
-            if sessions and t - sessions[-1][-1][0] <= gap_us:
-                sessions[-1].append((t, eid, v))
-            else:
-                sessions.append([(t, eid, v)])
-        closed: list[tuple] = []
-        keep: list[tuple] = []
-        next_close_us = None
-        for s in sessions:
-            close_us = s[-1][0] + gap_us
-            if close_us <= wm_us:
-                total, seen = 0.0, False
-                for _, _, v in s:
-                    if v == v:  # skip NaN = NULL value, like F.sum
-                        total += v
-                        seen = True
-                # round to 3 decimals on close — the batch twin's
-                # contract (q_user_sessions: round(sum(value), 3));
-                # n_events counts null-value rows like count(*), and
-                # an all-null session totals NULL like sum(all-null)
-                closed.append(
-                    (user_id, _fmt(s[0][0]), len(s),
-                     _r3(total) if seen else None)
-                )
-            else:
-                keep.extend(s)
-                if next_close_us is None:
-                    next_close_us = close_us
-        if keep:
-            state.update((
-                [t for t, _, _ in keep],
-                [i for _, i, _ in keep],
-                [v for _, _, v in keep],
-            ))
-            # wake this group when the watermark passes the earliest
-            # still-open close time; the ms floor could collide with
-            # the current watermark, which Spark rejects — clamp above
-            state.setTimeoutTimestamp(
-                max(int(next_close_us) // 1000,
-                    state.getCurrentWatermarkMs() + 1)
-            )
-        elif state.exists:
-            state.remove()
-        yield pd.DataFrame(
-            closed,
-            columns=["user_id", "session_start", "n_events", "total_value"],
-        )
-
-    sessions = (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            sessionize,
-            SESSION_OUTPUT_SCHEMA,
-            SESSION_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    writer = (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-FUNNEL_OUTPUT_SCHEMA = (
-    "user_id long, anchor string, step_reached int, "
-    "wait2_us long, wait3_us long"
-)
-# Buffered funnel-step events awaiting finality: parallel arrays of
-# epoch-micros and 0-based step indices (doubles, exact to 2^53).
-FUNNEL_STATE_SCHEMA = "fts array<double>, fsteps array<double>"
-
-
-def stream_funnel(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    window_hours: int | None = None,
-    watermark: str = "10 minutes",
-    available_now: bool = True,
-    max_files_per_trigger: int = 1,
-):
-    """Stateful streaming twin of ``queries.q_event_funnel``:
-    per-user first-touch funnel progress via
-    ``applyInPandasWithState``, BUFFER-UNTIL-WATERMARK like
-    ``stream_sessionize``.
-
-    A user's funnel outcome is a pure function of their step events
-    inside [t1, t1 + W] where t1 = earliest step-1 event — and it is
-    provably FINAL exactly when the watermark strictly passes
-    t1 + W: any event that could still join the window (including an
-    even-earlier anchor, which would only shift the window earlier)
-    would carry ts ≤ t1 + W < watermark and be dropped as late. One
-    row per user is emitted at that moment — (user_id, anchor,
-    step_reached, per-step waits in exact integer microseconds, the
-    batch twin's unix_micros grid) — and the state drops.
-
-    State bounds: only FUNNEL_STEPS event types enter the operator
-    (pre-groupBy filter), anchored users buffer at most their events
-    inside one window, and unanchored users prune everything below
-    the watermark (a buffered non-anchor event can only ever qualify
-    under a future anchor t1' ≥ watermark, which requires the event
-    itself to sit at or above the watermark). An anchored user's
-    wake-up is an event-time timeout at t1 + W, so quiet users flush
-    without new data. With ``availableNow`` the users whose window
-    the final watermark never passes remain open — the
-    stream_sessionize caveat, same reason.
-
-    Out-of-order robustness (the regime the buffered design exists
-    for): an earlier step-1 event arriving above the watermark
-    REPLACES the anchor and re-evaluates the whole chain — a
-    process-on-arrival funnel would have locked the wrong anchor.
-
-    Repeat-anchor semantics: once a user's window emits and their
-    state drops, a later step-1 event starts a FRESH funnel (one row
-    per anchor window — the repeating-funnel variant products also
-    ship). The batch twin computes only the global first-touch
-    funnel, so its per-user chain equals the stream's FIRST emitted
-    row per user (pytest parity), for input whose disorder fits the
-    lateness allowance — the standard watermark guarantee class.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from blackedge_ocr_spark.queries import (
-        FUNNEL_STEPS,
-        FUNNEL_WINDOW_HOURS,
-    )
-
-    steps = FUNNEL_STEPS
-    idx = {s: i for i, s in enumerate(steps)}
-    win_us = (
-        window_hours if window_hours is not None else FUNNEL_WINDOW_HOURS
-    ) * 3600 * 1_000_000
-
-    events = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-        .filter(F.col("event_type").isin(*steps))
-        .select("user_id", "event_type", "ts")
-    )
-
-    def funnel(key, pdf_iter, state: GroupState):
-        (user_id,) = key
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        pend: list[tuple] = []
-        if state.exists:
-            fts, fsteps = state.get
-            pend = list(zip(fts, fsteps))
-        if not state.hasTimedOut:
-            rows = pd.concat(list(pdf_iter), ignore_index=True)
-            for ts, et in zip(rows["ts"], rows["event_type"]):
-                if pd.isna(ts):
-                    continue  # no event time → no finality anchor
-                pend.append((float(ts.value // 1000), float(idx[et])))
-        anchors = [t for t, s in pend if s == 0.0]
-        out: list[tuple] = []
-        if anchors:
-            t1 = min(anchors)
-            # prune to what can still matter: the anchor itself, its
-            # window, and pre-anchor non-anchor events still at/above
-            # the watermark (candidates under a yet-earlier anchor)
-            pend = [
-                (t, s)
-                for t, s in pend
-                if (s == 0.0 and t == t1)
-                or (t1 < t <= t1 + win_us)
-                or (t < t1 and t >= wm_us)
-            ]
-            if wm_us > t1 + win_us:
-                t_prev, waits = t1, []
-                for k in range(1, len(steps)):
-                    cands = [
-                        t
-                        for t, s in pend
-                        if s == float(k)
-                        and t > t_prev
-                        and t <= t1 + win_us
-                    ]
-                    if not cands:
-                        break
-                    t_prev = min(cands)
-                    waits.append(int(t_prev - t1))
-                out.append(
-                    (
-                        user_id,
-                        _fmt(t1),
-                        1 + len(waits),
-                        waits[0] if len(waits) >= 1 else None,
-                        waits[1] if len(waits) >= 2 else None,
-                    )
-                )
-                if state.exists:
-                    state.remove()
-                pend = []
-        else:
-            pend = [(t, s) for t, s in pend if t >= wm_us]
-        if pend and not out:
-            state.update((
-                [t for t, _ in pend],
-                [s for _, s in pend],
-            ))
-            if anchors:
-                # wake when the watermark passes the window end; the
-                # ms floor may collide with the current watermark,
-                # which Spark rejects — clamp above (re-check inside)
-                state.setTimeoutTimestamp(
-                    max(
-                        int(min(anchors) + win_us) // 1000 + 1,
-                        state.getCurrentWatermarkMs() + 1,
-                    )
-                )
-        elif not pend and state.exists and not out:
-            state.remove()
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "user_id", "anchor", "step_reached",
-                "wait2_us", "wait3_us",
-            ],
-        )
-
-    funnels = (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            funnel,
-            FUNNEL_OUTPUT_SCHEMA,
-            FUNNEL_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    writer = (
-        funnels.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_event_rollup(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    watermark: str = "1 hour",
-    available_now: bool = True,
-    max_files_per_trigger: int = 2,
-):
-    """Watermarked hour-window event aggregation as a stream: late
-    events inside the watermark fold into their window; windows emit
-    (append mode) only once the watermark passes their end, so the
-    sink sees each window exactly once. State is bounded by
-    (watermark / window) x |event_type| — the Structured Streaming
-    shape for the engine's metrics rollups.
-
-    Residual batch divergence (same class as stream_sessionize's
-    null-ts note): an event with ts=NULL has no event time for the
-    watermark to reason about and is dropped by the streaming
-    aggregation, while the batch twin (q_event_rollup) groups it
-    under an hour=NULL row. Unreachable on the corpus (ts is
-    non-null by construction); a real feed would filter or default
-    null timestamps at ingest."""
-    from pyspark.sql import functions as F
-
-    events = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window(F.col("ts"), "1 hour"), F.col("event_type"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 3).alias("total_value"),
-        )
-        .select(
-            F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_dedup(
@@ -1376,98 +945,6 @@ def stream_incremental_extract(
 
     writer = raw.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_interval_join(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    watermark: str = "1 hour",
-    available_now: bool = True,
-    max_files_per_trigger: int = 1,
-    how: str = "inner",
-):
-    """Native watermarked stream-stream interval join — the one
-    Structured Streaming join primitive the rest of the streaming
-    surface (foreachBatch twins, session_window, stateful
-    applyInPandasWithState) doesn't exercise. Views and clicks are
-    two independent file streams over the same event feed; each
-    click joins every same-user view it trails by 0..RANGE_WINDOW_SEC
-    (the attribution band of the batch twin q_view_click_pairs,
-    which answers to the naive-inequality DuckDB oracle).
-
-    State story: both sides are watermarked and the join condition
-    time-bounds click vs view, so Spark's symmetric hash join can
-    evict a buffered view once the watermark passes
-    view_ts + band + delay, and a buffered click once it can no
-    longer match — state is O(events inside the watermark horizon),
-    not O(stream). Append mode emits each matched pair exactly once.
-
-    Residual batch divergence (same class as the rollup's note):
-    null-ts rows carry no event time, so the streaming join drops
-    them while the batch twin's epoch arithmetic would too (NULL
-    comparison) — actually equal here; the real divergence is only
-    true-late data beyond the watermark, absent from a replayed
-    corpus."""
-    from blackedge_ocr_spark.queries import RANGE_WINDOW_SEC
-
-    views = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", watermark)
-    )
-    clicks = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", watermark)
-    )
-    # Views are the left/outer side: with how="left_outer" a view
-    # that attracts no click emits ONCE with null click columns as
-    # soon as the watermark proves no future click can match
-    # (wm > v_ts + band) — the state-eviction event doubling as the
-    # negative result. Inner is unchanged by the side order.
-    joined = views.join(
-        clicks,
-        F.expr(
-            f"""
-            c_user = v_user
-            AND c_ts >= v_ts
-            AND c_ts <= v_ts + interval {RANGE_WINDOW_SEC} seconds
-            """
-        ),
-        how,
-    ).select(
-        F.col("v_user").alias("user_id"),
-        "view_id",
-        "click_id",
-        (
-            F.unix_micros(F.col("c_ts")) - F.unix_micros(F.col("v_ts"))
-        ).cast("bigint").alias("wait_us"),
-    )
-    writer = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

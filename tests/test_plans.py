@@ -102,16 +102,6 @@ def test_bucketed_join_has_no_exchange(spark):
         spark.sql("DROP TABLE IF EXISTS bkt_right")
 
 
-def test_user_sessions_single_exchange(spark):
-    """Sessionization must shuffle exactly once on user_id: the
-    window's hash partitioning satisfies the downstream (user_id, sid)
-    aggregation's clustered distribution, so no second exchange."""
-    from blackedge_ocr_spark.queries import q_user_sessions
-
-    q = q_user_sessions(spark, SF)
-    assert plans.count_exchanges(q) == 1
-
-
 def test_ivf_index_probe_prunes_partitions(spark, tmp_path):
     """The materialized IVF index is the partition-pruning promise
     made good: vectors written partitionBy(cid), probe scan filtered
@@ -397,15 +387,16 @@ def test_gopher_repetition_zero_shuffle_in_array(spark):
 
 def test_no_unpartitioned_windows_in_tiny_window_queries(spark):
     """Repo convention: no window runs with an empty partition spec —
-    provably tiny domains (post-limit DSIR head, the |days| calendar
-    spine) carry a constant non-foldable key instead, so the
+    provably tiny domains (the post-limit DSIR head, the |langs|,
+    |splits| and |sources| totals) carry a constant non-foldable key
+    instead, so the
     `WindowExec: No Partition Defined` WARN channel stays clean for
     catching genuinely unbounded global windows."""
     import __spark_entry__ as se
 
     qs = se.queries()
-    for name in ("dsir_select", "peak_concurrency", "mixture_weights",
-                 "lang_rebalance", "data_split"):
+    for name in ("dsir_select", "mixture_weights", "lang_rebalance",
+                 "data_split"):
         df = qs[name](spark, SF)
         bad = plans.unpartitioned_window_specs(df)
         assert bad == [], (name, bad)

@@ -326,24 +326,20 @@ def test_stream_registries_file_count_bounded(spark, tmp_path):
     assert comp_dirs <= 3 < plain_dirs, (comp_dirs, plain_dirs)
 
 
-def test_run_partition_reads_back_as_string(spark, tmp_path):
+def test_run_partition_reads_back_as_string(spark, tmp_path, monkeypatch):
     """A run token must stay a string when Spark infers partition
-    types on read: a hex digest that parses as a number (``96878067506f``
-    is a Java double) would type ``run`` as double, and the registry
-    view's ``run != 'compact'`` filter would fail on the cast."""
-    import hashlib
-    import re
+    types on read: a random hex draw that parses as a number
+    (``96878067506f`` is a Java double) would type ``run`` as double,
+    and the registry view's ``run != 'compact'`` filter would fail on
+    the cast."""
+    import secrets
 
     import pyspark.sql.functions as F
 
     from blackedge_ocr_spark import streaming
 
-    numeric = re.compile(r"\d+(e\d+)?[fd]?")
-    ckpt = next(
-        p
-        for p in (str(tmp_path / f"ckpt{i}") for i in range(100_000))
-        if numeric.fullmatch(hashlib.md5(p.encode()).hexdigest()[:12])
-    )
+    monkeypatch.setattr(secrets, "token_hex", lambda n: "96878067506f")
+    ckpt = str(tmp_path / "ckpt")
     reg = str(tmp_path / "reg")
     spark.range(3).withColumn("run", F.lit(streaming._run_token(ckpt))).withColumn(
         "batch_id", F.lit(0)
@@ -351,3 +347,48 @@ def test_run_partition_reads_back_as_string(spark, tmp_path):
     t = spark.read.parquet(reg)
     assert dict(t.dtypes)["run"] == "string"
     assert streaming._blessed_view(t, None, set()).count() == 3
+
+
+RERUN_FIRST = [
+    [_row(0, "first run opening passage about harbors ships and cargo cranes")],
+    [_row(1, "first run second passage about orchards apples and pear trees")],
+    # compaction fires before this batch's writes (compact_every=2)
+    [_row(2, "first run closing passage about deserts dunes and camel routes")],
+]
+RERUN_SECOND = [
+    [_row(100, "second run opening passage on violins cellos and orchestras")],
+    [_row(101, "second run opening passage on violins cellos and orchestras"),  # dup of 100
+     _row(102, "second run closing passage on bridges cables and steel towers")],
+]
+
+
+@pytest.mark.parametrize("op", ["stream_dedup", "stream_neardup"])
+def test_cleared_checkpoint_rerun_keeps_both_runs(spark, tmp_path, op):
+    """Clearing a checkpoint and re-running on the same path starts a
+    new stream, so it must get a new ``run=`` namespace. Were the old
+    token kept, the second run's ``batch_id=0..`` partitions would
+    overwrite the first run's output, and a neardup registry's old
+    ``_compaction.json`` would hide them as covered, letting a dup
+    inside the second run survive."""
+    from blackedge_ocr_spark import streaming
+
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    regs = [str(tmp_path / "reg")] if op == "stream_dedup" else [
+        str(tmp_path / "bands"), str(tmp_path / "sigs")]
+
+    def run(inp):
+        q = getattr(streaming, op)(
+            spark, str(inp), out, ckpt, *regs, compact_every=2
+        )
+        q.awaitTermination()
+
+    _write_batches(spark, tmp_path, tmp_path / "in1", RERUN_FIRST)
+    run(tmp_path / "in1")
+    first = streaming._run_token(ckpt)
+    shutil.rmtree(ckpt)
+    _write_batches(spark, tmp_path, tmp_path / "in2", RERUN_SECOND)
+    run(tmp_path / "in2")
+
+    ids = [r["doc_id"] for r in spark.read.parquet(out).select("doc_id").collect()]
+    assert sorted(ids) == [0, 1, 2, 100, 102], sorted(ids)
+    assert streaming._run_token(ckpt) != first

@@ -69,104 +69,6 @@ def test_stream_batch_span_parity(spark, tmp_path):
     assert streamed == batch
 
 
-def test_event_rollup_drops_past_watermark(spark, tmp_path):
-    """Out-of-order events across micro-batches: an event older than
-    the advanced watermark is dropped (its already-emitted window is
-    untouched); a late event still inside the watermark folds into its
-    window; the unfinished tail window is withheld."""
-    import os
-    import time as _t
-
-    from blackedge_ocr_spark.streaming import stream_event_rollup
-
-    inp = tmp_path / "ev"
-    inp.mkdir()
-
-    def write(name, rows, age_sec):
-        df = spark.createDataFrame(
-            [(i, ts, 1, "click", v, "{}") for i, (ts, v) in enumerate(rows)],
-            "event_id long, ts string, user_id long, event_type string, "
-            "value double, props string",
-        ).select(
-            "event_id", F.to_timestamp("ts").alias("ts"), "user_id",
-            "event_type", "value", "props",
-        ).coalesce(1)
-        stage = str(tmp_path / f"stage_{name}")
-        df.write.mode("overwrite").parquet(stage)
-        part = next(
-            os.path.join(r, f)
-            for r, _, fs in os.walk(stage) for f in fs
-            if f.endswith(".parquet")
-        )
-        dest = str(inp / name)
-        shutil.copy(part, dest)
-        # FileStreamSource orders by modification time: age the first
-        # batch so the two files land in separate triggers.
-        now = _t.time()
-        os.utime(dest, (now - age_sec, now - age_sec))
-
-    # Spark keeps TWO watermarks per batch: the late-row filter uses
-    # the watermark as of the batch's start, eviction/emission the one
-    # computed during it. A row is therefore dropped only when it
-    # arrives after the batch that evicted its window's state — hence
-    # three files in three triggers:
-    # batch 0: one event per hour 00..10 → watermark after: 09:30
-    write(
-        "e1.parquet",
-        [(f"2026-01-01 {h:02d}:30:00", 1.0) for h in range(11)],
-        age_sec=240,
-    )
-    # batch 1: advancer; hours 00..08 emit + evict (end <= 09:30);
-    # watermark after: 11:30
-    write("e2.parquet", [("2026-01-01 12:30:00", 1.0)], age_sec=120)
-    # batch 2: 03:15 is two batches late — hour 03 already evicted →
-    # DROPPED; 11:45's window is still open → folds into hour 11;
-    # 14:30 advances the watermark to 13:30 so hours 09..12 finalize
-    # while hour 14 stays withheld.
-    write(
-        "e3.parquet",
-        [("2026-01-01 03:15:00", 100.0),
-         ("2026-01-01 11:45:00", 5.0),
-         ("2026-01-01 14:30:00", 1.0)],
-        age_sec=0,
-    )
-
-    q = stream_event_rollup(
-        spark, str(inp), str(tmp_path / "evout"), str(tmp_path / "evckpt"),
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(300)
-    dropped = sum(
-        so.get("numRowsDroppedByWatermark", 0)
-        for p in q.recentProgress
-        for so in p["stateOperators"]
-    )
-
-    def read_stable():
-        prev = None
-        for _ in range(10):
-            got = {
-                r["hour"]: (r["n_events"], r["total_value"])
-                for r in spark.read.parquet(str(tmp_path / "evout")).collect()
-            }
-            if got == prev:
-                return got
-            prev = got
-            _t.sleep(1)
-        return prev
-
-    got = read_stable()
-    assert dropped == 1                              # exactly the 03:15 row
-    assert got["2026-01-01 03:00:00"] == (1, 1.0)    # dropped row not folded
-    assert got["2026-01-01 11:00:00"] == (1, 5.0)    # open-window late fold
-    assert got["2026-01-01 12:00:00"] == (1, 1.0)
-    assert "2026-01-01 14:00:00" not in got          # tail withheld
-    assert len(got) == 13                            # hours 00..12
-    for h in list(range(11)):
-        if h not in (11, 12):
-            assert got[f"2026-01-01 {h:02d}:00:00"] == (1, 1.0)
-
-
 def test_json_response_shape(spark):
     from blackedge_ocr_spark.datagen import spansify_documents
     from blackedge_ocr_spark.pipeline import extract_documents
@@ -182,253 +84,6 @@ def test_json_response_shape(spark):
         assert isinstance(doc["content"], str)
         assert doc["metadata"]["pages"] >= 1
         assert all(s["page_number"] >= 1 for s in doc["sections"])
-
-
-def test_stream_sessionize_matches_batch_closed_sessions(spark, tmp_path):
-    """applyInPandasWithState sessionization (buffer-until-watermark):
-    a session emits exactly when the watermark passes last + gap; the
-    sink holds exactly the CLOSED sessions and they match the batch
-    lag/running-sum sessionization; the still-open tail session is
-    withheld."""
-    import os
-    import time as _t
-
-    from blackedge_ocr_spark.streaming import stream_sessionize
-
-    inp = tmp_path / "sev"
-    inp.mkdir()
-
-    def write(name, rows, age_sec):
-        df = spark.createDataFrame(
-            [(i, ts, uid, "click", v, "{}")
-             for i, (uid, ts, v) in enumerate(rows)],
-            "event_id long, ts string, user_id long, event_type string, "
-            "value double, props string",
-        ).select(
-            "event_id", F.to_timestamp("ts").alias("ts"), "user_id",
-            "event_type", "value", "props",
-        ).coalesce(1)
-        stage = str(tmp_path / f"sstage_{name}")
-        df.write.mode("overwrite").parquet(stage)
-        part = next(
-            os.path.join(r, f)
-            for r, _, fs in os.walk(stage) for f in fs
-            if f.endswith(".parquet")
-        )
-        dest = str(inp / name)
-        shutil.copy(part, dest)
-        now = _t.time()
-        os.utime(dest, (now - age_sec, now - age_sec))
-
-    # user 1: two events 10 min apart (one session), then a 50-min gap
-    # opens a second session — the first closes IN-BATCH via the gap.
-    # user 2: one early event (will close via watermark timeout).
-    write(
-        "s1.parquet",
-        [(1, "2026-01-01 00:00:00", 1.5),
-         (1, "2026-01-01 00:10:00", 2.5),
-         (1, "2026-01-01 01:00:00", 4.0),
-         (2, "2026-01-01 00:05:00", 8.0)],
-        age_sec=120,
-    )
-    # user 2 again at 05:00: advances the watermark to 04:50 (10-min
-    # delay), which times out every earlier session; its own session
-    # stays open (04:50 < 05:30) and must NOT be emitted.
-    write("s2.parquet", [(2, "2026-01-01 05:00:00", 16.0)], age_sec=0)
-
-    q = stream_sessionize(
-        spark, str(inp), str(tmp_path / "sout"), str(tmp_path / "sckpt")
-    )
-    q.awaitTermination(300)
-
-    def read_stable():
-        prev = None
-        for _ in range(10):
-            got = sorted(
-                (r["user_id"], r["session_start"], r["n_events"],
-                 r["total_value"])
-                for r in spark.read.parquet(str(tmp_path / "sout")).collect()
-            )
-            if got == prev:
-                return got
-            prev = got
-            _t.sleep(1)
-        return prev
-
-    got = read_stable()
-    assert got == [
-        (1, "2026-01-01 00:00:00", 2, 4.0),   # watermark-closed
-        (1, "2026-01-01 01:00:00", 1, 4.0),   # watermark timeout
-        (2, "2026-01-01 00:05:00", 1, 8.0),   # watermark timeout
-    ]
-    # parity with the batch sessionization, restricted to closed
-    # sessions (the batch path also reports the open 05:00 tail)
-    ev_dir = str(tmp_path / "batch_ev")
-    spark.read.parquet(str(inp)).write.mode("overwrite").parquet(
-        f"{ev_dir}/events.parquet"
-    )
-    from blackedge_ocr_spark.queries import q_user_sessions
-
-    batch = sorted(
-        (r["user_id"], r["session_start"], r["n_events"], r["total_value"])
-        for r in q_user_sessions(spark, ev_dir).collect()
-    )
-    assert batch == got + [(2, "2026-01-01 05:00:00", 1, 16.0)]
-
-
-def test_stream_sessionize_out_of_order_above_watermark(spark, tmp_path):
-    """Regression for the sf1 scale probe findings: an event that
-    arrives AFTER a later event of the same user (above the watermark,
-    so not droppable) must land in the correct session — the buffered
-    sessionizer's output is a pure function of the admitted event set,
-    not of arrival order. The previous process-on-arrival operator
-    merged such events into whichever session arrived first (observed
-    at sf1: an event assigned to a session three weeks later) and
-    could crash setting a timeout below the watermark."""
-    import os
-    import time as _t
-
-    from blackedge_ocr_spark.streaming import stream_sessionize
-
-    inp = tmp_path / "oev"
-    inp.mkdir()
-
-    def write(name, rows, age_sec):
-        df = spark.createDataFrame(
-            [(i + hash(name) % 1000 * 100, ts, uid, "click", v, "{}")
-             for i, (uid, ts, v) in enumerate(rows)],
-            "event_id long, ts string, user_id long, event_type string, "
-            "value double, props string",
-        ).select(
-            "event_id", F.to_timestamp("ts").alias("ts"), "user_id",
-            "event_type", "value", "props",
-        ).coalesce(1)
-        stage = str(tmp_path / f"ostage_{name}")
-        df.write.mode("overwrite").parquet(stage)
-        part = next(
-            os.path.join(r, f)
-            for r, _, fs in os.walk(stage) for f in fs
-            if f.endswith(".parquet")
-        )
-        dest = str(inp / name)
-        shutil.copy(part, dest)
-        now = _t.time()
-        os.utime(dest, (now - age_sec, now - age_sec))
-
-    # batch 1: u1 @ 01:00, u3 @ 01:05 (watermark source -> 00:55)
-    write(
-        "o1.parquet",
-        [(1, "2026-01-01 01:00:00", 1.0),
-         (3, "2026-01-01 01:05:00", 8.0)],
-        age_sec=240,
-    )
-    # batch 2: u1 @ 00:58 — OUT OF ORDER (behind u1's 01:00) but above
-    # the 00:55 watermark, so admitted; same session as 01:00.
-    # u3 @ 03:00 advances the watermark to 02:50.
-    write(
-        "o2.parquet",
-        [(1, "2026-01-01 00:58:00", 2.0),
-         (3, "2026-01-01 03:00:00", 8.0)],
-        age_sec=120,
-    )
-    # batch 3: u3 @ 06:00 -> final watermark 05:50 times out the rest;
-    # its own session stays open.
-    write("o3.parquet", [(3, "2026-01-01 06:00:00", 8.0)], age_sec=0)
-
-    q = stream_sessionize(
-        spark, str(inp), str(tmp_path / "oout"), str(tmp_path / "ockpt")
-    )
-    q.awaitTermination(300)
-    got = sorted(
-        (r["user_id"], r["session_start"], r["n_events"], r["total_value"])
-        for r in spark.read.parquet(str(tmp_path / "oout")).collect()
-    )
-    assert got == [
-        (1, "2026-01-01 00:58:00", 2, 3.0),  # correct start + both events
-        (3, "2026-01-01 01:05:00", 1, 8.0),
-        (3, "2026-01-01 03:00:00", 1, 8.0),
-    ]
-    # and the batch twin agrees on the closed set
-    ev_dir = str(tmp_path / "obatch")
-    spark.read.parquet(str(inp)).write.mode("overwrite").parquet(
-        f"{ev_dir}/events.parquet"
-    )
-    from blackedge_ocr_spark.queries import q_user_sessions
-
-    batch = sorted(
-        (r["user_id"], r["session_start"], r["n_events"], r["total_value"])
-        for r in q_user_sessions(spark, ev_dir).collect()
-    )
-    assert batch == got + [(3, "2026-01-01 06:00:00", 1, 8.0)]
-
-
-def test_stream_sessionize_null_values_match_batch_sum_semantics(spark, tmp_path):
-    """A NULL event value must count toward n_events (count(*)) but
-    not total_value (F.sum skips nulls); an all-null session totals
-    NULL — exactly the batch twin's aggregation semantics."""
-    import os
-    import time as _t
-
-    from blackedge_ocr_spark.streaming import stream_sessionize
-
-    inp = tmp_path / "nev"
-    inp.mkdir()
-
-    def write(name, rows, age_sec):
-        df = spark.createDataFrame(
-            [(i, ts, uid, "click", v, "{}")
-             for i, (uid, ts, v) in enumerate(rows)],
-            "event_id long, ts string, user_id long, event_type string, "
-            "value double, props string",
-        ).select(
-            "event_id", F.to_timestamp("ts").alias("ts"), "user_id",
-            "event_type", "value", "props",
-        ).coalesce(1)
-        stage = str(tmp_path / f"nstage_{name}")
-        df.write.mode("overwrite").parquet(stage)
-        part = next(
-            os.path.join(r, f)
-            for r, _, fs in os.walk(stage) for f in fs
-            if f.endswith(".parquet")
-        )
-        shutil.copy(part, str(inp / name))
-        now = _t.time()
-        os.utime(str(inp / name), (now - age_sec, now - age_sec))
-
-    # u5: one real + one NULL value in one session; u6: all-null session
-    write(
-        "n1.parquet",
-        [(5, "2026-01-01 00:00:00", 2.5),
-         (5, "2026-01-01 00:05:00", None),
-         (6, "2026-01-01 00:10:00", None)],
-        age_sec=120,
-    )
-    # watermark driver: far-future event times everything out
-    write("n2.parquet", [(7, "2026-01-01 06:00:00", 1.0)], age_sec=0)
-
-    q = stream_sessionize(
-        spark, str(inp), str(tmp_path / "nout"), str(tmp_path / "nckpt")
-    )
-    q.awaitTermination(300)
-    got = sorted(
-        (r["user_id"], r["session_start"], r["n_events"], r["total_value"])
-        for r in spark.read.parquet(str(tmp_path / "nout")).collect()
-    )
-    assert got == [
-        (5, "2026-01-01 00:00:00", 2, 2.5),
-        (6, "2026-01-01 00:10:00", 1, None),
-    ]
-    ev_dir = str(tmp_path / "nbatch")
-    spark.read.parquet(str(inp)).write.mode("overwrite").parquet(
-        f"{ev_dir}/events.parquet"
-    )
-    from blackedge_ocr_spark.queries import q_user_sessions
-
-    batch = sorted(
-        (r["user_id"], r["session_start"], r["n_events"], r["total_value"])
-        for r in q_user_sessions(spark, ev_dir).collect()
-    )
-    assert batch == got + [(7, "2026-01-01 06:00:00", 1, 1.0)]
 
 
 def test_doc_bundle_matches_reference_zip_layout(spark, tmp_path):
@@ -494,43 +149,6 @@ def test_doc_bundle_matches_reference_zip_layout(spark, tmp_path):
     b28 = doc_bundle(result, "d028")
     assert "validation_report.json" not in b28
     assert "`validation_report.json`" not in b28["README.md"]
-
-
-def test_stream_event_rollup_watermarked(spark, tmp_path):
-    """Windows fully below the final watermark emit exactly once and
-    match the batch aggregation; the not-yet-final tail is withheld."""
-    from blackedge_ocr_spark.streaming import stream_event_rollup
-
-    inp = tmp_path / "ev"
-    inp.mkdir()
-    shutil.copy(f"{SF}/events.parquet", inp / "e0.parquet")
-
-    q = stream_event_rollup(
-        spark, str(inp), str(tmp_path / "evout"), str(tmp_path / "evckpt")
-    )
-    q.awaitTermination(300)
-    got = {
-        (r["hour"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in spark.read.parquet(str(tmp_path / "evout")).collect()
-    }
-    assert got, "no finalized windows emitted"
-
-    batch = spark.read.parquet(f"{SF}/events.parquet")
-    exp = {
-        (r["hour"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in batch.groupBy(
-            F.date_format(F.window("ts", "1 hour")["start"],
-                          "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "event_type",
-        )
-        .agg(F.count("*").alias("n_events"),
-             F.round(F.sum("value"), 3).alias("total_value"))
-        .collect()
-    }
-    for key, vals in got.items():
-        assert exp[key] == vals, key
-    # withheld tail = windows newer than (max ts - watermark)
-    assert len(got) < len(exp)
 
 
 def test_stream_dedup_matches_batch_keepers_and_survives_restart(
@@ -610,29 +228,6 @@ def test_stream_dedup_matches_batch_keepers_and_survives_restart(
     got2 = {r["doc_id"] for r in
             spark.read.parquet(out).select("doc_id").collect()}
     assert got2 == got_ids | {4_000_000}
-
-
-def test_r3_matches_spark_round_on_decimal_ties(spark):
-    """_r3 (the streaming twin's scalar rounding) must equal Spark's
-    round(col, 3) BIT-FOR-BIT, including decimal ties where the
-    double's exact binary expansion disagrees with its shortest repr:
-    2.6755 stores as 2.67549999…, and Spark rounds the SHORTEST repr
-    ("2.6755" → 2.676, BigDecimal.valueOf semantics) — quantizing the
-    exact expansion instead emits 2.675 and breaks twin parity."""
-    from blackedge_ocr_spark.streaming import _r3
-
-    vals = [
-        2.6755, 1.0005, 12.3455, 7.1235, -2.6755, -1.0005, 0.0005,
-        16.0, 3.3333333, 1e-12, 123456.7895, 0.1 + 0.2,
-        *[k / 1000.0 + 0.0005 for k in range(0, 50, 7)],
-    ]
-    jvm = [
-        r["r"]
-        for r in spark.createDataFrame([(v,) for v in vals], "x double")
-        .select(F.round(F.col("x"), 3).alias("r"))
-        .collect()
-    ]
-    assert [_r3(v) for v in vals] == jvm
 
 
 def test_stream_incremental_extract_cdc_parity_and_skip(spark, tmp_path):

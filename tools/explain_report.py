@@ -24,7 +24,6 @@ REPORT_QUERIES = (
     "key_term_freq",
     "word_frequency",
     "corpus_curation",
-    "event_rollup",
     "dedup_lsh_pairs",
     "dedup_production_pairs",
     "ann_topk",
@@ -33,8 +32,6 @@ REPORT_QUERIES = (
     "ann_pq_topk",
     "ann_ivfpq_topk",
     "embedding_neardup_lsh",
-    "user_sessions",
-    "user_sessions_2p",
     "segment_stats",
     "dup_ngrams",
     "decontaminate",
@@ -92,29 +89,9 @@ REPORT_QUERIES = (
     "sampled_quantiles",
     "lang_confusion",
     "pagerank",
-    "event_funnel",
-    "cohort_retention",
-    "asof_join",
-    "range_join",
-    "hypertable_rollup",
-    "event_transitions",
     "trustrank",
-    "tpch_q1",
-    "tpch_q3",
-    "tpch_q5",
-    "pricing_rollup",
-    "peak_concurrency",
-    "zorder_prune",
     "link_hits",
     "triangle_stats",
-    "view_click_pairs",
-    "pricing_cube",
-    "gapfill",
-    "hour_anomalies",
-    "value_ranks",
-    "daily_pivot",
-    "type_quantiles",
-    "moving_stats",
     "label_propagation",
 )
 
@@ -196,17 +173,17 @@ def main() -> None:
         "## At-scale variants (multi-split scan, gates off)",
         "",
         "The sf parquet arrives as a single split, so the split-",
-        "starvation gates (`_docs`, `q_event_rollup`) fire and add a",
+        "starvation gate (`_docs`) fires and adds a",
         "widening exchange that buys scan parallelism in the sandbox.",
         "At 100 TB the scan itself yields thousands of splits and the",
-        "gates never fire. Below: the same queries planned with",
+        "gate never fires. Below: the same queries planned with",
         "`spark.sql.files.maxPartitionBytes` forced low enough that the",
         "scan is multi-split — the plan a real cluster runs.",
         "",
     ]
     spark.conf.set("spark.sql.files.maxPartitionBytes", "16384")
     spark.conf.set("spark.sql.files.openCostInBytes", "0")
-    for name in ("corpus_curation", "event_rollup", "word_frequency"):
+    for name in ("corpus_curation", "word_frequency"):
         df = qs[name](spark, sf_dir)
         n_ex = plans.count_exchanges(df)
         out += [

@@ -1,10 +1,10 @@
 """Deterministic scale-up of a driver testdata dir for benchmarking.
 
-Replicates the three engine-facing tables (documents, embeddings,
-events) K times with disjoint id ranges — replica k of doc_id d gets
-doc_id d + k*stride — and copies the remaining tables verbatim. The
-result is a directory bench.py can point at (name it ``sfX`` so the
-harness parses the scale factor from the path).
+Replicates the two tables the engine reads (documents, embeddings) K
+times with disjoint id ranges — replica k of doc_id d gets doc_id
+d + k*stride. The source dir's other tables are not read by any query
+and are not written. The result is a directory bench.py can point at
+(name it ``sfX`` so the harness parses the scale factor from the path).
 
 Replication semantics, chosen on purpose:
 - documents: text is replicated UNCHANGED, so the corpus contains
@@ -13,9 +13,6 @@ Replication semantics, chosen on purpose:
   the dedup operators exist for; LSH pair counts grow with cluster
   size C(K,2) per group, which is the honest cost of deduping such a
   corpus, not a benchmark artifact.
-- events: user_id is offset per replica (u + k*stride), so the user
-  population grows 10x while per-user session structure is preserved
-  — horizontal growth, no artificial hot keys.
 - embeddings: vec_id offset per replica; vectors unchanged (ANN cost
   scales as queries x corpus = K^2, the true brute-force scaling).
 
@@ -28,7 +25,6 @@ Usage: python tools/make_sf.py [src_dir] [dst_dir] [K]
 from __future__ import annotations
 
 import os
-import shutil
 import sys
 
 import duckdb
@@ -36,7 +32,6 @@ import duckdb
 REPLICATED = {
     "documents": ("doc_id",),
     "embeddings": ("vec_id",),
-    "events": ("event_id", "user_id"),
 }
 
 
@@ -47,16 +42,8 @@ def main() -> int:
     os.makedirs(dst, exist_ok=True)
 
     con = duckdb.connect()
-    for fn in sorted(os.listdir(src)):
-        if not fn.endswith(".parquet"):
-            continue
-        table = fn[: -len(".parquet")]
-        sp, dp = f"{src}/{fn}", f"{dst}/{fn}"
-        if table not in REPLICATED:
-            shutil.copyfile(sp, dp)
-            print(f"copied   {table}")
-            continue
-        id_cols = REPLICATED[table]
+    for table, id_cols in REPLICATED.items():
+        sp, dp = f"{src}/{table}.parquet", f"{dst}/{table}.parquet"
         cols = [c[0] for c in con.sql(f"DESCRIBE SELECT * FROM '{sp}'").fetchall()]
         # stride = next power of 10 above the max id, so replica ids
         # are disjoint AND human-readable (replica k = leading digit).

@@ -198,53 +198,6 @@ def main() -> int:
         run_media(f"media-monster {media_monster}x, mega_media_chunk=256", 256),
     ]
 
-    # ---- scenario group 3: hot-user sessionization (two-phase) ----
-    import tempfile
-
-    from blackedge_ocr_spark import queries as Q
-
-    bot_n = int(os.environ.get("SPARK_GRAFT_BOT_EVENTS", "2000000"))
-    ev_dir = tempfile.mkdtemp(prefix="skew_events_")
-    base_ev = spark.range(0, bot_n, 1, cpus * 4).select(
-        F.col("id").alias("event_id"),
-        # 97% of events belong to bot user 0, bursts of 200 events
-        # 1 s apart then a 1-hour gap; the rest spread over 4k users.
-        F.when(F.col("id") % 32 != 0, F.lit(0))
-        .otherwise(F.pmod(F.col("id"), F.lit(4096)))
-        .alias("user_id"),
-        F.timestamp_micros(
-            (
-                F.lit(1_700_000_000_000_000)
-                + (F.col("id") / F.lit(200)).cast("long") * F.lit(3_600_000_000)
-                + F.pmod(F.col("id"), F.lit(200)) * F.lit(1_000_000)
-            ).cast("long")
-        ).cast("timestamp_ntz").alias("ts"),
-        F.lit("click").alias("event_type"),
-        (F.pmod(F.col("id"), F.lit(97)) / F.lit(10.0)).alias("value"),
-        F.lit('{"k": 1}').alias("props"),
-    )
-    base_ev.write.mode("overwrite").parquet(f"{ev_dir}/events.parquet")
-
-    def run_sessions(name: str, fn) -> dict:
-        mark = last_stage_id(ui, app_id)
-        t0 = time.time()
-        fn(spark, ev_dir).write.format("noop").mode("overwrite").save()
-        wall = time.time() - t0
-        stats = scenario_stats(ui, app_id, mark)
-        row = {"scenario": name, "wall_s": round(wall, 2), **{
-            k: round(v, 2) if isinstance(v, float) else v
-            for k, v in stats.items()
-        }}
-        print(json.dumps(row))
-        return row
-
-    sess_rows = [
-        run_sessions(f"bot-user {bot_n} events, single-phase", Q.q_user_sessions),
-        run_sessions(f"bot-user {bot_n} events, two-phase", Q.q_user_sessions_2p),
-    ]
-    n_a = Q.q_user_sessions(spark, ev_dir).count()
-    n_b = Q.q_user_sessions_2p(spark, ev_dir).count()
-    print(f"session-count parity: single={n_a} two-phase={n_b}")
     spark.stop()
 
     n_docs = None
@@ -287,26 +240,6 @@ def main() -> int:
         "|---|---|---|---|---|---|",
     ]
     for r in media_rows:
-        md.append(
-            f"| {r['scenario']} | {r['wall_s']} | {r['n_tasks']} "
-            f"| {r['p50_s']} | {r['p99_s']} | {r['max_s']} |"
-        )
-    md += [
-        "",
-        "## Sessionization skew: one bot user",
-        "",
-        f"{bot_n} events, ~97% from one bot user (1 s bursts, hourly",
-        "gaps), rest across 4k users. Single-phase sessionization sorts",
-        "the whole bot timeline in ONE window task; the two-phase",
-        "variant (q_user_sessions_2p) pre-sessionizes within",
-        "(user, hour-bucket) partitions and merges boundary sessions —",
-        "same output (both hash-match sql_user_sessions in",
-        "CORRECTNESS), bounded task size.",
-        "",
-        "| scenario | wall s | tasks | task p50 s | task p99 s | task max s |",
-        "|---|---|---|---|---|---|",
-    ]
-    for r in sess_rows:
         md.append(
             f"| {r['scenario']} | {r['wall_s']} | {r['n_tasks']} "
             f"| {r['p50_s']} | {r['p99_s']} | {r['max_s']} |"
