@@ -65,11 +65,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivf_kmeans_topk": q.q_ann_ivf_kmeans_topk,
         "ann_recall": q.q_ann_recall,
         "dim_recall": q.q_dim_recall,
-        "pagerank": q.q_pagerank,
-        "trustrank": q.q_trustrank,
-        "link_hits": q.q_link_hits,
-        "triangle_stats": q.q_triangle_stats,
-        "label_propagation": q.q_label_propagation,
         "embedding_neardup": q.q_embedding_neardup,
         "embedding_neardup_lsh": q.q_embedding_neardup_lsh,
         "neardup_recall": q.q_neardup_recall,

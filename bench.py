@@ -69,9 +69,6 @@ BENCH_QUERIES = (
     "gopher_repetition",
     "source_drift",
     "lm2_scores",
-    "pagerank",
-    "link_hits",
-    "triangle_stats",
 )
 
 

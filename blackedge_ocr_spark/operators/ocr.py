@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 from blackedge_ocr_spark.constants import MEDIA_KINDS
 
 
-def fake_ocr_text(provider: str, media_ref: str, burn: int = 0) -> str:
+def fake_ocr_text(provider: str, media_ref: str) -> str:
     """Deterministic stand-in for model inference on one media span.
 
     Shaped like a real page transcript (>=100 chars, >=20 words,
@@ -36,22 +36,8 @@ def fake_ocr_text(provider: str, media_ref: str, burn: int = 0) -> str:
     embedded values are a hash of (provider, media_ref), so two
     providers disagree on numbers — which is exactly what the
     number-frequency cross-validation is built to catch.
-
-    ``burn`` is bench-only cost emulation: a real OCR model costs
-    milliseconds per page where this md5 costs microseconds, which
-    would make skew experiments on the inference stage unmeasurable.
-    It burns extra hash rounds WITHOUT changing the output (the
-    transcript stays a pure function of provider:media_ref). It is an
-    explicit closure parameter, NOT an env var, because worker env is
-    frozen when the UDF/daemon first spin up — an os.environ mutation
-    in the driver after that never reaches the executors.
-    Default 0 = production behavior.
     """
     h = hashlib.md5(f"{provider}:{media_ref}".encode("utf-8")).hexdigest()
-    if burn:
-        x = h.encode()
-        for _ in range(burn):
-            x = hashlib.md5(x).digest()
     nums = [int(h[i : i + 4], 16) for i in range(0, 16, 4)]
     return (
         f"Extracted by {provider} ocr engine from {media_ref}. "
@@ -61,7 +47,10 @@ def fake_ocr_text(provider: str, media_ref: str, burn: int = 0) -> str:
     )
 
 
-def make_ocr_text_map(burn: int = 0):
+@F.pandas_udf(T.MapType(T.IntegerType(), T.StringType()))
+def _ocr_text_map(
+    offsets: pd.Series, media_refs: pd.Series, provider: pd.Series
+) -> pd.Series:
     """Arrow-batched OCR-classify returning the offset→text map
     DIRECTLY, so the map reaches ``fill_media_text`` as an
     ArrowEvalPython output attribute. That placement is the point: a
@@ -74,34 +63,16 @@ def make_ocr_text_map(burn: int = 0):
     (pdfplumber cannot OCR; reference:
     src/services/workflows/text_extraction_handler.py:96-150) and no
     model would be invoked for the batch entry.
-
-    Factory shape so ``burn`` (see ``fake_ocr_text``) rides inside the
-    pickled closure to the workers.
     """
-
-    @F.pandas_udf(T.MapType(T.IntegerType(), T.StringType()))
-    def _map(
-        offsets: pd.Series, media_refs: pd.Series, provider: pd.Series
-    ) -> pd.Series:
-        out = []
-        for offs, refs, prov in zip(offsets, media_refs, provider):
-            offs = list(offs) if offs is not None else []
-            refs = list(refs) if refs is not None else []
-            if prov == "pdfplumber":
-                out.append({int(o): "" for o in offs})
-            else:
-                out.append(
-                    {
-                        int(o): fake_ocr_text(prov, r, burn)
-                        for o, r in zip(offs, refs)
-                    }
-                )
-        return pd.Series(out)
-
-    return _map
-
-
-_ocr_text_map = make_ocr_text_map()
+    out = []
+    for offs, refs, prov in zip(offsets, media_refs, provider):
+        offs = list(offs) if offs is not None else []
+        refs = list(refs) if refs is not None else []
+        if prov == "pdfplumber":
+            out.append({int(o): "" for o in offs})
+        else:
+            out.append({int(o): fake_ocr_text(prov, r) for o, r in zip(offs, refs)})
+    return pd.Series(out)
 
 
 def _is_media(s) -> Column:
@@ -145,7 +116,7 @@ def first_per_offset(media: Column) -> Column:
     )
 
 
-def ocr_media_map(media_spans: Column, provider: Column, burn: int = 0) -> Column:
+def ocr_media_map(media_spans: Column, provider: Column) -> Column:
     """map<offset, ocr_text> for the (pre-filtered, offset-deduped)
     media spans of a document, produced INSIDE the Arrow UDF.
 
@@ -153,12 +124,11 @@ def ocr_media_map(media_spans: Column, provider: Column, burn: int = 0) -> Colum
     Python UDFs nested inside higher-order-function lambdas, and only
     offsets + media refs should cross the Arrow boundary anyway. The
     map being a UDF output (not a JVM map_from_arrays) is what keeps
-    ``fill_media_text`` linear: see ``make_ocr_text_map``.
+    ``fill_media_text`` linear: see ``_ocr_text_map``.
     """
     offsets = F.transform(media_spans, lambda s: s["offset"])
     refs = F.transform(media_spans, lambda s: s["media_ref"])
-    fn = make_ocr_text_map(burn) if burn else _ocr_text_map
-    return fn(offsets, refs, provider)
+    return _ocr_text_map(offsets, refs, provider)
 
 
 def fill_media_text(sorted_spans: Column, ocr_map: Column) -> Column:

@@ -115,12 +115,6 @@ def count_exchanges(df: DataFrame) -> int:
     return plan_counts(formatted_plan(df))["exchanges"]
 
 
-def count_cache_build_exchanges(df: DataFrame) -> int:
-    """Shuffles inside persisted-table build subtrees: paid once when
-    the cache fills, not per downstream consumer."""
-    return plan_counts(formatted_plan(df))["cache_exchanges"]
-
-
 def count_python_stages(df: DataFrame) -> int:
     """Distinct Arrow/Python evaluation nodes (UDF boundaries) the
     query executes (cache-build subtrees excluded)."""

@@ -558,60 +558,6 @@ def q_ann_recall(spark, sf_dir) -> DataFrame:
     )
 
 
-def q_pagerank(spark, sf_dir) -> DataFrame:
-    """Integer PageRank over the deterministically-staged link graph
-    (hub + quadratic + linear edges): the host/page centrality prior
-    web curation stacks feed into crawl priority and quality scoring.
-    Exact int64 nano-unit arithmetic — bit-parity by construction."""
-    from blackedge_ocr_spark.analysis import linkgraph
-
-    d = spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-    return linkgraph.pagerank(d)
-
-
-def q_trustrank(spark, sf_dir) -> DataFrame:
-    """Seed-teleport PageRank (TrustRank): rank mass decays with
-    link distance from the trusted hub seed set — the spam-demotion
-    prior; same exact-int64 iteration as pagerank."""
-    from blackedge_ocr_spark.analysis import linkgraph
-
-    d = spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-    return linkgraph.trustrank(d)
-
-
-def q_link_hits(spark, sf_dir) -> DataFrame:
-    """HITS hubs/authorities over the same staged link graph as
-    pagerank/trustrank — the mutual-reinforcement centrality pair
-    (good hubs point at good authorities); ceil-ratio integer
-    normalization keeps every sweep exact int64."""
-    from blackedge_ocr_spark.analysis import linkgraph
-
-    d = spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-    return linkgraph.hits(d)
-
-
-def q_triangle_stats(spark, sf_dir) -> DataFrame:
-    """Exact triangle census + global clustering coefficient via the
-    degree-ordered orientation — O(E^1.5) with hub-skew immunity
-    (oriented out-degree is O(sqrt E)); the crawl-snapshot topology
-    sanity check."""
-    from blackedge_ocr_spark.analysis import linkgraph
-
-    d = spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-    return linkgraph.triangle_stats(d)
-
-
-def q_label_propagation(spark, sf_dir) -> DataFrame:
-    """Deterministic label-propagation communities over the link
-    graph (most-frequent neighbor label, smallest-label tie-break)
-    — the community-detection member of the graph family; packed
-    int64 argmax, no sort, per-sweep checkpointed labels."""
-    from blackedge_ocr_spark.analysis import linkgraph
-
-    d = spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-    return linkgraph.label_propagation(d)
-
-
 def q_dim_recall(spark, sf_dir) -> DataFrame:
     """recall@5 of truncated-prefix (Matryoshka) exact scans vs the
     full-dim baseline, all cuts scored in ONE corpus pass — the curve

@@ -53,10 +53,11 @@ def build_session(
 
 def spread_if_starved(df, target: int | None = None, *cols):
     """Split-starvation gate, shared by every scan-side widen in the
-    engine (documents `_docs`, events `q_event_rollup`, embeddings
-    banding): repartition ONLY when the scan yields fewer partitions
-    than cores — the sf test parquet arrives as one split; fewer scan
-    tasks than cores serializes every per-row stage. At real scale
+    engine (``queries._docs``, ``segmentation.htmlify_documents``,
+    ``analysis.ann._spread`` for embeddings): repartition ONLY when
+    the scan yields fewer partitions than cores — the sf test parquet
+    arrives as one split; fewer scan tasks than cores serializes
+    every per-row stage. At real scale
     the scan itself yields thousands of splits and this is a no-op —
     an unconditional repartition there would shuffle the full input
     to buy nothing. ``target`` overrides the widen width (default

@@ -719,11 +719,6 @@ def build_oracles() -> dict[str, str]:
         "ann_ivf_kmeans_topk": sql_ann_ivf_kmeans_topk(),
         "ann_recall": sql_ann_recall(),
         "dim_recall": sql_dim_recall(),
-        "pagerank": sql_pagerank(),
-        "trustrank": sql_trustrank(),
-        "link_hits": sql_hits(),
-        "triangle_stats": sql_triangle_stats(),
-        "label_propagation": sql_label_propagation(),
         "embedding_neardup": sql_embedding_neardup(),
         "embedding_neardup_lsh": sql_embedding_neardup_lsh(),
         "neardup_recall": sql_neardup_recall(),
@@ -1584,251 +1579,6 @@ SELECT dims, n_queries, hits,
        floor(hits::double / (n_queries * {k})::double * 1e6 + 0.5) / 1e6
          AS recall
 FROM hits, nq"""
-
-
-def _sql_rank_core(r0_expr: str, base_expr: str, iters: int) -> str:
-    """Shared unrolled-CTE chain for the integer rank family —
-    ``r0_expr``/``base_expr`` are SQL over (n CROSS JOIN cnt c) that
-    give the start mass and the per-iteration teleport per node.
-    Every operation is int64 (``//`` floor division == Spark ``div``
-    on the nonnegative operands here; exact sums), so parity is by
-    construction — no rounding grid, no fold order. Constants track
-    the live linkgraph module (no-drift rule)."""
-    from blackedge_ocr_spark.analysis import linkgraph as lg
-
-    parts = [
-        "n AS (SELECT doc_id::bigint AS doc_id FROM documents)",
-        "cnt AS (SELECT count(*)::bigint AS n, "
-        f"count(*) FILTER (WHERE doc_id < {lg.PR_HUBS})::bigint AS k "
-        "FROM n)",
-        f"""edges AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT doc_id AS src, doc_id % {lg.PR_HUBS} AS dst FROM n
-    UNION ALL
-    SELECT doc_id, (doc_id * doc_id + 1) % c.n FROM n, cnt c
-    UNION ALL
-    SELECT doc_id, (doc_id * 3 + 7) % c.n FROM n, cnt c)
-  WHERE src != dst AND dst IN (SELECT doc_id FROM n))""",
-        "od AS (SELECT src, count(*)::bigint AS od FROM edges GROUP BY src)",
-        f"r0 AS (SELECT doc_id, ({r0_expr})::bigint AS r FROM n, cnt c)",
-    ]
-    for i in range(1, iters + 1):
-        parts += [
-            f"""s{i} AS (
-  SELECT e.dst, sum(r.r // o.od)::bigint AS s
-  FROM edges e
-  JOIN r{i - 1} r ON r.doc_id = e.src
-  JOIN od o ON o.src = e.src
-  GROUP BY e.dst)""",
-            f"""r{i} AS (
-  SELECT n.doc_id,
-         (({base_expr})
-          + ({lg.PR_DAMP_NUM} * coalesce(s.s, 0))
-            // {lg.PR_DAMP_DEN})::bigint AS r
-  FROM n CROSS JOIN cnt c LEFT JOIN s{i} s ON s.dst = n.doc_id)""",
-        ]
-    ctes = ",\n".join(parts)
-    return f"""
-WITH {ctes},
-ind AS (SELECT dst, count(*)::bigint AS in_deg FROM edges GROUP BY dst)
-SELECT n.doc_id,
-       coalesce(o.od, 0)::bigint AS out_deg,
-       coalesce(i.in_deg, 0)::bigint AS in_deg,
-       r.r AS rank
-FROM n
-LEFT JOIN od o ON o.src = n.doc_id
-LEFT JOIN ind i ON i.dst = n.doc_id
-JOIN r{iters} r ON r.doc_id = n.doc_id"""
-
-
-def sql_hits(iters: int | None = None) -> str:
-    """linkgraph.hits mirror: same edge staging CTEs as the rank
-    family, unrolled authority/hub sweeps with the identical
-    ceil-ratio floor normalization (``greatest((max+NANO-1)//NANO,
-    1)``) — exact int64, parity by construction."""
-    from blackedge_ocr_spark.analysis import linkgraph as lg
-
-    it = iters if iters is not None else lg.HITS_ITERS
-    if it < 1:
-        raise ValueError("sql_hits requires iters >= 1")
-    nano = lg.NANO
-    parts = [
-        "n AS (SELECT doc_id::bigint AS doc_id FROM documents)",
-        "cnt AS (SELECT count(*)::bigint AS n FROM n)",
-        f"""edges AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT doc_id AS src, doc_id % {lg.PR_HUBS} AS dst FROM n
-    UNION ALL
-    SELECT doc_id, (doc_id * doc_id + 1) % c.n FROM n, cnt c
-    UNION ALL
-    SELECT doc_id, (doc_id * 3 + 7) % c.n FROM n, cnt c)
-  WHERE src != dst AND dst IN (SELECT doc_id FROM n))""",
-        f"h0 AS (SELECT doc_id, {nano}::bigint AS h FROM n)",
-    ]
-    for i in range(1, it + 1):
-        parts += [
-            f"""ar{i} AS (
-  SELECT n.doc_id, coalesce(s.a, 0)::bigint AS a
-  FROM n LEFT JOIN (
-    SELECT e.dst, sum(h.h)::bigint AS a
-    FROM edges e JOIN h{i - 1} h ON h.doc_id = e.src
-    GROUP BY e.dst) s ON s.dst = n.doc_id)""",
-            f"""am{i} AS (
-  SELECT greatest((max(a) + {nano - 1}) // {nano}, 1)::bigint AS d
-  FROM ar{i})""",
-            f"a{i} AS (SELECT doc_id, (a // d)::bigint AS a "
-            f"FROM ar{i}, am{i})",
-            f"""hr{i} AS (
-  SELECT n.doc_id, coalesce(s.h, 0)::bigint AS h
-  FROM n LEFT JOIN (
-    SELECT e.src, sum(a.a)::bigint AS h
-    FROM edges e JOIN a{i} a ON a.doc_id = e.dst
-    GROUP BY e.src) s ON s.src = n.doc_id)""",
-            f"""hm{i} AS (
-  SELECT greatest((max(h) + {nano - 1}) // {nano}, 1)::bigint AS d
-  FROM hr{i})""",
-            f"h{i} AS (SELECT doc_id, (h // d)::bigint AS h "
-            f"FROM hr{i}, hm{i})",
-        ]
-    ctes = ",\n".join(parts)
-    return f"""
-WITH {ctes}
-SELECT n.doc_id, a.a AS authority, h.h AS hub
-FROM n
-JOIN a{it} a ON a.doc_id = n.doc_id
-JOIN h{it} h ON h.doc_id = n.doc_id"""
-
-
-def sql_label_propagation(iters: int | None = None) -> str:
-    """linkgraph.label_propagation mirror: same undirected edges,
-    unrolled sweeps with the identical two-step argmax (max count, min label among ties)."""
-    from blackedge_ocr_spark.analysis import linkgraph as lg
-
-    it = iters if iters is not None else lg.LPA_ITERS
-    parts = [
-        "n AS (SELECT doc_id::bigint AS doc_id FROM documents)",
-        "cnt AS (SELECT count(*)::bigint AS n FROM n)",
-        f"""edges AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT doc_id AS src, doc_id % {lg.PR_HUBS} AS dst FROM n
-    UNION ALL
-    SELECT doc_id, (doc_id * doc_id + 1) % c.n FROM n, cnt c
-    UNION ALL
-    SELECT doc_id, (doc_id * 3 + 7) % c.n FROM n, cnt c)
-  WHERE src != dst AND dst IN (SELECT doc_id FROM n))""",
-        """und AS (SELECT DISTINCT v, u FROM (
-  SELECT src AS v, dst AS u FROM edges
-  UNION ALL SELECT dst, src FROM edges))""",
-        "l0 AS (SELECT doc_id, doc_id AS lbl FROM n)",
-    ]
-    for i in range(1, it + 1):
-        parts += [
-            f"""g{i} AS (
-  SELECT e.v, l.lbl, count(*)::bigint AS cnt2
-  FROM und e JOIN l{i - 1} l ON l.doc_id = e.u
-  GROUP BY e.v, l.lbl)""",
-            f"""m{i} AS (
-  SELECT v, max(cnt2) AS mc FROM g{i} GROUP BY v)""",
-            f"""p{i} AS (
-  SELECT g.v, min(g.lbl)::bigint AS win
-  FROM g{i} g JOIN m{i} m ON m.v = g.v AND g.cnt2 = m.mc
-  GROUP BY g.v)""",
-            f"""l{i} AS (
-  SELECT n.doc_id,
-         coalesce(p.win, n.doc_id)::bigint AS lbl
-  FROM n LEFT JOIN p{i} p ON p.v = n.doc_id)""",
-        ]
-    ctes = ",\n".join(parts)
-    return f"""
-WITH {ctes},
-sizes AS (SELECT lbl, count(*)::bigint AS community_size
-          FROM l{it} GROUP BY lbl)
-SELECT l.doc_id, l.lbl AS label, s.community_size
-FROM l{it} l JOIN sizes s ON s.lbl = l.lbl"""
-
-
-def sql_triangle_stats() -> str:
-    """linkgraph.triangle_stats mirror: same undirected-ize, same
-    componentwise (deg, id) total order, same oriented wedge join + semi
-    closure; clustering rounded with the identical op sequence."""
-    from blackedge_ocr_spark.analysis import linkgraph as lg
-
-    return f"""
-WITH n AS (SELECT doc_id::bigint AS doc_id FROM documents),
-cnt AS (SELECT count(*)::bigint AS n FROM n),
-edges AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT doc_id AS src, doc_id % {lg.PR_HUBS} AS dst FROM n
-    UNION ALL
-    SELECT doc_id, (doc_id * doc_id + 1) % c.n FROM n, cnt c
-    UNION ALL
-    SELECT doc_id, (doc_id * 3 + 7) % c.n FROM n, cnt c)
-  WHERE src != dst AND dst IN (SELECT doc_id FROM n)),
-und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        FROM edges),
-deg AS (SELECT v, count(*)::bigint AS deg FROM (
-          SELECT a AS v FROM und UNION ALL SELECT b FROM und)
-        GROUP BY v),
-o AS (
-  SELECT CASE WHEN ka.deg < kb.deg
-              OR (ka.deg = kb.deg AND u.a < u.b)
-         THEN u.a ELSE u.b END AS u,
-         CASE WHEN ka.deg < kb.deg
-              OR (ka.deg = kb.deg AND u.a < u.b)
-         THEN u.b ELSE u.a END AS w,
-         CASE WHEN ka.deg < kb.deg
-              OR (ka.deg = kb.deg AND u.a < u.b)
-         THEN kb.deg ELSE ka.deg END AS dw
-  FROM und u
-  JOIN deg ka ON ka.v = u.a
-  JOIN deg kb ON kb.v = u.b),
-wed AS (
-  SELECT e1.w AS x, e2.w AS y
-  FROM o e1 JOIN o e2
-    ON e1.u = e2.u
-   AND (e1.dw < e2.dw OR (e1.dw = e2.dw AND e1.w < e2.w))),
-tri AS (
-  SELECT count(*)::bigint AS n_triangles
-  FROM wed SEMI JOIN o ON o.u = wed.x AND o.w = wed.y),
-m AS (
-  SELECT (SELECT count(*)::bigint FROM deg) AS n_nodes,
-         (SELECT count(*)::bigint FROM und) AS n_edges,
-         (SELECT sum(deg * (deg - 1) // 2)::bigint FROM deg)
-           AS n_wedges)
-SELECT n_nodes, n_edges, n_wedges, n_triangles,
-       CASE WHEN n_wedges > 0
-            THEN floor((3 * n_triangles)::double / n_wedges
-                       * 1e6 + 0.5) / 1e6
-            ELSE 0.0 END AS clustering
-FROM m, tri"""
-
-
-def sql_pagerank(iters: int | None = None) -> str:
-    """linkgraph.pagerank mirror: uniform teleport over all nodes."""
-    from blackedge_ocr_spark.analysis import linkgraph as lg
-
-    it = iters if iters is not None else lg.PR_ITERS
-    return _sql_rank_core(
-        f"{lg.NANO} // c.n",
-        f"(15::bigint * {lg.NANO}) // (100 * c.n)",
-        it,
-    )
-
-
-def sql_trustrank(iters: int | None = None) -> str:
-    """linkgraph.trustrank mirror: teleport and start mass go ONLY
-    to the seed set (doc_id < PR_HUBS; count k in the cnt CTE) —
-    same shared chain, different two expressions."""
-    from blackedge_ocr_spark.analysis import linkgraph as lg
-
-    it = iters if iters is not None else lg.PR_ITERS
-    seed = f"n.doc_id < {lg.PR_HUBS}"
-    return _sql_rank_core(
-        f"CASE WHEN {seed} THEN {lg.NANO} // greatest(c.k, 1) ELSE 0 END",
-        f"CASE WHEN {seed} THEN (15::bigint * {lg.NANO})"
-        f" // (100 * greatest(c.k, 1)) ELSE 0 END",
-        it,
-    )
 
 
 def sql_embedding_neardup() -> str:

@@ -29,12 +29,6 @@ def main(argv=None) -> int:
                     help="cap batches this invocation (resume later)")
     ap.add_argument("--from-html", action="store_true",
                     help="ingest via the HTML segmentation stage")
-    ap.add_argument("--mega-chunk", type=int, default=None,
-                    help="span-count threshold/slice size for the "
-                    "mega-document split path: documents above it run "
-                    "every span-linear stage chunk-parallel (see "
-                    "pipeline.extract_documents mega_media_chunk; "
-                    "size to the per-task model budget, e.g. 256)")
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
@@ -55,14 +49,10 @@ def main(argv=None) -> int:
         )
 
         docs = segment_documents(htmlify_documents(spark, args.sf_dir))
-        transform = lambda d: extract_documents(
-            d, query_col=None, mega_media_chunk=args.mega_chunk
-        )
+        transform = lambda d: extract_documents(d, query_col=None)
     else:
         docs = spansify_documents(spark, args.sf_dir)
-        transform = lambda d: extract_documents(
-            d, query_col="query", mega_media_chunk=args.mega_chunk
-        )
+        transform = lambda d: extract_documents(d, query_col="query")
 
     report = run_with_checkpoint(
         spark,

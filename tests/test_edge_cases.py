@@ -2,6 +2,7 @@
 single-span docs, mega-doc ordering."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from blackedge_ocr_spark.pipeline import extract_documents
 from blackedge_ocr_spark.schema import DOCUMENTS_SCHEMA
@@ -81,26 +82,43 @@ def test_duplicate_media_offsets_first_wins(spark):
     assert all("m-dup-a" in t for t in media_texts)
     assert out["pages"] == 4
 
-def test_mega_media_chunk_parity(spark):
-    """The split-process-reassemble OCR path (mega_media_chunk) must be
-    invisible in the output: a monster doc with many media spans —
-    including a duplicate offset (first-wins) and a validating
-    workflow — produces byte-identical rows with and without it, and
-    small docs below the threshold are untouched."""
+def _assert_matches_oracle(got, want):
+    """One engine row against ``oracle.expected_result``: every
+    RESULT_SCHEMA column, spans and problem labels exactly."""
+    doc_id = want["doc_id"]
+    assert [tuple(s) for s in got["out_spans"]] == want["out_spans"], doc_id
+    assert [
+        (p["offset"], list(p["labels"])) for p in got["problems"]
+    ] == want["problems"], doc_id
+    for col in ("workflow", "content", "used_secondary", "reason", "pages",
+                "provider"):
+        assert got[col] == want[col], (doc_id, col)
+    if want["similarity"] is None:
+        assert got["similarity"] is None, doc_id
+    else:
+        assert got["similarity"] == pytest.approx(
+            want["similarity"], abs=1e-12
+        ), doc_id
+
+
+def test_many_span_docs_match_oracle(spark):
+    """Documents with many spans — a late duplicate offset (first-wins),
+    an equal-offset media run, validating and non-validating
+    workflows — next to a small and an empty one: every row equals
+    the Python oracle's."""
+    from blackedge_ocr_spark import oracle
+
     mega_spans = []
     for i in range(97):
         if i % 3 == 0:
             mega_spans.append(("image", "", f"m-big-{i}", i))
         else:
             mega_spans.append(("text", f"body text number {i} with words", "", i))
-    # duplicate offset vs the image span already at offset 0 —
-    # exercises first-wins dedup ahead of the chunk split
+    # duplicate offset vs the image span already at offset 0, stored
+    # last: the sort must still give both spans the FIRST ref's text
     mega_spans.append(("image", "", "m-dup-late", 0))
-    # Straddle doc: an equal-offset media run sits EXACTLY on the
-    # chunk=8 boundary (positions 7 and 8 share offset 7) — the
-    # chunked path must still give the run's second span the FIRST
-    # ref's OCR text (run-safe chunk ids), byte-matching the base
-    # path's global first-wins fill.
+    # two media spans share offset 7 (positions 7 and 8 of the sorted
+    # array): both must carry the first ref's OCR text
     straddle_spans = [
         ("text", f"lead text value {i} here", "", i) for i in range(7)
     ] + [
@@ -116,19 +134,18 @@ def test_mega_media_chunk_parity(spark):
         ("small", [("image", "", "m-sm-0", 0), ("text", "tiny body", "", 1)], "extract data", None),
         ("empty", [], "extract data", None),
     ]
-    df = _df(spark, rows)
-    cols = ["doc_id", "out_spans", "problems", "content", "used_secondary",
-            "similarity", "reason", "pages", "provider"]
-    base = {r["doc_id"]: r for r in extract_documents(df, query_col="query").select(*cols).collect()}
-    split = {r["doc_id"]: r for r in extract_documents(
-        df, query_col="query", mega_media_chunk=8
-    ).select(*cols).collect()}
-    assert base.keys() == split.keys()
-    for k in base:
-        assert base[k] == split[k], k
-    # the straddle run really did take the first ref's text on BOTH spans
-    st = split["straddle"]["out_spans"]
-    run = [s for s in st if s["offset"] == 7]
+    got = {
+        r["doc_id"]: r
+        for r in extract_documents(_df(spark, rows), query_col="query").collect()
+    }
+    assert got.keys() == {r[0] for r in rows}
+    assert got["mega2"]["workflow"] == "text_extraction"
+    for doc_id, spans, query, _ in rows:
+        _assert_matches_oracle(
+            got[doc_id], oracle.expected_result(doc_id, spans, query)
+        )
+    # the equal-offset run really did take the first ref's text on both spans
+    run = [s for s in got["straddle"]["out_spans"] if s["offset"] == 7]
     assert len(run) == 2 and run[0]["text"] == run[1]["text"]
     assert "m-straddle-first" in run[0]["text"]
 
@@ -190,24 +207,41 @@ def test_control_separator_whitespace_parity(spark):
         assert got[i] == oracle.normalize_text(t), repr(t)
 
 
-def test_mega_chunk_parity_other_sim_methods(spark):
-    """Non-default similarity methods on a mega doc take the in-row
-    path over the chunk-MERGED contents — must still byte-match the
-    unchunked pipeline."""
-    spans = []
+def test_other_sim_methods_match_oracle(spark):
+    """40-span validating documents under the non-default similarity
+    methods equal the Python oracle's rows. Short spans trip the
+    quality checks (stage 1 decides, no similarity); the prose
+    document passes them, so each method's similarity decides."""
+    from blackedge_ocr_spark import oracle
+
+    short, prose = [], []
     for i in range(40):
         if i % 4 == 0:
-            spans.append(("image", "", f"m-os-{i}", i))
+            short.append(("image", "", f"m-os-{i}", i))
+            prose.append(("image", "", f"m-os-{i}", i))
         else:
-            spans.append(("text", f"steady prose segment {i} with words", "", i))
-    df = _df(spark, [("m1", spans, "extract data", None)])
-    cols = ["doc_id", "content", "similarity", "used_secondary", "reason"]
+            short.append(("text", f"steady prose segment {i} with words", "", i))
+            prose.append((
+                "text",
+                f"Paragraph {i} of the quarterly report lists revenue of "
+                f"{i * 37} units and costs of {i * 11} units, with a margin "
+                "that stays steady across every region we track.",
+                "",
+                i,
+            ))
+    rows = [("m1", short, "extract data", None), ("m2", prose, "extract data", None)]
+    df = _df(spark, rows)
     for method in ("word_overlap", "cosine", "levenshtein"):
-        base = extract_documents(
-            df, query_col="query", similarity_method=method
-        ).select(*cols).collect()[0]
-        split = extract_documents(
-            df, query_col="query", similarity_method=method,
-            mega_media_chunk=8,
-        ).select(*cols).collect()[0]
-        assert base == split, method
+        got = {
+            r["doc_id"]: r
+            for r in extract_documents(
+                df, query_col="query", similarity_method=method
+            ).collect()
+        }
+        for doc_id, spans, query, _ in rows:
+            want = oracle.expected_result(
+                doc_id, spans, query, similarity_method=method
+            )
+            _assert_matches_oracle(got[doc_id], want)
+        assert got["m1"]["reason"] == "quality_issues", method
+        assert got["m2"]["similarity"] is not None, method

@@ -275,3 +275,19 @@ def test_pushed_bucket_filter_keeps_bucket_membership(spark, tmp_path):
     assert len(expected) == 500
     assert {r["part_id"] for r in expected} == {0, 1, 2, 3}
     assert sorted(map(tuple, written.collect())) == sorted(map(tuple, expected))
+
+
+def test_flagship_leaves_no_cached_frame(spark, tmp_path):
+    """extract_documents and a checkpointed run over it persist
+    nothing they do not release: the session's CacheManager holds as
+    many frames afterwards as before."""
+    from blackedge_ocr_spark import plans
+
+    before = plans.cached_frame_count(spark)
+    docs = spansify_documents(spark, SF)
+    assert len(extract_documents(docs, query_col="query").collect()) == 500
+    run_with_checkpoint(
+        spark, docs, _transform, str(tmp_path / "ckpt"), n_buckets=4,
+        buckets_per_batch=2,
+    )
+    assert plans.cached_frame_count(spark) == before

@@ -88,11 +88,6 @@ REPORT_QUERIES = (
     "bloom_probe",
     "sampled_quantiles",
     "lang_confusion",
-    "pagerank",
-    "trustrank",
-    "link_hits",
-    "triangle_stats",
-    "label_propagation",
 )
 
 

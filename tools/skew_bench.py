@@ -136,71 +136,8 @@ def main() -> int:
         run("skew1000x + naive (no repartition)", monster=True, spread=False),
     ]
 
-    # ---- scenario group 2: media-monster OCR (mega_media_chunk) ----
-    # One document with MEDIA_MONSTER media spans, everyone else ~10.
-    # SPARK_GRAFT_OCR_BURN emulates per-page model latency (~1 ms) so
-    # the inference stage dominates like it would with a real model;
-    # without it the md5 stand-in finishes 20k pages in ~50 ms and no
-    # partitioning strategy is measurable.
-    media_monster = int(os.environ.get("SPARK_GRAFT_MEDIA_MONSTER", "20000"))
-    # Threaded as an explicit UDF-closure parameter (ocr_burn), NOT an
-    # env mutation — worker env is frozen once the first daemon spins
-    # up, so os.environ changes here never reach executors.
-    ocr_burn = int(os.environ.get("SPARK_GRAFT_OCR_BURN", "1000"))
-
-    def media_corpus():
-        d = spark.range(0, 512, 1, cpus * 4).select(
-            F.col("id").cast("string").alias("doc_id"),
-            F.lit("extract data").alias("query"),
-        )
-        n = F.when(F.col("doc_id") == "7", media_monster).otherwise(10)
-        spans = F.transform(
-            F.sequence(F.lit(0), n.cast("int") - 1),
-            lambda i: F.struct(
-                F.when((F.col("doc_id") == "7") | (i % 3 == 0), "image")
-                .otherwise("text")
-                .alias("kind"),
-                F.when(
-                    (F.col("doc_id") == "7") | (i % 3 == 0), ""
-                )
-                .otherwise(F.concat(F.lit("plain body words number "), i))
-                .alias("text"),
-                F.when(
-                    (F.col("doc_id") == "7") | (i % 3 == 0),
-                    F.concat(F.lit("m-"), F.col("doc_id"), F.lit("-"), i),
-                )
-                .otherwise("")
-                .alias("media_ref"),
-                i.cast("int").alias("offset"),
-            ),
-        )
-        return d.select("doc_id", spans.alias("spans"), "query")
-
-    def run_media(name: str, chunk: int | None) -> dict:
-        mark = last_stage_id(ui, app_id)
-        t0 = time.time()
-        out = extract_documents(
-            media_corpus(), query_col="query", mega_media_chunk=chunk,
-            ocr_burn=ocr_burn,
-        )
-        out.write.format("noop").mode("overwrite").save()
-        wall = time.time() - t0
-        stats = scenario_stats(ui, app_id, mark)
-        row = {"scenario": name, "wall_s": round(wall, 2), **{
-            k: round(v, 2) if isinstance(v, float) else v
-            for k, v in stats.items()
-        }}
-        print(json.dumps(row))
-        return row
-
-    media_rows = [
-        run_media(f"media-monster {media_monster}x, one row (shipped default)", None),
-        run_media(f"media-monster {media_monster}x, mega_media_chunk=256", 256),
-    ]
-
     spark.stop()
 
-    n_docs = None
     md = [
         "# BENCH/SKEW — mega-document skew resilience",
         "",
@@ -215,31 +152,6 @@ def main() -> int:
         "|---|---|---|---|---|---|",
     ]
     for r in rows:
-        md.append(
-            f"| {r['scenario']} | {r['wall_s']} | {r['n_tasks']} "
-            f"| {r['p50_s']} | {r['p99_s']} | {r['max_s']} |"
-        )
-    md += [
-        "",
-        "## Mega-document skew: one media-monster document (ALL stages chunked)",
-        "",
-        f"512 docs, doc 7 carries {media_monster} media spans (everyone",
-        "else 10); per-page model latency emulated at ~1 ms via",
-        "SPARK_GRAFT_OCR_BURN (the md5 stand-in alone finishes 20k pages",
-        "in ~50 ms — nothing to defend against). Default path = the",
-        "monster is ONE Arrow batch entry in one task; chunked path =",
-        "mega_media_chunk=256 explodes the sorted spans into 256-span",
-        "slices and runs EVERY span-linear stage per slice (OCR, fill,",
-        "problem regexes, content segments, similarity features),",
-        "merging associatively; chunks are dealt round-robin with an",
-        "explicit partition count (AQE would coalesce them back into",
-        "one task). Output byte-identical incl. out_spans/problems,",
-        "tests/test_edge_cases.py.",
-        "",
-        "| scenario | wall s | tasks | task p50 s | task p99 s | task max s |",
-        "|---|---|---|---|---|---|",
-    ]
-    for r in media_rows:
         md.append(
             f"| {r['scenario']} | {r['wall_s']} | {r['n_tasks']} "
             f"| {r['p50_s']} | {r['p99_s']} | {r['max_s']} |"
