@@ -60,8 +60,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_jaccard": q.q_ngram_jaccard,
         "ann_topk": q.q_ann_topk,
         "ann_topk_served": q.q_ann_topk_served,
-        "ann_lsh_topk": q.q_ann_lsh_topk,
-        "ann_ivf_topk": q.q_ann_ivf_topk,
         "ann_ivf_kmeans_topk": q.q_ann_ivf_kmeans_topk,
         "ann_recall": q.q_ann_recall,
         "dim_recall": q.q_dim_recall,
@@ -69,8 +67,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_neardup_lsh": q.q_embedding_neardup_lsh,
         "neardup_recall": q.q_neardup_recall,
         "semantic_dedup": q.q_semantic_dedup,
-        "ann_sq8_topk": q.q_ann_sq8_topk,
-        "ann_pq_topk": q.q_ann_pq_topk,
         "ann_ivfpq_topk": q.q_ann_ivfpq_topk,
         "hll_distinct": q.q_hll_distinct,
         "cms_topk": q.q_cms_topk,

@@ -47,7 +47,6 @@ BENCH_QUERIES = (
     "doc_features",
     "quality_classifier",
     "semantic_dedup",
-    "ann_sq8_topk",
     "ann_ivfpq_probe",
     "hll_distinct",
     "cms_topk",

@@ -1,21 +1,27 @@
 """Similarity search over the embeddings table.
 
-Search entry points, all returning (q_id, rank, neighbor_id, cos):
-- ``brute_force_topk`` — exact cosine top-k; ``sq8_topk`` and
-  ``pq_topk`` score int8 / product-quantized codes instead. All three
-  run ``_scan_topk``: the (small) query matrix rides a broadcast and
-  each corpus partition is scored in place, so the corpus never
-  shuffles; only each query's partition-local winners reach the rank.
+Top-k entry points, all returning (q_id, rank, neighbor_id, cos) —
+one search per regime:
+- ``brute_force_topk`` — the exact cosine top-k (the reference every
+  recall number is measured against). It runs ``_scan_topk``: the
+  (small) query matrix rides a broadcast and each corpus partition is
+  scored in place, so the corpus never shuffles; only each query's
+  partition-local winners reach the rank. ``served_query_set`` is its
+  external, serving-shaped query table.
 - ``prefix_topk`` — the exact scan at several prefix dimension cuts
   in one pass (``dim_recall``'s kernel).
-- ``lsh_bucketed_topk`` — sign-hyperplane buckets + Hamming-1 probes;
-  hyperplane weights are md5-derived integer literals baked into the
-  plan (and into the DuckDB oracle) — no per-row hashing.
-- ``ivf_topk`` / ``ivf_kmeans_topk`` / ``probe_ivf_index`` — inverted
-  lists (sampled or k-means centroids, in memory or a cid-partitioned
-  index table), all searched by ``_ivf_search``.
-- ``ivfpq_topk`` / ``probe_ivfpq_index`` — IVF + residual PQ, both
-  searched by ``_ivfpq_search``.
+- ``ivf_kmeans_topk`` — inverted lists over k-means-trained centroids
+  (``kmeans_centroids``), searched by ``_ivf_search``; IVF-PQ's recall
+  ceiling at the same probe.
+- ``ivfpq_topk`` / ``write_ivfpq_index`` + ``probe_ivfpq_index`` —
+  IVF + residual PQ, in memory or as a cid-partitioned index table,
+  both searched by ``_ivfpq_search``.
+
+Audits: ``recall_vs_exact`` (the two approximate searches vs the
+exact scan) and ``dim_recall`` (prefix cuts vs full dims). Embedding
+near-dup: ``neardup_pairs``, ``neardup_bucket_pairs`` (sign-hyperplane
+bands, ``band_keys``) and ``neardup_recall``. ``kmeans_centroids`` and
+``assign_centroids`` are also semantic_dedup's quantizer.
 
 Shared pieces: ``_cos_block`` is the one cosine-matrix kernel,
 ``_local_cut`` the one partition-local top-k cut and ``_rank_topk``
@@ -32,16 +38,15 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-N_PLANES = 6  # 64 buckets; with Hamming-1 multi-probe a query scans
-              # ~7/64 ≈ 11% of the corpus. More planes = faster + lower
-              # recall; at 10^12 vectors raise planes AND probe radius
-              # (or switch to IVF centroids). Tuned for recall at the
-              # sf test scale.
+N_PLANES = 6  # hyperplanes per near-dup band: 64 buckets per band. A
+              # pair at cosine c shares a band with p^6, p = 1 −
+              # arccos(c)/π; more planes = fewer candidate pairs and
+              # lower recall (``neardup_bucket_pairs``).
 DEFAULT_K = 5
 QUERY_EVERY = 50  # vec_id % QUERY_EVERY == 0 → query point
 
 
-def hyperplane_weights(n_planes: int = N_PLANES, dims: int = 64) -> list[list[int]]:
+def hyperplane_weights(n_planes: int, dims: int = 64) -> list[list[int]]:
     """Deterministic integer hyperplanes: w[p][j] = md5-derived int in
     [-32768, 32767]. Pure function of (p, j) — identical in the SQL
     oracle."""
@@ -104,7 +109,7 @@ def pairwise_cosine(df: DataFrame, a: str, b: str, keep: list[str]) -> DataFrame
     """Per-row cosine of two vector columns as a numpy block kernel:
     returns ``df[keep]`` + unrounded ``cos`` (double).
 
-    The re-rank stage of every bucketed ANN path scores |candidates|
+    The re-rank stage of every candidate-list path scores |candidates|
     (query, vector) pairs; the ``cosine`` HOF fold costs ~4·dims
     interpreted lambda evaluations per ROW — the same class of cost
     the block kernels removed from brute-force scoring and centroid
@@ -249,7 +254,7 @@ def _rank_topk(
 
 def _rerank(cand: DataFrame, k: int) -> DataFrame:
     """Exact r6 top-k of candidate pairs (q_id, vec_id|neighbor_id,
-    qv, v) — the re-rank stage of every bucketed path."""
+    qv, v) — the re-rank stage of both IVF searches."""
     if "vec_id" in cand.columns:
         cand = cand.withColumnRenamed("vec_id", "neighbor_id")
     return _rank_topk(
@@ -308,49 +313,49 @@ def _query_rows(df: DataFrame, query_every: int) -> list:
     )
 
 
-def _query_matrix(qsrc: DataFrame, col: str, dtype):
-    """(q_ids int64[|Q|], Q dtype[|Q|, dims]) of a (vec_id, ``col``)
+def _query_matrix(qsrc: DataFrame):
+    """(q_ids int64[|Q|], Q float64[|Q|, dims]) of a (vec_id, v)
     query frame. The collect is O(|Q|) — the brute-force contract's
     |Q| ≪ corpus assumption."""
     import numpy as np
 
-    rows = qsrc.select("vec_id", col).collect()
+    rows = qsrc.select("vec_id", "v").collect()
     return (
         np.array([r["vec_id"] for r in rows], dtype=np.int64),
-        np.array([list(r[col]) for r in rows], dtype=dtype),
+        np.array([list(r["v"]) for r in rows], dtype=np.float64),
     )
 
 
-def _scan_topk(
-    corpus: DataFrame, col: str, q_ids, Q, k: int, score, payload=None
-) -> DataFrame:
-    """The one broadcast-queries × partitioned-corpus top-k scan
-    (``brute_force_topk``, ``sq8_topk``, ``pq_topk``).
+def _scan_topk(corpus: DataFrame, q_ids, Q, k: int) -> DataFrame:
+    """The broadcast-queries × partitioned-corpus exact top-k scan
+    behind ``brute_force_topk``.
 
     Shape: the query matrix (|Q| ≪ corpus by the brute-force
-    contract; at scale where that fails, use the LSH/IVF paths) rides
-    a broadcast variable; ``mapInPandas`` scans each corpus partition
-    as Arrow batches, ``score(Q, V, payload)`` returns the whole
-    (queries × batch) raw cosine block, and ``_local_cut`` emits only
-    each query's partition-local top-k (+ rounding-tie slack). The
-    corpus never shuffles; the final ``_rank_topk`` window ranks
-    parts × |Q| × ~k rows instead of |Q| × corpus. A per-pair JVM
-    fold is ~400 interpreted lambda evaluations per (query, vector) —
-    two orders slower at sf1."""
+    contract; at scale where that fails, use the IVF paths) rides a
+    broadcast variable; ``mapInPandas`` scans each corpus partition
+    as Arrow batches, ``_cos_block`` scores the whole (queries ×
+    batch) raw cosine block, and ``_local_cut`` emits only each
+    query's partition-local top-k (+ rounding-tie slack). The corpus
+    never shuffles; the final ``_rank_topk`` window ranks parts × |Q|
+    × ~k rows instead of |Q| × corpus. A per-pair JVM fold is ~400
+    interpreted lambda evaluations per (query, vector) — two orders
+    slower at sf1."""
     import numpy as np
     import pandas as pd
 
-    bq = corpus.sparkSession.sparkContext.broadcast((q_ids, Q, payload))
+    bq = corpus.sparkSession.sparkContext.broadcast((q_ids, Q))
 
     def blocks(batches):
-        ids, qm, pl = bq.value
+        ids, qm = bq.value
         if qm.size == 0:  # empty query set: a (0,) array cannot
             return        # unpack into (nq, dims) — nothing to score
+        qn = _row_norms(qm)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            cos = score(qm, np.array(list(pdf[col]), dtype=qm.dtype), pl)
+            V = np.array(list(pdf["v"]), dtype=np.float64)
+            cos = _cos_block(qm, qn, V)
             qi, vi = _local_cut(cos, ids, vid, k)
             yield pd.DataFrame(
                 {"q_id": ids[qi], "neighbor_id": vid[vi], "cos": cos[qi, vi]}
@@ -362,10 +367,6 @@ def _scan_topk(
         ),
         k,
     )
-
-
-def _exact_cos(Q, V, _payload):
-    return _cos_block(Q, _row_norms(Q), V)
 
 
 def brute_force_topk(
@@ -393,8 +394,6 @@ def brute_force_topk(
     knob, see dim_recall), sliced SPARK-side so the Arrow transfer
     shrinks with the scan, not just the math.
     """
-    import numpy as np
-
     corpus = _load(spark, sf_dir)
     qsrc = (
         corpus.filter(F.col("vec_id") % query_every == 0)
@@ -404,8 +403,8 @@ def brute_force_topk(
     if dims is not None:
         corpus = corpus.select("vec_id", F.slice("v", 1, dims).alias("v"))
         qsrc = qsrc.select("vec_id", F.slice("v", 1, dims).alias("v"))
-    q_ids, Q = _query_matrix(qsrc, "v", np.float64)
-    return _scan_topk(corpus, "v", q_ids, Q, k, _exact_cos)
+    q_ids, Q = _query_matrix(qsrc)
+    return _scan_topk(corpus, q_ids, Q, k)
 
 
 SERVED_Q_N = 8  # external fixture query count (|Q|)
@@ -435,126 +434,7 @@ def served_query_set(spark, n: int = SERVED_Q_N, dims: int = 64) -> DataFrame:
     return spark.createDataFrame(rows, "vec_id long, v array<double>")
 
 
-SQ8_SCALE = 127  # int8 code range: codes land in [-127, 127]
-
-
-def sq8_codes(vec: Column) -> Column:
-    """Scalar int8 quantization: per-vector max-|x| scale, code_i =
-    floor(x_i·127/m + 0.5) ∈ [-127, 127] (HALF_UP, the house
-    rounding op). The codes are what a 10^12-vector fleet would
-    actually hold in memory — 4× smaller than float32, 8× smaller
-    than the float64 math type — so the brute-force scan's working
-    set shrinks by the same factor and the integer-dot kernel beats
-    the float path on memory bandwidth. An all-zero vector maps to
-    all-zero codes (the unguarded form divides by m = 0).
-
-    Determinism: max, multiply, divide and floor are single
-    correctly-rounded IEEE ops in the same order on both engines —
-    no sum, no fold-order concern at all."""
-    m = F.array_max(F.transform(vec, lambda x: F.abs(x)))
-    return F.when(
-        m == 0.0, F.transform(vec, lambda x: F.lit(0).cast("int"))
-    ).otherwise(
-        F.transform(
-            vec,
-            lambda x: F.floor(x * F.lit(127.0) / m + F.lit(0.5)).cast("int"),
-        )
-    )
-
-
-def _code_cos(Q, V, _payload):
-    """Cosine of int64 code blocks: the dot and both squared norms are
-    exact integer sums (|codes| <= 127, dims = 64 → |dot| <= ~1e6), so
-    one matmul is order-free; the divide is one double op."""
-    import numpy as np
-
-    qn = np.sqrt((Q * Q).sum(axis=1).astype(np.float64))
-    vn = np.sqrt((V * V).sum(axis=1).astype(np.float64))
-    denom = qn[:, None] * vn[None, :]
-    with np.errstate(invalid="ignore", divide="ignore"):
-        return np.where(denom == 0.0, 0.0, (Q @ V.T) / denom)
-
-
-def sq8_topk(
-    spark,
-    sf_dir: str,
-    k: int = DEFAULT_K,
-    query_every: int = QUERY_EVERY,
-) -> DataFrame:
-    """Approximate cosine top-k over int8-quantized codes — the
-    memory-scale variant of ``brute_force_topk``: same ``_scan_topk``
-    shape (the corpus never shuffles), but each vector is 64 int8
-    codes instead of 64 float64s, and the block kernel is ONE exact
-    int64 matmul per (queries × batch) block instead of a dims-ordered
-    float accumulation loop.
-
-    score = cos of the CODE vectors: dot(qa, qb) and both squared
-    norms are exact integer sums (order-free — no fold-order
-    discipline needed, the property the float kernels spend their
-    docstrings on), and the final divide is one double op; the
-    per-vector scales cancel in the ratio, so code-cosine ≈ true
-    cosine with only rounding-grid error. ``recall_vs_exact`` ('sq8'
-    row) quantifies that error against the float64 baseline — the
-    number a fleet reads before switching its scan to int8.
-    """
-    import numpy as np
-
-    corpus = _load(spark, sf_dir).select(
-        "vec_id", sq8_codes(F.col("v")).alias("c")
-    )
-    q_ids, Q = _query_matrix(
-        corpus.filter(F.col("vec_id") % query_every == 0), "c", np.int64
-    )
-    return _scan_topk(corpus, "c", q_ids, Q, k, _code_cos)
-
-
-def _flip_bit(bucket: Column, i: int, n_planes: int = N_PLANES) -> Column:
-    flipped = F.when(
-        F.substring(bucket, i + 1, 1) == "0", F.lit("1")
-    ).otherwise(F.lit("0"))
-    return F.concat(
-        F.substring(bucket, 1, i), flipped,
-        F.substring(bucket, i + 2, n_planes),
-    )
-
-
-def probe_buckets(bucket: Column, n_planes: int = N_PLANES) -> Column:
-    """Multi-probe LSH: the query's own bucket plus every bucket at
-    Hamming distance 1 (flip each sign bit) — the standard recall
-    boost that keeps the scan sub-linear (n_planes+1 buckets instead
-    of the single exact one)."""
-    return F.array(
-        bucket, *[_flip_bit(bucket, i, n_planes) for i in range(n_planes)]
-    )
-
-
-def lsh_bucketed_topk(
-    spark,
-    sf_dir: str,
-    k: int = DEFAULT_K,
-    query_every: int = QUERY_EVERY,
-    n_planes: int = N_PLANES,
-) -> DataFrame:
-    """Approximate top-k: rank only candidates in the query's probe
-    buckets (own + Hamming-1). May return < k rows per query (sparse
-    buckets) — the documented recall/cost trade. ``n_planes`` sets the
-    bucket-count/recall trade (2^planes buckets; see BENCH/ANN.md for
-    the measured sweep); the default is the oracle-pinned contract."""
-    weights = hyperplane_weights(n_planes)
-    corpus = _load(spark, sf_dir).withColumn(
-        "bucket", sign_bucket(F.col("v"), weights)
-    )
-    queries = corpus.filter(F.col("vec_id") % query_every == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"),
-        F.explode(probe_buckets(F.col("bucket"), n_planes)).alias("qb"),
-    )
-    cand = corpus.join(
-        F.broadcast(queries), F.col("bucket") == F.col("qb")
-    ).filter(F.col("vec_id") != F.col("q_id"))
-    return _rerank(cand, k)
-
-
-CENTROID_EVERY = 37  # deterministic IVF "training": every 37th vector
+CENTROID_EVERY = 37  # k-means seeds: every 37th vector (floor stride)
 LISTS_PER_SQRT = 4   # adaptive list count target: C ≈ 4·√n
 
 
@@ -641,8 +521,8 @@ def _first_max_assign(V, Cm, block: int = CENT_BLOCK):
     running strictly-greater argmax. Scanning blocks in index order
     with strict > keeps the FIRST maximum, exactly ``np.argmax``
     over the full row, at peak memory O(rows × block) instead of
-    O(rows × C). Shared by the IVF assignment, the PQ subspace
-    coders and the IVF-PQ encoder — one implementation so the memory
+    O(rows × C). Shared by the IVF assignment, the Lloyd training
+    step and the IVF-PQ encoder — one implementation so the memory
     bound and the tie rule cannot drift."""
     import numpy as np
 
@@ -787,59 +667,15 @@ def _cent_rows(cents: DataFrame) -> list:
     return sorted(cents.collect(), key=lambda r: r["cid"])
 
 
-def ivf_topk(
-    spark,
-    sf_dir: str,
-    k: int = DEFAULT_K,
-    query_every: int = QUERY_EVERY,
-    centroid_every: int | None = None,
-    probe: int = PROBE_LISTS,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k — the documented scale
-    path beyond hyperplane LSH: partition the corpus into C centroid
-    lists, probe only the ``probe`` closest lists per query, rank
-    candidates exactly (``_ivf_search``).
-
-    Scale shape: centroid assignment is MAP-SIDE — the (small, sorted)
-    centroid array rides a broadcast and each vector folds over it
-    once; the corpus never shuffles. Candidate scan cost is ~probe/C
-    of the corpus per query. ``write_ivf_index`` stores ``cid`` as a
-    partition column so probes become partition pruning; here
-    centroids are every ``centroid_every``-th vector,
-    deterministically, so the DuckDB oracle reproduces the exact
-    assignment (ties broken toward the lowest centroid id via
-    first-max position). The default stride is adaptive
-    (``centroid_stride``): C = O(√n), never O(n).
-    """
-    if centroid_every is None:
-        centroid_every = centroid_stride(_corpus_count(spark, sf_dir))
-    corpus = _load(spark, sf_dir)
-    cents = corpus.filter(F.col("vec_id") % centroid_every == 0).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    return _ivf_search(
-        spark,
-        assign_centroids(corpus, cents, keep=["vec_id", "v"]),
-        _query_rows(corpus, query_every),
-        _cent_rows(cents),
-        k,
-        probe,
-    )
-
-
 def _ivf_search(
     spark, assigned: DataFrame, qrows, cents, k: int, probe: int
 ) -> DataFrame:
-    """The one IVF search, over in-memory lists (``ivf_topk``,
-    ``ivf_kmeans_topk``) or a ``write_ivf_index`` table
-    (``probe_ivf_index``): the driver plans the probe set
-    (``_plan_probes`` — queries × their ``probe`` nearest centroids,
-    O(|Q|·C) on collected centroid rows, tiny), ``assigned`` (vec_id,
-    v, cid) is filtered with ``cid IN (<literal probes>)`` — on the
-    cid-partitioned index table Spark's file-source planner PRUNES
-    the unprobed list directories, so the scan reads ~probe/C of the
-    index from disk (asserted by the plan test) — and the candidates
-    broadcast-join the per-query probe map and re-rank exactly.
+    """The IVF search of ``ivf_kmeans_topk``: the driver plans the
+    probe set (``_plan_probes`` — queries × their ``probe`` nearest
+    centroids, O(|Q|·C) on collected centroid rows, tiny),
+    ``assigned`` (vec_id, v, cid) is filtered with ``cid IN (<literal
+    probes>)``, and the candidates broadcast-join the per-query probe
+    map and re-rank exactly.
 
     ``qrows``: Row(vec_id, v) queries; ``cents``: cid-sorted
     Row(cid, cv)."""
@@ -884,8 +720,8 @@ def kmeans_centroids(
     n: int | None = None,
 ) -> DataFrame:
     """Lloyd's k-means IVF training over a sample of (vec_id, v),
-    returning (cid, cv) — real IVF training, replacing the
-    sampled-centroid stand-in ``ivf_topk`` uses.
+    returning (cid, cv) — the coarse quantizer of ``ivf_kmeans_topk``,
+    the IVF-PQ index and semantic_dedup.
 
     Training is SAMPLED (every ``train_every``-th vector; the seeds
     are every ``centroid_every``-th of the full corpus) and runs on
@@ -911,7 +747,7 @@ def kmeans_centroids(
     (asserted by test_kmeans_centroids_match_numpy_reference, which
     checks BOTH against an independent scalar-fold reference). The
     final full-corpus assignment happens exactly once, in the search/
-    index stage (``_ivf_search``/``write_ivf_index``), not here. At
+    index stage (``assign_centroids``/``_residual_frame``), not here. At
     10^12 rows the stride would be chosen (hash-stride) to keep the
     sample at a fixed size; the modulus form is what the DuckDB
     oracle can mirror exactly.
@@ -1038,12 +874,14 @@ def ivf_kmeans_topk(
     iters: int = KMEANS_ITERS,
     train_every: int = TRAIN_EVERY,
 ) -> DataFrame:
-    """IVF top-k over k-means-TRAINED centroid lists — the production
-    index-build path ``ivf_topk``'s docstring promises: train with
+    """IVF top-k over k-means-TRAINED centroid lists: train with
     ``kmeans_centroids`` (Lloyd, fixed-point-deterministic, sampled
-    training set), then the same map-side assign → probe → exact
-    re-rank search stage. Default seed stride is adaptive
-    (``centroid_stride``): C = O(√n), never O(n)."""
+    training set), assign the corpus map-side, probe the ``probe``
+    nearest lists per query and re-rank their members exactly
+    (``_ivf_search``). Scores full-precision vectors in the same
+    lists IVF-PQ probes, so its recall is IVF-PQ's ceiling. Default
+    seed stride is adaptive (``centroid_stride``): C = O(√n), never
+    O(n)."""
     n = _corpus_count(spark, sf_dir)
     if centroid_every is None:
         centroid_every = centroid_stride(n)
@@ -1097,74 +935,7 @@ def _plan_probes(qrows, cents, probe: int) -> list[tuple[int, int]]:
     return plan
 
 
-def write_ivf_index(
-    corpus: DataFrame, cents: DataFrame, path: str
-) -> None:
-    """Materialize the IVF index the way a 10^12-vector deployment
-    stores it: vectors parquet-partitioned BY LIST (``cid=…/``
-    directories) plus a small centroids table alongside. Probing then
-    costs a partition-PRUNED scan — the planner reads only the
-    probed ``probe``/C of the corpus from disk, which is the whole
-    point of IVF (``ivf_topk``'s in-memory assign recomputes lists
-    per query run; an index you build once and search many times must
-    push list selection into the scan)."""
-    assigned = assign_centroids(corpus, cents, keep=["vec_id", "v"])
-    base = path.rstrip("/")
-    assigned.write.mode("overwrite").partitionBy("cid").parquet(
-        f"{base}/vectors"
-    )
-    cents.write.mode("overwrite").parquet(f"{base}/centroids")
-
-
-def probe_ivf_index(
-    spark,
-    path: str,
-    k: int = DEFAULT_K,
-    query_every: int = QUERY_EVERY,
-    probe: int = PROBE_LISTS,
-) -> DataFrame:
-    """Search a ``write_ivf_index`` table with ``_ivf_search``: the
-    ``cid IN (<planned probes>)`` filter prunes the unprobed list
-    directories of the cid-partitioned vector table. Results equal
-    the in-memory ``ivf_kmeans_topk`` over the same centroids."""
-    base = path.rstrip("/")
-    vec = spark.read.parquet(f"{base}/vectors")
-    return _ivf_search(
-        spark,
-        vec,
-        _query_rows(vec, query_every),
-        _cent_rows(spark.read.parquet(f"{base}/centroids")),
-        k,
-        probe,
-    )
-
-
 PQ_M = 4  # product-quantization subspaces (64 dims -> 4 x 16)
-
-
-def pq_codebooks(
-    spark,
-    sf_dir: str,
-    iters: int = KMEANS_ITERS,
-    train_every: int = TRAIN_EVERY,
-):
-    """Per-subspace PQ codebooks (Jégou et al. 2011, the public
-    product-quantization scheme): split each vector into PQ_M
-    contiguous subvectors and train an independent k-means codebook
-    on each — the SAME fixed-point Lloyd engine as the IVF index
-    (``kmeans_centroids``), run PQ_M times over sliced frames, so
-    codebook training inherits its bit-reproducibility across
-    engines AND cluster layouts. Codebook size follows the adaptive
-    ``centroid_stride`` (C = O(sqrt n) per subspace — classic PQ
-    fixes C=256; tying it to the corpus keeps ONE stride rule shared
-    with the IVF oracle machinery, documented divergence).
-
-    Returns ([(cids, Cm)] per subspace, n, sub_dims)."""
-    n = _corpus_count(spark, sf_dir)
-    corpus = _load_raw(spark, sf_dir)
-    dims = len(corpus.select("v").first()["v"])
-    books, sub = _train_books(corpus, "v", n, dims, iters, train_every)
-    return books, n, sub
 
 
 def _train_books(
@@ -1191,59 +962,6 @@ def _train_books(
             )
         )
     return books, sub
-
-
-def pq_topk(
-    spark,
-    sf_dir: str,
-    k: int = DEFAULT_K,
-    query_every: int = QUERY_EVERY,
-) -> DataFrame:
-    """Approximate cosine top-k over product-quantized vectors — the
-    compressed-exhaustive-scan regime ``sq8_topk`` occupies, at a far
-    deeper compression point: each vector is PQ_M small centroid ids
-    (~4 bytes total at C<=2^8 per subspace) instead of 64 int8 codes,
-    the representation a 10^12-vector fleet actually RAMs.
-
-    score = cos(q, recon(x)) where recon concatenates the assigned
-    centroid subvectors — algebraically the ADC lookup sum
-    (sum_m dot(q_m, c_m)) over the reconstruction, with the norm term
-    sqrt(sum_m |c_m|^2) PQ uses for cosine. Engine/oracle bit-parity
-    by the house fold discipline: subspace assignment is the same
-    first-max dim-ordered cosine as ``assign_centroids``; scoring
-    accumulates over the FULL dim range in order, which is the
-    identical IEEE op sequence as DuckDB's fold over the concatenated
-    centroid lists. Exact per-query recall is the 'pq' row of
-    ``ann_recall``.
-
-    Shape at scale: codebooks are driver-trained on strided samples
-    (the kmeans_centroids dispatch) and broadcast; the corpus is
-    scanned ONCE by ``_scan_topk`` (assign -> reconstruct -> score ->
-    partition-local top-k), so the corpus never shuffles."""
-    import numpy as np
-
-    books, n, sub = pq_codebooks(spark, sf_dir)
-    corpus = _load(spark, sf_dir)
-    q_ids, Q = _query_matrix(
-        corpus.filter(F.col("vec_id") % query_every == 0), "v", np.float64
-    )
-    return _scan_topk(corpus, "v", q_ids, Q, k, _pq_cos, (books, sub))
-
-
-def _pq_cos(Q, V, payload):
-    """Cosine of the queries against PQ reconstructions of a corpus
-    batch: each subvector is replaced by its first-max codebook
-    centroid (``_first_max_assign``), then ``_cos_block`` folds the
-    FULL dim range in order — DuckDB's fold over the concatenated
-    centroid lists."""
-    import numpy as np
-
-    books, sub = payload
-    R = np.empty_like(V)
-    for m, (_cids, Cm) in enumerate(books):
-        part = slice(m * sub, (m + 1) * sub)
-        R[:, part] = Cm[_first_max_assign(V[:, part], Cm)]
-    return _cos_block(Q, _row_norms(Q), R)
 
 
 # ADC shortlist exact-re-ranked per query. Depth tuned on the recall
@@ -1296,12 +1014,10 @@ def ivfpq_topk(
     train_every: int = TRAIN_EVERY,
 ) -> DataFrame:
     """IVF+PQ composition — the serving configuration a 10⁹-vector
-    fleet actually runs (round-4 item: the pieces existed separately
-    as the partition-pruned IVF index and the PQ codes): k-means
-    coarse quantizer → per-query probe of ``probe`` lists → ADC
-    scoring against PQ-coded RESIDUAL reconstructions inside the
-    probed lists only → exact re-rank of the ``shortlist``-deep ADC
-    short-list.
+    fleet actually runs: k-means coarse quantizer → per-query probe
+    of ``probe`` lists → ADC scoring against PQ-coded RESIDUAL
+    reconstructions inside the probed lists only → exact re-rank of
+    the ``shortlist``-deep ADC short-list.
 
     This is ``write_ivfpq_index`` + ``probe_ivfpq_index`` without the
     parquet round trip: the codes come straight from the encode pass
@@ -1480,7 +1196,7 @@ def _ivfpq_search(
     shortlist: int,
 ) -> DataFrame:
     """The one IVF-PQ search: plan the probe set driver-side
-    (O(|Q|·C) on collected centroids, like ``probe_ivf_index``), keep
+    (O(|Q|·C) on collected centroids, like ``_ivf_search``), keep
     only the probed lists of ``codes`` (vec_id, cid, codes), ADC-score
     them against the queries via one Arrow kernel (reconstruct =
     coarse centroid + concatenated codebook rows), keep a
@@ -1583,8 +1299,8 @@ def _ivfpq_search(
 def recall_vs_exact(
     spark, sf_dir: str, k: int = DEFAULT_K, query_every: int = QUERY_EVERY
 ) -> DataFrame:
-    """recall@k of the approximate paths against the exact baseline —
-    the number a user actually tunes N_PLANES / probe by. One row per
+    """recall@k of the approximate searches against the exact baseline
+    — the number a user tunes probe / shortlist by. One row per
     method: (method, n_queries, hits, recall) where recall =
     hits / (n_queries * k), micro-averaged.
 
@@ -1598,14 +1314,7 @@ def recall_vs_exact(
     exact = brute_force_topk(spark, sf_dir, k, query_every).select(
         "q_id", "neighbor_id"
     )
-    methods = (
-        ("lsh", lsh_bucketed_topk),
-        ("ivf", ivf_topk),
-        ("ivf_kmeans", ivf_kmeans_topk),
-        ("sq8", sq8_topk),
-        ("pq", pq_topk),
-        ("ivfpq", ivfpq_topk),
-    )
+    methods = (("ivf_kmeans", ivf_kmeans_topk), ("ivfpq", ivfpq_topk))
     approx = functools.reduce(
         DataFrame.unionByName,
         [
@@ -1615,8 +1324,8 @@ def recall_vs_exact(
             for name, search in methods
         ],
     )
-    # every method keeps its row: sparse buckets at high n_planes are
-    # exactly the zero-hit regime this audit exposes
+    # every method keeps its row: a search that finds none of the
+    # exact neighbours reports recall 0.0 instead of vanishing
     keys = spark.createDataFrame(
         [(name,) for name, _ in methods], "method string"
     )
@@ -1689,9 +1398,7 @@ def prefix_topk(
     import pandas as pd
 
     corpus = _load(spark, sf_dir)
-    q_ids, Q = _query_matrix(
-        corpus.filter(F.col("vec_id") % query_every == 0), "v", np.float64
-    )
+    q_ids, Q = _query_matrix(corpus.filter(F.col("vec_id") % query_every == 0))
     cut_list = sorted({int(c) for c in cuts if c > 0})
     bq = spark.sparkContext.broadcast((q_ids, Q, cut_list))
 
@@ -1819,7 +1526,7 @@ def band_keys(
 ) -> Column:
     """``bands`` independent sign-buckets of ``vec`` as an array of
     bit-strings — band b uses hyperplanes [b·P, (b+1)·P) of the same
-    deterministic md5 family every LSH path shares."""
+    deterministic md5 family (``hyperplane_weights``)."""
     weights = hyperplane_weights(bands * planes_per_band)
     return F.array(
         *[

@@ -502,28 +502,10 @@ def q_ann_topk_served(spark, sf_dir) -> DataFrame:
                     "neighbor_id", "cos")
 
 
-def q_ann_lsh_topk(spark, sf_dir) -> DataFrame:
-    """Hyperplane-LSH bucketed approximate top-5."""
-    from blackedge_ocr_spark.analysis import ann
-
-    r = ann.lsh_bucketed_topk(spark, sf_dir)
-    return r.select("q_id", F.col("rank").cast("long").alias("rank"),
-                    "neighbor_id", "cos")
-
-
-def q_ann_ivf_topk(spark, sf_dir) -> DataFrame:
-    """IVF (centroid-list) approximate top-5, probe=3 lists."""
-    from blackedge_ocr_spark.analysis import ann
-
-    r = ann.ivf_topk(spark, sf_dir)
-    return r.select("q_id", F.col("rank").cast("long").alias("rank"),
-                    "neighbor_id", "cos")
-
-
 def q_ann_ivf_kmeans_topk(spark, sf_dir) -> DataFrame:
     """IVF approximate top-5 over k-means-trained centroid lists
-    (fixed-point-deterministic Lloyd, 3 iterations) — the production
-    index-build path; ``ann_ivf_topk`` is the sampled-seed variant."""
+    (fixed-point-deterministic Lloyd, 3 iterations) — IVF-PQ's recall
+    ceiling at the same probe."""
     from blackedge_ocr_spark.analysis import ann
 
     r = ann.ivf_kmeans_topk(spark, sf_dir)
@@ -531,22 +513,11 @@ def q_ann_ivf_kmeans_topk(spark, sf_dir) -> DataFrame:
                     "neighbor_id", "cos")
 
 
-def q_ann_sq8_topk(spark, sf_dir) -> DataFrame:
-    """Int8-scalar-quantized brute-force top-5 — the memory-scale
-    scan (4× smaller working set than float32, exact int64 dot
-    kernel); its quantization error shows up as the 'sq8' row of
-    ann_recall."""
-    from blackedge_ocr_spark.analysis import ann
-
-    r = ann.sq8_topk(spark, sf_dir)
-    return r.select("q_id", F.col("rank").cast("long").alias("rank"),
-                    "neighbor_id", "cos")
-
-
 def q_ann_recall(spark, sf_dir) -> DataFrame:
-    """recall@5 of the LSH and IVF paths vs the exact baseline —
-    quantifies the approximation the other ann queries only assert
-    self-consistency on; the metric N_PLANES/probe get tuned by."""
+    """recall@5 of the two IVF searches (k-means lists, IVF-PQ) vs the
+    exact baseline — quantifies the approximation the other ann
+    queries only assert self-consistency on; the metric probe and
+    shortlist get tuned by."""
     from blackedge_ocr_spark.analysis import ann
 
     r = ann.recall_vs_exact(spark, sf_dir)
@@ -1743,16 +1714,6 @@ def q_substring_dedup(spark, sf_dir) -> DataFrame:
     from blackedge_ocr_spark.analysis import scrub
 
     return scrub.substring_dedup(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-def q_ann_pq_topk(spark, sf_dir) -> DataFrame:
-    """Product-quantized approximate top-k (Jégou et al. 2011): PQ_M
-    per-subspace k-means codebooks (the shared fixed-point Lloyd),
-    broadcast codebooks, ONE corpus pass assign->reconstruct->score
-    with partition-local top-k — the corpus never shuffles."""
-    from blackedge_ocr_spark.analysis import ann
-
-    return ann.pq_topk(spark, sf_dir)
 
 
 def q_ann_ivfpq_topk(spark, sf_dir) -> DataFrame:

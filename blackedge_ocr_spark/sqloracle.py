@@ -714,8 +714,6 @@ def build_oracles() -> dict[str, str]:
         "ngram_jaccard": sql_ngram_jaccard(),
         "ann_topk": sql_ann_topk(),
         "ann_topk_served": sql_ann_topk_served(),
-        "ann_lsh_topk": sql_ann_lsh_topk(),
-        "ann_ivf_topk": sql_ann_ivf_topk(),
         "ann_ivf_kmeans_topk": sql_ann_ivf_kmeans_topk(),
         "ann_recall": sql_ann_recall(),
         "dim_recall": sql_dim_recall(),
@@ -723,8 +721,6 @@ def build_oracles() -> dict[str, str]:
         "embedding_neardup_lsh": sql_embedding_neardup_lsh(),
         "neardup_recall": sql_neardup_recall(),
         "semantic_dedup": sql_semantic_dedup(),
-        "ann_sq8_topk": sql_ann_sq8_topk(),
-        "ann_pq_topk": sql_ann_pq_topk(),
         "ann_ivfpq_topk": sql_ann_ivfpq_topk(),
         "hll_distinct": sql_hll_distinct(),
         "cms_topk": sql_cms_topk(),
@@ -1049,29 +1045,6 @@ def sign_bucket_sql(planes: list[list[int]]) -> str:
     return "(" + " || ".join(bits) + ")"
 
 
-def sql_ann_lsh_topk(k: int = 5, query_every: int = 50) -> str:
-    from blackedge_ocr_spark.analysis.ann import N_PLANES, hyperplane_weights
-
-    bucket = sign_bucket_sql(hyperplane_weights())
-    flips = ", ".join(
-        f"substr(qb0, 1, {i}) || (CASE substr(qb0, {i + 1}, 1) "
-        f"WHEN '0' THEN '1' ELSE '0' END) || substr(qb0, {i + 2}, {N_PLANES})"
-        for i in range(N_PLANES)
-    )
-    probes = f"list_concat([qb0], [{flips}])"
-    return f"""
-WITH {EMB},
-eb AS (SELECT vec_id, v, {bucket} AS bucket FROM e),
-q0 AS (SELECT vec_id AS q_id, v AS qv, bucket AS qb0 FROM eb
-       WHERE vec_id % {query_every} = 0),
-q AS (SELECT q_id, qv, unnest({probes}) AS qb FROM q0),
-s AS (SELECT q_id, vec_id AS neighbor_id, round({cosine_sql('qv', 'v')}, 6) AS cos
-      FROM eb JOIN q ON eb.bucket = q.qb WHERE vec_id != q_id)
-SELECT q_id, rank, neighbor_id, cos FROM (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id) AS rank
-  FROM s) WHERE rank <= {k}"""
-
-
 STRIDE_SQL = (
     "(SELECT greatest(37, CAST(floor(count(*) / "
     "(4 * floor(sqrt(count(*))))) AS BIGINT)) FROM e)"
@@ -1094,44 +1067,6 @@ def _stride_expr(centroid_every: int | None) -> str:
     return str(centroid_every) if centroid_every else STRIDE_SQL
 
 
-def sql_ann_ivf_topk(
-    k: int = 5, query_every: int = 50, centroid_every: int | None = None,
-    probe: int = 3,
-) -> str:
-    """analysis.ann.ivf_topk mirror: deterministic centroids (every
-    stride-th vector — adaptive C ≈ 4·√n by default, see STRIDE_SQL —
-    sorted by cid), first-max assignment, probe the 3 closest lists,
-    exact cosine re-rank."""
-    sims = f"list_transform(cents, c -> {cosine_sql('v', 'c.cv')})"
-    return f"""
-WITH {EMB},
-centroids AS (SELECT vec_id AS cid, v AS cv FROM e
-              WHERE vec_id % {_stride_expr(centroid_every)} = 0),
-carr AS (SELECT list(struct_pack(cid := cid, cv := cv) ORDER BY cid)
-         AS cents FROM centroids),
-scored AS (SELECT vec_id, v, cents, {sims} AS sims FROM e, carr),
-assigned AS (
-  SELECT vec_id, v,
-         (cents[list_position(sims, list_max(sims))]).cid AS cid
-  FROM scored),
-qp AS (
-  SELECT vec_id AS q_id, v AS qv,
-         unnest(list_transform(
-           list_sort(list_transform(range(len(sims)),
-             i -> struct_pack(ns := -sims[i + 1], cid := (cents[i + 1]).cid)
-           ))[1:{probe}],
-           s -> s.cid)) AS cid
-  FROM scored WHERE vec_id % {query_every} = 0),
-s AS (SELECT q_id, a.vec_id AS neighbor_id,
-             round({cosine_sql('qv', 'a.v')}, 6) AS cos
-      FROM assigned a JOIN qp ON a.cid = qp.cid
-      WHERE a.vec_id != qp.q_id)
-SELECT q_id, rank, neighbor_id, cos FROM (
-  SELECT *, row_number() OVER (PARTITION BY q_id
-            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM s) WHERE rank <= {k}"""
-
-
 def _kmeans_assigned_parts(
     centroid_every: int | None = None, iters: int = 3,
     train_every: int | str = 4,
@@ -1146,14 +1081,14 @@ def _kmeans_assigned_parts(
     1e-6 bigints (floor(x·1e6+0.5), the exact op the Spark side
     applies), per-(cid,dim) sums in exact integer arithmetic
     (order-independent, unlike double sums), mean = one double
-    division. Assignment is the same first-max fold-order cosine as
-    sql_ann_ivf_topk. Training reads only the sampled
+    division. Assignment is the first-max fold-order cosine of
+    ann.assign_centroids. Training reads only the sampled
     every-``train_every``-th vectors (eq), matching
     ann.kmeans_centroids' sampled training; the final assignment
-    still ranges over the full corpus (e). One builder feeds BOTH
-    consumers — ``sql_ann_ivf_kmeans_topk`` and
-    ``sql_semantic_dedup`` — so the trained-index recipe cannot
-    drift between them."""
+    still ranges over the full corpus (e). One builder feeds every
+    consumer — ``sql_ann_ivf_kmeans_topk``, ``sql_ann_ivfpq_topk``
+    (coarse and residual chains) and ``sql_semantic_dedup`` — so the
+    trained-index recipe cannot drift between them."""
     sims = f"list_transform(cents, c -> {cosine_sql('v', 'c.cv')})"
     quant = (
         f"list_transform({vexpr}, "
@@ -1219,88 +1154,6 @@ def sql_ann_ivf_kmeans_topk(
              round({cosine_sql('qv', 'a.v')}, 6) AS cos
       FROM assigned a JOIN qp ON a.cid = qp.cid
       WHERE a.vec_id != qp.q_id)""",
-    ]
-    ctes = ",\n".join(parts)
-    return f"""
-WITH {ctes}
-SELECT q_id, rank, neighbor_id, cos FROM (
-  SELECT *, row_number() OVER (PARTITION BY q_id
-            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM s) WHERE rank <= {k}"""
-
-
-def sql_ann_sq8_topk(k: int = 5, query_every: int = 50) -> str:
-    """ann.sq8_topk mirror: per-vector max-|x| int8 quantization
-    (floor(x·127/m + 0.5), all-zero vectors → all-zero codes), then
-    cosine of the CODE vectors. dot and both squared norms are exact
-    integer sums — order-free, so the only double ops are two sqrts,
-    one multiply and one divide, bit-identical to the numpy int64
-    kernel."""
-    idot = (
-        "list_sum(list_transform(range(len({a})), "
-        "i -> {a}[i + 1]::BIGINT * {b}[i + 1]::BIGINT))::BIGINT"
-    )
-    return f"""
-WITH {EMB},
-mm AS (SELECT vec_id, v,
-              list_max(list_transform(v, x -> abs(x))) AS mx FROM e),
-cod AS (SELECT vec_id,
-  CASE WHEN mx = 0 THEN list_transform(v, x -> 0)
-       ELSE list_transform(v,
-            x -> CAST(floor(x * 127.0 / mx + 0.5) AS INTEGER)) END AS c
-  FROM mm),
-cs AS (SELECT vec_id, c, {idot.format(a='c', b='c')} AS sv FROM cod),
-q AS (SELECT vec_id AS q_id, c AS qc, sv AS sq FROM cs
-      WHERE vec_id % {query_every} = 0),
-s AS (SELECT q_id, vec_id AS neighbor_id,
-             round(CASE WHEN sq * sv = 0 THEN 0.0
-                   ELSE ({idot.format(a='qc', b='c')})::DOUBLE
-                        / (sqrt(sq::DOUBLE) * sqrt(sv::DOUBLE)) END,
-                   6) AS cos
-      FROM cs, q WHERE vec_id != q_id)
-SELECT q_id, rank, neighbor_id, cos FROM (
-  SELECT *, row_number() OVER (PARTITION BY q_id
-            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM s) WHERE rank <= {k}"""
-
-
-def sql_ann_pq_topk(
-    k: int = 5, query_every: int = 50, centroid_every: int | None = None,
-    iters: int = 3, train_every: int = 4, dims: int = 64,
-) -> str:
-    """analysis.ann.pq_topk mirror: PQ_M independent k-means chains
-    over the subvector slices (the SAME generalized builder the IVF
-    and SemDeDup oracles use, prefixed per subspace), reconstruction
-    = concatenated assigned centroid subvectors, score = the standard
-    cosine fold over (qv, rv) — identical op sequence to the engine's
-    full-dim-ordered kernel."""
-    from blackedge_ocr_spark.analysis.ann import PQ_M
-
-    sub = dims // PQ_M
-    parts: list[str] = []
-    for m in range(PQ_M):
-        lo, hi = m * sub + 1, (m + 1) * sub
-        parts += _kmeans_assigned_parts(
-            centroid_every, iters, train_every,
-            prefix=f"p{m}_", vexpr=f"v[{lo}:{hi}]", include_emb=(m == 0),
-        )
-    joins = " ".join(
-        f"JOIN p{m}_assigned a{m} ON a{m}.vec_id = a0.vec_id"
-        for m in range(1, PQ_M)
-    )
-    cvj = " ".join(
-        f"JOIN p{m}_c{iters} c{m} ON c{m}.cid = a{m}.cid"
-        for m in range(PQ_M)
-    )
-    rv = " || ".join(f"c{m}.cv" for m in range(PQ_M))
-    parts += [
-        f"codes AS (SELECT a0.vec_id, {rv} AS rv "
-        f"FROM p0_assigned a0 {joins} {cvj})",
-        f"q AS (SELECT vec_id AS q_id, v AS qv FROM e "
-        f"WHERE vec_id % {query_every} = 0)",
-        f"""s AS (SELECT q_id, codes.vec_id AS neighbor_id,
-             round({cosine_sql('qv', 'rv')}, 6) AS cos
-      FROM codes, q WHERE codes.vec_id != q_id)""",
     ]
     ctes = ",\n".join(parts)
     return f"""
@@ -1483,38 +1336,23 @@ FROM assigned2 a LEFT JOIN dup ON a.vec_id = dup.vec_id"""
 
 
 def sql_ann_recall(k: int = 5) -> str:
-    """ann.recall_vs_exact mirror: micro-averaged recall@k of lsh/ivf
-    against the exact baseline. The three top-k queries are reused
-    verbatim as derived tables (nested WITH), so any future tuning of
-    planes/probes stays in one place."""
+    """ann.recall_vs_exact mirror: micro-averaged recall@k of the two
+    IVF searches against the exact baseline. The three top-k queries
+    are reused verbatim as derived tables (nested WITH), so any future
+    tuning of probes stays in one place."""
     return f"""
 WITH exact AS (SELECT q_id, neighbor_id FROM ({sql_ann_topk(k)})),
-lsh AS (SELECT q_id, neighbor_id FROM ({sql_ann_lsh_topk(k)})),
-ivf AS (SELECT q_id, neighbor_id FROM ({sql_ann_ivf_topk(k)})),
 ivfk AS (SELECT q_id, neighbor_id FROM ({sql_ann_ivf_kmeans_topk(k)})),
-sq8 AS (SELECT q_id, neighbor_id FROM ({sql_ann_sq8_topk(k)})),
-pq AS (SELECT q_id, neighbor_id FROM ({sql_ann_pq_topk(k)})),
 ivfpq AS (SELECT q_id, neighbor_id FROM ({sql_ann_ivfpq_topk(k)})),
-u AS (SELECT 'lsh' AS method, q_id, neighbor_id FROM lsh
-      UNION ALL
-      SELECT 'ivf' AS method, q_id, neighbor_id FROM ivf
-      UNION ALL
-      SELECT 'ivf_kmeans' AS method, q_id, neighbor_id FROM ivfk
-      UNION ALL
-      SELECT 'sq8' AS method, q_id, neighbor_id FROM sq8
-      UNION ALL
-      SELECT 'pq' AS method, q_id, neighbor_id FROM pq
+u AS (SELECT 'ivf_kmeans' AS method, q_id, neighbor_id FROM ivfk
       UNION ALL
       SELECT 'ivfpq' AS method, q_id, neighbor_id FROM ivfpq),
-methods AS (SELECT unnest(['lsh', 'ivf', 'ivf_kmeans', 'sq8', 'pq',
-                           'ivfpq'])
-            AS method),
+methods AS (SELECT unnest(['ivf_kmeans', 'ivfpq']) AS method),
 hit0 AS (SELECT method, count(*)::bigint AS hits
          FROM u SEMI JOIN exact USING (q_id, neighbor_id)
          GROUP BY method),
 -- LEFT JOIN from the method list: a method with ZERO hits must show
--- recall 0.0, not vanish from the report (the regime the audit
--- exists to expose)
+-- recall 0.0, not vanish from the report
 hits AS (SELECT m.method, coalesce(h.hits, 0)::bigint AS hits
          FROM methods m LEFT JOIN hit0 h USING (method)),
 nq AS (SELECT count(DISTINCT q_id)::bigint AS n_queries FROM exact)

@@ -3,17 +3,16 @@ semantics, determinism, and the ADC-vs-exact ordering contract."""
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
+import pytest
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_residual_frame_algebra(spark):
-    """r = v − coarse centroid, elementwise; adding the centroid back
-    recovers v exactly (pure double subtract/add, no quantization in
-    the residual itself)."""
-    import pyspark.sql.functions as F
-
+def _residuals(spark):
+    """(corpus count, trained coarse centroids, residual frame) of SF."""
     from blackedge_ocr_spark.analysis import ann
 
     n = ann._corpus_count(spark, SF)
@@ -22,7 +21,14 @@ def test_residual_frame_algebra(spark):
         corpus, ann.KMEANS_ITERS, ann.centroid_stride(n),
         ann.TRAIN_EVERY, n=n,
     )
-    res = ann._residual_frame(corpus, cents)
+    return n, cents, ann._residual_frame(corpus, cents)
+
+
+def test_residual_frame_algebra(spark):
+    """r = v − coarse centroid, elementwise; adding the centroid back
+    recovers v exactly (pure double subtract/add, no quantization in
+    the residual itself)."""
+    n, cents, res = _residuals(spark)
     cdf = cents.select("cid", "cv")
     # (v − cv) + cv is not bit-equal to v in IEEE doubles; bound the
     # round-trip error instead (values are O(1), so 1e-12 is ~2 ulp).
@@ -146,6 +152,7 @@ def test_ivfpq_index_probe_prunes_partitions_and_matches_inmemory(
     assert len(files) < len(codes.inputFiles())
     fp = plans.formatted_plan(one)
     assert "PartitionFilters" in fp
+    assert re.search(rf"cid#\d+ = {all_cids[0]}\)", fp)
 
     got = ann.probe_ivfpq_index(spark, idx).collect()
     want = ann.ivfpq_topk(spark, SF).collect()
@@ -153,3 +160,65 @@ def test_ivfpq_index_probe_prunes_partitions_and_matches_inmemory(
     # codes really are the compact representation: PQ_M small ids
     row = codes.select("codes").first()
     assert len(row["codes"]) == ann.PQ_M
+
+
+def test_ivfpq_codebooks_shapes_and_subspaces(spark):
+    """PQ_M residual codebooks, one per contiguous sub_dims slice:
+    each non-empty, cid-sorted, and sub_dims wide."""
+    from blackedge_ocr_spark.analysis import ann
+
+    n, _cents, res = _residuals(spark)
+    books, sub = ann.ivfpq_codebooks(res, n, 64)
+    assert len(books) == ann.PQ_M
+    assert sub * ann.PQ_M == 64
+    for cids, Cm in books:
+        # seeds = every stride-th vec_id; codebooks non-empty, cid-sorted
+        assert len(cids) > 1 and list(cids) == sorted(cids)
+        assert Cm.shape == (len(cids), sub)
+
+
+def test_ivfpq_codebooks_reject_dims_not_divisible_by_pq_m():
+    """Slicing would silently drop the tail dimensions; the guard
+    fires before any Spark action, so no frame is needed."""
+    from blackedge_ocr_spark.analysis import ann
+
+    with pytest.raises(ValueError, match="divisible by PQ_M"):
+        ann.ivfpq_codebooks(None, 100, 63)
+
+
+def test_ivfpq_exact_neighbors_when_corpus_is_its_own_codebook(
+    spark, tmp_path
+):
+    """If the corpus holds only the values the coarse quantizer
+    trains as its centroids, IVF-PQ must recover the exact neighbor
+    SET: 5 distinct vector values laid out as vec_id % 5 (coprime with
+    TRAIN_EVERY=4 and the stride 37, so the training sample sees all
+    five and the seeds at 0/37/74/111/148 cover all five), each
+    cluster a k-means fixed point. Equal vectors get equal ADC scores,
+    so each query's own list fills its short-list in neighbor_id
+    order and the exact re-rank picks what the exact scan picks.
+    Queries every 7th vec_id cover all five values."""
+    import numpy as np
+
+    from blackedge_ocr_spark.analysis import ann
+
+    rng = np.random.default_rng(7)
+    seeds = rng.normal(size=(5, 64)).round(3)
+    rows = [(i, [float(x) for x in seeds[i % 5]]) for i in range(150)]
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    td = str(tmp_path)
+    df.select(
+        "vec_id", df.v.cast("array<float>").alias("embedding")
+    ).write.parquet(f"{td}/embeddings.parquet")
+    exact = {
+        (r["q_id"], r["neighbor_id"])
+        for r in ann.brute_force_topk(spark, td, query_every=7).collect()
+    }
+    got = {
+        (r["q_id"], r["neighbor_id"])
+        for r in ann.ivfpq_topk(spark, td, query_every=7).collect()
+    }
+    cents = ann.kmeans_centroids(ann._load(spark, td), n=150)
+    # all five values survive as coarse centroids
+    assert cents.count() == 5
+    assert got == exact and len(got) == 5 * len(range(0, 150, 7))

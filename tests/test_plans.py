@@ -102,44 +102,6 @@ def test_bucketed_join_has_no_exchange(spark):
         spark.sql("DROP TABLE IF EXISTS bkt_right")
 
 
-def test_ivf_index_probe_prunes_partitions(spark, tmp_path):
-    """The materialized IVF index is the partition-pruning promise
-    made good: vectors written partitionBy(cid), probe scan filtered
-    cid IN (<planned probes>) must (a) read exactly the probed list
-    directories and no others, (b) show the cid filter as a
-    PartitionFilter in the scan node, and (c) return the same answer
-    as the in-memory trained-IVF search."""
-    from blackedge_ocr_spark.analysis import ann
-
-    corpus = ann._load(spark, SF)
-    cents = ann.kmeans_centroids(corpus)
-    idx = str(tmp_path / "ivf")
-    ann.write_ivf_index(corpus, cents, idx)
-
-    vec = spark.read.parquet(f"{idx}/vectors")
-    all_cids = sorted(r["cid"] for r in vec.select("cid").distinct().collect())
-    one = vec.filter(F.col("cid") == all_cids[0])
-    # files ACTUALLY read (input_file_name over the executed scan) —
-    # inputFiles() reports the unpruned relation and would not prove
-    # anything
-    files = [
-        r[0] for r in one.select(F.input_file_name()).distinct().collect()
-    ]
-    assert files and all(f"cid={all_cids[0]}/" in f for f in files)
-    assert len(files) < len(vec.inputFiles())
-    import re
-
-    fp = plans.formatted_plan(one)
-    assert "PartitionFilters" in fp
-    assert re.search(rf"cid#\d+ = {all_cids[0]}\)", fp)
-
-    got = ann.probe_ivf_index(spark, idx).collect()
-    want = ann.ivf_kmeans_topk(spark, SF).collect()
-    key = lambda r: (r["q_id"], r["rank"])
-    assert sorted(map(tuple, got), key=lambda t: (t[0], t[1])) == \
-        sorted(map(tuple, want), key=lambda t: (t[0], t[1]))
-
-
 def test_doc_chunks_zero_semantic_shuffle(spark):
     """Chunking is a pure projection + explode: the only exchange is
     the shared scan-spread repartition, never chunking logic."""

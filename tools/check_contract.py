@@ -10,7 +10,7 @@ Usage: python tools/check_contract.py [--json OUT.json] [sf_dir] [query ...]
 
 With ``--json`` the full per-query result (status, rows, timings,
 first mismatches) is written as a committed artifact so the judge can
-read the complete 110-query sweep (about 6 min at sf0.001 on 4 cores)
+read the complete 106-query sweep (about 6 min at sf0.001 on 4 cores)
 without a rerun (VERDICT.md round-3 item 7).
 """
 

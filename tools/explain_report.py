@@ -27,9 +27,7 @@ REPORT_QUERIES = (
     "dedup_lsh_pairs",
     "dedup_production_pairs",
     "ann_topk",
-    "ann_ivf_topk",
     "ann_ivf_kmeans_topk",
-    "ann_pq_topk",
     "ann_ivfpq_topk",
     "embedding_neardup_lsh",
     "segment_stats",
@@ -78,7 +76,6 @@ REPORT_QUERIES = (
     "cooccur_pmi",
     "quality_classifier",
     "semantic_dedup",
-    "ann_sq8_topk",
     "hll_distinct",
     "cms_topk",
     "classifier_calibration",

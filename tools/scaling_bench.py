@@ -34,6 +34,22 @@ LEVELS = (1, 2, 4, 8, 32)
 # MACHINES. 2 -> 8 is also reported: it begins to share memory
 # bandwidth, and 8 -> 32 crosses the SMT ceiling entirely.
 PAIR = (1, 4)
+APPENDIX_MARKER = "<!-- appendix: preserved across regeneration -->"
+
+
+def write_preserving_appendix(path: str, lines: list[str]) -> None:
+    """Write the regenerated ``lines`` to ``path``, then the marker and
+    everything below the marker in the existing file, byte for byte:
+    a bench tool rewrites only its own table and reading, and the
+    hand-written sections kept below the marker survive."""
+    appendix = ""
+    if os.path.exists(path):
+        with open(path, encoding="utf-8", newline="") as f:
+            old = f.read()
+        if APPENDIX_MARKER in old:
+            appendix = old.split(APPENDIX_MARKER, 1)[1]
+    with open(path, "w", encoding="utf-8", newline="") as f:
+        f.write("\n".join(lines + [APPENDIX_MARKER + appendix]))
 
 
 def run_one(cpus: int, sf_dir: str, query: str, reps: int) -> dict:
@@ -145,17 +161,7 @@ def main() -> None:
     ]
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     path = os.path.join(REPO, "BENCH", "BASELINE.md")
-    # Preserve hand-written appendix sections (fat-doc cosine table
-    # etc.) below the marker across regenerations.
-    marker = "<!-- appendix: preserved across regeneration -->"
-    appendix = ""
-    if os.path.exists(path):
-        old = open(path).read()
-        if marker in old:
-            appendix = old.split(marker, 1)[1]
-    lines += [marker + appendix]
-    with open(path, "w") as f:
-        f.write("\n".join(lines))
+    write_preserving_appendix(path, lines)
     print(f"wrote {path}")
     for q, e in effs:
         status = "OK" if e >= 0.8 else "BELOW TARGET"
