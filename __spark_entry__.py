@@ -54,8 +54,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_minhash": q.q_dedup_minhash,
         "dedup_lsh_pairs": q.q_dedup_lsh_pairs,
         "dedup_production_pairs": q.q_dedup_production_pairs,
-        "dedup_clusters": q.q_dedup_clusters,
-        "cluster_keeper_quality": q.q_cluster_keeper_quality,
         "dedup_simhash": q.q_dedup_simhash,
         "ngram_jaccard": q.q_ngram_jaccard,
         "ann_topk": q.q_ann_topk,
@@ -74,8 +72,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sampled_quantiles": q.q_sampled_quantiles,
         "lang_confusion": q.q_lang_confusion,
         "minhash_jaccard_est": q.q_minhash_jaccard_est,
-        "winnow_pairs": q.q_winnow_pairs,
-        "classifier_calibration": q.q_classifier_calibration,
         "source_mirror_stats": q.q_source_mirror_stats,
         "lang_id": q.q_lang_id,
         "token_counts": q.q_token_counts,
@@ -84,10 +80,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "term_doc_freq": q.q_term_doc_freq,
         "corpus_stats": q.q_corpus_stats,
         "snapshot_diff": q.q_snapshot_diff,
-        "media_meta": q.q_media_meta,
-        "media_features": q.q_media_features,
-        "media_resize": q.q_media_resize,
-        "frame_sample": q.q_frame_sample,
         "segment_stats": q.q_segment_stats,
         "azure_layout": q.q_azure_layout,
         "ingest_validate": q.q_ingest_validate,
@@ -124,7 +116,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bpe_pairs": q.q_bpe_pairs,
         "data_split": q.q_data_split,
         "mixture_weights": q.q_mixture_weights,
-        "media_dedup": q.q_media_dedup,
         "doc_features": q.q_doc_features,
         "vocab_coverage": q.q_vocab_coverage,
         "domain_stats": q.q_domain_stats,
@@ -132,14 +123,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # retrieval / collocation statistics
         "bm25_topk": q.q_bm25_topk,
         "cooccur_pmi": q.q_cooccur_pmi,
-        "quality_classifier": q.q_quality_classifier,
-        # tokenizer training loop + exact substring dedup
-        "bpe_train": q.q_bpe_train,
-        "bpe_encode": q.q_bpe_encode,
+        # exact substring dedup
         "substring_dedup": q.q_substring_dedup,
-        # DSIR importance resampling (hashed-n-gram likelihood ratio)
-        "dsir_weights": q.q_dsir_weights,
-        "dsir_select": q.q_dsir_select,
         # Gopher quality-rule battery
         "gopher_rules": q.q_gopher_rules,
         # CCNet perplexity bucketing

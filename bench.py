@@ -45,20 +45,16 @@ BENCH_QUERIES = (
     "span_packing",
     "bpe_pairs",
     "doc_features",
-    "quality_classifier",
     "semantic_dedup",
     "ann_ivfpq_probe",
     "hll_distinct",
     "cms_topk",
-    "winnow_pairs",
     "bloom_probe",
     "sampled_quantiles",
     "boilerplate_strip",
     "curation_funnel",
     "url_dedup",
-    "bpe_train",
     "substring_dedup",
-    "dsir_weights",
     "gopher_rules",
     "ccnet_buckets",
     "c4_filters",

@@ -1,8 +1,8 @@
 """Large-scale training-data-pipeline operators over the documents
 and embeddings tables: deduplication (exact, MinHash+LSH, SimHash,
 n-gram Jaccard, embedding cosine), approximate nearest-neighbor
-search, text analysis (language ID, quality scoring, token counting,
-fingerprinting), and multimodal metadata extraction.
+search, and text analysis (language ID, quality scoring, token
+counting, fingerprinting).
 
 These extend the reference's extraction engine with the operations a
 100 TB corpus-preparation job needs; all are expressed Spark-first

@@ -398,7 +398,8 @@ def doc_chunks(docs: DataFrame) -> DataFrame:
     ~20k rows in its own task without a driver loop. Token-free
     documents produce no chunks (inner explode — stated, not hidden).
     The sequence() is guarded n_chunks > 0 because Spark's
-    sequence(0, -1) DESCENDS (the frame_sample lesson)."""
+    sequence(0, -1) DESCENDS to [0, -1] instead of yielding an empty
+    array."""
     toks = tokens(F.col("text"))
     n = F.size(toks)
     # n_chunks = 1 + ceil(max(n - CHUNK, 0) / STRIDE), integer math.
@@ -458,8 +459,9 @@ def lang_rebalance(docs: DataFrame) -> DataFrame:
     )
     langs = tagged.groupBy("lang").agg(F.count("*").alias("n_l"))
     # |langs| rows — a scalar, not a shuffle. Constant non-foldable
-    # key (lang is a non-null classifier output): keeps the
-    # global-window WARN channel clean (dsir.dsir_select convention).
+    # key (lang is a non-null classifier output): a window with an
+    # empty partition spec logs Spark's "No Partition Defined" WARN,
+    # and that channel stays reserved for genuinely unbounded windows.
     w = Window.partitionBy(F.least(F.length("lang"), F.lit(0)))
     cap = F.greatest(
         F.lit(1).cast("long"),

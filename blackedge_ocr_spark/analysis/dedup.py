@@ -553,146 +553,3 @@ def minhash_jaccard_audit(docs: DataFrame) -> DataFrame:
         j_est.alias("j_est"),
         F.round(F.abs(j_est - j_exact), 6).alias("abs_err"),
     )
-
-
-# ------------------------------------------- winnowing copy detection
-
-WINNOW_GRAM = 8     # words per gram (the copy-detection granularity)
-WINNOW_W = 4        # winnow window (consecutive gram hashes per min)
-WINNOW_MIN_SHARED = 2   # shared fingerprints to report a pair
-
-
-def winnow_fingerprint_sets(docs: DataFrame) -> DataFrame:
-    """(doc_id, fps) winnowed fingerprint SETS — the MOSS/copy-
-    detection selection (Schleimer et al. 2003, winnowing): min md5
-    over each WINNOW_W-window of the WORD-gram hash sequence
-    (textstats.fingerprints keeps ONE global min; this keeps the
-    per-window mins). Grams are WORD-aligned, not positional char
-    kgrams: a passage copied at a different byte offset still
-    produces the identical gram hashes (the positional-stride form
-    shares NOTHING unless the copy lands at the same offset mod
-    stride — the failure mode the word alignment exists to avoid).
-    Winnowing guarantee: any shared run of WINNOW_GRAM + WINNOW_W
-    words leaves at least one shared fingerprint. Pure per-row
-    expression — zero shuffle; the set is ~2/(W+1) of the gram count
-    and deduplicated."""
-    toks = tokens(F.col("text"))
-    n_gram = F.greatest(F.size(toks) - F.lit(WINNOW_GRAM - 1), F.lit(1))
-    hashes = F.transform(
-        F.sequence(F.lit(0), n_gram - 1),
-        lambda i: F.md5(
-            F.concat_ws(" ", F.slice(toks, i + 1, WINNOW_GRAM))
-        ),
-    )
-    fps = F.array_distinct(
-        F.transform(
-            F.sequence(
-                F.lit(0), F.greatest(n_gram - F.lit(WINNOW_W), F.lit(0))
-            ),
-            lambda i: F.array_min(F.slice(hashes, i + 1, WINNOW_W)),
-        )
-    )
-    return docs.select(
-        "doc_id",
-        F.when(F.size(toks) > 0, fps)
-        .otherwise(F.array().cast("array<string>"))
-        .alias("fps"),
-    )
-
-
-def winnow_overlap_pairs(
-    docs: DataFrame,
-    min_shared: int = WINNOW_MIN_SHARED,
-    bucket_cap: int = BUCKET_CAP,
-) -> DataFrame:
-    """Copy-detection pairs: documents sharing >= ``min_shared``
-    winnowed fingerprints, with the overlap fraction
-    n_shared / min(|fps_a|, |fps_b|) — substring-level plagiarism/
-    mirror detection, complementary to shingle-Jaccard (which needs
-    global similarity; this fires on one long copied passage inside
-    otherwise-different documents).
-
-    Shape (the LSH discipline): explode (fp, doc_id) → bucket per
-    fingerprint, capped to the ``bucket_cap`` LOWEST ids (the
-    boilerplate-fingerprint skew defense — same rule and rationale as
-    lsh_candidate_pairs; row_number in the oracle) → in-bucket pair
-    enumeration → count shared fps per pair (COMBINABLE agg, unlike
-    the distinct that banding.in_bucket_pairs applies) → attach the
-    two set sizes by broadcasting the O(candidates) pair ids back to
-    the corpus. The corpus itself never self-joins and never shuffles
-    on text."""
-    fsets = winnow_fingerprint_sets(docs)
-    exploded = fsets.select(
-        "doc_id", F.explode_outer(F.col("fps")).alias("fp")
-    ).filter(F.col("fp").isNotNull())
-    buckets = (
-        exploded.groupBy("fp")
-        .agg(
-            F.slice(
-                F.array_sort(F.collect_list("doc_id")), 1, bucket_cap
-            ).alias("ids")
-        )
-        .filter(F.size("ids") > 1)
-    )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x: F.filter(
-                F.transform(
-                    F.col("ids"),
-                    lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-                ),
-                lambda p: p["doc_a"] < p["doc_b"],
-            ),
-        )
-    )
-    shared = (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .groupBy("p.doc_a", "p.doc_b")
-        .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-        .persist()
-    )
-    cand = shared.select(
-        F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
-    ).distinct()
-    # O(candidates) staging tables, persisted + eagerly materialized
-    # so the fingerprint/bucket chain runs ONCE (not once per each of
-    # the three downstream consumers) and the two size broadcasts
-    # can't race a cold cache — the lsh_candidate_pairs discipline.
-    # Set sizes are re-winnowed ONLY for candidate docs (broadcast
-    # semi-join first, then fingerprint the surviving minority — the
-    # LSH-verify rule), never carried through the fp shuffle and
-    # never recomputed corpus-wide.
-    cand_sizes = (
-        winnow_fingerprint_sets(docs.join(F.broadcast(cand), "doc_id"))
-        .select("doc_id", F.size("fps").alias("n_fps"))
-        .persist()
-    )
-    cand_sizes.count()
-    out = (
-        shared.join(
-            F.broadcast(
-                cand_sizes.select(
-                    F.col("doc_id").alias("doc_a"), F.col("n_fps").alias("n_a")
-                )
-            ),
-            "doc_a",
-        )
-        .join(
-            F.broadcast(
-                cand_sizes.select(
-                    F.col("doc_id").alias("doc_b"), F.col("n_fps").alias("n_b")
-                )
-            ),
-            "doc_b",
-        )
-    )
-    overlap = F.round(
-        F.col("n_shared").cast("double")
-        / F.least("n_a", "n_b").cast("double"),
-        6,
-    )
-    return out.select(
-        "doc_a", "doc_b", "n_shared", overlap.alias("overlap")
-    )

@@ -31,8 +31,8 @@ LOWER-id cluster member scores cosine ≥ threshold against it
 (first-wins by vec_id — the same deterministic discipline as
 ``scrub.paragraph_dedup`` and ``dedup.exact_duplicates``). The rule
 is a plain EXISTS, so the DuckDB oracle mirrors it exactly; it is
-deliberately not transitive-closure (``clustering.dedup_clusters``
-owns connected components when cluster-level grouping is wanted).
+deliberately not transitive-closure, so no iterative
+connected-components job (one shuffle per round) is needed.
 
 Reference analog: none — the reference's similarity surface
 (src/services/validation/similarity_calculator.py) compares one

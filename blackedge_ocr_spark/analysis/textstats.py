@@ -369,8 +369,8 @@ def bpe_pairs(docs: DataFrame) -> DataFrame:
     partition heaps, O(K) driver merge — no global sort).
 
     sequence() is guarded for 1-char words: sequence(1, 0) is the
-    DESCENDING [1, 0] in Spark (the frame_sample lesson) and would
-    emit two bogus pairs per single-letter word.
+    DESCENDING [1, 0] in Spark, not an empty array, and would emit
+    two bogus pairs per single-letter word.
     """
     words = (
         docs.select(F.explode(tokens(F.col("text"))).alias("word"))

@@ -579,17 +579,6 @@ def q_neardup_recall(spark, sf_dir) -> DataFrame:
     )
 
 
-def q_classifier_calibration(spark, sf_dir) -> DataFrame:
-    """Decile calibration table of the trained quality classifier:
-    per score bin, doc count + weak-label positive rate."""
-    from blackedge_ocr_spark.analysis.classifier import (
-        calibration_report,
-        train_quality_classifier,
-    )
-
-    return calibration_report(train_quality_classifier(_docs(spark, sf_dir)))
-
-
 def q_source_mirror_stats(spark, sf_dir) -> DataFrame:
     """Mirror-site detection: cross-source rollup of verified LSH
     near-dup pairs over the corpus + a 'mirror' stratum (every 10th
@@ -971,47 +960,6 @@ def q_domain_filter(spark, sf_dir) -> DataFrame:
     return scrub.domain_filter(staged)
 
 
-def q_media_meta(spark, sf_dir) -> DataFrame:
-    """Decode-stub metadata for every media span (mapInPandas)."""
-    from blackedge_ocr_spark.analysis.media import media_metadata
-
-    return media_metadata(spansify_documents(spark, sf_dir))
-
-
-def q_media_features(spark, sf_dir) -> DataFrame:
-    """Feature-extraction plumbing: Arrow-batched embedding stub per
-    media span; the vector is exposed as an md5 over its 16 recovered
-    integer quads (array columns are unhashable for the driver)."""
-    from blackedge_ocr_spark.analysis.media import media_features
-
-    feats = media_features(spansify_documents(spark, sf_dir))
-    ints = F.transform(
-        F.col("features"),
-        # exact: quad/65536 is a power-of-two division, so the
-        # round-trip recovers the integer bit-exactly
-        lambda f: F.round(f * 65536.0).cast("int").cast("string"),
-    )
-    return feats.select(
-        "doc_id", "media_ref",
-        F.md5(F.concat_ws(",", ints)).alias("features_md5"),
-    )
-
-
-def q_media_resize(spark, sf_dir) -> DataFrame:
-    """Fit-within resize planning (512x512) over decoded dimensions —
-    JVM arithmetic above the decode stub."""
-    from blackedge_ocr_spark.analysis.media import media_resize
-
-    return media_resize(spansify_documents(spark, sf_dir))
-
-
-def q_frame_sample(spark, sf_dir) -> DataFrame:
-    """Evenly-spaced frame sampling (4 frames) for multi-frame media."""
-    from blackedge_ocr_spark.analysis.media import frame_sample
-
-    return frame_sample(spansify_documents(spark, sf_dir))
-
-
 def q_segment_stats(spark, sf_dir) -> DataFrame:
     """M4 segmentation end-to-end: deterministic HTML corpus →
     DOM-parse + boilerplate-strip scalar Arrow UDF → per-doc span stats and
@@ -1361,75 +1309,6 @@ def q_similarity_report(spark, sf_dir) -> DataFrame:
     )
 
 
-def q_dedup_clusters(spark, sf_dir) -> DataFrame:
-    """Transitive duplicate clusters over the dup-injected corpus:
-    exact-content star edges + production near-dup pairs, closed into
-    connected components (min-label propagation + pointer jumping on
-    the edge-induced subgraph only), one keeper per cluster. The step
-    that turns the dedup suite's pair relations into rows a 100 TB
-    job can actually drop. Oracle: DuckDB WITH RECURSIVE reachability
-    over the identical edge set."""
-    from blackedge_ocr_spark.analysis import clustering, dedup
-
-    corpus = dedup.with_dup_injection(
-        _docs(spark, sf_dir).select("doc_id", "text")
-    )
-    return clustering.dedup_clusters(corpus)
-
-
-# Packing shift for the quality-keeper argmax: doc ids reach
-# DUP_ID_OFFSET (1e12) + n, quality micro-units reach 1e6, so
-# qi * 4e12 + id stays under 4.0e18 < int64 max. Shared with
-# sqloracle.sql_cluster_keeper_quality.
-KEEPER_SHIFT = 4 * 10**12
-
-
-def q_cluster_keeper_quality(spark, sf_dir) -> DataFrame:
-    """Quality-aware duplicate-cluster keeper: per transitive cluster
-    keep the HIGHEST-quality member (min doc_id tie-break) — the
-    production keeper rule (FineWeb-style pipelines keep the best
-    copy, not the first seen; exact-dup members tie on quality and
-    fall back to min id, so this strictly generalizes the
-    `dedup_clusters` keeper). Returns (cluster_id, n_docs,
-    keep_doc_id, keep_quality).
-
-    Scale shape: quality is a per-row expression packed WITH the
-    doc id into one long (qi * 4e12 + (4e12-1-doc_id)), so the argmax
-    is max(long) in a map-side-combinable HashAggregate on cluster_id
-    — the funnel's packed-keeper discipline again: no join-back after
-    the agg, no max(struct) SortAggregate, no window over hot
-    clusters. The cluster join itself ships 16 bytes/doc.
-    """
-    from blackedge_ocr_spark.analysis import clustering, dedup
-    from blackedge_ocr_spark.analysis.textstats import quality_col
-
-    corpus = dedup.with_dup_injection(
-        _docs(spark, sf_dir).select("doc_id", "text")
-    )
-    clusters = clustering.dedup_clusters(corpus)
-    qi = F.floor(quality_col(F.col("text")) * 1e6 + F.lit(0.5)).cast("long")
-    packed = qi * F.lit(KEEPER_SHIFT) + (
-        F.lit(KEEPER_SHIFT - 1) - F.col("doc_id")
-    )
-    staged = corpus.select("doc_id", packed.alias("p"))
-    j = clusters.select("doc_id", "cluster_id").join(staged, "doc_id")
-    mp = F.col("mp")
-    return (
-        j.groupBy("cluster_id")
-        .agg(F.count("*").cast("long").alias("n_docs"), F.max("p").alias("mp"))
-        .select(
-            "cluster_id",
-            "n_docs",
-            (F.lit(KEEPER_SHIFT - 1) - F.pmod(mp, F.lit(KEEPER_SHIFT))).alias(
-                "keep_doc_id"
-            ),
-            (
-                F.expr(f"mp div {KEEPER_SHIFT}").cast("double") / 1e6
-            ).alias("keep_quality"),
-        )
-    )
-
-
 def q_term_doc_freq(spark, sf_dir) -> DataFrame:
     """Corpus IDF table: distinct-term explode → one combinable hash
     agg on term; corpus size joins in as a broadcast scalar."""
@@ -1562,15 +1441,6 @@ def q_mixture_weights(spark, sf_dir) -> DataFrame:
     return mixture_weights(_docs(spark, sf_dir))
 
 
-def q_media_dedup(spark, sf_dir) -> DataFrame:
-    """Perceptual-bucket media dedup across documents: Arrow decode
-    stage + one combinable agg on the bucket key, deterministic
-    min-asset keeper."""
-    from blackedge_ocr_spark.analysis.media import media_dedup
-
-    return media_dedup(spansify_documents(spark, sf_dir))
-
-
 def q_doc_features(spark, sf_dir) -> DataFrame:
     """One-scan fused curation feature table over the PII-staged
     corpus: lang + quality + token counts + PII total in a single
@@ -1629,16 +1499,6 @@ def q_cooccur_pmi(spark, sf_dir) -> DataFrame:
     return textstats.cooccur_pmi(_docs(spark, sf_dir))
 
 
-def q_quality_classifier(spark, sf_dir) -> DataFrame:
-    """Trainable curation classifier: 3 exact GD iterations as chained
-    combinable aggs + broadcast weight state; per-doc r6 scores."""
-    from blackedge_ocr_spark.analysis.classifier import (
-        train_quality_classifier,
-    )
-
-    return train_quality_classifier(_docs(spark, sf_dir))
-
-
 def q_minhash_jaccard_est(spark, sf_dir) -> DataFrame:
     """MinHash estimator accuracy audit: signature-agreement estimate
     next to the exact shingle Jaccard over consecutive-id probe
@@ -1646,19 +1506,6 @@ def q_minhash_jaccard_est(spark, sf_dir) -> DataFrame:
     from blackedge_ocr_spark.analysis import dedup
 
     return dedup.minhash_jaccard_audit(_docs(spark, sf_dir))
-
-
-def q_winnow_pairs(spark, sf_dir) -> DataFrame:
-    """Winnowed-fingerprint copy-detection pairs (MOSS-style): docs
-    sharing >= 2 winnowed kgram fingerprints, with the overlap
-    fraction — fires on one long copied passage, not just global
-    similarity. Capped fingerprint buckets, corpus never self-joins."""
-    from blackedge_ocr_spark.analysis import dedup
-
-    corpus = dedup.with_dup_injection(
-        _docs(spark, sf_dir).select("doc_id", "text")
-    )
-    return dedup.winnow_overlap_pairs(corpus)
 
 
 def q_bloom_probe(spark, sf_dir) -> DataFrame:
@@ -1687,26 +1534,6 @@ def q_lang_confusion(spark, sf_dir) -> DataFrame:
     return textstats.lang_confusion(_docs(spark, sf_dir))
 
 
-def q_bpe_train(spark, sf_dir) -> DataFrame:
-    """BPE tokenizer training loop (N_MERGES iterations): ONE
-    corpus-sized combinable word-count agg, then per-iteration
-    pair-count + TakeOrderedAndProject argmax over the cached
-    distinct-word table (the corpus never re-enters the loop)."""
-    from blackedge_ocr_spark.analysis import bpe
-
-    return bpe.bpe_train(_docs(spark, sf_dir))
-
-
-def q_bpe_encode(spark, sf_dir) -> DataFrame:
-    """Corpus-wide encoding with the learned merges: trained vocab
-    (word -> symbol count) BROADCASTS to the exploded token stream;
-    one combinable per-doc agg. Unseen words fall back to char
-    count."""
-    from blackedge_ocr_spark.analysis import bpe
-
-    return bpe.bpe_encode(_docs(spark, sf_dir))
-
-
 def q_substring_dedup(spark, sf_dir) -> DataFrame:
     """Exact substring-duplication removal (Lee et al. 2022): dup
     k-gram starts via combinable gram agg + ids-only join-back,
@@ -1727,24 +1554,6 @@ def q_ann_ivfpq_topk(spark, sf_dir) -> DataFrame:
     from blackedge_ocr_spark.analysis import ann
 
     return ann.ivfpq_topk(spark, sf_dir)
-
-
-def q_dsir_weights(spark, sf_dir) -> DataFrame:
-    """DSIR log importance weights (Xie et al. 2023): ONE conditional
-    256-bucket hash agg trains target+raw hashed-n-gram models, the
-    ratio table broadcasts back over the feature stream, combinable
-    per-doc sum — the corpus never shuffles on a feature key."""
-    from blackedge_ocr_spark.analysis import dsir
-
-    return dsir.dsir_weights(_docs(spark, sf_dir))
-
-
-def q_dsir_select(spark, sf_dir) -> DataFrame:
-    """Deterministic DSIR resample head: top-k docs by log importance
-    weight via TakeOrderedAndProject (map-side partial top-k)."""
-    from blackedge_ocr_spark.analysis import dsir
-
-    return dsir.dsir_select(_docs(spark, sf_dir))
 
 
 def q_gopher_rules(spark, sf_dir) -> DataFrame:

@@ -111,7 +111,7 @@ def key_terms_sql(c: str, min_length: int = 3) -> str:
 # ONE definition each for the language-score selects, the argmax CASE
 # and the composite quality formula: these appear in half a dozen
 # oracles (lang_id, quality_scores, doc_features, corpus_curation,
-# curation_funnel, cluster_keeper, domain_stats, lang_confusion,
+# curation_funnel, domain_stats, lang_confusion,
 # lang_rebalance, quality_sample) and hand-maintained copies WILL
 # drift from textstats.predict_lang / quality_col.
 
@@ -708,8 +708,6 @@ def build_oracles() -> dict[str, str]:
         "dedup_minhash": sql_dedup_minhash(),
         "dedup_lsh_pairs": sql_dedup_lsh_pairs(),
         "dedup_production_pairs": sql_dedup_production_pairs(),
-        "dedup_clusters": sql_dedup_clusters(),
-        "cluster_keeper_quality": sql_cluster_keeper_quality(),
         "dedup_simhash": sql_dedup_simhash(),
         "ngram_jaccard": sql_ngram_jaccard(),
         "ann_topk": sql_ann_topk(),
@@ -728,8 +726,6 @@ def build_oracles() -> dict[str, str]:
         "sampled_quantiles": sql_sampled_quantiles(),
         "lang_confusion": sql_lang_confusion(),
         "minhash_jaccard_est": sql_minhash_jaccard_est(),
-        "winnow_pairs": sql_winnow_pairs(),
-        "classifier_calibration": sql_classifier_calibration(),
         "source_mirror_stats": sql_source_mirror_stats(),
         "lang_id": sql_lang_id(),
         "token_counts": sql_token_counts(),
@@ -738,10 +734,6 @@ def build_oracles() -> dict[str, str]:
         "term_doc_freq": sql_term_doc_freq(),
         "corpus_stats": sql_corpus_stats(),
         "snapshot_diff": sql_snapshot_diff(),
-        "media_meta": sql_media_meta(),
-        "media_features": sql_media_features(),
-        "media_resize": sql_media_resize(),
-        "frame_sample": sql_frame_sample(),
         "segment_stats": sql_segment_stats(),
         "azure_layout": sql_azure_layout(),
         "ingest_validate": sql_ingest_validate(),
@@ -779,7 +771,6 @@ def build_oracles() -> dict[str, str]:
         "bpe_pairs": sql_bpe_pairs(),
         "data_split": sql_data_split(),
         "mixture_weights": sql_mixture_weights(),
-        "media_dedup": sql_media_dedup(),
         "doc_features": sql_doc_features(),
         "vocab_coverage": sql_vocab_coverage(),
         "domain_stats": sql_domain_stats(),
@@ -787,14 +778,8 @@ def build_oracles() -> dict[str, str]:
         # retrieval / collocation statistics
         "bm25_topk": sql_bm25_topk(),
         "cooccur_pmi": sql_cooccur_pmi(),
-        "quality_classifier": sql_quality_classifier(),
-        # tokenizer training loop + exact substring dedup
-        "bpe_train": sql_bpe_train(),
-        "bpe_encode": sql_bpe_encode(),
+        # exact substring dedup
         "substring_dedup": sql_substring_dedup(),
-        # DSIR importance resampling
-        "dsir_weights": sql_dsir_weights(),
-        "dsir_select": sql_dsir_select(),
         "gopher_rules": sql_gopher_rules(),
         "ccnet_buckets": sql_ccnet_buckets(),
         # C4 cleaning + global span dedup
@@ -1611,72 +1596,6 @@ SELECT doc_id,
 FROM w"""
 
 
-def sql_media_meta() -> str:
-    from blackedge_ocr_spark.analysis.media import FORMATS
-
-    q = lambda i: f"('0x' || substr(h, {1 + 4 * i}, 4))::int"
-    fmt_whens = " ".join(
-        f"WHEN {i} THEN {_sq(f)}" for i, f in enumerate(FORMATS)
-    )
-    return f"""
-WITH {spansify_cte()},
-m AS (SELECT doc_id::varchar AS doc_id, media_ref, md5(media_ref) AS h
-      FROM sp WHERE kind IN ('image', 'page'))
-SELECT doc_id, media_ref,
-  (320 + {q(0)} % 1600)::int AS width,
-  (240 + {q(1)} % 900)::int AS height,
-  (CASE {q(2)} % {len(FORMATS)} {fmt_whens} END) AS format,
-  (1 + {q(3)} % 30)::int AS n_frames
-FROM m"""
-
-
-def sql_media_features(dim: int = 16) -> str:
-    """analysis.media.fake_features mirror: quad i of md5(ref:i),
-    compared as md5 over the integer sequence."""
-    quad = (
-        "('0x' || substr(md5(media_ref || ':' || i::varchar), 1, 4))::int"
-    )
-    ints = f"list_transform(range({dim}), i -> ({quad})::varchar)"
-    return f"""
-WITH {spansify_cte()},
-m AS (SELECT doc_id::varchar AS doc_id, media_ref FROM sp
-      WHERE kind IN ('image', 'page'))
-SELECT doc_id, media_ref,
-       md5(array_to_string({ints}, ',')) AS features_md5
-FROM m"""
-
-
-def sql_media_resize(target_w: int = 512, target_h: int = 512) -> str:
-    """analysis.media.media_resize mirror over the decode-stub dims."""
-    return f"""
-WITH meta AS ({sql_media_meta()}),
-s AS (SELECT *, least({target_w}.0 / width, {target_h}.0 / height, 1.0)
-             AS scale FROM meta)
-SELECT doc_id, media_ref, width, height,
-  greatest(floor(width * scale), 1)::int AS out_w,
-  greatest(floor(height * scale), 1)::int AS out_h,
-  'resized-' || media_ref || '-' || greatest(floor(width * scale), 1)::int
-    || 'x' || greatest(floor(height * scale), 1)::int AS resized_ref
-FROM s"""
-
-
-def sql_frame_sample(n: int = 4) -> str:
-    """analysis.media.frame_sample mirror: all frames when
-    n_frames <= n, else evenly spaced floor(k * n_frames / n)."""
-    idx = (
-        f"CASE WHEN n_frames <= {n} THEN k "
-        f"ELSE floor(k * n_frames / {n}.0)::int END"
-    )
-    return f"""
-WITH meta AS ({sql_media_meta()}),
-ks AS (SELECT doc_id, media_ref, n_frames,
-              unnest(range(least({n}, n_frames))) AS k FROM meta)
-SELECT doc_id, media_ref,
-       ({idx})::bigint AS frame_idx,
-       media_ref || '#f' || ({idx})::varchar AS frame_ref
-FROM ks"""
-
-
 # --- segmentation -----------------------------------------------------
 
 
@@ -2372,63 +2291,6 @@ d AS (SELECT doc_id,
 SELECT doc_id, domain FROM d WHERE domain NOT IN ({blocked})"""
 
 
-def sql_dedup_clusters() -> str:
-    """clustering.dedup_clusters mirror: the SAME duplicate edge set
-    (exact-content star edges + production near-dup pairs) closed
-    transitively with a recursive label walk — every node collects the
-    labels of everything that reaches it, min = the component minimum,
-    exactly the fixpoint of the Spark side's min-label propagation."""
-    h = f"md5({normalize_for_comparison_sql('text')})"
-    near = sql_dedup_production_pairs()
-    return f"""
-WITH RECURSIVE {DUP_CORPUS},
-near AS (SELECT doc_a, doc_b FROM ({near}) t),
-hashed AS (SELECT doc_id, {h} AS h FROM corpus),
-exact_edges AS (
-  SELECT doc_id AS a, min(doc_id) OVER (PARTITION BY h) AS b FROM hashed),
--- MATERIALIZED: the recursive walk below re-reads edges every
--- iteration; without it DuckDB re-derives the whole LSH chain per
--- iteration (measured 162 s -> ~55 s at sf0.01)
-edges AS MATERIALIZED (
-  SELECT a, b FROM exact_edges WHERE a <> b
-  UNION SELECT b, a FROM exact_edges WHERE a <> b
-  UNION SELECT doc_a AS a, doc_b AS b FROM near
-  UNION SELECT doc_b AS a, doc_a AS b FROM near),
-walk(node, lab) AS (
-  SELECT doc_id, doc_id FROM corpus
-  UNION
-  SELECT e.b, w.lab FROM walk w JOIN edges e ON e.a = w.node)
-SELECT node AS doc_id, min(lab) AS cluster_id,
-       (min(lab) = node) AS is_keeper
-FROM walk GROUP BY node"""
-
-
-def sql_cluster_keeper_quality() -> str:
-    """queries.q_cluster_keeper_quality mirror: the SAME transitive
-    clusters (sql_dedup_clusters as a subquery), the SAME packed long
-    max (qi * 4e12 + (4e12-1-doc_id)) and the same decode — argmax by
-    quality, min-id tie-break, all exact integer arithmetic."""
-    from blackedge_ocr_spark.queries import KEEPER_SHIFT
-
-    toks = tokens_sql("text")
-    clusters = sql_dedup_clusters()
-    return f"""
-WITH {DUP_CORPUS},
-t AS (SELECT doc_id, {toks} AS toks FROM corpus),
-m AS (SELECT doc_id, {measures_sql()}
-      FROM t),
-q AS (SELECT doc_id, {QUALITY_MICRO_SQL} AS qi
-      FROM m),
-c AS (SELECT doc_id, cluster_id FROM ({clusters}) walk_out),
-p AS (SELECT c.cluster_id,
-             q.qi * {KEEPER_SHIFT} + ({KEEPER_SHIFT} - 1 - q.doc_id) AS p
-      FROM c JOIN q USING (doc_id))
-SELECT cluster_id, count(*)::bigint AS n_docs,
-  ({KEEPER_SHIFT} - 1 - (max(p) % {KEEPER_SHIFT}))::bigint AS keep_doc_id,
-  (max(p) // {KEEPER_SHIFT})::double / 1000000.0 AS keep_quality
-FROM p GROUP BY cluster_id"""
-
-
 def sql_term_doc_freq() -> str:
     """textstats.term_doc_freq mirror: distinct key terms per doc
     unnested, counted per term, idf = r6(ln(n_docs / df))."""
@@ -2592,22 +2454,6 @@ def sql_top_terms() -> str:
 WITH e AS (SELECT unnest({toks}) AS term FROM documents)
 SELECT term, count(*)::bigint AS n FROM e
 GROUP BY term ORDER BY n DESC, term ASC LIMIT {TOP_K_TERMS}"""
-
-
-def sql_classifier_calibration() -> str:
-    """classifier.calibration_report mirror over the unrolled-GD
-    score table: decile binning (least(9, floor(score·10))) and the
-    micro-unit-rounded positive rate."""
-    from blackedge_ocr_spark.analysis.classifier import CAL_BINS
-
-    return f"""
-WITH sc AS ({sql_quality_classifier()})
-SELECT least({CAL_BINS - 1}, floor(score * {CAL_BINS}))::BIGINT AS bin,
-       count(*)::BIGINT AS n,
-       sum(label)::BIGINT AS n_pos,
-       floor(sum(label)::DOUBLE / count(*)::DOUBLE * 1000000 + 0.5)
-         / 1000000 AS pos_rate
-FROM sc GROUP BY 1"""
 
 
 def sql_source_mirror_stats() -> str:
@@ -2914,25 +2760,6 @@ SELECT source, n_docs, n_tokens,
 FROM t"""
 
 
-def sql_media_dedup() -> str:
-    """media.media_dedup mirror over the decode-stub metadata: same
-    (width//CELL, height//CELL, format) bucket key, same min-asset
-    keeper."""
-    from blackedge_ocr_spark.analysis.media import PHASH_CELL
-
-    c = PHASH_CELL
-    return f"""
-WITH meta AS ({sql_media_meta()}),
-t AS (SELECT
-    md5(floor(width::double / {c})::bigint::varchar || ':'
-        || floor(height::double / {c})::bigint::varchar || ':'
-        || format) AS bucket,
-    doc_id || ':' || media_ref AS asset
-  FROM meta)
-SELECT bucket, count(*)::bigint AS n_assets, min(asset) AS keeper
-FROM t GROUP BY bucket"""
-
-
 def sql_doc_features() -> str:
     """textstats.doc_features mirror: the standalone operators' exact
     fragments (lang argmax, quality composite, token counts, PII
@@ -3127,69 +2954,6 @@ JOIN uni ua ON ua.term = sel.a
 JOIN uni ub ON ub.term = sel.b, np, nt"""
 
 
-def sql_quality_classifier() -> str:
-    """classifier.train_quality_classifier mirror: the GD loop
-    unrolled as LR_ITERS (gradient, weight) CTE pairs over the same
-    staged feature table — identical z/p/gradient expression shapes,
-    identical micro-unit rounding, exact long weight state."""
-    from blackedge_ocr_spark.analysis.classifier import (
-        LR_ITERS,
-        LR_POS_LANG,
-        LR_RATE,
-        LR_X1_SCALE,
-    )
-    toks = tokens_sql("text")
-    norm = norm_sql("text")
-    ws = (
-        f"(CASE WHEN length(norm) = 0 THEN 0 "
-        f"ELSE len(str_split(norm, ' ')) END)::bigint"
-    )
-    z = (
-        "(w0_u::double / 1000000.0 + w1_u::double / 1000000.0 * x1"
-        " + w2_u::double / 1000000.0 * x2)"
-    )
-    p = f"(1.0 / (1.0 + exp(-{z})))"
-    gsum = lambda xj, j: (
-        f"sum(floor((({p} - y) * {xj}) * 1000000.0 + 0.5))::bigint AS g{j}"
-    )
-    steps = []
-    prev = "w0"
-    for i in range(1, LR_ITERS + 1):
-        steps.append(
-            f"g{i} AS (SELECT {gsum('1.0', 0)}, {gsum('x1', 1)}, "
-            f"{gsum('x2', 2)}, count(*)::bigint AS n, "
-            f"max(w0_u) AS w0_u, max(w1_u) AS w1_u, max(w2_u) AS w2_u "
-            f"FROM f, {prev})"
-        )
-        upd = ", ".join(
-            f"(w{j}_u - floor({LR_RATE!r} * (g{j}::double / n::double)"
-            f" + 0.5)::bigint)::bigint AS w{j}_u"
-            for j in range(3)
-        )
-        steps.append(f"w{i} AS (SELECT {upd} FROM g{i})")
-        prev = f"w{i}"
-    chain = ",\n".join(steps)
-    return f"""
-WITH l AS ({lang_sel_sql('lang')}),
-t AS (SELECT doc_id, {toks} AS toks, {norm} AS norm FROM documents),
-m AS (
-  SELECT doc_id, {ws} AS ws, {measures_sql()}
-  FROM t
-),
-f AS (
-  SELECT m.doc_id,
-    CASE WHEN l.lang = {_sq(LR_POS_LANG)} THEN 1.0 ELSE 0.0 END AS y,
-    least(ws::double / {LR_X1_SCALE!r}, 1.0) AS x1,
-    {QUALITY_R6_SQL} AS x2
-  FROM m JOIN l USING (doc_id)
-),
-w0 AS (SELECT 0::bigint AS w0_u, 0::bigint AS w1_u, 0::bigint AS w2_u),
-{chain}
-SELECT doc_id, y::bigint AS label,
-  floor({p} * 1000000 + 0.5) / 1000000 AS score
-FROM f, {prev}"""
-
-
 def sql_minhash_jaccard_est() -> str:
     """dedup.minhash_jaccard_audit mirror: signature agreement
     fraction vs exact shingle Jaccard over consecutive-id pairs.
@@ -3213,54 +2977,6 @@ m AS (SELECT doc_a, doc_b,
 SELECT doc_a, doc_b, j_exact, j_est,
        round(abs(j_est - j_exact), 6) AS abs_err
 FROM m"""
-
-
-def sql_winnow_pairs() -> str:
-    """dedup.winnow_overlap_pairs mirror: word-aligned gram hashes,
-    per-window mins (winnowing), capped fingerprint buckets via
-    row_number, shared-count >= WINNOW_MIN_SHARED, overlap =
-    n_shared / min set size."""
-    from blackedge_ocr_spark.analysis.dedup import (
-        BUCKET_CAP,
-        WINNOW_GRAM,
-        WINNOW_MIN_SHARED,
-        WINNOW_W,
-    )
-
-    toks = tokens_sql("text")
-    return f"""
-WITH {DUP_CORPUS},
-t AS (SELECT doc_id, {toks} AS toks FROM corpus),
-g AS (SELECT doc_id, toks,
-        greatest(len(toks) - {WINNOW_GRAM - 1}, 1) AS n_gram FROM t),
-h AS (SELECT doc_id, n_gram, list_transform(range(n_gram),
-        i -> md5(array_to_string(
-               list_slice(toks, i + 1, i + {WINNOW_GRAM}), ' '))) AS hashes,
-        len(toks) AS n_toks
-      FROM g),
-f AS (SELECT doc_id,
-        CASE WHEN n_toks > 0 THEN list_distinct(list_transform(
-          range(greatest(n_gram - {WINNOW_W}, 0) + 1),
-          i -> list_aggregate(list_slice(hashes, i + 1, i + {WINNOW_W}),
-                              'min')))
-        ELSE []::varchar[] END AS fps FROM h),
-e AS (SELECT doc_id, unnest(fps) AS fp FROM f),
-capped AS (SELECT fp, doc_id FROM (
-    SELECT fp, doc_id,
-           row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-    FROM e) WHERE rn <= {BUCKET_CAP}),
-pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM capped a JOIN capped b
-          ON a.fp = b.fp AND a.doc_id < b.doc_id),
-shared AS (SELECT doc_a, doc_b, count(*)::bigint AS n_shared
-           FROM pairs GROUP BY 1, 2
-           HAVING count(*) >= {WINNOW_MIN_SHARED}),
-sizes AS (SELECT doc_id, len(fps) AS n_fps FROM f)
-SELECT doc_a, doc_b, n_shared,
-  round(n_shared::double / least(sa.n_fps, sb.n_fps)::double, 6) AS overlap
-FROM shared
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b"""
 
 
 def sql_bloom_probe() -> str:
@@ -3374,99 +3090,8 @@ GROUP BY 1, 2"""
 
 
 # ---------------------------------------------------------------------
-# BPE tokenizer training + exact substring dedup (analysis/bpe.py,
-# analysis/scrub.py) — iterative oracles, unrolled one CTE stage per
-# merge like the k-means chains above.
+# Exact substring dedup (analysis/scrub.py)
 # ---------------------------------------------------------------------
-
-def _bpe_base_sql() -> str:
-    """w0 = distinct-word frequencies; s0 = initial char symbols."""
-    toks = tokens_sql("text")
-    return f"""
-w0 AS (SELECT word, count(*)::bigint AS freq
-       FROM (SELECT unnest({toks}) AS word FROM documents) GROUP BY word),
-s0 AS (SELECT word, freq,
-         list_transform(range(1, length(word) + 1),
-                        i -> substr(word, i::int, 1)) AS syms
-       FROM w0)"""
-
-
-def _bpe_stage_sql(i: int) -> str:
-    """Stage i: p{i} counts adjacent-symbol pairs weighted by word
-    freq, m{i} picks the (n DESC, lhs, rhs) argmax, s{i} applies the
-    merge with the IDENTICAL left fold as bpe.apply_merge (the
-    accumulator starts as the first wrapped symbol, so the first
-    lambda call sees acc=[sym1] — same as Spark's empty-init fold
-    after its first append). LEFT JOIN ON TRUE, not CROSS JOIN: if
-    the merge loop exhausts early (p{i} empty -> no m{i} row), the
-    NULL lhs/rhs make the fold's WHEN null-false so s{i} rebuilds
-    s{i-1} unchanged — matching the engine's loop break. A cross
-    join would EMPTY every later stage and silently collapse the
-    bpe_encode vocab to the char-count fallback."""
-    p = i - 1
-    return f"""
-p{i} AS (SELECT unnest(list_transform(range(1, len(syms)),
-             j -> {{'lhs': syms[j::int], 'rhs': syms[(j+1)::int]}})) AS pr,
-             freq
-         FROM s{p} WHERE len(syms) >= 2),
-m{i} AS (SELECT pr.lhs AS lhs, pr.rhs AS rhs, sum(freq)::bigint AS n,
-                {i} AS rank
-         FROM p{i} GROUP BY pr.lhs, pr.rhs
-         ORDER BY n DESC, lhs, rhs LIMIT 1),
-s{i} AS (SELECT word, freq,
-           list_reduce(list_transform(syms, s -> [s]),
-             (acc, x) -> CASE
-               WHEN len(acc) > 0 AND acc[-1] = lhs AND x[1] = rhs
-               THEN list_concat(acc[1:len(acc)-1], [lhs || rhs])
-               ELSE list_concat(acc, x) END) AS syms
-         FROM s{p} LEFT JOIN m{i} ON TRUE)"""
-
-
-def _bpe_chain_sql(n_merges: int) -> str:
-    return _bpe_base_sql() + "," + ",".join(
-        _bpe_stage_sql(i) for i in range(1, n_merges + 1)
-    )
-
-
-def sql_bpe_train() -> str:
-    """bpe.bpe_train mirror: the learned merge table, one unrolled
-    stage per rank."""
-    from blackedge_ocr_spark.analysis.bpe import N_MERGES
-
-    union = "\nUNION ALL\n".join(
-        f"SELECT rank, lhs, rhs, n FROM m{i}"
-        for i in range(1, N_MERGES + 1)
-    )
-    return f"WITH{_bpe_chain_sql(N_MERGES)}\n{union}"
-
-
-def sql_bpe_encode() -> str:
-    """bpe.bpe_encode mirror: per-doc token/BPE-symbol counts with the
-    trained vocab joined back to the exploded corpus token stream.
-    Empty docs survive via the LEFT JOIN from the un-exploded side
-    (the dup_ngrams discipline)."""
-    from blackedge_ocr_spark.analysis.bpe import N_MERGES
-
-    toks = tokens_sql("text")
-    return f"""
-WITH{_bpe_chain_sql(N_MERGES)},
-vocab AS (SELECT word, len(syms)::bigint AS n_syms FROM s{N_MERGES}),
-t AS (SELECT doc_id, {toks} AS toks FROM documents),
-ex AS (SELECT doc_id, unnest(toks) AS word FROM t),
-jj AS (SELECT ex.doc_id,
-              coalesce(v.n_syms, length(ex.word))::bigint AS ns
-       FROM ex LEFT JOIN vocab v USING (word)),
-a AS (SELECT doc_id, count(*)::bigint AS n_tokens,
-             sum(ns)::bigint AS n_bpe
-      FROM jj GROUP BY doc_id)
-SELECT t.doc_id,
-       coalesce(a.n_tokens, 0)::bigint AS n_tokens,
-       coalesce(a.n_bpe, 0)::bigint AS n_bpe,
-       CASE WHEN coalesce(a.n_tokens, 0) > 0
-            THEN floor(a.n_bpe::double / a.n_tokens::double * 1e6 + 0.5)
-                 / 1e6
-            ELSE 0.0 END AS syms_per_word
-FROM t LEFT JOIN a USING (doc_id)"""
 
 
 def sql_substring_dedup() -> str:
@@ -3538,73 +3163,8 @@ FROM ke"""
 
 
 # ---------------------------------------------------------------------
-# DSIR importance resampling (analysis/dsir.py) — hashed-n-gram
-# likelihood-ratio weights with the lm_scores ln/micro-unit
-# discipline; bucket = md5 hex prefix kept as a string.
+# Gopher rules + CCNet perplexity buckets (analysis/textstats.py)
 # ---------------------------------------------------------------------
-
-def _dsir_base_sql() -> str:
-    """b = (doc_id, is_t, bucket) exploded hashed feature stream;
-    c = the single conditional 256-bucket count table; r = per-bucket
-    micro-unit log-ratio (identical divide/ln/subtract op order as
-    the Spark side)."""
-    from blackedge_ocr_spark.analysis.dsir import (
-        DSIR_BUCKET_HEX,
-        DSIR_BUCKETS,
-        DSIR_TARGET_LANG,
-    )
-
-    toks = tokens_sql("text")
-    return f"""
-t AS (SELECT doc_id, lang = '{DSIR_TARGET_LANG}' AS is_t,
-             {toks} AS toks FROM documents),
-f AS (SELECT doc_id, is_t,
-             unnest(list_concat(toks,
-               list_transform(range(1, len(toks)),
-                 i -> toks[i::int] || ' ' || toks[(i + 1)::int])))
-               AS feat
-      FROM t),
-b AS (SELECT doc_id, is_t,
-             substr(md5('dsir:' || feat), 1, {DSIR_BUCKET_HEX}) AS bucket
-      FROM f),
-c AS (SELECT bucket, count(*)::bigint AS n_raw,
-             sum(CASE WHEN is_t THEN 1 ELSE 0 END)::bigint AS n_tgt
-      FROM b GROUP BY bucket),
-tt AS (SELECT sum(n_raw)::bigint AS t_raw, sum(n_tgt)::bigint AS t_tgt
-       FROM c),
-r AS (SELECT bucket,
-        floor((ln((n_tgt + 1)::double
-                  / ((SELECT t_tgt FROM tt) + {DSIR_BUCKETS})::double)
-             - ln((n_raw + 1)::double
-                  / ((SELECT t_raw FROM tt) + {DSIR_BUCKETS})::double))
-              * 1000000 + 0.5)::bigint AS li
-      FROM c),
-g AS (SELECT doc_id, count(*)::bigint AS n_feats, sum(li)::bigint AS s
-      FROM b JOIN r USING (bucket) GROUP BY doc_id),
-w AS (SELECT d.doc_id,
-             coalesce(g.n_feats, 0)::bigint AS n_feats,
-             CASE WHEN g.n_feats > 0 THEN g.s::double / 1000000.0
-                  ELSE 0.0 END AS logw
-      FROM documents d LEFT JOIN g ON d.doc_id = g.doc_id)"""
-
-
-def sql_dsir_weights() -> str:
-    """dsir.dsir_weights mirror."""
-    return f"WITH{_dsir_base_sql()}\nSELECT doc_id, n_feats, logw FROM w"
-
-
-def sql_dsir_select() -> str:
-    """dsir.dsir_select mirror: same (logw desc, doc_id) total order,
-    same k."""
-    from blackedge_ocr_spark.analysis.dsir import DSIR_SELECT_K
-
-    return f"""
-WITH{_dsir_base_sql()},
-h AS (SELECT doc_id, n_feats, logw FROM w
-      ORDER BY logw DESC, doc_id LIMIT {DSIR_SELECT_K})
-SELECT row_number() OVER (ORDER BY logw DESC, doc_id)::bigint AS rank,
-       doc_id, n_feats, logw
-FROM h"""
 
 
 def sql_gopher_rules() -> str:

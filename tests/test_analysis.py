@@ -120,69 +120,6 @@ def test_ann_topk_shape(spark):
         assert cos == sorted(cos, reverse=True)
 
 
-def test_media_meta_covers_all_media_spans(spark):
-    from blackedge_ocr_spark.analysis.media import fake_decode, media_metadata
-    from blackedge_ocr_spark.datagen import spansify_documents
-
-    d = spansify_documents(spark, SF)
-    n_media = d.select(
-        F.explode("spans").alias("s")
-    ).filter(F.col("s.kind").isin("image", "page")).count()
-    meta = media_metadata(d)
-    rows = meta.collect()
-    assert len(rows) == n_media
-    r = rows[0]
-    w, h, fmt, nf = fake_decode(r["media_ref"])
-    assert (r["width"], r["height"], r["format"], r["n_frames"]) == (w, h, fmt, nf)
-    assert 320 <= r["width"] < 1920 and 240 <= r["height"] < 1140
-
-
-def test_media_feature_resize_frame_plumbing(spark):
-    """Feature vectors have the fixed dim in [0,1); resize fits within
-    the target box preserving aspect ratio; frame sampling takes all
-    frames when few, evenly spaced distinct indices when many."""
-    from blackedge_ocr_spark.analysis.media import (
-        FEATURE_DIM,
-        fake_decode,
-        frame_sample,
-        media_features,
-        media_resize,
-    )
-    from blackedge_ocr_spark.datagen import spansify_documents
-
-    d = spansify_documents(spark, SF)
-    feats = media_features(d).limit(20).collect()
-    assert feats
-    for r in feats:
-        assert len(r["features"]) == FEATURE_DIM
-        assert all(0.0 <= v < 1.0 for v in r["features"])
-
-    rs = media_resize(d, 512, 512).limit(50).collect()
-    for r in rs:
-        assert 1 <= r["out_w"] <= 512 and 1 <= r["out_h"] <= 512
-        if r["width"] > 512 or r["height"] > 512:  # downscaled
-            ratio_in = r["width"] / r["height"]
-            ratio_out = r["out_w"] / r["out_h"]
-            assert abs(ratio_in - ratio_out) / ratio_in < 0.02
-        else:  # never upscale
-            assert (r["out_w"], r["out_h"]) == (r["width"], r["height"])
-        assert r["resized_ref"] == (
-            f"resized-{r['media_ref']}-{r['out_w']}x{r['out_h']}"
-        )
-
-    fr = frame_sample(d, 4).collect()
-    by_ref = {}
-    for r in fr:
-        by_ref.setdefault(r["media_ref"], []).append(r["frame_idx"])
-    for ref, idxs in by_ref.items():
-        n_frames = fake_decode(ref)[3]
-        assert len(idxs) == min(4, n_frames)
-        assert len(set(idxs)) == len(idxs)  # no duplicate frames
-        assert all(0 <= i < n_frames for i in idxs)
-        if n_frames <= 4:
-            assert sorted(idxs) == list(range(n_frames))
-
-
 def test_lang_id_and_quality(spark, docs):
     from blackedge_ocr_spark.analysis import textstats
 
@@ -635,36 +572,6 @@ def test_quality_sample_rate_tracks_quality(spark):
     assert again["rich"] == out["rich"]["n_kept"]
 
 
-def test_media_dedup_buckets_and_keeper(spark):
-    """Every media asset lands in exactly one bucket; keeper is the
-    lexicographic min 'doc_id:media_ref' of its bucket; bucket
-    membership agrees with a recomputed fake_decode."""
-    import math
-
-    from blackedge_ocr_spark.analysis.media import (
-        PHASH_CELL,
-        fake_decode,
-        media_dedup,
-        media_metadata,
-    )
-    from blackedge_ocr_spark.datagen import spansify_documents
-
-    d = spansify_documents(spark, SF)
-    out = media_dedup(d).collect()
-    meta = media_metadata(d).collect()
-    assert sum(r["n_assets"] for r in out) == len(meta)
-
-    # recompute buckets driver-side from the decode stub
-    want = {}
-    for m in meta:
-        w, h, fmt, _ = fake_decode(m["media_ref"])
-        k = (math.floor(w / PHASH_CELL), math.floor(h / PHASH_CELL), fmt)
-        want.setdefault(k, []).append(f"{m['doc_id']}:{m['media_ref']}")
-    assert len(out) == len(want)
-    keepers = {min(v) for v in want.values()}
-    assert {r["keeper"] for r in out} == keepers
-
-
 def test_minhash_audit_estimator_structure(spark):
     """Identical neighbors estimate 1.0 exactly; disjoint neighbors
     estimate 0.0; the est column is always a multiple of 1/K."""
@@ -682,32 +589,3 @@ def test_minhash_audit_estimator_structure(spark):
         k = dedup.MINHASH_K
         assert abs(r["j_est"] * k - round(r["j_est"] * k)) < 1e-6
 
-
-def test_winnow_detects_embedded_copied_passage(spark):
-    """A long passage copied into otherwise-different documents
-    produces a winnow pair; fully different documents do not."""
-    from blackedge_ocr_spark.analysis import dedup
-
-    passage = (
-        "the quick brown fox jumps over the lazy dog near the river "
-        "bank while autumn leaves drift slowly through the cold air "
-        "and distant bells ring across the quiet valley floor"
-    )
-    a = "report alpha introduction section " + passage + " appendix one"
-    b = "minutes of the beta committee " + passage + " closing remarks"
-    c = (
-        "completely unrelated text about quantum chromodynamics and "
-        "lattice gauge simulations on distributed hardware clusters "
-        "with no shared phrasing whatsoever in any window at all here"
-    )
-    df = spark.createDataFrame(
-        [(0, a), (1, b), (2, c)], "doc_id long, text string"
-    )
-    pairs = {
-        (r["doc_a"], r["doc_b"]): r
-        for r in dedup.winnow_overlap_pairs(df).collect()
-    }
-    assert (0, 1) in pairs
-    assert pairs[(0, 1)]["n_shared"] >= 2
-    assert 0 < pairs[(0, 1)]["overlap"] <= 1.0
-    assert all(2 not in k for k in pairs)

@@ -1,33 +1,9 @@
-"""Calibration-report semantics and mirror-stats detection on
-constructed corpora.
+"""Mirror-stats detection on a constructed corpus: a stratum that
+re-hosts another source's pages verbatim shows up as cross-source
+duplicate mass.
 """
 
 from __future__ import annotations
-
-import pyspark.sql.functions as F
-
-
-def test_calibration_bins_partition_the_corpus(spark):
-    from blackedge_ocr_spark.analysis.classifier import calibration_report
-
-    scored = spark.createDataFrame(
-        [
-            (1, 1, 0.05),
-            (2, 0, 0.04),
-            (3, 1, 0.55),
-            (4, 1, 0.59),
-            (5, 0, 0.52),
-            (6, 1, 1.0),  # score 1.0 -> top bin, not bin 10
-        ],
-        "doc_id long, label long, score double",
-    )
-    rows = {r["bin"]: r for r in calibration_report(scored).collect()}
-    assert set(rows) == {0, 5, 9}
-    assert rows[0]["n"] == 2 and rows[0]["n_pos"] == 1
-    assert rows[0]["pos_rate"] == 0.5
-    assert rows[5]["n"] == 3 and rows[5]["pos_rate"] == 0.666667
-    assert rows[9]["n"] == 1 and rows[9]["pos_rate"] == 1.0
-    assert sum(r["n"] for r in rows.values()) == 6
 
 
 def test_source_mirror_stats_finds_planted_mirror(spark):

@@ -220,19 +220,6 @@ def test_boilerplate_strip_hot_set_broadcasts(spark):
     assert plans.count_python_stages(df) == 0
 
 
-def test_dsir_ratio_table_broadcasts(spark):
-    """The DSIR bucket-ratio table must come back as a BROADCAST join
-    against the exploded feature stream — the corpus shuffles on the
-    bucket key only through the 256-row map-side-combined count agg,
-    never row-by-row."""
-    from blackedge_ocr_spark.queries import q_dsir_weights
-
-    df = q_dsir_weights(spark, SF)
-    p = plans.formatted_plan(df)
-    assert "BroadcastHashJoin" in p
-    assert plans.count_python_stages(df) == 0
-
-
 def test_gopher_rules_zero_shuffle_one_projection(spark):
     """All seven Gopher rules must evaluate as ONE fused projection
     over the scan — no exchange, no Python, no join: the cheapest
@@ -349,16 +336,14 @@ def test_gopher_repetition_zero_shuffle_in_array(spark):
 
 def test_no_unpartitioned_windows_in_tiny_window_queries(spark):
     """Repo convention: no window runs with an empty partition spec —
-    provably tiny domains (the post-limit DSIR head, the |langs|,
-    |splits| and |sources| totals) carry a constant non-foldable key
-    instead, so the
+    provably tiny domains (the |langs|, |splits| and |sources| totals)
+    carry a constant non-foldable key instead, so the
     `WindowExec: No Partition Defined` WARN channel stays clean for
     catching genuinely unbounded global windows."""
     import __spark_entry__ as se
 
     qs = se.queries()
-    for name in ("dsir_select", "mixture_weights", "lang_rebalance",
-                 "data_split"):
+    for name in ("mixture_weights", "lang_rebalance", "data_split"):
         df = qs[name](spark, SF)
         bad = plans.unpartitioned_window_specs(df)
         assert bad == [], (name, bad)

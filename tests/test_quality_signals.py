@@ -1,15 +1,11 @@
-"""Semantics tests for analysis/dsir.py on crafted corpora: a pure-
-Python reference model pins the exact weight arithmetic (hash bucket,
-add-one smoothing, micro-unit ln rounding, exact long sums), plus
-edge cases and the select head's total order. Spark-vs-DuckDB parity
-is covered by the driver contract."""
+"""Semantics tests for textstats' quality signals on crafted corpora:
+the Gopher rule battery against a pure-Python model, CCNet
+perplexity bucketing, and lm_scores' carried columns. Spark-vs-DuckDB
+parity is covered by the driver contract."""
 
-import hashlib
 import math
 
 from pyspark.sql import Row
-
-from blackedge_ocr_spark.analysis import dsir
 
 
 def _docs_df(spark, rows):
@@ -17,104 +13,6 @@ def _docs_df(spark, rows):
         [Row(doc_id=i, text=t, lang=lang) for i, t, lang in rows],
         "doc_id long, text string, lang string",
     )
-
-
-def _py_tokens(text):
-    # mirror of functions.text.tokens on plain-ascii lowercase input
-    # (the crafted corpora below avoid the normalizer's edge cases)
-    import re
-
-    return re.findall(r"[a-z0-9]+", text.lower())
-
-
-def _py_weights(rows):
-    """Pure-Python DSIR: identical formula, identical rounding."""
-    feats = {}
-    for doc_id, text, lang in rows:
-        toks = _py_tokens(text)
-        fs = toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-        feats[doc_id] = (
-            lang == dsir.DSIR_TARGET_LANG,
-            [
-                hashlib.md5(f"dsir:{f}".encode()).hexdigest()[
-                    : dsir.DSIR_BUCKET_HEX
-                ]
-                for f in fs
-            ],
-        )
-    n_raw, n_tgt = {}, {}
-    for is_t, bs in feats.values():
-        for b in bs:
-            n_raw[b] = n_raw.get(b, 0) + 1
-            if is_t:
-                n_tgt[b] = n_tgt.get(b, 0) + 1
-    t_raw = sum(n_raw.values())
-    t_tgt = sum(n_tgt.values())
-    li = {
-        b: math.floor(
-            (
-                math.log(
-                    (n_tgt.get(b, 0) + 1) / (t_tgt + dsir.DSIR_BUCKETS)
-                )
-                - math.log((n_raw[b] + 1) / (t_raw + dsir.DSIR_BUCKETS))
-            )
-            * 1e6
-            + 0.5
-        )
-        for b in n_raw
-    }
-    out = {}
-    for doc_id, (_, bs) in feats.items():
-        s = sum(li[b] for b in bs)
-        out[doc_id] = (len(bs), s / 1e6 if bs else 0.0)
-    return out
-
-
-CORPUS = [
-    (0, "the quick brown fox jumps over the lazy dog", "en"),
-    (1, "the quick brown fox sleeps", "en"),
-    (2, "el rapido zorro marron salta sobre el perro", "es"),
-    (3, "der schnelle braune fuchs springt", "de"),
-    (4, "quick brown quick brown quick", "en"),
-    (5, "", "en"),
-    (6, "zorro", "es"),
-]
-
-
-def test_dsir_weights_match_pure_python_model(spark):
-    got = {
-        r["doc_id"]: (r["n_feats"], r["logw"])
-        for r in dsir.dsir_weights(_docs_df(spark, CORPUS)).collect()
-    }
-    want = _py_weights(CORPUS)
-    assert got == want
-
-
-def test_dsir_weights_edge_rows(spark):
-    got = {
-        r["doc_id"]: r
-        for r in dsir.dsir_weights(_docs_df(spark, CORPUS)).collect()
-    }
-    # empty doc: zero features, weight exactly 0.0
-    assert got[5]["n_feats"] == 0 and got[5]["logw"] == 0.0
-    # single-token doc: exactly one unigram, no bigram
-    assert got[6]["n_feats"] == 1
-    # 9-token doc: 9 unigrams + 8 bigrams
-    assert got[0]["n_feats"] == 17
-    # target-aligned text outweighs off-target text sharing no tokens
-    assert got[1]["logw"] > got[2]["logw"]
-
-
-def test_dsir_select_is_the_ordered_head(spark):
-    d = _docs_df(spark, CORPUS)
-    w = {
-        r["doc_id"]: r["logw"]
-        for r in dsir.dsir_weights(d).collect()
-    }
-    want = sorted(w.items(), key=lambda kv: (-kv[1], kv[0]))[:3]
-    got = dsir.dsir_select(d, k=3).collect()
-    assert [(r["doc_id"], r["logw"]) for r in got] == want
-    assert [r["rank"] for r in got] == [1, 2, 3]
 
 
 # --- Gopher rule battery (textstats.gopher_rules) --------------------

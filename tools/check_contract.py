@@ -7,15 +7,23 @@ names, and order-insensitive values. Floats are compared exactly
 (both sides are expected to round); near-misses are reported.
 
 Usage: python tools/check_contract.py [--json OUT.json] [sf_dir] [query ...]
+       python tools/check_contract.py --compare-digests OLD.json NEW.json
 
 With ``--json`` the full per-query result (status, rows, timings,
-first mismatches) is written as a committed artifact so the judge can
-read the complete 106-query sweep (about 6 min at sf0.001 on 4 cores)
-without a rerun (VERDICT.md round-3 item 7).
+first mismatches, row digests) is written as a committed artifact so
+the complete 92-query sweep (about 5 min at sf0.001 on 4 cores) can be
+read without a rerun. ``spark_digest`` and ``oracle_digest`` are
+sha256s of the sorted canonical row tuples the comparator builds, so
+equal digests mean the comparator would call the rows equal.
+
+``--compare-digests`` reads two such files (no Spark) and lists the
+queries whose Spark or oracle digest changed, and those added or
+removed. It exits 1 when any query present in both files changed.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import math
 import os
@@ -37,13 +45,56 @@ def canon(v):
     return str(v)
 
 
+def canon_rows(pdf, cols):
+    """The comparator's order-free form of a result: sorted row tuples."""
+    return sorted(tuple(canon(v) for v in row)
+                  for row in pdf[cols].itertuples(index=False))
+
+
+def digest(cols, rows) -> str:
+    return hashlib.sha256(
+        json.dumps([list(cols), rows]).encode()).hexdigest()
+
+
+def compare_digests(old: dict, new: dict) -> dict:
+    """Queries whose digests changed between two ``--json`` reports,
+    and those only one report has."""
+    oq, nq = old["queries"], new["queries"]
+    keys = ("spark_digest", "oracle_digest")
+    return {
+        "changed": sorted(n for n in oq.keys() & nq.keys()
+                          if any(oq[n].get(k) != nq[n].get(k)
+                                 for k in keys)),
+        "added": sorted(nq.keys() - oq.keys()),
+        "removed": sorted(oq.keys() - nq.keys()),
+    }
+
+
+def _compare_main(old_path: str, new_path: str) -> int:
+    with open(old_path) as fh:
+        old = json.load(fh)
+    with open(new_path) as fh:
+        new = json.load(fh)
+    diff = compare_digests(old, new)
+    for kind, names in diff.items():
+        print(f"{kind} ({len(names)}): {' '.join(names)}")
+    return 1 if diff["changed"] else 0
+
+
 def main() -> int:
+    argv = list(sys.argv[1:])
+    if argv[:1] == ["--compare-digests"]:
+        if len(argv) != 3:
+            print("usage: check_contract.py --compare-digests "
+                  "OLD.json NEW.json", file=sys.stderr)
+            return 2
+        return _compare_main(argv[1], argv[2])
+
     import duckdb
 
     import __spark_entry__ as se
     from blackedge_ocr_spark.session import build_session
 
-    argv = list(sys.argv[1:])
     json_out = None
     if "--json" in argv:
         i = argv.index("--json")
@@ -83,6 +134,9 @@ def main() -> int:
         t1 = time.time()
         rec["spark_rows"] = len(spd)
         rec["spark_sec"] = round(t1 - t0, 2)
+        cols = sorted(spd.columns)
+        a = canon_rows(spd, cols)
+        rec["spark_digest"] = digest(cols, a)
         sql = oracles.get(name)
         if sql is None:
             print(f"[rows-only] {name}: {len(spd)} rows  ({t1 - t0:.1f}s)")
@@ -92,6 +146,7 @@ def main() -> int:
                 rec["status"] = "rows-only-EMPTY"
                 failures += 1
             continue
+        t1o = time.time()
         try:
             opd = con.sql(sql).df()
         except Exception as exc:
@@ -101,9 +156,12 @@ def main() -> int:
             continue
         t2 = time.time()
         rec["oracle_rows"] = len(opd)
-        rec["duckdb_sec"] = round(t2 - t1, 2)
+        rec["duckdb_sec"] = round(t2 - t1o, 2)
+        ocols = sorted(opd.columns)
+        b = canon_rows(opd, ocols)
+        rec["oracle_digest"] = digest(ocols, b)
         rec["rows_match"] = len(spd) == len(opd)
-        rec["schema_match"] = sorted(spd.columns) == sorted(opd.columns)
+        rec["schema_match"] = cols == ocols
         ok = True
         if not rec["schema_match"]:
             print(f"[FAIL cols] {name}: spark={sorted(spd.columns)} "
@@ -113,11 +171,6 @@ def main() -> int:
             print(f"[FAIL rows] {name}: spark={len(spd)} oracle={len(opd)}")
             ok = False
         if ok:
-            cols = sorted(spd.columns)
-            a = sorted(tuple(canon(v) for v in row)
-                       for row in spd[cols].itertuples(index=False))
-            b = sorted(tuple(canon(v) for v in row)
-                       for row in opd[cols].itertuples(index=False))
             rec["hash_match"] = a == b
             if a != b:
                 ok = False
@@ -133,7 +186,7 @@ def main() -> int:
         if ok:
             rec["status"] = "pass"
             print(f"[OK] {name}: {len(spd)} rows "
-                  f"(spark {t1 - t0:.1f}s, duckdb {t2 - t1:.1f}s)")
+                  f"(spark {t1 - t0:.1f}s, duckdb {t2 - t1o:.1f}s)")
         else:
             rec["status"] = "FAIL"
             failures += 1

@@ -39,7 +39,6 @@ REPORT_QUERIES = (
     "paragraph_dedup",
     "boilerplate_strip",
     "curation_funnel",
-    "cluster_keeper_quality",
     "url_dedup",
     "domain_filter",
     "term_doc_freq",
@@ -53,9 +52,7 @@ REPORT_QUERIES = (
     "quality_sample",
     "incremental_extract",
     "bpe_pairs",
-    "bpe_encode",
     "substring_dedup",
-    "dsir_weights",
     "gopher_rules",
     "ccnet_buckets",
     "c4_filters",
@@ -67,21 +64,17 @@ REPORT_QUERIES = (
     "lm2_scores",
     "data_split",
     "mixture_weights",
-    "media_dedup",
     "doc_features",
     "vocab_coverage",
     "domain_stats",
     "lm_scores",
     "bm25_topk",
     "cooccur_pmi",
-    "quality_classifier",
     "semantic_dedup",
     "hll_distinct",
     "cms_topk",
-    "classifier_calibration",
     "source_mirror_stats",
     "minhash_jaccard_est",
-    "winnow_pairs",
     "bloom_probe",
     "sampled_quantiles",
     "lang_confusion",
