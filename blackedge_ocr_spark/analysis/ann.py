@@ -887,6 +887,14 @@ def ivf_kmeans_topk(
         centroid_every = centroid_stride(n)
     corpus = _load(spark, sf_dir)
     cents = kmeans_centroids(corpus, iters, centroid_every, train_every, n=n)
+    return _ivf_kmeans_trained(spark, corpus, cents, k, query_every, probe)
+
+
+def _ivf_kmeans_trained(
+    spark, corpus: DataFrame, cents: DataFrame, k: int, query_every: int, probe: int
+) -> DataFrame:
+    """``ivf_kmeans_topk`` after training: the search over a trained
+    coarse quantizer ``cents``."""
     return _ivf_search(
         spark,
         assign_centroids(corpus, cents, keep=["vec_id", "v"]),
@@ -1038,10 +1046,30 @@ def ivfpq_topk(
     exact DuckDB mirror (``sql_ann_ivfpq_topk``)."""
     n = _corpus_count(spark, sf_dir)
     corpus = _load(spark, sf_dir)
-    dims = len(corpus.select("v").first()["v"])
     cents = kmeans_centroids(
         corpus, iters, centroid_stride(n), train_every, n=n
     )
+    return _ivfpq_trained(
+        spark, corpus, cents, n, k, query_every, probe, shortlist, iters,
+        train_every,
+    )
+
+
+def _ivfpq_trained(
+    spark,
+    corpus: DataFrame,
+    cents: DataFrame,
+    n: int,
+    k: int,
+    query_every: int,
+    probe: int,
+    shortlist: int,
+    iters: int,
+    train_every: int,
+) -> DataFrame:
+    """``ivfpq_topk`` after coarse training: residual codebooks,
+    encode and search over the trained coarse quantizer ``cents``."""
+    dims = len(corpus.select("v").first()["v"])
     # PERSIST the residual frame: codebook training collects a
     # sampled slice of it PQ_M times and the encode pass reads it
     # again (~6 actions) — uncached, each replays the O(n·C) coarse
@@ -1314,14 +1342,31 @@ def recall_vs_exact(
     exact = brute_force_topk(spark, sf_dir, k, query_every).select(
         "q_id", "neighbor_id"
     )
-    methods = (("ivf_kmeans", ivf_kmeans_topk), ("ivfpq", ivfpq_topk))
+    # both searches probe the same coarse quantizer (their defaults
+    # train identically), so it is trained once
+    n = _corpus_count(spark, sf_dir)
+    corpus = _load(spark, sf_dir)
+    cents = kmeans_centroids(
+        corpus, KMEANS_ITERS, centroid_stride(n), TRAIN_EVERY, n=n
+    )
+    methods = (
+        (
+            "ivf_kmeans",
+            _ivf_kmeans_trained(spark, corpus, cents, k, query_every, PROBE_LISTS),
+        ),
+        (
+            "ivfpq",
+            _ivfpq_trained(
+                spark, corpus, cents, n, k, query_every, PROBE_LISTS,
+                IVFPQ_SHORTLIST, KMEANS_ITERS, TRAIN_EVERY,
+            ),
+        ),
+    )
     approx = functools.reduce(
         DataFrame.unionByName,
         [
-            search(spark, sf_dir, k, query_every).select(
-                F.lit(name).alias("method"), "q_id", "neighbor_id"
-            )
-            for name, search in methods
+            found.select(F.lit(name).alias("method"), "q_id", "neighbor_id")
+            for name, found in methods
         ],
     )
     # every method keeps its row: a search that finds none of the

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from blackedge_ocr_spark.schema import DOCUMENTS_SCHEMA
+from blackedge_ocr_spark.session import spread_if_starved
 
 # --------------------------------------------------------------------
 # Adversarial pytest fixture corpus (FIXTURES.md §2 strata).
@@ -211,13 +212,13 @@ def spansify_documents(
     digits diverge between providers drop below the 0.85 threshold.
     """
     docs = spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-    # Hash-spread docs across tasks BEFORE any row blow-up: the sf
+    # Hash-spread a starved scan BEFORE any row blow-up: the sf
     # corpora are single parquet splits, so an explode (replication)
     # or fat span build running pre-shuffle would execute inside the
     # lone scan task — the whole job would serialize through one
-    # thread. Repartition the small base first; everything downstream
-    # is then map-side parallel.
-    docs = docs.repartition(spark.sparkContext.defaultParallelism * 4, "doc_id")
+    # thread. One task per core, none added at scale: every task of
+    # the downstream OCR stage pays a fixed Python worker set-up.
+    docs = spread_if_starved(docs, None, "doc_id")
     docs = replicate_corpus(docs)
     return spansify_frame(docs, words_per_span, mega_doc_every, mega_doc_factor)
 

@@ -63,19 +63,30 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
 
 
-def read_parquet_or_none(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame | None:
+def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     """``spark.read.parquet(path)``, or None when the path does not
     exist. ONLY a missing path means absent (a fresh run, a first
     batch): a corrupt or schema-conflicting table must fail loudly —
-    treating it as empty would silently reprocess or re-emit data.
-    A known ``schema`` skips the footer-inference job; a corrupt file
-    then fails when the read runs instead of here."""
+    treating it as empty would silently reprocess or re-emit data."""
     if not path_exists(spark, path):
         return None
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path)
+    return spark.read.parquet(path)
+
+
+def read_manifest(spark: SparkSession, output: str) -> DataFrame | None:
+    """The lineage manifest under ``{output}/_lineage``, or None when it
+    holds no part file yet. Its part files are listed by the Hadoop
+    ``FileSystem`` and read by path: Spark's file index hides names
+    that start with ``_``, so a read of the directory itself logs
+    ``WARN DataSource: All paths were ignored``. Read with
+    ``LINEAGE_SCHEMA``, so a corrupt part file fails when the read
+    runs."""
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(f"{output}/_lineage/*.parquet")
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    files = [st.getPath().toString() for st in fs.globStatus(pattern) or []]
+    if not files:
+        return None
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(*files)
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -92,7 +103,7 @@ def completed_buckets(
     # every bucket AND append duplicate lineage rows, double-counting
     # the completeness audit. A manifest written before n_buckets was
     # pinned reads it as NULL, which skips the bucketing check.
-    manifest = read_parquet_or_none(spark, f"{output}/_lineage", LINEAGE_SCHEMA)
+    manifest = read_manifest(spark, output)
     if manifest is None:
         return set()
     rows = manifest.select("part_id", "n_buckets").collect()

@@ -6,6 +6,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# PySpark daemon entry shipped next to the package (repo root).
+DAEMON_MODULE = "blackedge_worker_daemon"
+
 
 def build_session(
     master: str | None = None,
@@ -22,6 +25,16 @@ def build_session(
       memory at 100 TB scale.
     - shuffle partitions sized to cores in local mode (the pipeline
       itself is shuffle-free; this matters for the analysis queries).
+    - Python workers import the installed pyspark, not Spark's
+      ``pyspark.zip`` (``blackedge_worker_daemon``), for a local master
+      when that module sits next to the package: its directory goes on
+      the daemon's ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``),
+      whatever the JVM's working directory. Elsewhere Spark's default
+      daemon runs: ``spark-submit --py-files`` (``tools/submit_job.py``)
+      imports the package from a zip, and standalone executors
+      (``tools/_cluster_runner.py``) receive the engine as a task
+      include, after their daemon has started. ``extra_conf``
+      overrides either key like any other.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
@@ -44,16 +57,31 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**daemon_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
 
+def daemon_conf(master: str) -> dict:
+    """``spark.python.daemon.module`` and the ``PYTHONPATH`` its daemon
+    needs to import it, for a local master and an engine imported from
+    a directory that holds ``DAEMON_MODULE``; empty otherwise."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    local = master == "local" or master.startswith("local[")
+    if not local or not os.path.isfile(os.path.join(root, DAEMON_MODULE + ".py")):
+        return {}
+    return {
+        "spark.python.daemon.module": DAEMON_MODULE,
+        "spark.executorEnv.PYTHONPATH": root,
+    }
+
+
 def spread_if_starved(df, target: int | None = None, *cols):
     """Split-starvation gate, shared by every scan-side widen in the
-    engine (``queries._docs``, ``segmentation.htmlify_documents``,
+    engine (``queries._docs``, ``datagen.spansify_documents``,
+    ``segmentation.htmlify_documents``,
     ``analysis.ann._spread`` for embeddings): repartition ONLY when
     the scan yields fewer partitions than cores — the sf test parquet
     arrives as one split; fewer scan tasks than cores serializes

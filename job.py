@@ -33,11 +33,7 @@ def main(argv=None) -> int:
     args = ap.parse_args(argv)
 
     from blackedge_ocr_spark.datagen import spansify_documents
-    from blackedge_ocr_spark.lineage import (
-        LINEAGE_SCHEMA,
-        read_parquet_or_none,
-        run_with_checkpoint,
-    )
+    from blackedge_ocr_spark.lineage import read_manifest, run_with_checkpoint
     from blackedge_ocr_spark.pipeline import extract_documents
     from blackedge_ocr_spark.session import build_session
 
@@ -65,9 +61,7 @@ def main(argv=None) -> int:
     )
     # a run that processed zero batches against a fresh output dir
     # has no manifest yet — print an empty summary, don't crash
-    lineage = read_parquet_or_none(
-        spark, f"{args.output}/_lineage", LINEAGE_SCHEMA
-    )
+    lineage = read_manifest(spark, args.output)
     summary = {}
     if lineage is not None:
         rows = lineage.collect()  # one row per bucket: small

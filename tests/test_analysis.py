@@ -467,6 +467,28 @@ def test_ann_recall_reports_every_method_even_with_zero_hits(spark):
         assert 0.0 <= r["recall"] <= 1.0
 
 
+def test_ann_recall_trains_the_coarse_quantizer_once(spark, monkeypatch):
+    """Both searches of the recall audit probe one coarse quantizer,
+    trained by ONE ``kmeans_centroids`` call (IVF-PQ's residual
+    codebooks, trained per subspace in ``_train_books``, are not
+    coarse training)."""
+    import sys
+
+    from blackedge_ocr_spark.analysis import ann
+
+    coarse = []
+    train = ann.kmeans_centroids
+
+    def counted(*args, **kwargs):
+        if sys._getframe(1).f_code.co_name != "_train_books":
+            coarse.append(args)
+        return train(*args, **kwargs)
+
+    monkeypatch.setattr(ann, "kmeans_centroids", counted)
+    ann.recall_vs_exact(spark, SF)
+    assert len(coarse) == 1
+
+
 def test_prefix_topk_snapshots_equal_standalone_scans(spark):
     """The one-pass Matryoshka kernel's per-cut results must be
     bit-identical to standalone scans: full-dim rows == the plain

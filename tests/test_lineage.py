@@ -192,6 +192,30 @@ def _empty_transform(d):
     )
 
 
+def test_manifest_read_by_file_equals_directory_read(spark, tmp_path):
+    """``read_manifest`` reads the manifest's part files by path (a
+    read of the ``_lineage`` directory logs a WARN): after a preempted
+    run and after its resume it returns exactly the rows a read of the
+    directory returns."""
+    from blackedge_ocr_spark.lineage import LINEAGE_SCHEMA, read_manifest
+
+    docs = spark.createDataFrame(
+        [(str(i), "alpha beta") for i in range(40)],
+        "doc_id string, text string",
+    )
+    out = str(tmp_path / "o")
+    assert read_manifest(spark, out) is None
+    for max_batches, n_rows in ((1, 2), (None, 4)):
+        run_with_checkpoint(
+            spark, docs, _empty_transform, out, n_buckets=4,
+            buckets_per_batch=2, max_batches=max_batches,
+        )
+        got = sorted(map(tuple, read_manifest(spark, out).collect()))
+        directory = spark.read.schema(LINEAGE_SCHEMA).parquet(f"{out}/_lineage")
+        assert got == sorted(map(tuple, directory.collect()))
+        assert len(got) == n_rows
+
+
 def test_corrupt_manifest_fails_loudly(spark, tmp_path):
     """Garbage in the lineage manifest must raise on resume — read as
     absent, it would reprocess every bucket and append duplicate
